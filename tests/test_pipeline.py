@@ -778,6 +778,108 @@ _LADDER_ROWS = [
 ]
 
 
+# Golden pins for the ladder definition, written out by hand rather than
+# derived from pipeline code: the rung order a staged store is laid out
+# in, which rungs each knob set switches on, and the curation.json
+# params a store records.
+_GOLDEN_STAGED_RUNGS = ("input", "gated", "lm_gated", "clf_gated", "exact",
+                        "neardup", "decontaminated", "dsir", "final")
+_X = object()  # any non-None DataFrame knob
+_GOLDEN_ENABLED = [
+    ({}, ["gated", "exact", "neardup", "final"]),
+    ({"paragraph_max_df": 2},
+     ["input", "gated", "exact", "neardup", "final"]),
+    ({"span_n": 8}, ["input", "gated", "exact", "neardup", "final"]),
+    ({"line_dedup": True}, ["input", "gated", "exact", "neardup", "final"]),
+    ({"html": True}, ["input", "gated", "exact", "neardup", "final"]),
+    ({"lm_ref": _X, "lm_ppl_max": 25.0},
+     ["gated", "lm_gated", "exact", "neardup", "final"]),
+    ({"clf_pos": _X, "clf_neg": _X, "clf_min_score": 0.5},
+     ["gated", "clf_gated", "exact", "neardup", "final"]),
+    ({"benchmark": _X},
+     ["gated", "exact", "neardup", "decontaminated", "final"]),
+    ({"dsir_target": _X, "dsir_k": 3},
+     ["gated", "exact", "neardup", "dsir", "final"]),
+    ({"span_n": 8, "benchmark": _X, "lm_ref": _X, "lm_ppl_max": 25.0,
+      "clf_pos": _X, "clf_neg": _X, "clf_min_score": 0.5,
+      "dsir_target": _X, "dsir_k": 3}, list(_GOLDEN_STAGED_RUNGS)),
+]
+_GOLDEN_DEFAULT_PARAMS = {
+    "text_col": "text", "id_col": "doc_id", "langs": ["en"],
+    "min_tokens": 5, "max_dup_line_frac": 0.5, "max_top_bigram_frac": 0.5,
+    "neardup_threshold": 0.7, "paragraph_max_df": None, "span_n": None,
+    "span_stride": None, "has_benchmark": False, "decontam_n": 8,
+    "decontam_min_frac": 0.1, "train": 0.9, "val": 0.05,
+}
+_GOLDEN_LM_CLF_DSIR_PARAMS = {
+    **_GOLDEN_DEFAULT_PARAMS,
+    "lm_ppl_max": 25.0, "lm_vocab_size": 50000, "has_lm_ref": True,
+    "clf_min_score": 0.5, "clf_dim": 65536, "has_clf_ref": True,
+    "dsir_k": 3, "dsir_dim": 16384, "has_dsir_target": True,
+}
+
+
+class _Reached(Exception):
+    pass
+
+
+class _UntouchedDocs:
+    """Stands in for ``docs``: any use of it means validation passed."""
+
+    def __getattr__(self, name):
+        raise _Reached(name)
+
+
+def test_curate_ladder_golden_rungs_and_stop_after():
+    """STAGED_RUNGS is the golden order, and stop_after accepts exactly
+    the rungs each knob set switches on — checked before any Spark work
+    (a rejected stop_after never touches docs)."""
+    assert pl.STAGED_RUNGS == _GOLDEN_STAGED_RUNGS
+    for knobs, enabled in _GOLDEN_ENABLED:
+        for rung in _GOLDEN_STAGED_RUNGS:
+            if rung in enabled:
+                with pytest.raises(_Reached):
+                    pl.curate_corpus_staged(_UntouchedDocs(), "unused",
+                                            stop_after=rung, **knobs)
+            else:
+                with pytest.raises(ValueError, match=f"stop_after='{rung}'"):
+                    pl.curate_corpus_staged(_UntouchedDocs(), "unused",
+                                            stop_after=rung, **knobs)
+    with pytest.raises(ValueError, match="stop_after='bogus'"):
+        pl.curate_corpus_staged(_UntouchedDocs(), "unused",
+                                stop_after="bogus")
+
+
+def test_curate_staged_resumes_golden_manifest(spark, tmp_path):
+    """A store whose curation.json holds the golden params (what earlier
+    releases wrote) resumes without a params error, for a default run
+    and for an lm+clf+dsir run; a fresh store records the same dict."""
+    import json
+
+    docs = spark.createDataFrame(_LADDER_ROWS, "doc_id long, text string")
+    side = spark.createDataFrame(_LADDER_ROWS[:1], "doc_id long, text string")
+    lm_clf_dsir = dict(lm_ref=side, lm_ppl_max=25.0, clf_pos=side,
+                       clf_neg=side, clf_min_score=0.5, dsir_target=side,
+                       dsir_k=3)
+    for name, knobs, golden in (
+        ("default", {}, _GOLDEN_DEFAULT_PARAMS),
+        ("lm_clf_dsir", lm_clf_dsir, _GOLDEN_LM_CLF_DSIR_PARAMS),
+    ):
+        store = tmp_path / name
+        store.mkdir()
+        (store / "curation.json").write_text(
+            json.dumps({"params": golden, "inputs": {}}))
+        with pytest.warns(UserWarning, match="input identity"):
+            gated = pl.curate_corpus_staged(docs, str(store),
+                                            stop_after="gated", **knobs)
+        assert sorted(r["doc_id"] for r in gated.collect()) == [1, 2, 3, 7]
+        fresh = tmp_path / f"{name}_fresh"
+        pl.curate_corpus_staged(docs, str(fresh), stop_after="gated",
+                                **knobs)
+        written = json.loads((fresh / "curation.json").read_text())
+        assert written["params"] == golden
+
+
 @pytest.mark.slow
 def test_curate_staged_scheme_store_uses_durable_checkpoint(spark, tmp_path):
     """r9 verdict item 4: a scheme:// stage store means cluster storage,
@@ -812,7 +914,6 @@ def test_curate_staged_scheme_store_uses_durable_checkpoint(spark, tmp_path):
     assert ck_local.is_dir() and any(ck_local.rglob("part-*"))
 
 
-@pytest.mark.slow
 def test_curate_staged_parity_and_resume(spark, tmp_path, monkeypatch):
     """The staged ladder returns row-identical output to the one-shot
     ladder; a second call resumes from the committed final rung without
@@ -954,9 +1055,10 @@ def test_curate_staged_crash_resume(spark, tmp_path, monkeypatch):
 
 @pytest.mark.slow
 def test_curate_staged_input_rung_only_when_surgery(spark, tmp_path):
-    """The input rung is committed only when paragraph/span surgery is
-    configured — otherwise it would be a byte-identical copy of the
-    source corpus (a pointless full write at scale)."""
+    """The input rung is committed only when surgery (paragraphs,
+    spans, duplicate lines or html) is configured — otherwise it would
+    be a byte-identical copy of the source corpus (a pointless full
+    write at scale)."""
     import os
 
     from timesearch_spark.operators.pipeline import curate_corpus_staged
@@ -971,6 +1073,15 @@ def test_curate_staged_input_rung_only_when_surgery(spark, tmp_path):
     curate_corpus_staged(docs, surg, min_tokens=5, neardup_threshold=0.5,
                          paragraph_max_df=2).collect()
     assert os.path.exists(os.path.join(surg, "input", "_SUCCESS"))
+
+    # line_dedup alone is surgery too: stop_after="input" accepts it and
+    # returns the committed rung
+    lines = str(tmp_path / "lines")
+    rung = curate_corpus_staged(docs, lines, min_tokens=5, line_dedup=True,
+                                stop_after="input")
+    assert sorted(r["doc_id"] for r in rung.collect()) == list(range(1, 8))
+    assert os.path.exists(os.path.join(lines, "input", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(lines, "gated"))
 
 
 def test_curate_staged_benchmark_identity_pinned(spark, tmp_path):

@@ -366,92 +366,53 @@ def cmd_compact(args):
 
 
 def cmd_curate(args):
-    from timesearch_spark.operators.pipeline import curate_corpus
+    from timesearch_spark.operators.pipeline import _executor, rung_counts
     from timesearch_spark.session import get_spark
     from timesearch_spark.streaming.corpus import DOCUMENT_SCHEMA
 
     spark = get_spark("timesearch-cli")
 
     def read_docs(path):
+        if not path:
+            return None
         if path.endswith((".jsonl", ".json", ".ndjson")):
             return spark.read.schema(DOCUMENT_SCHEMA).json(path)
         return spark.read.parquet(path)
 
     docs = read_docs(args.input)
-    bench = read_docs(args.benchmark) if args.benchmark else None
-    if (args.lm_ref is None) != (args.lm_ppl_max is None):
-        raise SystemExit("curate: --lm-ref and --lm-ppl-max come together")
-    clf_given = [args.clf_pos is not None, args.clf_neg is not None,
-                 args.clf_min_score is not None]
-    if any(clf_given) and not all(clf_given):
-        raise SystemExit("curate: --clf-pos, --clf-neg and "
-                         "--clf-min-score come together")
-    if (args.dsir_target is None) != (args.dsir_k is None):
-        raise SystemExit("curate: --dsir-target and --dsir-k come together")
-    if args.stage_dir:
-        # rung-checkpointed run: a killed job restarts from its last
-        # committed rung; the committed rungs double as the audit
-        from timesearch_spark.operators.pipeline import (
-            STAGED_RUNGS, curate_corpus_staged,
-        )
-
-        out = curate_corpus_staged(
-            docs, args.stage_dir, benchmark=bench,
-            paragraph_max_df=args.paragraph_max_df,
-            span_n=args.span_n,
-            span_stride=args.span_stride,
-            line_dedup=args.line_dedup,
-            neardup_threshold=args.neardup,
-            resume=not args.no_resume,
-            lease_timeout_sec=args.lease_timeout,
-            lm_ref=read_docs(args.lm_ref) if args.lm_ref else None,
-            lm_ppl_max=args.lm_ppl_max,
-            clf_pos=read_docs(args.clf_pos) if args.clf_pos else None,
-            clf_neg=read_docs(args.clf_neg) if args.clf_neg else None,
-            clf_min_score=args.clf_min_score,
-            dsir_target=(read_docs(args.dsir_target)
-                         if args.dsir_target else None),
-            dsir_k=args.dsir_k,
-        )
-        out.write.mode("overwrite").partitionBy("split").parquet(args.output)
-        kept = spark.read.parquet(args.output).count()
-        from timesearch_spark import fs as fsmod
-
-        fs = fsmod.get_fs(spark, args.stage_dir)
-        root = args.stage_dir.rstrip("/")
-        rungs = {
-            r: spark.read.parquet(f"{root}/{r}").count()
-            for r in STAGED_RUNGS
-            if fs.exists(f"{root}/{r}/_SUCCESS")
-        }
-        print(json.dumps({"kept": kept, "output": args.output,
-                          "rungs": rungs, "stage_dir": args.stage_dir}))
-        return 0
-    metrics: dict = {}
-    out = curate_corpus(
-        docs, benchmark=bench,
+    knobs = dict(
+        benchmark=read_docs(args.benchmark),
         paragraph_max_df=args.paragraph_max_df,
         span_n=args.span_n,
         span_stride=args.span_stride,
         line_dedup=args.line_dedup,
         neardup_threshold=args.neardup,
-        lm_ref=read_docs(args.lm_ref) if args.lm_ref else None,
+        lm_ref=read_docs(args.lm_ref),
         lm_ppl_max=args.lm_ppl_max,
-        clf_pos=read_docs(args.clf_pos) if args.clf_pos else None,
-        clf_neg=read_docs(args.clf_neg) if args.clf_neg else None,
+        clf_pos=read_docs(args.clf_pos),
+        clf_neg=read_docs(args.clf_neg),
         clf_min_score=args.clf_min_score,
-        dsir_target=(read_docs(args.dsir_target)
-                     if args.dsir_target else None),
+        dsir_target=read_docs(args.dsir_target),
         dsir_k=args.dsir_k,
-        metrics=metrics,
     )
+    metrics: dict = {}
+    try:
+        # --stage-dir commits each rung there (a killed run resumes from
+        # its last committed rung); without it the ladder is one plan
+        ladder = _executor(docs, args.stage_dir, metrics,
+                           resume=not args.no_resume,
+                           lease_timeout_sec=args.lease_timeout, **knobs)
+    except ValueError as e:  # knobs that do not make a ladder
+        raise SystemExit(f"curate: {e}") from None
+    out = ladder.run()
     out.write.mode("overwrite").partitionBy("split").parquet(args.output)
     kept = spark.read.parquet(args.output).count()
-    # per-rung audit: one cache-local count job over the pinned rungs
-    from timesearch_spark.operators.pipeline import rung_counts
-
-    rungs = rung_counts(metrics)
-    print(json.dumps({"kept": kept, "output": args.output, "rungs": rungs}))
+    # per-rung audit, one job: the pinned boundaries or committed rungs
+    report = {"kept": kept, "output": args.output,
+              "rungs": rung_counts(metrics)}
+    if args.stage_dir:
+        report["stage_dir"] = args.stage_dir
+    print(json.dumps(report))
     return 0
 
 

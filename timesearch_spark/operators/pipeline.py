@@ -26,9 +26,16 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import hashlib
+import inspect
+import warnings
+from types import SimpleNamespace
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from timesearch_spark import fs as fsmod
 from timesearch_spark.operators.dedup import shingles_from, tokens
 
 
@@ -503,15 +510,13 @@ def deterministic_shuffle(
 
 def rung_counts(metrics: dict) -> dict[str, int]:
     """Row count per recorded curate rung, as ONE Spark job (a union of
-    per-rung count aggregates).  Call AFTER consuming the ladder's
-    result and BEFORE ``release_pins``: every gate boundary (gated and,
-    when on, lm_gated/clf_gated) plus exact are persisted by the ladder
-    itself, neardup/decontaminated are pinned extra while an audit dict
-    is passed, and the near-dup component state is checkpointed — so
-    those counts are cache-local scans.  The one
-    exception is ``input``, which re-runs the scan plus any
-    paragraph-boilerplate rung (persisting the full input corpus just
-    to count it would cost more than the recount at every scale).
+    per-rung count aggregates).  After a one-shot run, call it AFTER
+    consuming the result and BEFORE ``release_pins``: every boundary but
+    ``input`` is pinned while an audit dict is passed, so those counts
+    are cache-local scans; ``input`` re-runs the scan plus any surgery
+    (persisting the full corpus just to count it would cost more than
+    the recount at every scale).  A staged run's boundaries are its
+    committed rung parquets.
 
     (An earlier design observed the counts inside the main action with
     :class:`pyspark.sql.Observation`; observed nodes BELOW a persist
@@ -532,135 +537,439 @@ def rung_counts(metrics: dict) -> dict[str, int]:
     return {r["rung"]: int(r["rows"]) for r in one.collect()}
 
 
-# --- shared rung builders ------------------------------------------------------
-# Both ladder forms (the one-shot composed plan and the rung-checkpointed
-# staged runner) compose exactly these builders, so "row-identical output"
-# is structural, not a discipline of keeping two copies in sync.
+# --- the curation ladder: one definition, two executors ------------------------
+# _LADDER lists the rungs in order, each with a build function from the
+# previous boundary to its own.  _walk runs the enabled rungs on _Pin
+# (curate_corpus: one plan, boundaries persisted in memory) or _Commit
+# (curate_corpus_staged: each boundary committed to parquet and read
+# back), so "row-identical output" is structural.
 
-def _rung_surgery(docs, text_col, id_col, paragraph_max_df, span_n,
-                  span_stride, line_dedup=False, html=False):
-    """Optional text surgery (HTML→text extraction FIRST when the
-    corpus is raw markup — the web-pipeline ingestion stage, pure map —
-    then within-document duplicate lines, then boilerplate paragraphs,
-    then repeated spans), BEFORE the profile: quality signals and dedup
-    fingerprints must see the text that would actually train.  Returns
-    (df, pins): the span rung persists its tokenize/window sub-plans
-    and ``.drop()`` discards the ``_pinned`` attribute, so the handles
-    are captured here for the caller's release contract."""
+def _surgery(docs, p, ex):
+    """Optional text surgery BEFORE the profile: quality signals and
+    dedup fingerprints must see the text that would actually train.
+    HTML extraction runs first, so every later step sees prose, not
+    markup; within-document duplicate lines are the finest grain."""
     from timesearch_spark.operators.dedup import (
         remove_repeated_lines_within,
         remove_repeated_paragraphs,
         remove_repeated_spans,
     )
 
-    pins: list = []
-    if html:
+    if p.html:
         from timesearch_spark.operators.textstats import html_to_text
 
-        docs = docs.withColumn(text_col, html_to_text(text_col))
-    if line_dedup:
+        docs = docs.withColumn(p.text_col, html_to_text(p.text_col))
+    if p.line_dedup:
         docs = remove_repeated_lines_within(
-            docs, text_col, id_col
+            docs, p.text_col, p.id_col
         ).drop("n_removed_lines")
-    if paragraph_max_df is not None:
+    if p.paragraph_max_df is not None:
         docs = remove_repeated_paragraphs(
-            docs, text_col, id_col, max_df=paragraph_max_df
+            docs, p.text_col, p.id_col, max_df=p.paragraph_max_df
         )
-    if span_n is not None:
+    if p.span_n is not None:
         spanned = remove_repeated_spans(
-            docs, text_col, id_col, n=span_n, stride=span_stride
+            docs, p.text_col, p.id_col, n=p.span_n, stride=p.span_stride
         )
-        pins = list(getattr(spanned, "_pinned", []))
         docs = spanned.drop("n_removed_tokens")
-    return docs, pins
+        # .drop() discards the span rung's persisted sub-plans; they ride
+        # on the boundary for the executor to release
+        docs._pinned = spanned._pinned
+    return docs
 
 
-def _rung_quality_keep(
-    docs, text_col, id_col, langs, min_tokens,
-    max_dup_line_frac, max_top_bigram_frac,
-):
-    """(id, lang_guess, n_ws) of documents passing the language /
-    length / repetition gate — one profile pass, filtered."""
+def _quality_gate(docs, p, ex):
+    """Documents passing the language / length / repetition gate, with
+    their (lang_guess, n_ws) — one profile pass, filtered, joined back."""
     from timesearch_spark.operators.textstats import text_profile_table
 
-    prof = text_profile_table(docs, text_col=text_col, id_col=id_col)
-    return (
-        prof.filter(
-            F.col("lang_guess").isin(*langs)
-            & (F.col("n_ws") >= min_tokens)
-            & (F.coalesce(F.col("dup_line_frac"), F.lit(0.0))
-               <= max_dup_line_frac)
-            & (F.coalesce(F.col("top_bigram_frac"), F.lit(0.0))
-               <= max_top_bigram_frac)
-        )
-        .select(id_col, "lang_guess", "n_ws")
+    prof = text_profile_table(docs, text_col=p.text_col, id_col=p.id_col)
+    keep = prof.filter(
+        F.col("lang_guess").isin(*p.langs)
+        & (F.col("n_ws") >= p.min_tokens)
+        & (F.coalesce(F.col("dup_line_frac"), F.lit(0.0))
+           <= p.max_dup_line_frac)
+        & (F.coalesce(F.col("top_bigram_frac"), F.lit(0.0))
+           <= p.max_top_bigram_frac)
+    ).select(p.id_col, "lang_guess", "n_ws")
+    return docs.join(keep, p.id_col)
+
+
+def _lm_gate(gated, p, ex):
+    """CCNet-style perplexity gate.  The vocab is bounded broadcast
+    state, so this is one explode + broadcast-join + hash-agg pass — no
+    corpus-sized shuffle — and it runs BEFORE dedup for the same reason
+    the quality gate does (dedup's shuffles only carry keepers)."""
+    from timesearch_spark.operators.textstats import lm_score, unigram_lm
+
+    vocab, oov = unigram_lm(p.lm_ref, p.text_col, vocab_size=p.lm_vocab_size)
+    keep = (
+        lm_score(gated, vocab, oov, p.text_col, p.id_col)
+        .filter((F.col("n_tok") > 0) & (F.col("ppl") <= p.lm_ppl_max))
+        .select(p.id_col)
+    )
+    return gated.join(keep, p.id_col, "left_semi")
+
+
+def _clf_gate(gated, p, ex):
+    """Trained-classifier gate: fit once from the bounded labeled
+    sample, then one map-side scoring pass over the survivors (the
+    weight table is broadcast state, like the LM vocab)."""
+    from timesearch_spark.operators.textstats import (
+        quality_clf_score, train_quality_classifier,
     )
 
+    Wc, bc = train_quality_classifier(
+        p.clf_pos, p.clf_neg, p.text_col, dim=p.clf_dim
+    )
+    keep = (
+        quality_clf_score(gated, Wc, bc, p.text_col, p.id_col, dim=p.clf_dim)
+        .filter(F.col("score") >= p.clf_min_score)
+        .select(p.id_col)
+    )
+    return gated.join(keep, p.id_col, "left_semi")
 
-def _rung_exact_keepers(docs, text_col, id_col):
-    """One keeper id per identical-text group (the lowest)."""
+
+def _exact(gated, p, ex):
+    """Exact dedup: one keeper id (the lowest) per identical-text group."""
     from timesearch_spark.operators.dedup import exact_dedup_groups
 
-    return exact_dedup_groups(docs, text_col, id_col).select(
-        F.col("keeper_id").alias(id_col)
+    keepers = exact_dedup_groups(gated, p.text_col, p.id_col).select(
+        F.col("keeper_id").alias(p.id_col)
     )
+    return gated.join(keepers, p.id_col)
 
 
-def _rung_neardup_non_keepers(docs, text_col, id_col, threshold,
-                              checkpoint_dir=None, tok_col=None):
-    """Ids to DROP for transitive near-dup closure: minhash-LSH pairs →
-    hash-min components → everything but each component's min id.
-    Components label ONLY edge-touching nodes (nodes=None) — at corpus
-    scale near-dup pairs are a sliver of the data, and label-propagating
-    over every untouched document would scan the whole corpus for
-    nothing; untouched docs are trivially their own keepers.  No persist
-    on pairs: connected_components consumes the pair plan exactly once,
-    into its own checkpoint (durable into ``checkpoint_dir`` when the
-    caller runs against a scheme:// store, localCheckpoint otherwise)."""
+def _neardup(exact, p, ex):
+    """Near-dup removal, transitively closed: minhash-LSH pairs →
+    hash-min components over edge-touching nodes only (untouched docs
+    are their own keepers) → all but each component's min id dropped.
+    The pairs are consumed once, into the components' checkpoint (the
+    executor's ``checkpoint_dir``), so they are not persisted."""
     from timesearch_spark.operators.dedup import (
         connected_components,
         minhash_near_dups,
     )
 
     pairs = minhash_near_dups(
-        docs, text_col, id_col, threshold=threshold, hash_family="xxhash64",
-        tok_col=tok_col,
+        exact, p.text_col, p.id_col, threshold=p.neardup_threshold,
+        hash_family="xxhash64", tok_col=ex.tok_col,
     ).select("a", "b")
-    comp = connected_components(None, pairs, id_col=id_col,
-                                checkpoint_dir=checkpoint_dir)
-    return comp.filter(F.col("component") != F.col(id_col)).select(id_col)
+    comp = connected_components(None, pairs, id_col=p.id_col,
+                                checkpoint_dir=ex.checkpoint_dir)
+    drop = comp.filter(F.col("component") != F.col(p.id_col)).select(p.id_col)
+    out = exact.join(drop, p.id_col, "left_anti")
+    return out.drop(ex.tok_col) if ex.tok_col else out
 
 
-def _rung_decontam_hits(docs, benchmark, text_col, id_col, n, min_frac):
-    """Ids of documents contaminated by the benchmark."""
-    return decontaminate(
-        docs, benchmark, text_col, id_col, n=n, min_frac=min_frac
-    ).select(id_col)
+def _decontaminate(surviving, p, ex):
+    """Benchmark decontamination after dedup: the broadcast probe runs
+    over the smallest surviving set, and near-dups of a leaked doc are
+    already gone."""
+    hits = decontaminate(
+        surviving, p.benchmark, p.text_col, p.id_col,
+        n=p.decontam_n, min_frac=p.decontam_min_frac,
+    ).select(p.id_col)
+    return surviving.join(hits, p.id_col, "left_anti")
 
 
-def _validate_clf_params(clf_pos, clf_neg, clf_min_score, where: str):
-    """The classifier rung's three knobs come together or not at all —
-    a labeled sample without a score bound (or any other partial
-    configuration) would silently gate nothing."""
-    given = [clf_pos is not None, clf_neg is not None,
-             clf_min_score is not None]
-    if any(given) and not all(given):
+def _dsir(surviving, p, ex):
+    """DSIR selection LAST, so the pool is never diluted by rows later
+    rungs would drop.  dsir_resample collects its bucket models EAGERLY,
+    so the pool is pinned first: the fit materializes the ladder once
+    and the selection join reuses it."""
+    surviving = ex.reuse(surviving)
+    keep = dsir_resample(
+        surviving, p.dsir_target, p.dsir_k, p.text_col, p.id_col,
+        dim=p.dsir_dim,
+    ).select(p.id_col)
+    return surviving.join(F.broadcast(keep), p.id_col, "left_semi")
+
+
+def _split(surviving, p, ex):
+    """The output: survivors with their deterministic split."""
+    return train_val_test_split(surviving, p.id_col, p.train, p.val).select(
+        p.id_col, p.text_col, "lang_guess", "n_ws", "split"
+    )
+
+
+class _Rung(NamedTuple):
+    """``manifest`` gives the keys a rung adds to curation.json; those of
+    the optional lm/clf/dsir rungs and the line_dedup/html flags are
+    present only when ON, so manifests written before those knobs
+    existed stay resumable by runs that leave them off, while mixing on
+    and off runs over one store is the loud params error.  ``pin`` is
+    the one-shot persistence, see :meth:`_Pin.step`."""
+
+    name: str
+    build: Callable  # (previous boundary, knobs, executor) -> boundary
+    pin: str
+    enabled: Callable = lambda p: True  # knobs -> bool
+    manifest: Callable = lambda p: {}  # knobs -> dict
+
+
+_LADDER = (
+    _Rung(
+        "input", _surgery, "never",
+        lambda p: (p.paragraph_max_df is not None or p.span_n is not None
+                   or p.line_dedup or p.html),
+        lambda p: {"paragraph_max_df": p.paragraph_max_df,
+                   "span_n": p.span_n, "span_stride": p.span_stride,
+                   **({"line_dedup": True} if p.line_dedup else {}),
+                   **({"html": True} if p.html else {})},
+    ),
+    _Rung(
+        "gated", _quality_gate, "always",
+        manifest=lambda p: {
+            "text_col": p.text_col, "id_col": p.id_col,
+            "langs": list(p.langs), "min_tokens": p.min_tokens,
+            "max_dup_line_frac": p.max_dup_line_frac,
+            "max_top_bigram_frac": p.max_top_bigram_frac},
+    ),
+    _Rung(
+        "lm_gated", _lm_gate, "always", lambda p: p.lm_ref is not None,
+        lambda p: {"lm_ppl_max": p.lm_ppl_max,
+                   "lm_vocab_size": p.lm_vocab_size,
+                   "has_lm_ref": True} if p.lm_ref is not None else {},
+    ),
+    _Rung(
+        "clf_gated", _clf_gate, "always", lambda p: p.clf_pos is not None,
+        lambda p: {"clf_min_score": p.clf_min_score, "clf_dim": p.clf_dim,
+                   "has_clf_ref": True} if p.clf_pos is not None else {},
+    ),
+    _Rung("exact", _exact, "tokens"),
+    _Rung("neardup", _neardup, "audit",
+          manifest=lambda p: {"neardup_threshold": p.neardup_threshold}),
+    _Rung(
+        "decontaminated", _decontaminate, "audit",
+        lambda p: p.benchmark is not None,
+        lambda p: {"has_benchmark": p.benchmark is not None,
+                   "decontam_n": p.decontam_n,
+                   "decontam_min_frac": p.decontam_min_frac},
+    ),
+    _Rung(
+        "dsir", _dsir, "audit", lambda p: p.dsir_target is not None,
+        lambda p: {"dsir_k": p.dsir_k, "dsir_dim": p.dsir_dim,
+                   "has_dsir_target": True}
+        if p.dsir_target is not None else {},
+    ),
+    _Rung("final", _split, "output",
+          manifest=lambda p: {"train": p.train, "val": p.val}),
+)
+
+#: Rung order; under a staged store root each is a parquet dir, complete
+#: once it holds Spark's _SUCCESS marker.
+STAGED_RUNGS = tuple(r.name for r in _LADDER)
+
+#: Knob groups that configure one optional rung together or not at all.
+_TOGETHER = (("lm_ref", "lm_ppl_max"), ("clf_pos", "clf_neg", "clf_min_score"),
+             ("dsir_target", "dsir_k"))
+
+#: The DataFrame inputs whose file identity a staged manifest pins.
+_INPUTS = ("docs", "benchmark", "lm_ref", "clf_pos", "clf_neg", "dsir_target")
+
+
+def _params(kw: dict) -> SimpleNamespace:
+    """An entry point's arguments as the ladder's knobs, validated once,
+    before any plan is built: each _TOGETHER group comes complete or not
+    at all, and ``stop_after`` names a rung this run has."""
+    p = SimpleNamespace(**{"metrics": None, "stop_after": None, **kw})
+    for group in _TOGETHER:
+        given = [getattr(p, k) is not None for k in group]
+        if any(given) and not all(given):
+            raise ValueError(
+                f"{', '.join(group[:-1])} and {group[-1]} come together — "
+                "a partially-configured rung would silently gate nothing"
+            )
+    rungs = [r.name for r in _LADDER if r.enabled(p)]
+    if p.stop_after is not None and p.stop_after not in rungs:
         raise ValueError(
-            f"{where}: clf_pos, clf_neg and clf_min_score come together "
-            "— a partially-configured classifier rung would silently "
-            "gate nothing"
+            f"stop_after={p.stop_after!r} is not a rung of this run, which "
+            f"has {rungs} — a rung whose knobs are unset does not exist"
         )
+    return p
 
 
-def _validate_dsir_params(dsir_target, dsir_k, where: str):
-    """The DSIR rung's two knobs come together or not at all — a target
-    corpus without a selection size (or vice versa) cannot select."""
-    given = [dsir_target is not None, dsir_k is not None]
-    if any(given) and not all(given):
-        raise ValueError(
-            f"{where}: dsir_target and dsir_k come together — a "
-            "partially-configured DSIR rung cannot select"
+def _walk(ex) -> DataFrame:
+    """Run the enabled rungs in order on ``ex``, through ``stop_after``."""
+    cur = ex.p.docs
+    for rung in _LADDER:
+        if rung.enabled(ex.p):
+            cur = ex.step(rung, cur)
+            if rung.name == ex.p.stop_after:
+                break
+    return cur
+
+
+class _Pin:
+    """The one-shot executor: the whole ladder is ONE lazy plan.
+
+    Each gate boundary is consumed by 2-3 downstream branches (gated →
+    exact agg + join; exact → minhash twice + the left_anti).  Without
+    persist() the whole upstream ladder — profile explode+agg, dedup
+    joins, minhash banding — re-executes once PER BRANCH inside the one
+    final action (measured 3× wall-clock at sf0.1).  persist is lazy and
+    the pinned rungs are the pruned survivor sets, not the raw corpus.
+    The exact boundary also caches its token arrays: the near-dup rung
+    consumes tokens twice (banding + verify), so tokenizing once into
+    the cache trades ~text-sized extra cache for zero re-splits.  The
+    handles ride on the result as ``_pinned``."""
+
+    tok_col = "__tok"
+
+    def __init__(self, p):
+        self.p = p
+        self.checkpoint_dir = p.checkpoint_dir
+        self.pins: list = []
+
+    def reuse(self, df):
+        """Pin the boundary an eager build is about to scan, if unpinned."""
+        if not df.storageLevel.useMemory:
+            df = df.persist()
+            self.pins.append(df)
+        return df
+
+    def step(self, rung: _Rung, cur):
+        """Build the rung and apply its ``pin``: "always" persists,
+        "tokens" persists with the token column cached, "audit" persists
+        only while a metrics dict is filled, "never" only records, and
+        "output" (the returned plan) neither persists nor records."""
+        df = rung.build(cur, self.p, self)
+        # vars(): DataFrame.__getattr__ would look a missing name up in
+        # the schema, one JVM round trip per rung
+        self.pins.extend(vars(df).get("_pinned", []))
+        if rung.pin == "output":
+            return df
+        metrics = self.p.metrics
+        if rung.pin == "tokens":
+            df = df.withColumn(self.tok_col, tokens(self.p.text_col))
+        if rung.pin in ("always", "tokens") or (
+                rung.pin == "audit" and metrics is not None):
+            # audit pins keep rung_counts cache-local instead of
+            # re-running the component/decontamination passes
+            df = df.persist()
+            self.pins.append(df)
+        if metrics is not None:
+            # the recorded exact boundary is token-free: a plain Project
+            # over the cached plan, so its count stays cache-local
+            metrics[rung.name] = (df.drop(self.tok_col)
+                                  if rung.pin == "tokens" else df)
+        return df
+
+    def run(self) -> DataFrame:
+        if self.p.metrics is not None:
+            # the audit counts rows in even when no surgery rung runs
+            self.p.metrics["input"] = self.p.docs
+        out = _walk(self)
+        out._pinned = self.pins
+        return out
+
+
+def _input_identity(df) -> str | None:
+    """sha256 over a DataFrame's sorted ``inputFiles`` (paths, which for
+    immutable parquet layouts identify the bytes); None for in-memory /
+    non-file plans, which cannot be identified."""
+    if df is None:
+        return None
+    try:
+        files = sorted(df.inputFiles())
+    except Exception:
+        return None
+    if not files:
+        return None
+    return hashlib.sha256("\n".join(files).encode("utf-8")).hexdigest()
+
+
+class _Commit:
+    """The staged executor (contract: :func:`curate_corpus_staged`).  A
+    committed rung is read back instead of rebuilt, so its eager model
+    fits (vocab, classifier, DSIR buckets) never rerun on resume."""
+
+    tok_col = None
+
+    def __init__(self, p):
+        self.p = p
+        self.spark = p.docs.sparkSession
+        self.fs = fsmod.get_fs(self.spark, p.store_dir)
+        self.root = p.store_dir.rstrip("/")
+        # a scheme:// store means cluster storage: the hash-min loop
+        # checkpoints durably next to the rungs
+        self.checkpoint_dir = fsmod.derive_checkpoint_dir(self.root)
+
+    def reuse(self, df):
+        return df  # already a committed parquet read
+
+    def step(self, rung: _Rung, cur):
+        fs, final = self.fs, f"{self.root}/{rung.name}"
+        if not fs.exists(f"{final}/_SUCCESS"):
+            df = rung.build(cur, self.p, self)
+            tmp = f"{self.root}/_tmp_{rung.name}"
+            fs.delete(tmp)
+            df.write.mode("overwrite").parquet(tmp)
+            fs.delete(final)  # a crashed write without _SUCCESS
+            fs.rename(tmp, final)
+            for h in vars(df).get("_pinned", []):
+                h.unpersist()  # the committed parquet is the pin now
+        out = self.spark.read.parquet(final)
+        if self.p.metrics is not None:
+            self.p.metrics[rung.name] = out
+        return out
+
+    def run(self) -> DataFrame:
+        p, fs, root = self.p, self.fs, self.root
+        fs.mkdirs(root)
+        params: dict = {}
+        for rung in _LADDER:
+            params.update(rung.manifest(p))
+        inputs = {k: _input_identity(getattr(p, k)) for k in _INPUTS}
+        with fsmod.WriterLease.maybe(fs, root, p.lease_timeout_sec):
+            manifest_path = f"{root}/curation.json"
+            prev = fsmod.read_json(fs, manifest_path, default={})
+            if not p.resume or not prev:
+                for rung in STAGED_RUNGS:
+                    fs.delete(f"{root}/{rung}")
+                    fs.delete(f"{root}/_tmp_{rung}")
+                fsmod.write_json_atomic(
+                    fs, manifest_path, {"params": params, "inputs": inputs}
+                )
+            else:
+                self._check_resume(manifest_path, prev, params, inputs)
+            return _walk(self)
+
+    def _check_resume(self, manifest_path, prev, params, inputs) -> None:
+        """Different parameters or input files are a loud error: the
+        committed rungs came from the old ones."""
+        old, old_inputs = prev.get("params", {}), prev.get("inputs", {})
+        # union of key sets: an lm-on manifest resumed by an lm-off run
+        # differs only by keys ABSENT from the new params
+        changed = sorted(k for k in set(params) | set(old)
+                         if old.get(k) != params.get(k))
+        drifted = sorted(
+            k for k in inputs
+            if None not in (inputs[k], old_inputs.get(k))
+            and inputs[k] != old_inputs[k]
         )
+        for what, keys in (("parameters", changed), ("input data", drifted)):
+            if keys:
+                raise ValueError(
+                    f"curate_corpus_staged: resuming with different {what} "
+                    f"than the manifest at {manifest_path} (changed: "
+                    f"{keys}); pass resume=False to discard the stored "
+                    "rungs and rerun"
+                )
+        unverifiable = sorted(
+            k for k in inputs
+            if getattr(self.p, k) is not None
+            and None in (inputs[k], old_inputs.get(k))
+        )
+        if unverifiable:
+            warnings.warn(
+                "curate_corpus_staged: cannot verify input identity for "
+                f"{unverifiable} (in-memory input or pre-r9 manifest) — "
+                "the resume assumes the same inputs as the committed rungs",
+                UserWarning,
+                stacklevel=4,
+            )
 
 
 def curate_corpus(
@@ -696,32 +1005,22 @@ def curate_corpus(
     dsir_dim: int = 1 << 14,
 ) -> DataFrame:
     """The full curation ladder a pretraining pipeline runs, as ONE
-    composed plan: optional HTML→text extraction (``html`` — the raw
-    web-corpus ingestion stage, textstats.html_to_text, pure map; runs
-    before everything so every later signal sees prose, not markup) →
-    optional within-document duplicate-line removal
-    (``line_dedup`` — the finest-grain surgery, pure map) → optional
-    paragraph-boilerplate removal
-    (``paragraph_max_df``) → optional repeated-span removal
-    (``span_n`` — the windowed exact-substring rung, one surviving
-    winner per span) → quality signals → language/quality gate →
-    optional unigram-LM perplexity gate (``lm_ref`` + ``lm_ppl_max``:
-    CCNet-style, drop documents whose ppl under the reference-corpus
-    model exceeds the bound — textstats.unigram_lm/lm_score; the vocab
-    is broadcast state, so the rung is one more map-side pass over the
-    already-gated survivors) → optional trained-classifier gate
-    (``clf_pos`` + ``clf_neg`` + ``clf_min_score``: fastText-style
-    hashed-linear filter — textstats.train_quality_classifier /
-    quality_clf_score; the weight table is broadcast state, so this is
-    one more map-side pass too) → exact dedup → minhash near-dup removal
-    (transitively closed) → optional benchmark decontamination
-    (``benchmark``, fraction-gated) → optional DSIR importance
-    resampling (``dsir_target`` + ``dsir_k``: keep the k documents most
-    like the target distribution under hashed n-gram models —
-    :func:`dsir_resample`; runs LAST so the importance pool is the
-    cleaned, deduped, decontaminated survivor set and the selection is
-    never diluted by rows later rungs would drop) → deterministic
-    split.  Output: the surviving docs with (lang_guess, n_ws, split).
+    composed plan: optional HTML→text extraction (``html``, pure map) →
+    optional within-document duplicate-line removal (``line_dedup``,
+    pure map) → optional paragraph-boilerplate removal
+    (``paragraph_max_df``) → optional repeated-span removal (``span_n``
+    — the windowed exact-substring rung, one surviving winner per span)
+    → quality signals → language/quality gate → optional unigram-LM
+    perplexity gate (``lm_ref`` + ``lm_ppl_max``: CCNet-style, drop
+    documents whose ppl under the reference-corpus model exceeds the
+    bound) → optional trained-classifier gate (``clf_pos`` + ``clf_neg``
+    + ``clf_min_score``: fastText-style hashed-linear filter) → exact
+    dedup → minhash near-dup removal (transitively closed) → optional
+    benchmark decontamination (``benchmark``, fraction-gated) → optional
+    DSIR importance resampling (``dsir_target`` + ``dsir_k``: keep the k
+    survivors most like the target distribution, :func:`dsir_resample`)
+    → deterministic split.  Output: the surviving docs with
+    (lang_guess, n_ws, split).
 
     Every rung reuses the scale-shaped operator it names — the profile's
     single explode+agg pass, fingerprint groupBy (8-byte digests, never
@@ -731,6 +1030,10 @@ def curate_corpus(
     matters for cost: the quality gate runs FIRST so dedup's shuffles
     only carry documents that could survive.
 
+    Every gate boundary (and exact) is persisted: a caller running the
+    ladder in a loop should ``dedup.release_pins(result)`` after
+    consuming it, or the cache entries live for the session.
+
     ``metrics``: pass an empty dict and each rung-boundary DataFrame is
     recorded under its name (``input``, ``gated``, ``lm_gated`` /
     ``clf_gated`` when those rungs are on, ``exact``, ``neardup``,
@@ -739,190 +1042,7 @@ def curate_corpus(
     ``release_pins``), :func:`rung_counts` turns the dict into row
     counts with one cache-local job over the pinned boundaries.
     """
-    audit_pins: list = []
-
-    def obs(df: DataFrame, rung: str) -> DataFrame:
-        if metrics is None:
-            return df
-        if rung in ("neardup", "decontaminated", "dsir"):
-            # these boundaries are not otherwise persisted (consumed
-            # once by the main plan); pin them while an audit is
-            # requested so rung_counts stays cache-local instead of
-            # re-running the component/decontamination passes.  The
-            # handles ride on _pinned like every other rung.
-            df = df.persist()
-            audit_pins.append(df)
-        metrics[rung] = df
-        return df
-
-    docs, span_pins = _rung_surgery(
-        docs, text_col, id_col, paragraph_max_df, span_n, span_stride,
-        line_dedup=line_dedup, html=html,
-    )
-    docs = obs(docs, "input")
-    keep_quality = _rung_quality_keep(
-        docs, text_col, id_col, langs, min_tokens,
-        max_dup_line_frac, max_top_bigram_frac,
-    )
-    # Each rung boundary below is consumed by 2-3 downstream branches
-    # (gated → exact agg + join; exact → minhash twice + the left_anti;
-    # pairs → component nodes + edges).  Without persist() the whole
-    # upstream ladder — profile explode+agg, dedup joins, minhash
-    # banding — re-executes once PER BRANCH inside the one final action
-    # (measured 3× wall-clock at sf0.1).  persist is lazy (the returned
-    # plan stays declarative) and the pinned rungs are the pruned
-    # survivor sets, not the raw corpus.  The handles ride on the
-    # returned DataFrame as ``_pinned``: a caller running the ladder in
-    # a loop should dedup.release_pins(result) after consuming it, or
-    # the cache entries live for the session.
-    gated = obs(docs.join(keep_quality, id_col), "gated").persist()
-    # every (possibly rebound) gate boundary is persisted and its handle
-    # kept: the exact rung consumes the final `gated` twice (keeper agg
-    # + join) and rung_counts scans it once more, and rebinding the name
-    # without keeping the handle would leak the previous boundary's
-    # cache entry past release_pins.
-    rung_pins: list = [gated]
-
-    if (lm_ref is None) != (lm_ppl_max is None):
-        raise ValueError(
-            "curate_corpus: lm_ref and lm_ppl_max come together — a "
-            "reference corpus without a perplexity bound (or vice "
-            "versa) would silently gate nothing")
-    if lm_ref is not None:
-        # CCNet-style perplexity gate on the heuristic-gated survivors:
-        # the vocab is bounded broadcast state, so this adds one
-        # explode + broadcast-join + hash-agg pass — no new corpus-
-        # sized shuffle — and runs BEFORE dedup for the same reason the
-        # quality gate does (dedup's shuffles only carry keepers).
-        from timesearch_spark.operators.textstats import lm_score, unigram_lm
-
-        vocab, oov = unigram_lm(lm_ref, text_col, vocab_size=lm_vocab_size)
-        keep_lm = (
-            lm_score(gated, vocab, oov, text_col, id_col)
-            .filter((F.col("n_tok") > 0) & (F.col("ppl") <= lm_ppl_max))
-            .select(id_col)
-        )
-        gated = obs(
-            gated.join(keep_lm, id_col, "left_semi"), "lm_gated"
-        ).persist()
-        rung_pins.append(gated)
-
-    _validate_clf_params(clf_pos, clf_neg, clf_min_score, "curate_corpus")
-    if clf_pos is not None:
-        # Trained-classifier gate (the third standard quality filter,
-        # after the heuristic gate and the LM rung): fit once from the
-        # bounded labeled sample, then one map-side scoring pass over
-        # the survivors — the weight table is broadcast state like the
-        # LM vocab, and the rung runs BEFORE dedup for the same cost
-        # argument as the other two gates.
-        from timesearch_spark.operators.textstats import (
-            quality_clf_score, train_quality_classifier,
-        )
-
-        Wc, bc = train_quality_classifier(
-            clf_pos, clf_neg, text_col, dim=clf_dim
-        )
-        keep_clf = (
-            quality_clf_score(gated, Wc, bc, text_col, id_col, dim=clf_dim)
-            .filter(F.col("score") >= clf_min_score)
-            .select(id_col)
-        )
-        gated = obs(
-            gated.join(keep_clf, id_col, "left_semi"), "clf_gated"
-        ).persist()
-        rung_pins.append(gated)
-
-    # exact dedup: keep the lowest id of each identical-text group.
-    # The persisted rung ALSO materializes the token arrays (__tok):
-    # the near-dup rung below consumes tokens twice (banding + verify),
-    # so tokenizing once into the cache trades ~text-sized extra cache
-    # for zero re-splits downstream — the audit boundary and the output
-    # stay token-free (obs records the dropped projection, which is a
-    # plain Project over the cached plan, so rung_counts stays
-    # cache-local).
-    exact = gated.join(
-        _rung_exact_keepers(gated, text_col, id_col), id_col
-    ).withColumn("__tok", tokens(text_col)).persist()
-    obs(exact.drop("__tok"), "exact")
-
-    # near-dup removal, transitively closed: pairs → components → keeper
-    # (shared builder; see _rung_neardup_non_keepers for the plan notes)
-    surviving = obs(
-        exact.join(
-            _rung_neardup_non_keepers(
-                exact, text_col, id_col, neardup_threshold,
-                checkpoint_dir=checkpoint_dir, tok_col="__tok",
-            ),
-            id_col,
-            "left_anti",
-        ).drop("__tok"),
-        "neardup",
-    )
-
-    if benchmark is not None:
-        # decontaminate LAST: the broadcast-probe runs over the smallest
-        # surviving set, and near-dups of a leaked doc are already gone
-        hits = _rung_decontam_hits(
-            surviving, benchmark, text_col, id_col,
-            decontam_n, decontam_min_frac,
-        )
-        surviving = obs(
-            surviving.join(hits, id_col, "left_anti"), "decontaminated"
-        )
-
-    _validate_dsir_params(dsir_target, dsir_k, "curate_corpus")
-    if dsir_target is not None:
-        # DSIR selection LAST (public recipe: Xie et al. 2023): the
-        # importance pool is the final survivor set.  dsir_resample
-        # collects its two dim-bounded bucket models EAGERLY (broadcast-
-        # state build, like the near-dup rung's octet probe), so the
-        # survivor boundary is pinned first — the model fit materializes
-        # the upstream ladder into cache once and the selection join
-        # reuses it.  (Already pinned when a metrics dict made obs()
-        # persist the neardup/decontaminated boundary — don't re-pin.)
-        if not surviving.storageLevel.useMemory:
-            surviving = surviving.persist()
-            rung_pins.append(surviving)
-        keep_dsir = dsir_resample(
-            surviving, dsir_target, dsir_k, text_col, id_col,
-            dim=dsir_dim,
-        ).select(id_col)
-        surviving = obs(
-            surviving.join(F.broadcast(keep_dsir), id_col, "left_semi"),
-            "dsir",
-        )
-
-    out = train_val_test_split(surviving, id_col, train, val).select(
-        id_col, text_col, "lang_guess", "n_ws", "split"
-    )
-    out._pinned = [*span_pins, *rung_pins, exact, *audit_pins]
-    return out
-
-
-# --- rung-checkpointed (resumable) curation -----------------------------------
-
-#: Rung order for the staged ladder; each entry is a parquet dir under the
-#: store root whose presence (with Spark's _SUCCESS marker) means "completed".
-STAGED_RUNGS = ("input", "gated", "lm_gated", "clf_gated", "exact",
-                "neardup", "decontaminated", "dsir", "final")
-
-
-def _input_identity(df) -> str | None:
-    """Stable identity of a DataFrame's file-backed inputs: sha256 over
-    the sorted ``inputFiles`` list (paths, which for immutable parquet
-    layouts identify the bytes).  None for in-memory / non-file plans —
-    those cannot be identified and the caller falls back to a warning."""
-    if df is None:
-        return None
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        return None
-    if not files:
-        return None
-    import hashlib
-
-    return hashlib.sha256("\n".join(files).encode("utf-8")).hexdigest()
+    return _Pin(_params(locals())).run()
 
 
 def curate_corpus_staged(
@@ -960,366 +1080,48 @@ def curate_corpus_staged(
     dsir_dim: int = 1 << 14,
 ) -> DataFrame:
     """:func:`curate_corpus` with each rung boundary CHECKPOINTED to
-    ``store_dir`` — the fault-tolerance contract a multi-hour corpus
-    curation job needs: a run killed at rung 4 restarts from rung 4,
-    not rung 0.  Same rungs, same operators, same deterministic
-    hash-keyed decisions, so the final table is row-identical to the
-    one-shot ladder (test-pinned).
+    ``store_dir``: a run killed at rung 4 restarts from rung 4, not rung
+    0.  The same ladder runs, so the final table is row-identical to the
+    one-shot one (test-pinned).
 
-    Each rung writes to ``<store_dir>/_tmp_<rung>`` and renames into
-    place — readers and resumers only ever see complete rungs (Spark's
-    ``_SUCCESS`` marker is checked too, guarding a crash between write
-    and rename).  A ``curation.json`` manifest pins the ladder
-    parameters AND the input identity (a digest of the docs' and
-    benchmark's sorted parquet ``inputFiles``): resuming with DIFFERENT
-    parameters or against DIFFERENT input data is a loud error, not a
-    silently mixed corpus — the committed rungs came from the old
-    files.  In-memory inputs (no file lineage) cannot be identified;
-    those resume with a ``UserWarning`` and the same-docs contract
-    falls back to the caller.  ``resume=False`` wipes the store and
-    recomputes everything.  ``lease_timeout_sec`` serializes two
-    concurrent runners over the same store via :class:`~timesearch_spark.
-    fs.WriterLease` (same contract as the ingest stores).
+    Each enabled rung of :data:`STAGED_RUNGS` is written to
+    ``<store_dir>/_tmp_<rung>``, renamed into place and read back; a
+    rung with its ``_SUCCESS`` marker is read, never recomputed.
+    ``input`` is committed only when surgery is configured (otherwise it
+    would copy the source corpus); ``final`` is the split output.  A
+    ``curation.json`` manifest pins the parameters and the input
+    identity (a digest of each input's sorted parquet ``inputFiles``):
+    resuming with different parameters or input files is a loud error;
+    in-memory inputs cannot be identified and resume with a
+    ``UserWarning``.  ``resume=False`` wipes the store and recomputes;
+    ``lease_timeout_sec`` serializes concurrent runners via
+    :class:`~timesearch_spark.fs.WriterLease`; ``stop_after`` (a rung
+    this run has) ends the run once that rung commits — the ops hook
+    for staged scheduling and the resume tests' crash point.
 
-    Trade vs the one-shot ladder: every boundary pays a parquet
-    write+read instead of an in-memory pin.  At benchmark scale that is
-    pure overhead (~the size of the surviving rows, which the gate has
-    already shrunk); at 100 TB it is the difference between re-running
-    a day of shuffles and reading yesterday's survivors back columnar.
-    ``stop_after`` (a rung name) ends the run after that rung commits —
-    the ops hook for staged/priority scheduling, and the crash injection
-    point for the resume tests.
-
-    Unlike :func:`curate_corpus`, nothing stays persist()ed and nothing
-    rides on ``_pinned`` — the parquet rungs ARE the pins (the span
-    rung's transient caches are released the moment its parquet
-    commits); there is no release contract.
+    Every boundary pays a parquet write+read instead of an in-memory
+    pin: pure overhead at benchmark scale, and at 100 TB the difference
+    between re-running a day of shuffles and reading yesterday's
+    survivors back.  Nothing stays persisted; there is no release
+    contract.
     """
-    from timesearch_spark import fs as fsmod
+    return _Commit(_params(locals())).run()
 
-    if stop_after is not None and stop_after not in STAGED_RUNGS:
-        raise ValueError(
-            f"stop_after must be one of {STAGED_RUNGS}, got {stop_after!r}"
-        )
-    if stop_after == "decontaminated" and benchmark is None:
-        raise ValueError(
-            "stop_after='decontaminated' needs a benchmark — without one "
-            "that rung does not exist"
-        )
-    if stop_after == "input" and paragraph_max_df is None and span_n is None:
-        raise ValueError(
-            "stop_after='input' needs paragraph_max_df or span_n — with "
-            "neither configured the input rung is the identity and is "
-            "never committed"
-        )
-    if (lm_ref is None) != (lm_ppl_max is None):
-        raise ValueError(
-            "curate_corpus_staged: lm_ref and lm_ppl_max come together — "
-            "a reference corpus without a perplexity bound (or vice "
-            "versa) would silently gate nothing")
-    if stop_after == "lm_gated" and lm_ref is None:
-        raise ValueError(
-            "stop_after='lm_gated' needs lm_ref/lm_ppl_max — without "
-            "them that rung does not exist"
-        )
-    _validate_clf_params(clf_pos, clf_neg, clf_min_score,
-                         "curate_corpus_staged")
-    if stop_after == "clf_gated" and clf_pos is None:
-        raise ValueError(
-            "stop_after='clf_gated' needs clf_pos/clf_neg/clf_min_score "
-            "— without them that rung does not exist"
-        )
-    _validate_dsir_params(dsir_target, dsir_k, "curate_corpus_staged")
-    if stop_after == "dsir" and dsir_target is None:
-        raise ValueError(
-            "stop_after='dsir' needs dsir_target/dsir_k — without them "
-            "that rung does not exist"
-        )
-    spark = docs.sparkSession
-    fs = fsmod.get_fs(spark, store_dir)
-    root = store_dir.rstrip("/")
-    fs.mkdirs(root)
-    params = {
-        "text_col": text_col, "id_col": id_col, "langs": list(langs),
-        "min_tokens": min_tokens, "max_dup_line_frac": max_dup_line_frac,
-        "max_top_bigram_frac": max_top_bigram_frac,
-        "neardup_threshold": neardup_threshold,
-        "paragraph_max_df": paragraph_max_df,
-        "span_n": span_n, "span_stride": span_stride,
-        "has_benchmark": benchmark is not None,
-        "decontam_n": decontam_n, "decontam_min_frac": decontam_min_frac,
-        "train": train, "val": val,
-    }
-    if line_dedup:
-        # present only when ON, like the lm/clf keys below: pre-r12
-        # manifests (no line_dedup key) stay resumable by default runs
-        params["line_dedup"] = True
-    if html:
-        # same contract: present only when the extraction rung is on,
-        # so pre-r14 manifests stay resumable by html-off runs while
-        # mixing html-on and html-off over one store errors loudly
-        params["html"] = True
-    if lm_ref is not None:
-        # only present when the rung is ON: a pre-r12 manifest (no lm
-        # keys) stays resumable by an lm-off run, while mixing lm-on
-        # and lm-off runs over one store is the loud params error
-        params.update({"lm_ppl_max": lm_ppl_max,
-                       "lm_vocab_size": lm_vocab_size, "has_lm_ref": True})
-    if clf_pos is not None:
-        # same contract as the lm keys: present only when the rung is on
-        params.update({"clf_min_score": clf_min_score, "clf_dim": clf_dim,
-                       "has_clf_ref": True})
-    if dsir_target is not None:
-        # same contract again: keys present only when the rung is on
-        params.update({"dsir_k": dsir_k, "dsir_dim": dsir_dim,
-                       "has_dsir_target": True})
-    inputs = {
-        "docs": _input_identity(docs),
-        "benchmark": _input_identity(benchmark),
-        "lm_ref": _input_identity(lm_ref),
-        "clf_pos": _input_identity(clf_pos),
-        "clf_neg": _input_identity(clf_neg),
-        "dsir_target": _input_identity(dsir_target),
-    }
 
-    with fsmod.WriterLease.maybe(fs, root, lease_timeout_sec):
-        manifest_path = f"{root}/curation.json"
-        prev = fsmod.read_json(fs, manifest_path, default={})
-        if not resume or not prev:
-            for rung in STAGED_RUNGS:
-                fs.delete(f"{root}/{rung}")
-                fs.delete(f"{root}/_tmp_{rung}")
-            fsmod.write_json_atomic(
-                fs, manifest_path, {"params": params, "inputs": inputs}
-            )
-        elif prev.get("params") != params:
-            # union of key sets: an lm-on manifest resumed by an lm-off
-            # run differs only by keys ABSENT from the new params
-            changed = sorted(
-                k for k in set(params) | set(prev.get("params", {}))
-                if prev.get("params", {}).get(k) != params.get(k)
-            )
-            raise ValueError(
-                "curate_corpus_staged: resuming with different parameters "
-                f"than the manifest at {manifest_path} (changed: {changed}); "
-                "pass resume=False to discard the stored rungs and rerun"
-            )
-        else:
-            # input-identity drift is the same class of error as a
-            # parameter change: committed rungs were computed from the
-            # OLD files, and mixing them with new-data rungs is the
-            # silently-mixed corpus the manifest exists to prevent
-            prev_inputs = prev.get("inputs", {})
-            drifted = sorted(
-                k for k in inputs
-                if inputs[k] is not None
-                and prev_inputs.get(k) is not None
-                and inputs[k] != prev_inputs[k]
-            )
-            if drifted:
-                raise ValueError(
-                    "curate_corpus_staged: resuming against different "
-                    f"input data than the manifest at {manifest_path} "
-                    f"(drifted: {drifted}); pass resume=False to discard "
-                    "the stored rungs and rerun"
-                )
-            active = {"docs": True, "benchmark": benchmark is not None,
-                      "lm_ref": lm_ref is not None,
-                      "clf_pos": clf_pos is not None,
-                      "clf_neg": clf_neg is not None,
-                      "dsir_target": dsir_target is not None}
-            unverifiable = sorted(
-                k for k in inputs
-                if active[k]
-                and (inputs[k] is None or prev_inputs.get(k) is None)
-            )
-            if unverifiable:
-                import warnings
-
-                warnings.warn(
-                    "curate_corpus_staged: cannot verify input identity "
-                    f"for {unverifiable} (in-memory input or pre-r9 "
-                    "manifest) — the resume assumes the same inputs as "
-                    "the committed rungs",
-                    UserWarning,
-                    stacklevel=2,
-                )
-
-        def stage(rung: str, compute):
-            """Return the rung's DataFrame, computing + committing it only
-            when no completed copy exists; None = ladder stops here."""
-            final = f"{root}/{rung}"
-            if fs.exists(f"{final}/_SUCCESS"):
-                return spark.read.parquet(final)
-            df = compute()
-            tmp = f"{root}/_tmp_{rung}"
-            fs.delete(tmp)
-            df.write.mode("overwrite").parquet(tmp)
-            fs.delete(final)  # a crashed write without _SUCCESS
-            fs.rename(tmp, final)
-            return spark.read.parquet(final)
-
-        # The input rung exists to checkpoint the paragraph/span surgery;
-        # with neither configured it would be a byte-identical full copy
-        # of the (at scale, 100 TB) source corpus — skip the write and
-        # let the gate read the source directly.  Resume is unaffected:
-        # the resume contract already requires the caller to pass the
-        # same docs, which IS the identity rung.  The span rung's
-        # persisted sub-plans (captured by _rung_surgery) are released
-        # as soon as the rung parquet is committed — the parquet IS the
-        # pin from then on, unlike the one-shot ladder where the handles
-        # must outlive the returned plan.
-        surgery_pins: list = []
-
-        def build_input():
-            d, pins = _rung_surgery(
-                docs, text_col, id_col, paragraph_max_df, span_n,
-                span_stride, line_dedup=line_dedup, html=html,
-            )
-            surgery_pins.extend(pins)
-            return d
-
-        if paragraph_max_df is not None or span_n is not None \
-                or line_dedup or html:
-            cur = stage("input", build_input)
-            for p in surgery_pins:
-                p.unpersist()
-        else:
-            cur = docs
-        if stop_after == "input":
-            return cur
-
-        cur = stage(
-            "gated",
-            lambda: cur.join(
-                _rung_quality_keep(
-                    cur, text_col, id_col, langs, min_tokens,
-                    max_dup_line_frac, max_top_bigram_frac,
-                ),
-                id_col,
-            ),
-        )
-        if stop_after == "gated":
-            return cur
-
-        if lm_ref is not None:
-            def build_lm_gated():
-                # same rung as the one-shot ladder (curate_corpus): the
-                # vocab is bounded broadcast state, so this is one
-                # explode + broadcast-join + hash-agg pass over the
-                # heuristic-gated survivors — no corpus-sized shuffle.
-                # Committing it to parquet means a killed run never
-                # re-fits the reference LM: the rung output is the
-                # checkpoint, and the vocab is rebuilt only when the
-                # rung itself must be recomputed.
-                from timesearch_spark.operators.textstats import (
-                    lm_score, unigram_lm,
-                )
-
-                vocab, oov = unigram_lm(
-                    lm_ref, text_col, vocab_size=lm_vocab_size
-                )
-                keep_lm = (
-                    lm_score(cur, vocab, oov, text_col, id_col)
-                    .filter(
-                        (F.col("n_tok") > 0) & (F.col("ppl") <= lm_ppl_max)
-                    )
-                    .select(id_col)
-                )
-                return cur.join(keep_lm, id_col, "left_semi")
-
-            cur = stage("lm_gated", build_lm_gated)
-            if stop_after == "lm_gated":
-                return cur
-
-        if clf_pos is not None:
-            def build_clf_gated():
-                # the model refits only when this rung must recompute —
-                # the committed rung parquet is the checkpoint, exactly
-                # like the lm rung's vocabulary
-                from timesearch_spark.operators.textstats import (
-                    quality_clf_score, train_quality_classifier,
-                )
-
-                Wc, bc = train_quality_classifier(
-                    clf_pos, clf_neg, text_col, dim=clf_dim
-                )
-                keep_clf = (
-                    quality_clf_score(
-                        cur, Wc, bc, text_col, id_col, dim=clf_dim
-                    )
-                    .filter(F.col("score") >= clf_min_score)
-                    .select(id_col)
-                )
-                return cur.join(keep_clf, id_col, "left_semi")
-
-            cur = stage("clf_gated", build_clf_gated)
-            if stop_after == "clf_gated":
-                return cur
-
-        cur = stage(
-            "exact",
-            lambda: cur.join(_rung_exact_keepers(cur, text_col, id_col), id_col),
-        )
-        if stop_after == "exact":
-            return cur
-
-        cur = stage(
-            "neardup",
-            lambda: cur.join(
-                _rung_neardup_non_keepers(
-                    cur, text_col, id_col, neardup_threshold,
-                    # a scheme:// store means cluster storage: the
-                    # hash-min loop checkpoints durably next to the
-                    # rungs instead of into executor-local blocks
-                    checkpoint_dir=fsmod.derive_checkpoint_dir(root),
-                ),
-                id_col,
-                "left_anti",
-            ),
-        )
-        if stop_after == "neardup":
-            return cur
-
-        if benchmark is not None:
-            cur = stage(
-                "decontaminated",
-                lambda: cur.join(
-                    _rung_decontam_hits(
-                        cur, benchmark, text_col, id_col,
-                        decontam_n, decontam_min_frac,
-                    ),
-                    id_col,
-                    "left_anti",
-                ),
-            )
-            if stop_after == "decontaminated":
-                return cur
-
-        if dsir_target is not None:
-            def build_dsir():
-                # the two bucket models refit only when this rung must
-                # recompute — the committed rung parquet is the
-                # checkpoint, exactly like the lm rung's vocabulary and
-                # the clf rung's weights; `cur` is already a committed
-                # parquet read, so the eager model collects scan the
-                # rung, not the ladder
-                keep = dsir_resample(
-                    cur, dsir_target, dsir_k, text_col, id_col,
-                    dim=dsir_dim,
-                ).select(id_col)
-                return cur.join(F.broadcast(keep), id_col, "left_semi")
-
-            cur = stage("dsir", build_dsir)
-            if stop_after == "dsir":
-                return cur
-
-        return stage(
-            "final",
-            lambda: train_val_test_split(cur, id_col, train, val).select(
-                id_col, text_col, "lang_guess", "n_ws", "split"
-            ),
-        )
+def _executor(docs, store_dir, metrics, resume=True, lease_timeout_sec=None,
+              **knobs):
+    """A validated ladder run, nothing built yet: committed under
+    ``store_dir``, or pinned without one.  ``metrics`` collects either
+    run's boundaries, so one :func:`rung_counts` reports both."""
+    if store_dir is None:
+        call = inspect.signature(curate_corpus).bind(docs, **knobs)
+    else:
+        call = inspect.signature(curate_corpus_staged).bind(
+            docs, store_dir, resume=resume,
+            lease_timeout_sec=lease_timeout_sec, **knobs)
+    call.apply_defaults()
+    p = _params({**call.arguments, "metrics": metrics})
+    return _Pin(p) if store_dir is None else _Commit(p)
 
 
 # --- corpus mixing: weighted resampling + token budgets ----------------------
@@ -1535,8 +1337,6 @@ def budget_sample(
     stratum; the running sum is an ordered window over (hash, id) so
     membership is a pure function of the data and the seed.  Output:
     (id, stratum, n_tokens, cum_tokens)."""
-    from timesearch_spark.operators.dedup import tokens
-
     key = F.md5(F.concat(F.lit(f"{seed}:"), _c(id_col).cast("string")))
     d = df.select(
         _c(id_col).alias(id_col),
