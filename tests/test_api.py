@@ -303,8 +303,8 @@ def test_offline_reading_auto_routes_mega_threads(spark, tmp_path):
     under max_thread_rows take the fused assembler, over-bound threads
     take the streamed no-ceiling arm, one run, no error (r12 raised a
     loud ValueError instead), bytes identical to an all-streamed run
-    AND to an unrouted fused run; --stream stays the forced override.
-    Counter evidence: the writer spies see exactly the expected split."""
+    AND to an unrouted fused run.  Counter evidence: the writer spies
+    see exactly the expected split."""
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "dump.jsonl"
     # s0: 5 comments (over a bound of 3); s1: 2 comments; s2: none
@@ -345,9 +345,10 @@ def test_offline_reading_auto_routes_mega_threads(spark, tmp_path):
     # s0 (5 comments) streamed; s1 (2 comments) + s2 (0 comments) fused
     assert calls == {"fused": 2, "streamed": 1}
 
-    # byte identity against both unrouted arms
+    # byte identity against both unrouted arms (bound 0 streams every
+    # thread with a comment; zero-comment s2 always takes the fused arm)
     all_stream = tmp_path / "allstream"
-    api.offline_reading(ar, str(all_stream), stream=True)
+    api.offline_reading(ar, str(all_stream), max_thread_rows=0)
     unrouted = tmp_path / "unrouted"
     api.offline_reading(ar, str(unrouted))  # default bound: all fused
     for f in ("t3_s0.html", "t3_s1.html", "t3_s2.html"):
@@ -457,19 +458,15 @@ def test_offline_reading_incremental_deletes_stale_pages(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_offline_reading_mass_rollback_deletes_distributed(
-        spark, tmp_path, monkeypatch):
+def test_offline_reading_mass_rollback_deletes_distributed(spark, tmp_path):
     """r14 (VERDICT r13 #2): a MASS rollback — thousands of manifest
     rows whose threads left the archive — must not collect idstrs to
     the driver or delete serially: the removal delta rides
     mapInPandas + pyarrow.fs (exports.delete_thread_pages_distributed)
-    and the file set converges to a from-scratch render's; a forced
-    failure of the distributed arm warns and falls back to the driver
-    thread pool with the IDENTICAL file set."""
+    and the file set converges to a from-scratch render's."""
     import shutil
 
     import pandas as pd
-    import pytest
 
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "dump.jsonl"
@@ -517,24 +514,12 @@ def test_offline_reading_mass_rollback_deletes_distributed(
     for f in html(full):
         assert (out / f).read_bytes() == (full / f).read_bytes()
 
-    # forced fallback: the distributed arm raises → warn + driver pool,
-    # identical converged file set
-    from timesearch_spark.operators import exports as _exports
-
-    def boom(removed, out_dir):
-        raise RuntimeError("no executor-side store access")
-
-    monkeypatch.setattr(_exports, "delete_thread_pages_distributed", boom)
-    plant_stale(500)
-    with pytest.warns(UserWarning, match="falling back"):
-        assert api.offline_reading(ar, str(out), incremental=True) == 0
-    assert html(out) == {"t3_s0.html", "t3_s1.html"}
-
 
 @pytest.mark.slow
 def test_offline_reading_incremental_streamed_arm(spark, tmp_path):
-    """incremental composes with stream=True: the delta routes through
-    the fragment writer and produces the same bytes."""
+    """incremental composes with the streamed arm (max_thread_rows=0
+    routes the commented thread there): the delta goes through the
+    fragment writer and produces the same bytes."""
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "dump.jsonl"
     p.write_text("\n".join(json.dumps(o) for o in
@@ -543,14 +528,14 @@ def test_offline_reading_incremental_streamed_arm(spark, tmp_path):
 
     out = tmp_path / "threads"
     assert api.offline_reading(ar, str(out), incremental=True,
-                               stream=True) == 1
+                               max_thread_rows=0) == 1
     assert api.offline_reading(ar, str(out), incremental=True,
-                               stream=True) == 0
+                               max_thread_rows=0) == 0
     p2 = tmp_path / "dump2.jsonl"
     p2.write_text(json.dumps(_com(5, parent_id="t1_c0", link_id="t3_s0")))
     api.ingest_jsonfile(ar, str(p2))
     assert api.offline_reading(ar, str(out), incremental=True,
-                               stream=True) == 1
+                               max_thread_rows=0) == 1
     full = tmp_path / "full"
     api.offline_reading(ar, str(full))
     assert (out / "t3_s0.html").read_bytes() == \

@@ -136,6 +136,44 @@ def test_breakdown_stream_conflicts_are_usage_errors(root, capsys):
         assert "--stream" in capsys.readouterr().err
 
 
+def test_relative_archive_root_exports(spark, tmp_path, monkeypatch):
+    """The CLI default --archive-root is '.', so archive paths are often
+    relative — and the executor-side writers resolve them through
+    pyarrow, which rejects a relative path.  Page and streamed
+    breakdown exports must land under the archive.  The working
+    directory is pinned to the JVM's, as in a fresh CLI process: Spark
+    resolves the stores' relative paths against that one."""
+    monkeypatch.chdir(spark._jvm.System.getProperty("user.dir"))
+    rel = os.path.relpath(tmp_path / "archives")
+    assert not os.path.isabs(rel)
+    subs = _write_jsonl(tmp_path / "subs.jsonl", [_sub(i) for i in range(2)])
+    coms = _write_jsonl(tmp_path / "coms.jsonl", [_com(i) for i in range(3)])
+    assert cli.main(["--archive-root", rel, "get_submissions",
+                     "-r", "t", "--lower", "0", "--source", subs]) == 0
+    assert cli.main(["--archive-root", rel, "get_comments",
+                     "-r", "t", "--lower", "0", "--source", coms]) == 0
+    archive = tmp_path / "archives" / "subreddits" / "t"
+
+    assert cli.main(["--archive-root", rel, "offline_reading", "-r", "t"]) == 0
+    assert sorted(os.listdir(archive / "offline_reading")) == [
+        "t3_s0.html", "t3_s1.html"]
+    assert cli.main(["--archive-root", rel, "breakdown", "-r", "t",
+                     "--stream"]) == 0
+    data = json.loads((archive / "breakdown" / "t_breakdown.json").read_text())
+    assert sum(v["comments"] for v in data.values()) == 3
+    assert sum(v["submissions"] for v in data.values()) == 2
+
+
+def test_offline_reading_has_no_stream_flag(tmp_path, capsys):
+    """Threads past --max-thread-rows already take the streamed arm, so
+    offline_reading has no flag to force it; breakdown --stream stays."""
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["--archive-root", str(tmp_path), "offline_reading",
+                  "-r", "t", "--stream"])
+    assert exc.value.code == 2
+    assert "--stream" in capsys.readouterr().err
+
+
 def test_index_listing_flags(spark, root):
     assert cli.main(["--archive-root", root, "index", "-r", "t",
                      "--score", "--html"]) == 0

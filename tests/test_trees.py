@@ -340,11 +340,18 @@ def test_thread_pages_byte_parity_with_reference_semantics(spark, tmp_path):
     Byte-compared against an independent in-test oracle of
     offline_reading.py:9-296 on a fixture covering nesting, unique-score
     ordering, a url post, a self post, markdown + <>-escape bodies, and
-    a [deleted] author."""
+    a [deleted] author — on a plain root, a file:// root, and through
+    the streamed arm (thread_page_fragments → write_thread_docs_streamed),
+    with no ``.inprogress`` staging file left behind by any of them."""
     import json
     import os
 
     from timesearch_spark import api
+    from timesearch_spark.operators.exports import (
+        write_thread_docs,
+        write_thread_docs_streamed,
+    )
+    from timesearch_spark.operators.trees import thread_page_fragments
 
     subs = [
         {"id": "s1", "name": "t3_s1", "created_utc": 100, "author": "ann",
@@ -415,12 +422,32 @@ def test_thread_pages_byte_parity_with_reference_semantics(spark, tmp_path):
     # no trailing newline: the reference writes the stripped footer as-is
     assert got2.endswith("</html>")
 
+    # the same oracle through the other roots and the streamed arm
+    assert api.offline_reading(ar, f"file://{tmp_path}/schemed") == 2
+    streamed = tmp_path / "streamed"
+    frags = thread_page_fragments(ar.submissions.snapshot(),
+                                  ar.comments.snapshot())
+    assert write_thread_docs_streamed(frags, str(streamed)) == 2
+    for root in (out, tmp_path / "schemed", streamed):
+        assert sorted(os.listdir(root)) == ["t3_s1.html", "t3_s2.html"], root
+        assert open(root / "t3_s1.html", encoding="utf-8").read() == exp1
+        assert open(root / "t3_s2.html", encoding="utf-8").read() == exp2
+
+    # write_thread_docs writes a doc VERBATIM, whatever its last byte
+    odd = spark.createDataFrame([("t3_x", "tail <b>no newline")],
+                                "submission string, doc string")
+    for root in (str(tmp_path / "odd"), f"file://{tmp_path}/odd_schemed"):
+        assert write_thread_docs(odd, root) == 1
+        local = root.removeprefix("file://")
+        assert os.listdir(local) == ["t3_x.html"]
+        assert open(os.path.join(local, "t3_x.html"), "rb").read() == \
+            b"tail <b>no newline"
+
 
 @pytest.mark.slow
 def test_thread_pages_scheme_arm_byte_identical(spark, tmp_path):
-    """The staged scheme:// sink must emit byte-identical pages to the
-    local arm — including the no-trailing-newline tail, which rides the
-    '>' line separator contract."""
+    """A scheme:// root must get byte-identical pages to a plain root —
+    including the no-trailing-newline tail."""
     import json
     import os
 
@@ -448,10 +475,12 @@ def test_thread_pages_scheme_arm_byte_identical(spark, tmp_path):
 
 @pytest.mark.slow
 def test_offline_reading_stream_arm_byte_identical(spark, tmp_path):
-    """api.offline_reading(stream=True) — the no-ceiling arm end to end
-    — must write the same file SET (zero-comment submissions included,
-    comment-only headless threads excluded) with the same bytes as the
-    fused default, on both the local and the file:// writer paths."""
+    """api.offline_reading(max_thread_rows=0) — every thread with a
+    comment routed to the no-ceiling arm, end to end (zero-comment
+    threads always take the fused arm) — must write the same file SET
+    (zero-comment submissions included, comment-only headless threads
+    excluded) with the same bytes as the fused default, on both the
+    local and the file:// writer paths."""
     import json
     import os
 
@@ -490,7 +519,8 @@ def test_offline_reading_stream_arm_byte_identical(spark, tmp_path):
     fused = tmp_path / "fused"
     assert api.offline_reading(ar, str(fused)) == 2
     for streamed in (tmp_path / "streamed", f"file://{tmp_path}/schemed"):
-        assert api.offline_reading(ar, str(streamed), stream=True) == 2
+        assert api.offline_reading(ar, str(streamed),
+                                   max_thread_rows=0) == 2
         local = str(streamed).removeprefix("file://")
         assert sorted(os.listdir(local)) == ["t3_s1.html", "t3_s2.html"]
         for name in ("t3_s1.html", "t3_s2.html"):

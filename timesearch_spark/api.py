@@ -12,7 +12,7 @@ replacing ``timesearch.py <cmd>`` with ``api.<cmd>(...)``:
 | livestream        | ``livestream``       | streaming.livestream |
 | breakdown         | ``breakdown``        | operators.breakdown → JSON |
 | index             | ``index``            | operators.exports.write_index |
-| offline_reading   | ``offline_reading``  | trees.render_thread_pages + exports.write_thread_docs |
+| offline_reading   | ``offline_reading``  | trees.render_thread_pages → exports.write_thread_docs (threads past ``max_thread_rows``: trees.thread_page_fragments → exports.write_thread_docs_streamed) |
 | merge_db          | ``merge_db``         | operators.merge.anti_join_merge |
 | get_wiki / get_styles | ``get_wiki``/``get_styles`` | document dumps (driver-side; out of the analytic engine, kept for surface completeness) |
 
@@ -405,7 +405,6 @@ def _thread_fingerprints(submissions: DataFrame,
 def offline_reading(archive: Archive, out_dir: str,
                     specific_submission: str | None = None,
                     checkpoint_dir: str | None = None,
-                    stream: bool = False,
                     incremental: bool = False,
                     max_thread_rows: int | None = None) -> int:
     """Thread HTML export (§3.3): forest walk → render → one file per
@@ -430,21 +429,21 @@ def offline_reading(archive: Archive, out_dir: str,
     mega-thread no longer fails the whole export (the fused arm's loud
     ValueError) or forces every small thread onto the slower arm.  When
     no thread is over the bound (the probe's common answer) the plan is
-    exactly the fused-only export.  ``stream=True`` remains the forced
-    override: EVERYTHING takes the no-ceiling arm — the distributed
+    exactly the fused-only export.  The streamed arm — the distributed
     pointer-doubling walk orders page fragments and an O(tree depth)
     stack writer folds them into the SAME bytes
     (trees.thread_page_fragments → exports.write_thread_docs_streamed)
-    — slower on bounded archives (it pays the walk's rounds the fused
-    one-pass assembler avoids), but a mega-thread streams through one
-    task's O(depth) stack instead of erroring.
+    — pays walk rounds the fused one-pass assembler avoids, so only
+    threads that need it take it.  Both arms put every page through
+    one executor-side atomic write (``<id>.html.inprogress``, then a
+    move), so the output store must be one pyarrow or fsspec can open.
 
     ``incremental=True`` re-renders ONLY threads whose render-relevant
     bytes changed since the last run (new/edited/deleted comments,
     submission title/selftext/score edits), judged by a per-thread
     fingerprint manifest kept in ``out_dir/_page_manifest`` — at
     archive scale a daily delta re-renders the <1% that moved, not
-    millions of unchanged pages.  Composes with ``stream``.  Threads
+    millions of unchanged pages.  Threads
     DELETED from the archive (merge rollback, re-ingest from a narrower
     dump) have their stale pages removed, so the incremental file set
     converges to what a from-scratch render would produce.  Crash
@@ -534,9 +533,7 @@ def offline_reading(archive: Archive, out_dir: str,
             # render would produce.  Kept as a DATAFRAME (r14): a mass
             # rollback of a 1.5M-page archive is millions of idstrs —
             # the delete pass runs executor-side through mapInPandas +
-            # pyarrow.fs (delete_thread_pages_distributed), with a
-            # driver thread-pool fallback for schemes only the JVM
-            # shim can open.
+            # pyarrow.fs (delete_thread_pages_distributed).
             removed_df = old.join(
                 fp, old["__oid"] == fp["idstr"], "left_anti"
             ).select(F.col("__oid").alias("idstr"))
@@ -560,23 +557,7 @@ def offline_reading(archive: Archive, out_dir: str,
         # delete/rename (old manifest is still being read lazily until
         # here, so never overwrite in place).
         if removed_df is not None:
-            try:
-                exports.delete_thread_pages_distributed(removed_df, out_dir)
-            except Exception as exc:  # auth/IO only executors could
-                # see: fall back to the driver pool rather than dying —
-                # deletes already persisted re-converge (exists-checked)
-                import warnings
-
-                warnings.warn(
-                    "distributed stale-page delete failed "
-                    f"({type(exc).__name__}: {exc}); falling back to "
-                    "the driver thread pool",
-                    stacklevel=2,
-                )
-                exports.delete_thread_pages_driver_pool(
-                    fsh, out_dir,
-                    [r["idstr"] for r in removed_df.collect()],
-                )
+            exports.delete_thread_pages_distributed(removed_df, out_dir)
         staging = man_path + ".staging"
         fp.withColumn("fpv", F.lit(FP_FORMAT_VERSION)).write.mode(
             "overwrite").parquet(staging)
@@ -587,22 +568,15 @@ def offline_reading(archive: Archive, out_dir: str,
     # complete header+submission+nested-comments+footer page per
     # SUBMISSION row — zero-comment threads included, comment-only
     # orphan threads excluded, exactly the reference's scope.
-    from pyspark.sql import functions as F
     from timesearch_spark.operators import trees as _trees
 
     bound = (_trees.DEFAULT_MAX_THREAD_ROWS
              if max_thread_rows is None else max_thread_rows)
     try:
-        if stream:
-            frags = _trees.thread_page_fragments(
-                submissions, comments, checkpoint_dir=checkpoint_dir
-            )
-            n = exports.write_thread_docs_streamed(frags, out_dir)
-        else:
-            n = _routed_page_export(
-                submissions, comments, out_dir,
-                checkpoint_dir=checkpoint_dir, bound=bound,
-            )
+        n = _routed_page_export(
+            submissions, comments, out_dir,
+            checkpoint_dir=checkpoint_dir, bound=bound,
+        )
         if incremental:
             _swap_manifest()
     finally:
@@ -642,10 +616,7 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
                 submissions, comments, checkpoint_dir=checkpoint_dir,
                 max_thread_rows=bound,
             )
-            # pages end '</html>' with no trailing newline (the
-            # reference writes none) — '>' is the staged arm's
-            # separator contract
-            n = exports.write_thread_docs(pages, out_dir, line_sep=">")
+            n = exports.write_thread_docs(pages, out_dir)
         else:
             over_subs = over.select(F.col("submission").alias("idstr"))
             fused_pages = render_thread_pages(
@@ -656,8 +627,7 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
                 checkpoint_dir=checkpoint_dir,
                 max_thread_rows=bound,
             )
-            n = exports.write_thread_docs(
-                fused_pages, out_dir, line_sep=">")
+            n = exports.write_thread_docs(fused_pages, out_dir)
             frags = _trees.thread_page_fragments(
                 submissions.join(
                     F.broadcast(over_subs), "idstr", "left_semi"),

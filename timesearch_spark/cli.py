@@ -267,7 +267,6 @@ def cmd_offline_reading(args):
         archive, os.path.join(archive.path, "offline_reading"),
         specific_submission=args.specific_submission,
         checkpoint_dir=args.checkpoint_dir,
-        stream=args.stream,
         incremental=args.incremental,
         max_thread_rows=args.max_thread_rows,
     )
@@ -531,12 +530,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--checkpoint-dir", dest="checkpoint_dir", default=None,
                    help="durable checkpoint dir for mega-thread walks "
                         "(cluster runs: survives executor loss)")
-    p.add_argument("--stream", action="store_true",
-                   help="FORCE the no-ceiling arm for every thread: "
-                        "distributed walk + O(depth) stack writer; same "
-                        "bytes.  Without it the export auto-routes per "
-                        "thread (fused under --max-thread-rows, "
-                        "streamed over it)")
     p.add_argument("--max-thread-rows", dest="max_thread_rows", type=int,
                    default=None,
                    help="per-thread comment bound for the fused arm "

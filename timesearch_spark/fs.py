@@ -627,11 +627,15 @@ class WriterLease:
 
 
 def pyarrow_fs_uri(uri: str) -> str:
-    """The pyarrow.fs spelling of a Hadoop-style URI: Hadoop's s3a/s3n
-    connectors are plain ``s3`` to pyarrow; everything else passes
-    through.  Used by executor-side metadata work (the staged HTML
-    sink's rename pass), where py4j is unavailable and pyarrow's
-    ``FileSystem.from_uri`` is the portable resolver."""
+    """The pyarrow.fs spelling of a path or Hadoop-style URI, for the
+    executor-side export writers (py4j is unavailable there and
+    pyarrow's ``FileSystem.from_uri`` is the portable resolver): plain
+    paths become absolute — ``from_uri`` rejects relative ones, and an
+    executor's working directory need not be the driver's — Hadoop's
+    s3a/s3n connectors are plain ``s3``, everything else passes
+    through."""
+    if not has_scheme(uri):
+        return os.path.abspath(uri)
     for h in ("s3a://", "s3n://"):
         if uri.startswith(h):
             return "s3://" + uri[len(h):]

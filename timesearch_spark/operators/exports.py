@@ -229,20 +229,16 @@ def write_breakdown_unsorted_streamed(bd: DataFrame, out_dir: str,
     free), tagged (partition, batch) — so fragment size is bounded by
     the Arrow batch size, not by key count.  (2) the fragments — a few
     hundred bytes-per-key total, but only #batches ROWS — shuffle to a
-    single task that writes them in (pid, seq) order through a
-    STREAMING pyarrow output (staging name + rename, so a retried task
-    can't leave a torn file).  Peak memory anywhere = one batch; a
+    single task that streams them in (pid, seq) order through the
+    atomic put (:func:`_put`).  Peak memory anywhere = one batch; a
     single sequential writer is optimal here because the contract is
     literally one file of one line.  Key ORDER is partition/row order,
     the same order ``collect()`` feeds the string form — the reference
     itself has no order contract (dict insertion = its query order)."""
     import json as _json
 
-    from timesearch_spark.fs import get_fs, pyarrow_fs_uri
-
-    get_fs(bd.sparkSession, out_dir).mkdirs(out_dir)
     path = os.path.join(out_dir, basename + "_breakdown.json")
-    uri = pyarrow_fs_uri(path)
+    uri = f"{_out_root(out_dir).rstrip('/')}/{basename}_breakdown.json"
 
     def serialize(batches):
         import pandas as pd
@@ -270,23 +266,20 @@ def write_breakdown_unsorted_streamed(bd: DataFrame, out_dir: str,
     def write_stream(batches):
         import pandas as pd
 
-        fss, p = _open_fs(uri)
-        tmp = p + ".inprogress"
         n = 0
-        with fss.open_output_stream(tmp) as f:
-            f.write(b"{")
+
+        def body():
+            nonlocal n
+            yield "{"
             for pdf in batches:
                 for frag in pdf["frag"]:
                     if n:
-                        f.write(b", ")
-                    f.write(frag.encode("utf-8"))
+                        yield ", "
+                    yield frag
                     n += 1
-            f.write(b"}")
-        try:
-            fss.delete_file(p)  # move() won't overwrite on every store
-        except Exception:
-            pass
-        fss.move(tmp, p)
+            yield "}"
+
+        _put(*_open_fs(uri), body())
         yield pd.DataFrame({"fragments": [n]})
 
     # repartition(1) + sortWithinPartitions pins the exact write order
@@ -299,8 +292,8 @@ def write_breakdown_unsorted_streamed(bd: DataFrame, out_dir: str,
     if not wrote:
         # zero keys: Spark never invokes the pandas function for an
         # empty partition, so the writer task did not run — the dump is
-        # the constant '{}' (json.dumps({})), written from the driver
-        get_fs(bd.sparkSession, out_dir).write_text_atomic(path, "{}")
+        # the constant '{}' (json.dumps({})), put from the driver
+        _put(*_open_fs(uri), ["{}"])
     return path
 
 
@@ -402,252 +395,14 @@ def write_breakdown_sharded(bd: DataFrame, out_dir: str, basename: str,
     return path
 
 
-def write_thread_docs(docs: DataFrame, out_dir: str,
-                      line_sep: str = "\n") -> int:
-    """One ``<submission>.html`` per (submission, doc) row, ``doc``
-    written VERBATIM — the sink behind the reference-parity page
-    pipeline (trees.render_thread_pages → api.offline_reading).
-
-    ``line_sep`` must equal the final character of every doc: the
-    schemed-URI arm stages through Spark's text writer, which appends
-    one separator per row, so the value drops its last character and
-    the writer puts it back — byte-identical files on both arms.  The
-    legacy html wrapper ends with a newline; full reference pages end
-    with ``'>'`` (``</html>``, no trailing newline — the reference
-    writes none, offline_reading.py:385-390).  A doc NOT ending in
-    ``line_sep`` is written untouched on the local arm and gains one
-    trailing separator on the staged arm — keep the contract."""
-    from timesearch_spark.fs import has_scheme
-
-    if has_scheme(out_dir):
-        return _write_thread_docs_staged(docs, out_dir, line_sep)
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches):
-        import pandas as pd
-
-        n = 0
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            for name, doc in zip(pdf["submission"], pdf["doc"]):
-                path = os.path.join(out_dir, f"{name}.html")
-                with open(path, "w", encoding="utf-8") as f:
-                    f.write(doc)
-                n += 1
-        yield pd.DataFrame({"n": [n]})
-
-    counts = docs.mapInPandas(write_part, "n long")
-    total = counts.agg(F.sum("n")).first()[0]
-    return int(total or 0)
-
-
-def _write_thread_docs_staged(docs: DataFrame, out_dir: str,
-                              line_sep: str = "\n") -> int:
-    """Schemed-URI sink: staged Spark text write + DISTRIBUTED rename
-    pass.
-
-    The text writer appends one separator per row, so each doc's final
-    character (== ``line_sep``, the caller's contract) is left off the
-    value and the writer puts it back — bytes identical to the local
-    sink's.  Submission fullnames are ``t3_``-prefixed base36 —
-    safe under Hive partition-value escaping, so the directory name
-    round-trips verbatim.
-
-    The rename pass is one control-plane call per THREAD (the per-file
-    metadata work the reference's one-file-per-thread contract implies,
-    offline_reading.py:369-390) — at millions of submissions that must
-    NOT run serially on the driver (r8 judge finding: hours of metadata
-    after seconds of data).  The driver does exactly ONE listing of the
-    staging root (names only); the per-thread work (list the partition
-    dir, rename its part file, drop stale sidecars) fans out:
-
-    - executors via ``mapInPandas`` + ``pyarrow.fs`` when pyarrow can
-      resolve the scheme (file, s3/s3a, hdfs-with-libhdfs, gs) — py4j
-      does not exist on executors, and pyarrow speaks the same stores
-      Spark writes to;
-    - otherwise a driver-side thread pool over the Hadoop FS shim
-      (schemes pyarrow lacks a binding for, e.g. abfs) — parallel
-      control-plane calls, still no data movement.
-
-    Re-runs stay idempotent: destination files are deleted before the
-    move either way."""
-    from timesearch_spark.fs import get_fs, pyarrow_fs_uri
-
-    spark = docs.sparkSession
-    staging = out_dir.rstrip("/") + ".__stage__"
-    value = F.when(
-        F.col("doc").endswith(line_sep),
-        F.substring(F.col("doc"), 1, F.length("doc") - len(line_sep)),
-    ).otherwise(F.col("doc"))
-    (
-        docs.select("submission", value.alias("value"))
-        .write.mode("overwrite")
-        .partitionBy("submission")
-        .option("lineSep", line_sep)
-        .text(staging)
-    )
-    fs = get_fs(spark, out_dir)
-    fs.mkdirs(out_dir)
-    # REAL-operation probe (not just scheme resolution — r9 advisor:
-    # from_uri succeeding says nothing about credentials on s3a/hdfs
-    # deployments where auth lives in the Hadoop conf): the driver's one
-    # listing of the staging root IS the probe.  pyarrow's C++ lister
-    # returns it in one call — HadoopFS.ls pays one py4j round trip PER
-    # entry (a million threads = a million gateway hops before any
-    # rename).  Schemes pyarrow lacks a native binding for (abfs, ...)
-    # route through an fsspec handler (_open_fs) so they use the SAME
-    # distributed arm; only when neither can actually list the store
-    # does the Hadoop-shim driver pool take over.
-    entries = None
-    try:
-        import pyarrow.fs as pafs
-
-        fss, stage_path = _open_fs(pyarrow_fs_uri(staging))
-        entries = [
-            i.base_name
-            for i in fss.get_file_info(pafs.FileSelector(stage_path))
-            if i.base_name.startswith("submission=")
-        ]
-    except Exception:
-        entries = None
-    if entries is not None:
-        try:
-            n = _rename_pass_distributed(spark, staging, out_dir, entries)
-        except Exception as exc:  # auth/IO only executors could see:
-            # fall back to the driver pool rather than dying — renames
-            # already persisted are re-counted, _finalize_one is
-            # idempotent (dst presence counts)
-            import warnings
-
-            warnings.warn(
-                f"distributed rename pass failed ({type(exc).__name__}: "
-                f"{exc}); falling back to the driver thread pool",
-                stacklevel=2,
-            )
-            n = _rename_pass_driver_pool(fs, staging, out_dir, entries)
-    else:
-        entries = [e for e in fs.ls(staging) if e.startswith("submission=")]
-        n = _rename_pass_driver_pool(fs, staging, out_dir, entries)
-    fs.delete(staging)
-    return n
-
-
-def write_thread_docs_streamed(frags: DataFrame, out_dir: str) -> int:
-    """The page sink with NO per-thread memory ceiling: folds the
-    ordered ``(submission, okey, depth, pre, post)`` fragments of
-    :func:`~timesearch_spark.operators.trees.thread_page_fragments` into
-    one ``<submission>.html`` per thread, byte-identical to
-    ``render_thread_pages`` → :func:`write_thread_docs`, streaming each
-    file through a pyarrow output — peak state per writer task is one
-    Arrow batch plus an O(tree depth) stack of close tags, never a whole
-    thread (the fused arm's bound, see trees.DEFAULT_MAX_THREAD_ROWS).
-
-    The fold is the fused assembler's stack, streamed: fragments arrive
-    in (submission, okey) order — threads hash-partitioned so each
-    lives wholly in one task, a spill-backed sortWithinPartitions on
-    the walk's root-path key ordering them (lexicographic path order IS
-    the preorder; r13 — ranking the key into an integer position first
-    cost one extra full Exchange+Sort upstream) — and for each fragment
-    the writer closes deeper levels (drain ``post``s), writes the
-    blank-line sibling join where a level already has output
-    (html_from_tree, offline_reading.py:240), writes ``pre`` and pushes
-    ``post``.  The thread's ``okey = ''`` head fragment sorts first and
-    carries header+submission block in ``pre`` and the page FOOTER in
-    ``post``, so the final drain emits the footer last with zero
-    special cases.  A thread with no head fragment (comments whose
-    submission was never archived) is consumed but writes nothing — the
-    reference's scope (offline_reading.py:310-312).  Files stage
-    through ``.inprogress`` + rename so a retried task never leaves a
-    torn page.  Returns the number of pages written."""
-    from timesearch_spark.fs import get_fs, pyarrow_fs_uri
-
-    get_fs(frags.sparkSession, out_dir).mkdirs(out_dir)
-    base_uri = pyarrow_fs_uri(out_dir)
-
-    def write_part(batches):
-        import pandas as pd
-
-        fss, base = _open_fs(base_uri)
-
-        cur = None
-        skipping = False
-        stream = None
-        post_stack: list = []
-        count_stack: list = []
-        paths = [None, None]  # (tmp, final) of the open stream
-        n = 0
-
-        def finalize():
-            nonlocal stream, n
-            if stream is None:
-                return
-            while post_stack:
-                stream.write(post_stack.pop().encode("utf-8"))
-            stream.close()
-            stream = None
-            try:  # move() won't overwrite on every store
-                fss.delete_file(paths[1])
-            except Exception:
-                pass
-            fss.move(paths[0], paths[1])
-            n += 1
-
-        for pdf in batches:
-            for sub, okey, d, pre, post in zip(
-                pdf["submission"], pdf["okey"], pdf["depth"],
-                pdf["pre"], pdf["post"],
-            ):
-                if sub != cur:
-                    finalize()
-                    post_stack.clear()
-                    count_stack.clear()
-                    count_stack.append(0)
-                    cur = sub
-                    # first fragment in key order must be the head
-                    # (okey ''); headless threads have no page
-                    # (reference scope)
-                    skipping = okey != ""
-                    if not skipping:
-                        paths[1] = base.rstrip("/") + "/" + sub + ".html"
-                        paths[0] = paths[1] + ".inprogress"
-                        stream = fss.open_output_stream(paths[0])
-                if skipping:
-                    continue
-                d = int(d)
-                while len(post_stack) > d:
-                    stream.write(post_stack.pop().encode("utf-8"))
-                    count_stack.pop()
-                if count_stack[-1] > 0:
-                    # blank-line sibling join (offline_reading.py:240)
-                    stream.write(b"\n\n")
-                count_stack[-1] += 1
-                stream.write(pre.encode("utf-8"))
-                post_stack.append(post)
-                count_stack.append(0)
-        finalize()
-        yield pd.DataFrame({"n": [n]})
-
-    counts = (
-        frags.repartition("submission")
-        .sortWithinPartitions("submission", "okey")
-        .mapInPandas(write_part, "n long")
-    )
-    total = counts.agg(F.sum("n")).first()[0]
-    return int(total or 0)
-
-
 def _open_fs(uri: str):
     """Resolve a URI to ``(pyarrow FileSystem, path inside it)`` —
     driver AND executor side (no py4j).  Native pyarrow bindings first
     (file, s3, hdfs-with-libhdfs, gs); schemes pyarrow can't open
     (abfs-class stores) fall through to the installed fsspec handler
     wrapped in ``PyFileSystem(FSSpecHandler(...))``, which serves the
-    identical pyarrow surface — so the distributed rename arm covers
-    every store with EITHER a pyarrow or an fsspec binding, and the
-    driver thread pool is truly the last resort (r9 judge finding:
-    the pool is measured no faster than serial).  Raises when neither
-    library can open the scheme."""
+    identical pyarrow surface.  Raises when neither library can open
+    the scheme — executor-side exports need a store one of them can."""
     import pyarrow.fs as pafs
 
     try:
@@ -663,102 +418,139 @@ def _open_fs(uri: str):
         return pafs.PyFileSystem(pafs.FSSpecHandler(fs)), path
 
 
-def _finalize_one(ls, rename, delete, exists, staging: str, out_dir: str,
-                  entry: str) -> int:
-    """One thread's rename: locate the single part file under its
-    staging partition dir (grouped has one row per submission, one row
-    lands in one task) and move it to ``<id>.html``.  Shared by the
-    executor and driver-pool passes so the two arms cannot drift.
-
-    Counted by DESTINATION presence, not by renames performed: a
-    retried task (or the driver-pool fallback after a partial
-    distributed pass) finds some part files already moved — the thread
-    was still written, and callers compare the returned count against
-    the thread total, so under-reporting would read as data loss."""
-    sid = entry.split("=", 1)[1]
-    part_dir = staging.rstrip("/") + "/" + entry
-    dst = out_dir.rstrip("/") + f"/{sid}.html"
-    try:
-        parts = [p for p in ls(part_dir) if p.startswith("part-")]
-    except Exception:
-        parts = []  # partition dir gone (already finalized) → dst decides
-    if not parts:
-        return 1 if exists(dst) else 0
-    delete(dst)
-    rename(part_dir + "/" + parts[0], dst)
-    # ChecksumFileSystem (file://) sidecars: a stale .crc from an older
-    # driver-pass run would fail checksum reads of the new bytes
-    delete(out_dir.rstrip("/") + f"/.{sid}.html.crc")
-    return 1
-
-
-def _rename_pass_distributed(
-    spark, staging: str, out_dir: str, entries: list[str]
-) -> int:
-    """Executor-parallel renames: partition-dir names (not data) ship
-    to tasks; each task opens the store through ``_open_fs`` (native
-    pyarrow, or the fsspec bridge for schemes like abfs) and runs the
-    shared per-thread finalize.  ~200 renames per task keeps tasks
-    meaningful while a million threads still fan out wide."""
+def _out_root(out_dir: str) -> str:
+    """Create ``out_dir`` through the same handle the executors open
+    (not the Hadoop shim, which knows only Hadoop-configured schemes)
+    and return its pyarrow URI for the writer tasks."""
     from timesearch_spark.fs import pyarrow_fs_uri
 
-    stage_uri = pyarrow_fs_uri(staging)
-    out_uri = pyarrow_fs_uri(out_dir)
+    uri = pyarrow_fs_uri(out_dir)
+    fss, path = _open_fs(uri)
+    fss.create_dir(path, recursive=True)
+    return uri
 
-    def run(batches):
+
+def _put(fss, path: str, chunks) -> None:
+    """The one way an export file reaches storage: stream ``chunks``
+    (strings) into ``<path>.inprogress``, delete the destination
+    (missing is fine — ``move()`` won't overwrite on every store), then
+    move — so a retried task never leaves a torn file, and a re-run
+    overwrites."""
+    tmp = path + ".inprogress"
+    with fss.open_output_stream(tmp) as f:
+        for chunk in chunks:
+            f.write(chunk.encode("utf-8"))
+    try:
+        fss.delete_file(path)
+    except Exception:
+        # missing-ok (pyarrow error types vary per store); a real
+        # permission/IO failure resurfaces at move()
+        pass
+    fss.move(tmp, path)
+
+
+def write_thread_docs(docs: DataFrame, out_dir: str) -> int:
+    """One ``<submission>.html`` per (submission, doc) row, ``doc``
+    written VERBATIM through the atomic put from ``mapInPandas`` — the
+    sink behind the reference-parity page pipeline
+    (trees.render_thread_pages → api.offline_reading) for every URI a
+    store handle opens: plain path, ``file://``, ``s3``, fsspec-bridged.
+    Returns the number of pages written."""
+    base_uri = _out_root(out_dir)
+
+    def write_part(batches):
         import pandas as pd
-        import pyarrow.fs as pafs
 
-        from timesearch_spark.operators.exports import _open_fs
-
-        fss, stage_path = _open_fs(stage_uri)
-        _, out_path = _open_fs(out_uri)
-
-        def ls(path):
-            rel = path.replace(staging.rstrip("/"), stage_path, 1)
-            return [
-                i.base_name
-                for i in fss.get_file_info(pafs.FileSelector(rel))
-            ]
-
-        def delete(path):
-            rel = path.replace(out_dir.rstrip("/"), out_path, 1)
-            try:
-                fss.delete_file(rel)
-            except Exception:
-                # missing-ok (pyarrow error types vary per store); a
-                # real permission/IO failure resurfaces at move()
-                pass
-
-        def rename(src, dst):
-            fss.move(
-                src.replace(staging.rstrip("/"), stage_path, 1),
-                dst.replace(out_dir.rstrip("/"), out_path, 1),
-            )
-
-        def exists(path):
-            rel = path.replace(out_dir.rstrip("/"), out_path, 1)
-            info = fss.get_file_info([rel])[0]
-            return info.type != pafs.FileType.NotFound
-
+        fss, base = _open_fs(base_uri)
+        base = base.rstrip("/")
         n = 0
         for pdf in batches:
-            for entry in pdf["entry"]:
-                n += _finalize_one(ls, rename, delete, exists, staging,
-                                   out_dir, entry)
+            for name, doc in zip(pdf["submission"], pdf["doc"]):
+                _put(fss, f"{base}/{name}.html", [doc])
+                n += 1
         yield pd.DataFrame({"n": [n]})
 
-    n_parts = max(1, min(
-        len(entries) // 200 + 1,
-        spark.sparkContext.defaultParallelism * 4,
-    ))
-    total = (
-        spark.createDataFrame([(e,) for e in entries], "entry string")
-        .repartition(n_parts)
-        .mapInPandas(run, "n long")
-        .agg(F.sum("n"))
-        .first()[0]
+    total = docs.mapInPandas(write_part, "n long").agg(F.sum("n")).first()[0]
+    return int(total or 0)
+
+
+def _fold_page(rows):
+    """One thread's ordered fragments → its page text, as a stream of
+    chunks: close deeper levels (drain ``post``s), write the blank-line
+    sibling join where a level already has output (html_from_tree,
+    offline_reading.py:240), write ``pre`` and push ``post``; the final
+    drain emits the head fragment's ``post`` (the page footer) last."""
+    post_stack: list = []
+    count_stack = [0]
+    for _, _, d, pre, post in rows:
+        d = int(d)
+        while len(post_stack) > d:
+            yield post_stack.pop()
+            count_stack.pop()
+        if count_stack[-1] > 0:
+            yield "\n\n"
+        count_stack[-1] += 1
+        yield pre
+        post_stack.append(post)
+        count_stack.append(0)
+    while post_stack:
+        yield post_stack.pop()
+
+
+def write_thread_docs_streamed(frags: DataFrame, out_dir: str) -> int:
+    """The page sink with NO per-thread memory ceiling: folds the
+    ordered ``(submission, okey, depth, pre, post)`` fragments of
+    :func:`~timesearch_spark.operators.trees.thread_page_fragments` into
+    one ``<submission>.html`` per thread, byte-identical to
+    ``render_thread_pages`` → :func:`write_thread_docs`, streaming each
+    file through the same atomic put — peak state per writer task is
+    one Arrow batch plus an O(tree depth) stack of close tags, never a
+    whole thread (the fused arm's bound, see
+    trees.DEFAULT_MAX_THREAD_ROWS).
+
+    Fragments arrive in (submission, okey) order — threads
+    hash-partitioned so each lives wholly in one task, a spill-backed
+    sortWithinPartitions on the walk's root-path key ordering them
+    (lexicographic path order IS the preorder; r13 — ranking the key
+    into an integer position first cost one extra full Exchange+Sort
+    upstream) — and :func:`_fold_page` is the fused assembler's stack,
+    streamed.  The thread's ``okey = ''`` head fragment sorts first and
+    carries header+submission block in ``pre`` and the page FOOTER in
+    ``post``.  A thread with no head fragment (comments whose
+    submission was never archived) is consumed but writes nothing — the
+    reference's scope (offline_reading.py:310-312).  Returns the number
+    of pages written."""
+    base_uri = _out_root(out_dir)
+
+    def write_part(batches):
+        import itertools
+
+        import pandas as pd
+
+        fss, base = _open_fs(base_uri)
+        base = base.rstrip("/")
+        rows = (
+            row
+            for pdf in batches
+            for row in zip(pdf["submission"], pdf["okey"], pdf["depth"],
+                           pdf["pre"], pdf["post"])
+        )
+        n = 0
+        for sub, thread in itertools.groupby(rows, key=lambda r: r[0]):
+            head = next(thread)
+            if head[1] != "":  # headless thread: no page (reference scope)
+                continue
+            _put(fss, f"{base}/{sub}.html",
+                 _fold_page(itertools.chain([head], thread)))
+            n += 1
+        yield pd.DataFrame({"n": [n]})
+
+    counts = (
+        frags.repartition("submission")
+        .sortWithinPartitions("submission", "okey")
+        .mapInPandas(write_part, "n long")
     )
+    total = counts.agg(F.sum("n")).first()[0]
     return int(total or 0)
 
 
@@ -770,16 +562,14 @@ def delete_thread_pages_distributed(removed: DataFrame, out_dir: str) -> int:
     delete that races a retry (file already gone) re-checks existence
     and treats NotFound as success, so repeated runs converge; a
     TRANSIENT per-file failure is retried executor-side (3 attempts,
-    short backoff, ADVICE r14) so one flaky delete can't abort the job
-    and demote a multi-million-row delta to the caller's driver-pool
-    fallback; a file that still fails after the retries propagates to
-    the caller (:func:`delete_thread_pages_driver_pool`).
+    short backoff, ADVICE r14) so one flaky delete can't abort the job;
+    a file that still fails after the retries fails the export.
 
     Scale contract (r14, VERDICT r13 #3): the delta stays a DataFrame
     end-to-end — a mass rollback of a 1.5M-page archive never collects
     millions of idstrs to the driver or issues serial fs calls; wall
     tracks delta_size / (writer tasks × fs throughput), the same shape
-    as the page-rename pass."""
+    as the page writer."""
     from timesearch_spark.fs import pyarrow_fs_uri
 
     out_uri = pyarrow_fs_uri(out_dir)
@@ -787,8 +577,6 @@ def delete_thread_pages_distributed(removed: DataFrame, out_dir: str) -> int:
     def run(batches):
         import pandas as pd
         import pyarrow.fs as pafs
-
-        from timesearch_spark.operators.exports import _open_fs
 
         fss, out_path = _open_fs(out_uri)
         n = 0
@@ -824,45 +612,3 @@ def delete_thread_pages_distributed(removed: DataFrame, out_dir: str) -> int:
         .first()[0]
     )
     return int(total or 0)
-
-
-def delete_thread_pages_driver_pool(fs, out_dir: str,
-                                    idstrs: list[str]) -> int:
-    """Driver fallback for schemes pyarrow cannot open: the same
-    exists-checked delete over the Hadoop FS shim, fanned across a
-    thread pool (the _rename_pass_driver_pool pattern)."""
-    import os
-    from concurrent.futures import ThreadPoolExecutor
-
-    if not idstrs:
-        return 0
-
-    def one(idstr: str) -> int:
-        page = os.path.join(out_dir, f"{idstr}.html")
-        if fs.exists(page):
-            fs.delete(page)
-            return 1
-        return 0
-
-    with ThreadPoolExecutor(max_workers=min(16, len(idstrs))) as pool:
-        return sum(pool.map(one, idstrs))
-
-
-def _rename_pass_driver_pool(
-    fs, staging: str, out_dir: str, entries: list[str]
-) -> int:
-    """Driver fallback for schemes pyarrow cannot open: the same
-    per-thread finalize over the Hadoop FS shim, fanned across a thread
-    pool (py4j serves each Python thread on its own connection; the JVM
-    FileSystem objects are thread-safe)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if not entries:
-        return 0
-    with ThreadPoolExecutor(max_workers=min(16, len(entries))) as pool:
-        return sum(pool.map(
-            lambda e: _finalize_one(
-                fs.ls, fs.rename, fs.delete, fs.exists, staging, out_dir, e
-            ),
-            entries,
-        ))

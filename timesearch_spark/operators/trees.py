@@ -1012,10 +1012,12 @@ def assemble_thread_pages(comments: DataFrame,
                         f"{max_thread_rows} comments; the fused "
                         "assembler holds one whole thread per task by "
                         "design.  If this thread is real, use the "
-                        "streamed arm (offline_reading --stream / "
-                        "api.offline_reading(stream=True): distributed "
-                        "walk + O(depth) stack writer, same bytes) or "
-                        "raise max_thread_rows=; if not, the corpus is "
+                        "streamed arm (thread_page_fragments + "
+                        "exports.write_thread_docs_streamed, where "
+                        "api.offline_reading routes threads past "
+                        "max_thread_rows: distributed walk + O(depth) "
+                        "stack writer, same bytes) or raise "
+                        "max_thread_rows=; if not, the corpus is "
                         "mis-keyed — exclude the submission or fix the "
                         "ingest.")
         close_thread()
