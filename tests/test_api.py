@@ -107,6 +107,8 @@ def test_ingest_jsonfile_stops_at_first_blank_line(spark, tmp_path):
         json.dumps(_sub(0)) + "\n" + json.dumps(_com(0)) + "\n"
         + "   \n"  # whitespace-only: the reference's strip() makes it blank
         + json.dumps(_sub(1)) + "\n"
+        # unclassifiable, but past the blank line: never read
+        + json.dumps({"id": "x9", "title": "no kind markers"}) + "\n"
     )
     counts = api.ingest_jsonfile(ar, str(p))
     assert counts["new_submissions"] == 1  # s1 sits past the blank line
@@ -129,6 +131,8 @@ def test_ingest_jsonfile_raises_on_unrecognizable_object(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="Could not recognize object type"):
         api.ingest_jsonfile(ar, str(p))
+    # the check runs before either merge: the valid line never landed
+    assert ar.submissions.version() == 0 and ar.comments.version() == 0
 
     p2 = tmp_path / "dump_corrupt.jsonl"
     p2.write_text(json.dumps(_sub(0)) + "\n" + "{not json!!\n")

@@ -197,3 +197,34 @@ def test_markdown_code_spans_stay_literal():
     assert "<code>[x](y)</code>" in out
     assert "<code>**bold**</code>" in out
     assert '<a href="b">a</a>' in out
+
+
+def test_sqlexpr_round_trips_adversarial_names_and_literals(spark):
+    """Names and values spliced into SQL text through ``sqlexpr`` parse
+    back as themselves: backticks, quotes, backslashes, dots, comment
+    openers and the vandalism markers the upsert splices as literals."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from timesearch_spark.functions.sqlexpr import ident, lit
+    from timesearch_spark.operators.upsert import GREASY
+
+    tricky = st.sampled_from([
+        "`", "``", "'", "''", "\\", "\\'", "\\\\", '"', "a.b", " ", "--",
+        "/*", "*/", ";", ")", "\\u0041", "\\n", "%", "_", "\n", "NULL",
+        "select", "[removed]", *GREASY,
+    ])
+    text = st.lists(st.one_of(tricky, st.text(max_size=5)), max_size=4).map("".join)
+    value = st.one_of(text, st.none(), st.booleans(),
+                      st.integers(-(2 ** 63) + 1, 2 ** 63 - 1))
+
+    @settings(max_examples=40, deadline=None)
+    @given(st.lists(st.tuples(text.filter(bool), value), min_size=1,
+                    max_size=6, unique_by=lambda p: p[0]))
+    def check(pairs):
+        df = spark.range(1).selectExpr(
+            *[f"{lit(v)} AS {ident(k)}" for k, v in pairs])
+        assert df.columns == [k for k, _ in pairs]
+        assert list(df.first()) == [v for _, v in pairs]
+
+    check()

@@ -379,11 +379,41 @@ def test_upsert_tagged_union_matches_join_twin(spark):
     deletion masking, vandalism masking, insert-only, old-only, and
     edited-timestamp capture.  Pins the merge semantics to the join
     formulation forever, whatever the physical plan does."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from timesearch_spark.operators.upsert import (
-        COMMENT_MUTABLE, _is_deleted, _latest_per_key, upsert_snapshot,
-    )
+    from timesearch_spark.operators.upsert import upsert_snapshot
+
+    # test-local copies of the Column formulation the operator used
+    # before its projection became SQL text — independent of the
+    # operator's own code
+    COMMENT_MUTABLE = ["score", "body", "distinguish"]
+    GREASY = ["has been overwritten", "pastebin.com/64GuVi2F"]
+
+    def _latest_per_key(batch, key, order_col):
+        order_exprs = []
+        if order_col is not None:
+            order_exprs.append(F.col(order_col).desc())
+        if "created" in batch.columns:
+            order_exprs.append(F.col("created").desc())
+        batch = batch.withColumn("__arrival", F.monotonically_increasing_id())
+        order_exprs.append(F.col("__arrival").desc())
+        w = Window.partitionBy(key).orderBy(*order_exprs)
+        return (
+            batch.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn", "__arrival")
+        )
+
+    def _is_deleted(author_col, text_col):
+        removed = text_col.isin("[removed]", "[deleted]")
+        greasy = F.lit(False)
+        for marker in GREASY:
+            greasy = greasy | text_col.contains(marker)
+        author_gone = author_col.isNull() | (
+            F.lower(author_col) == F.lit("[deleted]")
+        )
+        return (author_gone & removed) | greasy
 
     def join_twin(snapshot, batch, key="idstr", text_col="body",
                   author_col="author", edited_ts_col="edited",
@@ -449,6 +479,8 @@ def test_upsert_tagged_union_matches_join_twin(spark):
             ("t1_van", "eve", "x pastebin.com/64GuVi2F y", 4, 14, None),
             ("t1_new", "hank", "fresh", 8, 20, None),   # insert
             ("t1_nulltext", "gina", "now set", 7, 16, None),
+            ("t1_twice", "ivy", "first copy", 1, 30, None),  # later wins
+            ("t1_twice", "ivy", "second copy", 2, 30, None),
         ],
         "idstr string, author string, body string, score long, "
         "created long, edited long",

@@ -287,21 +287,148 @@ def test_legacy_flat_layout_migration(spark, tmp_path):
     assert store.snapshot().count() == 3
 
 
-def test_foreach_batch_skips_stat_counts(spark, tmp_path, monkeypatch):
-    """The streaming hot path must not run the per-merge count jobs."""
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_and_ingest_job_budget(spark, tmp_path):
+    """A small MERGE into a built store is a fixed handful of jobs (the
+    upsert join evaluated once, counters observed, not counted), and a
+    small ``ingest_jsonfile`` stays under its budget — the parent
+    commit launched 17 and 45."""
+    from timesearch_spark import api
+
     store = _store(spark, tmp_path, "hot")
-    seen = {}
-    real_merge = store.merge
+    store.merge(spark.createDataFrame(
+        [_comment(f"t1_x{i}", f"body {i}") for i in range(64)], COMMENT_COLS))
+    small = spark.createDataFrame(
+        [_comment("t1_x0", "edited"), _comment("t1_new", "fresh")], COMMENT_COLS)
+    # the streaming adapter, with an edit row to write: the worst case
+    assert _jobs_launched(spark, lambda: store.foreach_batch(small, batch_id=0)) <= 6
+    assert store.snapshot().count() == 65 and store.edits().count() == 1
 
-    def spy(batch, **kw):
-        seen.update(kw)
-        return real_merge(batch, **kw)
+    def dump(name, objs):
+        p = tmp_path / name
+        p.write_text("\n".join(json.dumps(o) for o in objs) + "\n")
+        return str(p)
 
-    monkeypatch.setattr(store, "merge", spy)
-    b = spark.createDataFrame([_comment("t1_a", "x")], COMMENT_COLS)
-    store.foreach_batch(b, batch_id=0)
-    assert seen.get("compute_stats") is False
-    assert store.snapshot().count() == 1
+    def sub(i, text):
+        return {"id": f"s{i}", "name": f"t3_s{i}", "created_utc": 100 + i,
+                "author": "alice", "subreddit": "t", "title": f"post {i}",
+                "selftext": text, "score": 1, "is_self": True, "over_18": False}
+
+    def com(i, text):
+        return {"id": f"c{i}", "name": f"t1_c{i}", "created_utc": 200 + i,
+                "author": "bob", "subreddit": "t", "body": text, "score": 2,
+                "parent_id": "t3_s0", "link_id": "t3_s0"}
+
+    ar = api.Archive(spark, str(tmp_path / "ar"))
+    api.ingest_jsonfile(ar, dump("d0.jsonl", [sub(i, "v1") for i in range(8)]
+                                 + [com(i, "v1") for i in range(40)]))
+    delta = ([sub(0, "v2"), sub(8, "v1")]
+             + [com(i, "v2") for i in range(5)] + [com(40 + i, "v1") for i in range(9)])
+    got = {}
+    n = _jobs_launched(spark, lambda: got.update(
+        api.ingest_jsonfile(ar, dump("d1.jsonl", delta))))
+    assert got == {"new_submissions": 1, "new_comments": 9,
+                   "total_submissions": 9, "total_comments": 49}
+    assert n <= 20
+
+
+def test_store_merge_golden_sequence(spark, tmp_path, caplog):
+    """Independent pin of the one-pass MERGE: after every merge of a
+    fixed sequence, the snapshot rows, the committed edit rows, the
+    counters and the one structured commit record equal hand-written
+    literals (none derived from the store or upsert code)."""
+    import logging
+
+    store = _store(spark, tmp_path, "golden")
+    cols = COMMENT_COLS + ", edited long"
+
+    def c(idstr, body, score=1, author="alice", created=100, edited=None):
+        return (1, idstr, created, author, "t3_s", "t3_s", body, score,
+                "test", None, len(body), edited)
+
+    steps = [
+        # insert two keys
+        ([c("t1_a", "hello"), c("t1_b", "world", score=2)], 10,
+         {"t1_a": ("alice", "hello", 1), "t1_b": ("alice", "world", 2)},
+         [], (2, 0, 2), 0),
+        # text edit: the batch's edited timestamp is replaced_at
+        ([c("t1_a", "hello v2", edited=15)], 20,
+         {"t1_a": ("alice", "hello v2", 1), "t1_b": ("alice", "world", 2)},
+         [("t1_a", "hello", 15)], (0, 1, 1), 1),
+        # score-only change: no edit row
+        ([c("t1_b", "world", score=7)], 30,
+         {"t1_a": ("alice", "hello v2", 1), "t1_b": ("alice", "world", 7)},
+         [("t1_a", "hello", 15)], (0, 1, 1), 0),
+        # deletion mask: raw '[deleted]' author + '[removed]' keeps the text
+        ([c("t1_a", "[removed]", score=3, author="[deleted]")], 40,
+         {"t1_a": ("alice", "hello v2", 3), "t1_b": ("alice", "world", 7)},
+         [("t1_a", "hello", 15)], (0, 1, 1), 0),
+        # vandalism marker keeps the text, whoever the author
+        ([c("t1_b", "x has been overwritten y", score=7)], 50,
+         {"t1_a": ("alice", "hello v2", 3), "t1_b": ("alice", "world", 7)},
+         [("t1_a", "hello", 15)], (0, 1, 1), 0),
+        # the same key twice in one batch: the later line wins
+        ([c("t1_a", "hello v3"), c("t1_a", "hello v4"),
+          c("t1_c", "first"), c("t1_c", "second")], 60,
+         {"t1_a": ("alice", "hello v4", 1), "t1_b": ("alice", "world", 7),
+          "t1_c": ("alice", "second", 1)},
+         [("t1_a", "hello", 15), ("t1_a", "hello v2", 60)], (1, 1, 2), 1),
+    ]
+    # replay of the last batch: same state, no new history
+    steps.append((steps[-1][0], 70, steps[-1][2], steps[-1][3], (0, 2, 2), 0))
+
+    caplog.set_level(logging.INFO, logger="timesearch_spark")
+    for version, (rows, at, snap, edits, stats, edit_rows) in enumerate(steps, 1):
+        caplog.clear()
+        res = store.merge(spark.createDataFrame(rows, cols), observed_at=at)
+        assert res.stats == dict(zip(("inserted", "updated", "batch_keys"), stats))
+        assert store.version() == version
+        assert {r["idstr"]: (r["author"], r["body"], r["score"])
+                for r in store.snapshot().collect()} == snap
+        assert sorted(map(tuple, store.edits().collect())) == edits
+        records = [json.loads(r.getMessage()) for r in caplog.records
+                   if r.name == "timesearch_spark"]
+        assert len(records) == 1
+        rec = records[0]
+        assert rec["event"] == "store.commit" and rec["store"] == store.path
+        assert rec["version"] == version and rec["edit_rows"] == edit_rows
+        assert [rec[k] for k in ("inserted", "updated", "batch_keys")] == list(stats)
+        assert rec["buckets"] == sorted(
+            int(b) for b, v in store.bucket_manifest().items() if v == version)
+
+
+def test_zero_edit_merge_hides_orphaned_edits(spark, tmp_path):
+    """A merge that captures no edits still clears an orphaned
+    ``edits/v=N`` from an uncommitted attempt at the same version, so
+    committing N does not surface the orphan's rows."""
+    store = _store(spark, tmp_path, "orphan")
+    store.merge(spark.createDataFrame([_comment("t1_a", "old")], COMMENT_COLS),
+                observed_at=1)
+    ptr = (tmp_path / "orphan" / "LATEST").read_text()
+    store.merge(spark.createDataFrame([_comment("t1_a", "new")], COMMENT_COLS),
+                observed_at=2)
+    assert store.edits().count() == 1
+    (tmp_path / "orphan" / "LATEST").write_text(ptr)  # roll back: v=2 orphaned
+    res = store.merge(
+        spark.createDataFrame([_comment("t1_b", "other")], COMMENT_COLS),
+        observed_at=3)
+    assert store.version() == 2 and res.stats["inserted"] == 1
+    assert store.edits().count() == 0
+    assert {r["body"] for r in store.snapshot().collect()} == {"old", "other"}
 
 
 def test_streaming_event_time_windows_and_dedup(spark, tmp_path):

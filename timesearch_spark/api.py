@@ -193,8 +193,7 @@ def mark_augmented(archive: Archive, submission_idstr: str,
         ]
     )
     archive.submissions.merge(
-        row, observed_at=observed_at, compute_stats=False,
-        mutable=["augmented_at"],
+        row, observed_at=observed_at, mutable=["augmented_at"],
     )
 
 
@@ -207,33 +206,29 @@ def ingest_jsonfile(archive: Archive, path: str) -> dict:
     ``new_*`` are inserted-THIS-RUN counts — TSDB.insert's ``new_values``
     semantics (tsdb.py:335-339), so re-ingesting an overlapping archive
     reports only the delta.  ``total_*`` are the post-ingest table counts
-    the reference prints at the end (ingest_jsonfile.py:59-64).
+    the reference prints at the end (ingest_jsonfile.py:59-64), both
+    from one action.
 
     Reference file semantics (ingest_jsonfile.py:29-39): lines after the
     first blank line are never read (its loop breaks there), and an
-    object classifiable as neither submission nor comment fails the
-    ingest with ValueError — both reproduced here; a corrupt JSON line
-    parses to an all-null row, which is unclassifiable and caught by the
-    same check (json.loads would have raised in the reference).
+    object before it classifiable as neither submission nor comment
+    fails the ingest with ValueError before either store is touched —
+    both reproduced by ``read_raw_file``.
     """
-    from pyspark.sql import functions as F
-
     raw = _ndjson.read_raw_file(archive.spark, path)
-    bad = _ndjson.classify(raw).filter(F.col("kind").isNull()).limit(1)
-    bad_row = bad.collect()
-    if bad_row:
-        raise ValueError(
-            f"Could not recognize object type {bad_row[0].asDict()}."
-        )
-    subs = _ndjson.submissions_from_raw(raw)
-    coms = _ndjson.comments_from_raw(raw)
-    sres = archive.submissions.merge(subs)
-    cres = archive.comments.merge(coms)
+    sres = archive.submissions.merge(_ndjson.submissions_from_raw(raw))
+    cres = archive.comments.merge(_ndjson.comments_from_raw(raw))
+    totals = (
+        archive.submissions.snapshot().selectExpr("true AS s")
+        .unionByName(archive.comments.snapshot().selectExpr("false AS s"))
+        .selectExpr("count_if(s) AS subs", "count_if(NOT s) AS coms")
+        .first()
+    )
     return {
         "new_submissions": sres.stats["inserted"],
         "new_comments": cres.stats["inserted"],
-        "total_submissions": archive.submissions.snapshot().count(),
-        "total_comments": archive.comments.snapshot().count(),
+        "total_submissions": totals["subs"],
+        "total_comments": totals["coms"],
     }
 
 

@@ -44,7 +44,12 @@ def read_raw_file(spark: SparkSession, path: str) -> DataFrame:
     (ingest_jsonfile.py:29-39): lines after the first blank (or
     whitespace-only — ``line.strip()``, hence the ``\\s`` regex rather
     than ``trim``'s space-only strip) line are never read — its loop
-    ``break``s there, treating the blank as end-of-file.
+    ``break``s there, treating the blank as end-of-file — and an object
+    before it classifiable as neither submission nor comment raises
+    ValueError, as the reference's loop does; a corrupt JSON line parses
+    to an all-null row and trips the same check (json.loads would have
+    raised).  One aggregate over the file finds both the first blank
+    and the first unclassifiable line.
 
     Line order is recovered WITHOUT assuming anything about Spark's
     split scheduling: the key is ``(input_file_block_start,
@@ -61,21 +66,29 @@ def read_raw_file(spark: SparkSession, path: str) -> DataFrame:
         F.monotonically_increasing_id().bitwiseAND(
             F.lit((1 << 33) - 1)).alias("r"),
     )
-    lines = spark.read.text(path).select(pos.alias("__pos"), "value")
-    first_blank = (
-        lines.filter(F.col("value").rlike(r"^\s*$"))
-        .agg(F.min("__pos")).first()[0]
+    lines = spark.read.text(path).select(
+        pos.alias("__pos"),
+        F.col("value").rlike(r"^\s*$").alias("__blank"),
+        F.from_json("value", RAW_NDJSON).alias("__o"),
     )
-    if first_blank is not None:
+    bad_pos = F.when(F.col("kind").isNull() & ~F.col("__blank"), F.col("__pos"))
+    first = classify(lines.select("__pos", "__blank", "__o", "__o.*")).agg(
+        F.min(F.when(F.col("__blank"), F.col("__pos"))).alias("blank"),
+        F.min(bad_pos).alias("bad_pos"),
+        F.min_by("__o", bad_pos).alias("bad"),
+    ).first()
+    blank = first["blank"]
+    if first["bad_pos"] is not None and (blank is None or first["bad_pos"] < blank):
+        bad = first["bad"].asDict() if first["bad"] is not None else {}
+        raise ValueError(f"Could not recognize object type {bad}.")
+    if blank is not None:
         lines = lines.filter(
             F.col("__pos") < F.struct(
-                F.lit(first_blank["b"]).cast("long").alias("b"),
-                F.lit(first_blank["r"]).cast("long").alias("r"),
+                F.lit(blank["b"]).cast("long").alias("b"),
+                F.lit(blank["r"]).cast("long").alias("r"),
             )
         )
-    return lines.select(
-        F.from_json("value", RAW_NDJSON).alias("__o")
-    ).select("__o.*")
+    return lines.select("__o.*")
 
 
 def is_submission_raw(df_or_cols=None) -> Column:

@@ -80,18 +80,13 @@ def livestream(
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
         # The canonical projections keep the transient ``edited`` column:
         # the upsert uses it for replaced_at (tsdb.py:374-377) and drops it
-        # from the stored snapshot (it's not in the store schema).
-        # compute_stats=False: the per-merge counter jobs (3 counts per
-        # store per micro-batch) are wasted work at a 30 s cadence —
-        # store.foreach_batch documents exactly this hot-path rule
+        # from the stored snapshot (it's not in the store schema).  The
+        # merge counters are observed during the merge's own
+        # materializations, so the 30 s hot path pays no job for them.
         if submissions_store is not None:
-            submissions_store.merge(
-                submissions_from_raw(batch), compute_stats=False
-            )
+            submissions_store.merge(submissions_from_raw(batch))
         if comments_store is not None:
-            comments_store.merge(
-                comments_from_raw(batch), compute_stats=False
-            )
+            comments_store.merge(comments_from_raw(batch))
 
     writer = (
         raw_stream.writeStream.foreachBatch(handle_batch)

@@ -20,13 +20,22 @@ MERGE with per-bucket versioning:
   ``LATEST`` pointer swaps atomically, so a reader of the old manifest
   never sees a half-written version;
 - edit rows append under ``<path>/edits`` (append-only CDC log, exactly
-  the ``*_edits`` tables of tsdb.py:88-100);
+  the ``*_edits`` tables of tsdb.py:88-100), one ``edits/v=N`` per merge
+  that captured any;
 - the merge itself is operators.upsert.upsert_snapshot — idempotent
   coalesce rules, so a replayed micro-batch converges to the same state
-  (exactly-once-per-key downstream of at-least-once delivery);
+  (exactly-once-per-key downstream of at-least-once delivery).  Its
+  join is evaluated ONCE per merge: the merged rows are
+  localCheckpointed and both the snapshot and the edits write read the
+  checkpoint;
 - per-merge counters (UpsertResult.stats) mirror TSDB.insert's
   ``new_values`` dict (tsdb.py:335-339): inserted = newly created keys,
-  updated = batch keys that already existed.
+  updated = batch keys that already existed.  They are observed
+  (``Observation``) while the merged rows materialize, so they cost no
+  job, and each commit logs them as one JSON record to the
+  ``timesearch_spark`` logger;
+- reads declare the store's schema, so no read runs a parquet
+  footer-inference job.
 
 With Delta/Iceberg available this class collapses to ``MERGE INTO``;
 the interface (merge/snapshot/resume_lower_bound) is format-agnostic by
@@ -37,15 +46,23 @@ buckets its keys hash into.
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import time
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from timesearch_spark.fs import get_fs, read_json, write_json_atomic
-from timesearch_spark.operators.upsert import UpsertResult, upsert_snapshot
+from timesearch_spark.functions.sqlexpr import ident, lit
+from timesearch_spark.operators.upsert import (
+    COUNTERS, UpsertResult, split_merged, upsert_snapshot,
+)
+
+_log = logging.getLogger("timesearch_spark")
 
 #: Archive format version (parity with DATABASE_VERSION stored in
 #: PRAGMA user_version, tsdb.py:34-37; checked at open tsdb.py:217-228).
@@ -127,10 +144,11 @@ class ParquetMergeStore:
 
     # -- bucket math ----------------------------------------------------------
 
-    def _bucket_expr(self) -> Column:
+    def _bucket_sql(self) -> str:
         """Hash bucket of the merge key: pmod(xxhash64(key), n_buckets).
         pmod (not %) so negative hashes land in [0, n_buckets)."""
-        return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets)).cast("int")
+        return (f"CAST(pmod(xxhash64({ident(self.key)}), {lit(self.n_buckets)})"
+                " AS INT)")
 
     # -- version pointer ----------------------------------------------------
 
@@ -258,7 +276,16 @@ class ParquetMergeStore:
         paths = self._live_paths(buckets)
         if not paths:
             return self._empty()
-        return self.spark.read.parquet(*paths)
+        # declared schema: no footer-inference job per read
+        return self.spark.read.schema(self.schema).parquet(*paths)
+
+    def _edits_schema(self) -> T.StructType:
+        return T.StructType([
+            T.StructField(self.key, self.schema[self.key].dataType),
+            T.StructField(f"previous_{self.text_col}",
+                          self.schema[self.text_col].dataType),
+            T.StructField("replaced_at", T.LongType()),
+        ])
 
     def edits(self) -> DataFrame:
         """The CDC log: edit batches land in ``edits/v=N`` (N = the merge
@@ -284,10 +311,8 @@ class ParquetMergeStore:
         except FileNotFoundError:
             pass
         if not paths:
-            return self.spark.createDataFrame(
-                [], f"{self.key} string, previous_{self.text_col} string, replaced_at long"
-            )
-        return self.spark.read.parquet(*paths)
+            return self.spark.createDataFrame([], self._edits_schema())
+        return self.spark.read.schema(self._edits_schema()).parquet(*paths)
 
     def resume_lower_bound(
         self, augmented_submissions: DataFrame | None = None
@@ -331,7 +356,6 @@ class ParquetMergeStore:
         batch: DataFrame,
         observed_at: int | None = None,
         batch_order_col: str | None = None,
-        compute_stats: bool = True,
         mutable: list[str] | None = None,
     ) -> UpsertResult:
         """MERGE one batch: upsert into the touched buckets only.
@@ -339,22 +363,28 @@ class ParquetMergeStore:
         Reads just the bucket directories the batch's keys hash into,
         writes just those buckets at version N+1, and repoints them in
         the manifest — untouched buckets are never read or rewritten.
-        ``stats`` carries TSDB.insert-style counters (tsdb.py:335-339).
+
+        A merge is three Spark actions, four when it captures edits:
+        pin the batch (observing the buckets it touches), materialize
+        the upsert join once (observing the counters), write the
+        touched buckets, and write the edit rows.  ``stats`` carries
+        TSDB.insert-style counters (tsdb.py:335-339) —
+        ``inserted``/``updated``/``batch_keys`` — read off the join's
+        one evaluation, so they cost no job.  Each commit logs one JSON
+        record (store, version, buckets, counters, edit rows) to the
+        ``timesearch_spark`` logger at INFO.
 
         With ``lease_timeout_sec`` set the whole merge — base-version
         read through pointer commit — runs under the writer lease, so
         concurrent cooperating writers queue instead of racing."""
         with self._lease():
-            return self._merge_impl(
-                batch, observed_at, batch_order_col, compute_stats, mutable
-            )
+            return self._merge_impl(batch, observed_at, batch_order_col, mutable)
 
     def _merge_impl(
         self,
         batch: DataFrame,
         observed_at: int | None = None,
         batch_order_col: str | None = None,
-        compute_stats: bool = True,
         mutable: list[str] | None = None,
     ) -> UpsertResult:
         if observed_at is None:
@@ -369,22 +399,20 @@ class ParquetMergeStore:
         # loss, not a warning
         self.check_schema_version()
 
-        # Pin the batch before planning: ``batch`` is evaluated three
-        # times below (bucket planning, the upsert join's write pass,
-        # stats), and a nondeterministic source — sample(), rand()
-        # filters, a task retried against a moving upstream — could
-        # yield different rows per pass, writing buckets whose old rows
-        # were never merged in.  localCheckpoint materializes the rows
-        # once and truncates lineage, so every pass sees the same data;
-        # block loss surfaces as an error, never a silent different
-        # recompute.  Micro-batch-sized, so the extra materialization is
-        # noise next to the merge itself.
-        batch = batch.localCheckpoint(eager=True)
-
-        touched = sorted(
-            r["__b"]
-            for r in batch.select(self._bucket_expr().alias("__b")).distinct().collect()
-        )
+        # Pin the batch before planning: ``batch`` feeds both the bucket
+        # plan and the upsert join, and a nondeterministic source —
+        # sample(), rand() filters, a task retried against a moving
+        # upstream — could yield different rows per pass, writing
+        # buckets whose old rows were never merged in.  localCheckpoint
+        # materializes the rows once and truncates lineage, so every
+        # pass sees the same data; block loss surfaces as an error,
+        # never a silent different recompute.  The touched buckets are
+        # observed during that same materialization.
+        planned = Observation()
+        batch = batch.observe(
+            planned, F.expr(f"collect_set({self._bucket_sql()}) AS touched")
+        ).localCheckpoint(eager=True)
+        touched = sorted(planned.get["touched"])
         if not touched:  # empty batch: nothing to do
             return UpsertResult(
                 snapshot=self.snapshot(), edits=self.edits().limit(0),
@@ -396,9 +424,8 @@ class ParquetMergeStore:
         base_version = self.version()
         base_manifest = dict(self.bucket_manifest())
 
-        old = self.snapshot(buckets=touched)
         res = upsert_snapshot(
-            old,
+            self.snapshot(buckets=touched),
             batch,
             key=self.key,
             mutable=mutable,
@@ -407,6 +434,22 @@ class ParquetMergeStore:
             store_edits=self.store_edits,
             batch_order_col=batch_order_col,
         )
+        # ONE evaluation of the upsert join: both writes below read this
+        # checkpoint, and the counters are observed while it is built.
+        # Not persist(): AQE does not coalesce a cached plan's shuffle
+        # partitions, so a cached frame writes several files per bucket.
+        counted = Observation()
+        merged = res.merged.observe(
+            counted, *[F.expr(c) for c in COUNTERS]
+        ).localCheckpoint(eager=True)
+        counts = counted.get
+        res.merged = merged
+        res.snapshot, res.edits = split_merged(merged, self.key, self.text_col)
+        res.stats = {
+            "inserted": counts["inserted"],
+            "updated": counts["batch_keys"] - counts["inserted"],
+            "batch_keys": counts["batch_keys"],
+        }
 
         new_version = base_version + 1
         vdir = self._version_dir(new_version)
@@ -418,7 +461,7 @@ class ParquetMergeStore:
         token = uuid.uuid4().hex
         staging = vdir + f".staging-{token}"
         (
-            res.snapshot.withColumn("__bucket", self._bucket_expr())
+            res.snapshot.withColumn("__bucket", F.expr(self._bucket_sql()))
             .write.partitionBy("__bucket")
             .mode("overwrite")
             .parquet(staging)
@@ -444,20 +487,9 @@ class ParquetMergeStore:
                 "across evaluations; persist/checkpoint the batch upstream"
             )
 
-        if compute_stats:
-            # Parquet metadata counts over the touched buckets only.
-            before = old.count()
-            after = self.spark.read.parquet(staging).count()
-            batch_keys = batch.select(self.key).distinct().count()
-            res.stats.update(
-                inserted=after - before,
-                updated=batch_keys - (after - before),
-                batch_keys=batch_keys,
-            )
-
         edits_dir = os.path.join(self.path, "edits", f"v={new_version}")
         edits_staging = None
-        if self.store_edits:
+        if counts["edit_rows"]:
             # the edits batch stages BEFORE the CAS so that the
             # publish window below contains NO Spark jobs — only two
             # renames and the pointer write, milliseconds not seconds
@@ -484,19 +516,25 @@ class ParquetMergeStore:
             )
         # An existing v=N dir here is an UNCOMMITTED orphan of a crashed
         # earlier attempt (the pointer still reads base_version, so it
-        # references nothing at N) — replace it.
+        # references nothing at N) — replace it; an orphaned edits/v=N
+        # goes too, even when this merge has no edit rows of its own,
+        # or committing N would make the orphan's rows visible.
         if self._fs.is_dir(vdir):
             self._fs.delete(vdir)
         self._fs.rename(staging, vdir)  # atomic publish of the data files
+        if self._fs.is_dir(edits_dir):
+            self._fs.delete(edits_dir)
         if edits_staging:
-            if self._fs.is_dir(edits_dir):
-                self._fs.delete(edits_dir)
             self._fs.rename(edits_staging, edits_dir)
 
         manifest = base_manifest
         for b in written:
             manifest[str(b)] = new_version
         self._commit(new_version, buckets=manifest, expected_version=base_version)
+        _log.info(json.dumps({
+            "event": "store.commit", "store": self.path, "version": new_version,
+            "buckets": written, **res.stats, "edit_rows": counts["edit_rows"],
+        }))
         return res
 
     def overwrite_snapshot(
@@ -514,7 +552,7 @@ class ParquetMergeStore:
         vdir = self._version_dir(new_version)
         staging = vdir + f".staging-{uuid.uuid4().hex}"
         (
-            df.withColumn("__bucket", self._bucket_expr())
+            df.withColumn("__bucket", F.expr(self._bucket_sql()))
             .write.partitionBy("__bucket")
             .mode("overwrite")
             .parquet(staging)
@@ -581,11 +619,10 @@ class ParquetMergeStore:
         return removed
 
     def foreach_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """``writeStream.foreachBatch`` adapter (I1→A11).  Skips the
-        per-merge count jobs — at a 30 s trigger cadence the counters are
-        wasted work in the hot path; call ``merge`` directly when stats
-        are wanted."""
-        self.merge(batch, compute_stats=False)
+        """``writeStream.foreachBatch`` adapter (I1→A11): one ``merge``
+        per micro-batch.  Its counters are observed, not counted, so
+        the hot path pays no job for them."""
+        self.merge(batch)
 
 
 #: Stepwise migrations (database_upgrader.py:24-49 analog): version → fn.
