@@ -17,3 +17,24 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(fn)``: the Spark jobs ``fn`` launches, counted
+    through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -546,6 +546,164 @@ def test_offline_reading_incremental_streamed_arm(spark, tmp_path):
         (full / "t3_s0.html").read_bytes()
 
 
+#: Fingerprints of the golden archive below, captured once under
+#: fingerprint format 2 (count:comment-hash-sum:submission-hash).
+GOLDEN_FP = {
+    "t3_s0": "1:5187841605548747749:-8930153258545213565",
+    "t3_s1": "2:705796421676314160:1807478975735138409",
+    "t3_s2": "0:0:-6182201479936413027",
+    "t3_s3": "1:2691875079444376682:2643932509367806856",
+    "t3_s4": "3:-8424721959799540706:3179267774758405295",
+    "t3_s6": "0:0:8608551277949941483",
+    "t3_s7": "3:-3888793822048368018:4018048690602255710",
+}
+
+
+def _golden_archive(spark, tmp_path):
+    """Threads s0..s7 without s5, with 1, 2, 0, 1, 3, 0, 3 comments."""
+    objs, i = [], 0
+    for s, n in {0: 1, 1: 2, 2: 0, 3: 1, 4: 3, 6: 0, 7: 3}.items():
+        objs.append(_sub(s))
+        for _ in range(n):
+            objs.append(_com(i, parent_id=f"t3_s{s}", link_id=f"t3_s{s}"))
+            i += 1
+    p = tmp_path / "golden.jsonl"
+    p.write_text("\n".join(json.dumps(o) for o in objs))
+    ar = api.Archive(spark, str(tmp_path / "ar"))
+    api.ingest_jsonfile(ar, str(p))
+    return ar
+
+
+def test_offline_reading_incremental_golden_classification(spark, tmp_path,
+                                                           caplog):
+    """Independent pin of the one-pass incremental export: a hand-written
+    prior manifest with same, changed, new, removed and stale-fpv rows
+    (and over-bound threads both changed and same) yields hand-written
+    re-render, delete and manifest sets, and the rewritten pages equal
+    a from-scratch render byte for byte."""
+    import logging
+
+    from timesearch_spark.operators import exports as _exports
+
+    ar = _golden_archive(spark, tmp_path)
+    out = tmp_path / "threads"
+    out.mkdir()
+    prior = [
+        ("t3_s0", GOLDEN_FP["t3_s0"], 2),  # same
+        ("t3_s1", "1:0:0", 2),             # changed
+        ("t3_s3", GOLDEN_FP["t3_s3"], 1),  # same fp, older encoding
+        ("t3_s4", "2:0:0", 2),             # changed, over the bound
+        ("t3_s5", "0:0:0", 2),             # removed from the archive
+        ("t3_s6", GOLDEN_FP["t3_s6"], None),  # pre-versioning row
+        ("t3_s7", GOLDEN_FP["t3_s7"], 2),  # same, over the bound
+    ]                                       # t3_s2: new
+    spark.createDataFrame(prior, "idstr string, fp string, fpv int") \
+        .write.parquet(str(out / api.PAGE_MANIFEST))
+    for idstr, _, _ in prior:
+        (out / f"{idstr}.html").write_text("OLD")
+
+    calls = {"fused": 0, "streamed": 0}
+    orig = {"fused": _exports.write_thread_docs,
+            "streamed": _exports.write_thread_docs_streamed}
+
+    def spy(arm):
+        def write(*a, **kw):
+            n = orig[arm](*a, **kw)
+            calls[arm] += n
+            return n
+        return write
+
+    _exports.write_thread_docs = spy("fused")
+    _exports.write_thread_docs_streamed = spy("streamed")
+    try:
+        with caplog.at_level(logging.WARNING, logger="timesearch_spark.api"):
+            n = api.offline_reading(ar, str(out), incremental=True,
+                                    max_thread_rows=2)
+    finally:
+        _exports.write_thread_docs = orig["fused"]
+        _exports.write_thread_docs_streamed = orig["streamed"]
+
+    assert n == 5
+    assert calls == {"fused": 4, "streamed": 1}
+    pages = {f[:-5]: (out / f).read_bytes() for f in os.listdir(out)
+             if f.endswith(".html")}
+    assert {k for k, v in pages.items() if v != b"OLD"} == \
+        {"t3_s1", "t3_s2", "t3_s3", "t3_s4", "t3_s6"}
+    assert set(pages) == {"t3_s0", "t3_s1", "t3_s2", "t3_s3", "t3_s4",
+                          "t3_s6", "t3_s7"}  # t3_s5 deleted
+    assert sorted(tuple(r) for r in spark.read.parquet(
+        str(out / api.PAGE_MANIFEST)).select("idstr", "fp", "fpv").collect()
+    ) == [(k, v, 2) for k, v in sorted(GOLDEN_FP.items())]
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 1 and "fingerprint format 1 (current 2)" in msgs[0]
+
+    full = tmp_path / "full"
+    assert api.offline_reading(ar, str(full)) == 7
+    for k in ("t3_s1", "t3_s2", "t3_s3", "t3_s4", "t3_s6"):
+        assert pages[k] == (full / f"{k}.html").read_bytes(), k
+
+
+def _file_state(root):
+    """relative path -> (inode, mtime_ns) of every file under ``root``."""
+    state = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            state[os.path.relpath(os.path.join(d, f), root)] = \
+                (st.st_ino, st.st_mtime_ns)
+    return state
+
+
+def test_offline_reading_noop_refresh_writes_nothing(spark, tmp_path):
+    """A refresh with no ingest since the last one finds nothing changed
+    or removed and writes nothing: no page, no delete, and the manifest
+    directory keeps its file names, inodes and mtimes.  An empty
+    manifest re-renders everything."""
+    ar = _golden_archive(spark, tmp_path)
+    out = tmp_path / "threads"
+    assert api.offline_reading(ar, str(out), incremental=True) == 7
+    before = _file_state(out)
+    assert any(k.startswith(api.PAGE_MANIFEST + os.sep) for k in before)
+    assert api.offline_reading(ar, str(out), incremental=True) == 0
+    assert _file_state(out) == before
+    # an EMPTY manifest that has the fpv column matches nothing: every
+    # thread is new, not skipped
+    man = str(out / api.PAGE_MANIFEST)
+    spark.createDataFrame([], "idstr string, fp string, fpv int") \
+        .write.mode("overwrite").parquet(man)
+    spark.catalog.refreshByPath(man)
+    assert api.offline_reading(ar, str(out), incremental=True) == 7
+
+
+def test_offline_reading_incremental_job_budget(spark, tmp_path,
+                                                jobs_launched):
+    """An incremental refresh after a small delta (nothing removed, no
+    thread over the bound) is one classification pass, the render and
+    the manifest write; a refresh with nothing to do is the pass alone.
+    The parent commit launched 28 jobs for such a refresh."""
+    ar = api.Archive(spark, str(tmp_path / "ar"))
+    p = tmp_path / "d0.jsonl"
+    p.write_text("\n".join(json.dumps(o) for o in
+                           [_sub(i) for i in range(8)]
+                           + [_com(i, parent_id=f"t3_s{i % 8}",
+                                   link_id=f"t3_s{i % 8}")
+                              for i in range(40)]))
+    api.ingest_jsonfile(ar, str(p))
+    out = str(tmp_path / "threads")
+    assert api.offline_reading(ar, out, incremental=True) == 8
+    p = tmp_path / "d1.jsonl"
+    p.write_text("\n".join(json.dumps(o) for o in [
+        _sub(8), _com(40, parent_id="t1_c0", link_id="t3_s0")]))
+    api.ingest_jsonfile(ar, str(p))
+    got = []
+    assert jobs_launched(lambda: got.append(
+        api.offline_reading(ar, out, incremental=True))) <= 14
+    assert got == [2]
+    assert jobs_launched(lambda: got.append(
+        api.offline_reading(ar, out, incremental=True))) <= 6
+    assert got == [2, 0]
+
+
 @pytest.mark.slow
 def test_offline_reading_auto_derives_durable_checkpoint(spark, tmp_path,
                                                          monkeypatch):

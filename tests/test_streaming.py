@@ -287,22 +287,7 @@ def test_legacy_flat_layout_migration(spark, tmp_path):
     assert store.snapshot().count() == 3
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_merge_and_ingest_job_budget(spark, tmp_path):
+def test_merge_and_ingest_job_budget(spark, tmp_path, jobs_launched):
     """A small MERGE into a built store is a fixed handful of jobs (the
     upsert join evaluated once, counters observed, not counted), and a
     small ``ingest_jsonfile`` stays under its budget — the parent
@@ -315,7 +300,7 @@ def test_merge_and_ingest_job_budget(spark, tmp_path):
     small = spark.createDataFrame(
         [_comment("t1_x0", "edited"), _comment("t1_new", "fresh")], COMMENT_COLS)
     # the streaming adapter, with an edit row to write: the worst case
-    assert _jobs_launched(spark, lambda: store.foreach_batch(small, batch_id=0)) <= 6
+    assert jobs_launched(lambda: store.foreach_batch(small, batch_id=0)) <= 6
     assert store.snapshot().count() == 65 and store.edits().count() == 1
 
     def dump(name, objs):
@@ -339,7 +324,7 @@ def test_merge_and_ingest_job_budget(spark, tmp_path):
     delta = ([sub(0, "v2"), sub(8, "v1")]
              + [com(i, "v2") for i in range(5)] + [com(40 + i, "v1") for i in range(9)])
     got = {}
-    n = _jobs_launched(spark, lambda: got.update(
+    n = jobs_launched(lambda: got.update(
         api.ingest_jsonfile(ar, dump("d1.jsonl", delta))))
     assert got == {"new_submissions": 1, "new_comments": 9,
                    "total_submissions": 9, "total_comments": 49}

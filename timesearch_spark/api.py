@@ -333,18 +333,35 @@ PAGE_MANIFEST = "_page_manifest"
 #: null markers).  A manifest written under a different version — or a
 #: pre-versioning manifest with no fpv column — makes every fp compare
 #: meaningless, so the reader logs that a FULL re-render is expected
-#: and treats all threads as changed, instead of letting the universal
-#: mismatch masquerade as data churn.  Stale-page removal (idstr
-#: anti-join) is version-independent and still runs.
+#: and treats every such row's thread as changed, instead of letting
+#: the universal mismatch masquerade as data churn.  Stale-page removal
+#: (an idstr match) is version-independent and still runs.
 FP_FORMAT_VERSION = 2
 
+#: Declared schema of a manifest row, as the swap writes it.  A
+#: pre-versioning manifest reads with a null ``fpv``.
+MANIFEST_SCHEMA = "idstr string, fp string, fpv int"
 
-def _thread_fingerprints(submissions: DataFrame,
-                         comments: DataFrame) -> DataFrame:
-    """(idstr, fp): one render-relevant change fingerprint per thread —
-    equal fp ⟺ the page bytes cannot have changed (64-bit multiset
-    hash, ~2⁻⁶⁴ false-negative; a false negative skips one re-render
-    until the thread next changes, it never corrupts output).
+#: A comment's thread id as its submission's fullname: raw and
+#: ``t3_``-prefixed spellings of one thread are one thread.
+_THREAD_ID = ("IF(startswith(submission, 't3_'), submission,"
+              " concat('t3_', submission))")
+
+#: Largest changed set, in estimated bytes (the observed id bytes plus
+#: 32 bytes of row overhead per id), that the incremental render
+#: broadcasts into its two semi-joins; a larger one is left to the
+#: planner.
+_BROADCAST_CHANGED_BYTES = 64 << 20
+
+
+def _thread_fingerprints(submissions: DataFrame, comments: DataFrame,
+                         manifest: DataFrame | None = None) -> DataFrame:
+    """(idstr, fp, __n, __ofp, __ofpv, __old): one render-relevant
+    change fingerprint per thread, its comment count — the fused arm's
+    routing input — and its prior manifest entry.  Equal fp ⟺ the page
+    bytes cannot have changed (64-bit multiset hash, ~2⁻⁶⁴
+    false-negative; a false negative skips one re-render until the
+    thread next changes, it never corrupts output).
 
     fp = count ‖ Σ xxhash64(comment render fields) ‖ xxhash64(submission
     render fields).  The per-row hash feeds each field to xxhash64 as
@@ -357,43 +374,47 @@ def _thread_fingerprints(submissions: DataFrame,
     0/1 null marker precedes every field and keeps the encoding
     injective up to the 2⁻⁶⁴ hash bound.  The order-insensitive
     combiner is a SUM — not XOR, where duplicate rows cancel — carried
-    in decimal(38,0) so ANSI mode cannot overflow it.  One hash-agg
-    over the comments, no text leaves the executors."""
+    in decimal(38,0) so ANSI mode cannot overflow it.
+
+    The prior ``manifest`` (:data:`MANIFEST_SCHEMA`; none when omitted)
+    gives ``__ofp`` and ``__ofpv``, with ``__old`` true when the thread
+    has a row there; a thread only the manifest holds comes back with a
+    null ``fp`` — a full outer match.  Comment hashes, submission
+    hashes and manifest rows meet in ONE hash-agg keyed by thread (one
+    shuffle, map-side partial sums; no text leaves the executors);
+    comment-only orphan threads get no row."""
     from pyspark.sql import functions as F
 
-    def rowhash(*cols):
-        parts = []
-        for c in cols:
-            parts.append(F.col(c).isNull().cast("int"))
-            parts.append(F.col(c).cast("string"))
-        return F.xxhash64(*parts)
+    from timesearch_spark.functions.sqlexpr import ident
 
-    norm = F.when(
-        F.col("submission").startswith("t3_"), F.col("submission")
-    ).otherwise(F.concat(F.lit("t3_"), F.col("submission")))
-    cfp = (
-        comments.withColumn("submission", norm)
-        .groupBy("submission")
-        .agg(
-            F.count("*").alias("__n"),
-            F.sum(rowhash("idstr", "parent", "created", "score",
-                          "author", "body", "subreddit")
-                  .cast("decimal(38,0)")).alias("__csum"),
-        )
-    )
-    sfp = submissions.select(
+    def rowhash(*cols):
+        return "xxhash64(" + ", ".join(
+            f"CAST({ident(c)} IS NULL AS INT), CAST({ident(c)} AS STRING)"
+            for c in cols) + ")"
+
+    if manifest is None:
+        manifest = submissions.sparkSession.createDataFrame([], MANIFEST_SCHEMA)
+    rows = comments.selectExpr(
+        f"{_THREAD_ID} AS idstr",
+        "CAST(" + rowhash("idstr", "parent", "created", "score", "author",
+                          "body", "subreddit") + " AS DECIMAL(38,0)) AS __h",
+    ).unionByName(submissions.selectExpr(
         "idstr",
-        rowhash("idstr", "author", "title", "url", "selftext",
-                "score", "created", "subreddit").alias("__sh"),
-    )
-    return sfp.join(cfp, sfp["idstr"] == cfp["submission"], "left").select(
+        rowhash("idstr", "author", "title", "url", "selftext", "score",
+                "created", "subreddit") + " AS __sh",
+    ), allowMissingColumns=True).unionByName(manifest.selectExpr(
+        "idstr", "fp AS __ofp", "fpv AS __ofpv", "true AS __old",
+    ), allowMissingColumns=True)
+    return rows.groupBy("idstr").agg(*[F.expr(c) for c in (
+        "count(__h) AS __n", "sum(__h) AS __csum", "max(__sh) AS __sh",
+        "max(__ofp) AS __ofp", "max(__ofpv) AS __ofpv",
+        "count(__old) > 0 AS __old",
+    )]).where("__sh IS NOT NULL OR __old").selectExpr(
         "idstr",
-        F.concat_ws(
-            ":",
-            F.coalesce(F.col("__n"), F.lit(0)).cast("string"),
-            F.coalesce(F.col("__csum").cast("string"), F.lit("0")),
-            F.col("__sh").cast("string"),
-        ).alias("fp"),
+        "IF(__sh IS NULL, NULL, concat_ws(':', CAST(__n AS STRING),"
+        " coalesce(CAST(__csum AS STRING), '0'), CAST(__sh AS STRING)))"
+        " AS fp",
+        "__n", "__ofp", "__ofpv", "__old",
     )
 
 
@@ -441,10 +462,25 @@ def offline_reading(archive: Archive, out_dir: str,
     millions of unchanged pages.  Threads
     DELETED from the archive (merge rollback, re-ingest from a narrower
     dump) have their stale pages removed, so the incremental file set
-    converges to what a from-scratch render would produce.  Crash
-    safety: pages are written BEFORE stale deletes and the manifest
-    swap (staging dir + delete/rename through the fs shim), so an
-    interruption leaves the OLD manifest and the next run merely
+    converges to what a from-scratch render would produce.
+
+    One pass decides everything: the fingerprints (with each thread's
+    comment count) are matched full-outer against the manifest, read
+    with its declared schema, and every thread is tagged ``same``, ``changed`` (new,
+    edited, or a manifest row whose ``fpv`` is stale or missing) or
+    ``removed``.  That frame is pinned (``localCheckpoint``) while an
+    ``Observation`` counts changed, removed and over-bound changed
+    threads and stale-``fpv`` rows.  From those counts: the over-bound
+    threads come from the pin, so the router runs no probe; the delete
+    pass runs only when something was removed; both semi-joins of the
+    render share one broadcast of the changed set; the manifest swap
+    writes the pin's non-removed rows; and a refresh that finds nothing
+    changed or removed writes nothing at all — no page, no delete, no
+    manifest.
+
+    Crash safety: pages are written BEFORE stale deletes and the
+    manifest swap (staging dir + delete/rename through the fs shim), so
+    an interruption leaves the OLD manifest and the next run merely
     re-renders the already-written delta and re-issues the idempotent
     deletes — never skips either.  Returns the re-rendered count (0
     when nothing changed).  Not combinable with
@@ -469,96 +505,6 @@ def offline_reading(archive: Archive, out_dir: str,
         comments = comments.filter(F.col("submission") == sid)
         submissions = submissions.filter(F.col("idstr") == sid)
 
-    manifest_pin = None
-    removed_df = None
-    if incremental:
-        from pyspark.sql import functions as F
-
-        spark = submissions.sparkSession
-        fsh = _fs.get_fs(spark, out_dir)
-        man_path = os.path.join(out_dir, PAGE_MANIFEST)
-        # pinned: the fingerprint hash-agg feeds the changed-set (itself
-        # consumed by both entity filters), the removal anti-join, and
-        # the manifest swap — without the pin it re-executes per
-        # consumer.  Released in the finally below even if the render
-        # or write raises (an unreleased pin lives for the session).
-        fp = _thread_fingerprints(submissions, comments).persist()
-        manifest_pin = fp
-        if fsh.exists(man_path):
-            old_raw = spark.read.parquet(man_path)
-            old = old_raw.select(
-                F.col("idstr").alias("__oid"), F.col("fp").alias("__ofp"))
-            same_fpv = (
-                "fpv" in old_raw.columns
-                and (r0 := old_raw.select("fpv").first()) is not None
-                and r0["fpv"] == FP_FORMAT_VERSION
-            )
-            if same_fpv:
-                changed = (
-                    fp.join(old, fp["idstr"] == old["__oid"], "left")
-                    .filter(F.col("__ofp").isNull()
-                            | (F.col("__ofp") != F.col("fp")))
-                    .select("idstr")
-                )
-            else:
-                # Manifest written under a different fingerprint
-                # encoding: every fp compare would mismatch.  Surface
-                # WHY (a one-time full re-render after upgrade, not
-                # data churn) and re-render everything.
-                import logging
-
-                # reuse the walrus-bound r0 (don't re-run the first()
-                # job), and guard the empty-manifest case: an fpv
-                # COLUMN with zero ROWS gives r0 is None (ADVICE r14)
-                logging.getLogger(__name__).warning(
-                    "offline_reading: %s was written under fingerprint "
-                    "format %s (current %s) — a one-time FULL re-render "
-                    "is expected, this is not data churn",
-                    man_path,
-                    r0["fpv"]
-                    if "fpv" in old_raw.columns and r0 is not None
-                    else "<unversioned>",
-                    FP_FORMAT_VERSION,
-                )
-                changed = fp.select("idstr")
-            # threads DELETED from the archive (merge rollback,
-            # re-ingest from a narrower dump): manifest rows with no
-            # fingerprint.  Their pages are removed below so the
-            # incremental file set converges to what a from-scratch
-            # render would produce.  Kept as a DATAFRAME (r14): a mass
-            # rollback of a 1.5M-page archive is millions of idstrs —
-            # the delete pass runs executor-side through mapInPandas +
-            # pyarrow.fs (delete_thread_pages_distributed).
-            removed_df = old.join(
-                fp, old["__oid"] == fp["idstr"], "left_anti"
-            ).select(F.col("__oid").alias("idstr"))
-        else:
-            changed = fp.select("idstr")
-        submissions = submissions.join(changed, "idstr", "left_semi")
-        norm = F.when(
-            F.col("submission").startswith("t3_"), F.col("submission")
-        ).otherwise(F.concat(F.lit("t3_"), F.col("submission")))
-        comments = comments.withColumn("submission", norm).join(
-            changed.select(F.col("idstr").alias("submission")),
-            "submission", "left_semi",
-        )
-
-    def _swap_manifest() -> None:
-        # AFTER the pages land: stale pages are deleted first (re-run
-        # idempotent — a crash between deletes and the swap leaves the
-        # old manifest, the next run recomputes the same removals and
-        # exists-checked deletes converge), then the full-corpus
-        # fingerprints become the new manifest via staging dir +
-        # delete/rename (old manifest is still being read lazily until
-        # here, so never overwrite in place).
-        if removed_df is not None:
-            exports.delete_thread_pages_distributed(removed_df, out_dir)
-        staging = man_path + ".staging"
-        fp.withColumn("fpv", F.lit(FP_FORMAT_VERSION)).write.mode(
-            "overwrite").parquet(staging)
-        if fsh.exists(man_path):
-            fsh.delete(man_path)
-        fsh.rename(staging, man_path)
     # Reference-parity pages (offline_reading.py:201-222,310-312): one
     # complete header+submission+nested-comments+footer page per
     # SUBMISSION row — zero-comment threads included, comment-only
@@ -567,73 +513,167 @@ def offline_reading(archive: Archive, out_dir: str,
 
     bound = (_trees.DEFAULT_MAX_THREAD_ROWS
              if max_thread_rows is None else max_thread_rows)
-    try:
-        n = _routed_page_export(
+    if incremental:
+        return _incremental_page_export(
             submissions, comments, out_dir,
             checkpoint_dir=checkpoint_dir, bound=bound,
         )
-        if incremental:
-            _swap_manifest()
-    finally:
-        if manifest_pin is not None:
-            manifest_pin.unpersist()
+    return _routed_page_export(
+        submissions, comments, out_dir,
+        checkpoint_dir=checkpoint_dir, bound=bound,
+    )
+
+
+def _incremental_page_export(submissions: DataFrame, comments: DataFrame,
+                             out_dir: str, checkpoint_dir: str,
+                             bound: int) -> int:
+    """``offline_reading(incremental=True)``: one pinned classification
+    pass, then only the writes its counts call for."""
+    import logging
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from timesearch_spark.functions.sqlexpr import lit
+
+    spark = submissions.sparkSession
+    fsh = _fs.get_fs(spark, out_dir)
+    man_path = os.path.join(out_dir, PAGE_MANIFEST)
+    old = (spark.read.schema(MANIFEST_SCHEMA).parquet(man_path)
+           if fsh.exists(man_path) else None)
+    version = lit(FP_FORMAT_VERSION)
+    stale = f"__old AND coalesce(__ofpv <> {version}, true)"  # no fpv: stale
+    # one row per thread in the archive or the manifest: removed (only
+    # in the manifest), changed (new, edited, or judged under another
+    # fingerprint encoding) or same
+    classified = _thread_fingerprints(
+        submissions, comments, manifest=old,
+    ).selectExpr(
+        "idstr", "fp", "__n", "__ofpv", f"{stale} AS __stale",
+        "CASE WHEN fp IS NULL THEN 'removed'"
+        f" WHEN NOT (__ofp <=> fp) OR {stale} THEN 'changed'"
+        " ELSE 'same' END AS __tag",
+    )
+    over_bound = f"__tag = 'changed' AND __n > {lit(bound)}"
+    seen = Observation()
+    pin = classified.observe(seen, *[F.expr(c) for c in (
+        "count_if(__tag = 'changed') AS changed",
+        "count_if(__tag = 'removed') AS removed",
+        "count_if(__tag = 'same') AS same",
+        f"count_if({over_bound}) AS over",
+        "sum(IF(__tag = 'changed', octet_length(idstr), 0)) AS changed_bytes",
+        "count_if(__stale) AS stale",
+        "max(IF(__stale, __ofpv, NULL)) AS stale_fpv",
+    )]).select("idstr", "fp", "__n", "__tag").localCheckpoint(eager=True)
+    counts = seen.get
+    if counts["stale"]:
+        # Manifest rows written under a different fingerprint encoding:
+        # every fp compare would mismatch.  Surface WHY (a one-time
+        # full re-render after upgrade, not data churn).
+        logging.getLogger(__name__).warning(
+            "offline_reading: %s was written under fingerprint "
+            "format %s (current %s) — a one-time FULL re-render "
+            "is expected, this is not data churn",
+            man_path,
+            "<unversioned>" if counts["stale_fpv"] is None
+            else counts["stale_fpv"],
+            FP_FORMAT_VERSION,
+        )
+    if counts["changed"] == 0 and counts["removed"] == 0:
+        return 0  # no-op refresh: no page, delete or manifest write
+
+    if counts["same"]:
+        # render only the changed threads (when none is `same` — a first
+        # run, an encoding upgrade — the full inputs are that set)
+        changed = pin.filter("__tag = 'changed'").select("idstr")
+        if counts["changed_bytes"] + 32 * counts["changed"] \
+                <= _BROADCAST_CHANGED_BYTES:
+            # one broadcast plan feeds both semi-joins, so the render
+            # reuses its exchange
+            changed = F.broadcast(changed)
+        submissions = submissions.join(
+            changed, submissions["idstr"] == changed["idstr"], "left_semi")
+        comments = comments.withColumn("submission", F.expr(_THREAD_ID))
+        comments = comments.join(
+            changed, comments["submission"] == changed["idstr"], "left_semi")
+    over = pin.filter(over_bound).selectExpr("idstr AS submission")
+    # Crash order: pages, then stale deletes, then the manifest swap.
+    # An interruption leaves the OLD manifest, so the next run
+    # re-renders the already-written delta and re-issues the idempotent
+    # deletes — never skips either.
+    n = _routed_page_export(
+        submissions, comments, out_dir,
+        checkpoint_dir=checkpoint_dir, bound=bound,
+        over=over, n_over=counts["over"],
+    )
+    if counts["removed"]:
+        # executor-side: a mass rollback is millions of ids, never
+        # collected to the driver
+        exports.delete_thread_pages_distributed(
+            pin.filter("__tag = 'removed'").select("idstr"), out_dir)
+    # staging dir + delete/rename through the fs shim: a torn write
+    # never replaces the old manifest
+    staging = man_path + ".staging"
+    pin.filter("__tag <> 'removed'").selectExpr(
+        "idstr", "fp", f"{version} AS fpv"
+    ).write.mode("overwrite").parquet(staging)
+    if fsh.exists(man_path):
+        fsh.delete(man_path)
+    fsh.rename(staging, man_path)
     return n
 
 
 def _routed_page_export(submissions: DataFrame, comments: DataFrame,
                         out_dir: str, checkpoint_dir: str,
-                        bound: int) -> int:
+                        bound: int, over: DataFrame | None = None,
+                        n_over: int | None = None) -> int:
     """The DEFAULT page-export plan (r13 auto-routing, extracted r14 so
     tools/bench_scaling.py can probe it end-to-end): one comment-count
     agg finds threads past the fused assembler's one-task bound
     (precedent: comment_forest_auto's skew probe).  The over-set is
     tiny by construction (each member has > bound comments), so the
     split joins broadcast it; when it is empty — the common case — the
-    export is exactly the fused-only plan."""
+    export is exactly the fused-only plan.  A caller that has already
+    counted the over-bound threads passes them as ``over`` (one
+    ``submission`` column) and ``n_over`` (their count); then no probe
+    runs."""
     from pyspark.sql import functions as F
 
     from timesearch_spark.operators import trees as _trees
 
-    norm = F.when(
-        F.col("submission").startswith("t3_"), F.col("submission")
-    ).otherwise(F.concat(F.lit("t3_"), F.col("submission")))
-    normed = comments.withColumn("submission", norm)
-    over = (
-        normed.groupBy("submission")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > bound)
-        .select("submission")
-    )
-    over_pin = over.persist()
+    normed = comments.withColumn("submission", F.expr(_THREAD_ID))
+    probe = None
+    if n_over is None:
+        probe = over = (
+            normed.groupBy("submission")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > bound)
+            .select("submission")
+        ).persist()
     try:
-        if over.limit(1).count() == 0:
+        if n_over == 0 or (probe is not None and over.limit(1).count() == 0):
             pages = render_thread_pages(
                 submissions, comments, checkpoint_dir=checkpoint_dir,
                 max_thread_rows=bound,
             )
-            n = exports.write_thread_docs(pages, out_dir)
-        else:
-            over_subs = over.select(F.col("submission").alias("idstr"))
-            fused_pages = render_thread_pages(
-                submissions.join(
-                    F.broadcast(over_subs), "idstr", "left_anti"),
-                normed.join(F.broadcast(over), "submission",
-                            "left_anti"),
-                checkpoint_dir=checkpoint_dir,
-                max_thread_rows=bound,
-            )
-            n = exports.write_thread_docs(fused_pages, out_dir)
-            frags = _trees.thread_page_fragments(
-                submissions.join(
-                    F.broadcast(over_subs), "idstr", "left_semi"),
-                normed.join(F.broadcast(over), "submission",
-                            "left_semi"),
-                checkpoint_dir=checkpoint_dir,
-            )
-            n += exports.write_thread_docs_streamed(frags, out_dir)
+            return exports.write_thread_docs(pages, out_dir)
+        over_subs = over.select(F.col("submission").alias("idstr"))
+        fused_pages = render_thread_pages(
+            submissions.join(F.broadcast(over_subs), "idstr", "left_anti"),
+            normed.join(F.broadcast(over), "submission", "left_anti"),
+            checkpoint_dir=checkpoint_dir,
+            max_thread_rows=bound,
+        )
+        n = exports.write_thread_docs(fused_pages, out_dir)
+        frags = _trees.thread_page_fragments(
+            submissions.join(F.broadcast(over_subs), "idstr", "left_semi"),
+            normed.join(F.broadcast(over), "submission", "left_semi"),
+            checkpoint_dir=checkpoint_dir,
+        )
+        return n + exports.write_thread_docs_streamed(frags, out_dir)
     finally:
-        over_pin.unpersist()
-    return n
+        if probe is not None:
+            probe.unpersist()
 
 
 # --- merge_db (timesearch.py merge_db) ---------------------------------------
