@@ -643,6 +643,76 @@ def test_offline_reading_incremental_golden_classification(spark, tmp_path,
         assert pages[k] == (full / f"{k}.html").read_bytes(), k
 
 
+def test_offline_reading_incremental_first_run_skips_orphan_threads(
+        spark, tmp_path):
+    """A first incremental run (no manifest, so no thread is ``same``)
+    over an archive holding a comment-only orphan thread of 3 comments,
+    past ``max_thread_rows=2``: the orphan gets no page and no manifest
+    row and never reaches the fused assembler, whose size guard would
+    fail the export; the pages equal a from-scratch render."""
+    objs = [_sub(0), _sub(1), _com(0, link_id="t3_s0")]
+    objs += [_com(i, parent_id="t3_s9", link_id="t3_s9") for i in (1, 2, 3)]
+    p = tmp_path / "orphan.jsonl"
+    p.write_text("\n".join(json.dumps(o) for o in objs))
+    ar = api.Archive(spark, str(tmp_path / "ar"))
+    api.ingest_jsonfile(ar, str(p))
+    out = tmp_path / "threads"
+    assert api.offline_reading(ar, str(out), incremental=True,
+                               max_thread_rows=2) == 2
+    pages = sorted(f for f in os.listdir(out) if f.endswith(".html"))
+    assert pages == ["t3_s0.html", "t3_s1.html"]
+    assert sorted(r.idstr for r in spark.read.parquet(
+        str(out / api.PAGE_MANIFEST)).collect()) == ["t3_s0", "t3_s1"]
+    assert api.offline_reading(ar, str(out), incremental=True,
+                               max_thread_rows=2) == 0
+    full = tmp_path / "full"
+    assert api.offline_reading(ar, str(full), max_thread_rows=2) == 2
+    for f in pages:
+        assert (out / f).read_bytes() == (full / f).read_bytes(), f
+
+
+def test_offline_reading_incremental_pin_is_durable_and_released(
+        spark, tmp_path, monkeypatch):
+    """The classification pin follows the archive's checkpoint mode — a
+    reliable checkpoint under the store-adjacent ``_checkpoints/`` for a
+    scheme:// archive, a local checkpoint otherwise — and is released
+    when the export ends: its files deleted, its blocks unpersisted."""
+    from urllib.parse import urlparse
+
+    from timesearch_spark import fs as _fs
+
+    released = []
+    real = _fs.release_checkpoint
+
+    def spy(df):
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        ck = rdd.getCheckpointFile()
+        released.append((rdd.id(), ck.get() if ck.isDefined() else None))
+        real(df)
+
+    monkeypatch.setattr(_fs, "release_checkpoint", spy)
+    p = tmp_path / "dump.jsonl"
+    p.write_text("\n".join(json.dumps(o) for o in [_sub(0), _com(0)]))
+
+    schemed = api.Archive(spark, f"file://{tmp_path}/ar_s")
+    api.ingest_jsonfile(schemed, str(p))
+    assert api.offline_reading(schemed, f"file://{tmp_path}/out_s",
+                               incremental=True) == 1
+    (_, ck), = released
+    assert ck is not None
+    path = urlparse(ck).path
+    assert path.startswith(f"{tmp_path}/ar_s/_checkpoints/")
+    assert not os.path.exists(path)
+
+    local = api.Archive(spark, str(tmp_path / "ar_l"))
+    api.ingest_jsonfile(local, str(p))
+    assert api.offline_reading(local, str(tmp_path / "out_l"),
+                               incremental=True) == 1
+    rdd_id, ck = released[1]
+    assert ck is None
+    assert not spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
+
+
 def _file_state(root):
     """relative path -> (inode, mtime_ns) of every file under ``root``."""
     state = {}

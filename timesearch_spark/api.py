@@ -347,12 +347,6 @@ MANIFEST_SCHEMA = "idstr string, fp string, fpv int"
 _THREAD_ID = ("IF(startswith(submission, 't3_'), submission,"
               " concat('t3_', submission))")
 
-#: Largest changed set, in estimated bytes (the observed id bytes plus
-#: 32 bytes of row overhead per id), that the incremental render
-#: broadcasts into its two semi-joins; a larger one is left to the
-#: planner.
-_BROADCAST_CHANGED_BYTES = 64 << 20
-
 
 def _thread_fingerprints(submissions: DataFrame, comments: DataFrame,
                          manifest: DataFrame | None = None) -> DataFrame:
@@ -466,17 +460,18 @@ def offline_reading(archive: Archive, out_dir: str,
 
     One pass decides everything: the fingerprints (with each thread's
     comment count) are matched full-outer against the manifest, read
-    with its declared schema, and every thread is tagged ``same``, ``changed`` (new,
-    edited, or a manifest row whose ``fpv`` is stale or missing) or
-    ``removed``.  That frame is pinned (``localCheckpoint``) while an
-    ``Observation`` counts changed, removed and over-bound changed
-    threads and stale-``fpv`` rows.  From those counts: the over-bound
-    threads come from the pin, so the router runs no probe; the delete
-    pass runs only when something was removed; both semi-joins of the
-    render share one broadcast of the changed set; the manifest swap
-    writes the pin's non-removed rows; and a refresh that finds nothing
-    changed or removed writes nothing at all — no page, no delete, no
-    manifest.
+    with its declared schema, and every thread is tagged ``same``,
+    ``changed`` (new, edited, or a manifest row whose ``fpv`` is stale
+    or missing) or ``removed``.  That frame is pinned with the tree
+    walk's checkpointer (executor-local, or durable under
+    ``checkpoint_dir``) while an ``Observation`` counts changed,
+    removed and over-bound changed threads and stale-``fpv`` rows, and
+    released when the export ends.  From those counts: the over-bound threads come from
+    the pin, so the router runs no probe; the delete pass runs only
+    when something was removed; both semi-joins of the render read one
+    changed-set plan; the manifest swap writes the pin's non-removed
+    rows; and a refresh that finds nothing changed or removed writes
+    nothing at all — no page, no delete, no manifest.
 
     Crash safety: pages are written BEFORE stale deletes and the
     manifest swap (staging dir + delete/rename through the fs shim), so
@@ -525,7 +520,7 @@ def offline_reading(archive: Archive, out_dir: str,
 
 
 def _incremental_page_export(submissions: DataFrame, comments: DataFrame,
-                             out_dir: str, checkpoint_dir: str,
+                             out_dir: str, checkpoint_dir: str | None,
                              bound: int) -> int:
     """``offline_reading(incremental=True)``: one pinned classification
     pass, then only the writes its counts call for."""
@@ -556,77 +551,77 @@ def _incremental_page_export(submissions: DataFrame, comments: DataFrame,
     )
     over_bound = f"__tag = 'changed' AND __n > {lit(bound)}"
     seen = Observation()
-    pin = classified.observe(seen, *[F.expr(c) for c in (
-        "count_if(__tag = 'changed') AS changed",
-        "count_if(__tag = 'removed') AS removed",
-        "count_if(__tag = 'same') AS same",
-        f"count_if({over_bound}) AS over",
-        "sum(IF(__tag = 'changed', octet_length(idstr), 0)) AS changed_bytes",
-        "count_if(__stale) AS stale",
-        "max(IF(__stale, __ofpv, NULL)) AS stale_fpv",
-    )]).select("idstr", "fp", "__n", "__tag").localCheckpoint(eager=True)
-    counts = seen.get
-    if counts["stale"]:
-        # Manifest rows written under a different fingerprint encoding:
-        # every fp compare would mismatch.  Surface WHY (a one-time
-        # full re-render after upgrade, not data churn).
-        logging.getLogger(__name__).warning(
-            "offline_reading: %s was written under fingerprint "
-            "format %s (current %s) — a one-time FULL re-render "
-            "is expected, this is not data churn",
-            man_path,
-            "<unversioned>" if counts["stale_fpv"] is None
-            else counts["stale_fpv"],
-            FP_FORMAT_VERSION,
-        )
-    if counts["changed"] == 0 and counts["removed"] == 0:
-        return 0  # no-op refresh: no page, delete or manifest write
+    # the tree walk's checkpointer: executor-local for plain archives,
+    # durable under checkpoint_dir for scheme:// ones
+    pin = _fs.checkpointer(spark, checkpoint_dir)(
+        classified.observe(seen, *[F.expr(c) for c in (
+            "count_if(__tag = 'changed') AS changed",
+            "count_if(__tag = 'removed') AS removed",
+            f"count_if({over_bound}) AS over",
+            "count_if(__stale) AS stale",
+            "max(IF(__stale, __ofpv, NULL)) AS stale_fpv",
+        )]).select("idstr", "fp", "__n", "__tag"))
+    try:
+        counts = seen.get
+        if counts["stale"]:
+            # Manifest rows written under a different fingerprint
+            # encoding: every fp compare would mismatch.  Surface WHY (a
+            # one-time full re-render after upgrade, not data churn).
+            logging.getLogger(__name__).warning(
+                "offline_reading: %s was written under fingerprint "
+                "format %s (current %s) — a one-time FULL re-render "
+                "is expected, this is not data churn",
+                man_path,
+                "<unversioned>" if counts["stale_fpv"] is None
+                else counts["stale_fpv"],
+                FP_FORMAT_VERSION,
+            )
+        if counts["changed"] == 0 and counts["removed"] == 0:
+            return 0  # no-op refresh: no page, delete or manifest write
 
-    if counts["same"]:
-        # render only the changed threads (when none is `same` — a first
-        # run, an encoding upgrade — the full inputs are that set)
+        # render only the changed threads; the semi-join also keeps
+        # comment-only orphan threads (never classified) out of the
+        # render.  Both joins read one changed-set plan, so the planner
+        # reuses its exchange.
         changed = pin.filter("__tag = 'changed'").select("idstr")
-        if counts["changed_bytes"] + 32 * counts["changed"] \
-                <= _BROADCAST_CHANGED_BYTES:
-            # one broadcast plan feeds both semi-joins, so the render
-            # reuses its exchange
-            changed = F.broadcast(changed)
         submissions = submissions.join(
             changed, submissions["idstr"] == changed["idstr"], "left_semi")
         comments = comments.withColumn("submission", F.expr(_THREAD_ID))
         comments = comments.join(
             changed, comments["submission"] == changed["idstr"], "left_semi")
-    over = pin.filter(over_bound).selectExpr("idstr AS submission")
-    # Crash order: pages, then stale deletes, then the manifest swap.
-    # An interruption leaves the OLD manifest, so the next run
-    # re-renders the already-written delta and re-issues the idempotent
-    # deletes — never skips either.
-    n = _routed_page_export(
-        submissions, comments, out_dir,
-        checkpoint_dir=checkpoint_dir, bound=bound,
-        over=over, n_over=counts["over"],
-    )
-    if counts["removed"]:
-        # executor-side: a mass rollback is millions of ids, never
-        # collected to the driver
-        exports.delete_thread_pages_distributed(
-            pin.filter("__tag = 'removed'").select("idstr"), out_dir)
-    # staging dir + delete/rename through the fs shim: a torn write
-    # never replaces the old manifest
-    staging = man_path + ".staging"
-    pin.filter("__tag <> 'removed'").selectExpr(
-        "idstr", "fp", f"{version} AS fpv"
-    ).write.mode("overwrite").parquet(staging)
-    if fsh.exists(man_path):
-        fsh.delete(man_path)
-    fsh.rename(staging, man_path)
-    return n
+        over = pin.filter(over_bound).selectExpr("idstr AS submission")
+        # Crash order: pages, then stale deletes, then the manifest swap.
+        # An interruption leaves the OLD manifest, so the next run
+        # re-renders the already-written delta and re-issues the
+        # idempotent deletes — never skips either.
+        n = _routed_page_export(
+            submissions, comments, out_dir,
+            checkpoint_dir=checkpoint_dir, bound=bound,
+            over=(over, counts["over"]),
+        )
+        if counts["removed"]:
+            # executor-side: a mass rollback is millions of ids, never
+            # collected to the driver
+            exports.delete_thread_pages_distributed(
+                pin.filter("__tag = 'removed'").select("idstr"), out_dir)
+        # staging dir + delete/rename through the fs shim: a torn write
+        # never replaces the old manifest
+        staging = man_path + ".staging"
+        pin.filter("__tag <> 'removed'").selectExpr(
+            "idstr", "fp", f"{version} AS fpv"
+        ).write.mode("overwrite").parquet(staging)
+        if fsh.exists(man_path):
+            fsh.delete(man_path)
+        fsh.rename(staging, man_path)
+        return n
+    finally:
+        _fs.release_checkpoint(pin)
 
 
 def _routed_page_export(submissions: DataFrame, comments: DataFrame,
-                        out_dir: str, checkpoint_dir: str,
-                        bound: int, over: DataFrame | None = None,
-                        n_over: int | None = None) -> int:
+                        out_dir: str, checkpoint_dir: str | None,
+                        bound: int,
+                        over: tuple[DataFrame, int] | None = None) -> int:
     """The DEFAULT page-export plan (r13 auto-routing, extracted r14 so
     tools/bench_scaling.py can probe it end-to-end): one comment-count
     agg finds threads past the fused assembler's one-task bound
@@ -634,40 +629,41 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
     tiny by construction (each member has > bound comments), so the
     split joins broadcast it; when it is empty — the common case — the
     export is exactly the fused-only plan.  A caller that has already
-    counted the over-bound threads passes them as ``over`` (one
-    ``submission`` column) and ``n_over`` (their count); then no probe
-    runs."""
+    counted the over-bound threads passes ``over`` as (their ids in one
+    ``submission`` column, their count); then no probe runs."""
     from pyspark.sql import functions as F
 
     from timesearch_spark.operators import trees as _trees
 
     normed = comments.withColumn("submission", F.expr(_THREAD_ID))
     probe = None
-    if n_over is None:
-        probe = over = (
-            normed.groupBy("submission")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > bound)
-            .select("submission")
-        ).persist()
     try:
-        if n_over == 0 or (probe is not None and over.limit(1).count() == 0):
+        if over is None:
+            probe = (
+                normed.groupBy("submission")
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .filter(F.col("__n") > bound)
+                .select("submission")
+            ).persist()
+            over = (probe, probe.limit(1).count())
+        over_ids, n_over = over
+        if n_over == 0:
             pages = render_thread_pages(
                 submissions, comments, checkpoint_dir=checkpoint_dir,
                 max_thread_rows=bound,
             )
             return exports.write_thread_docs(pages, out_dir)
-        over_subs = over.select(F.col("submission").alias("idstr"))
+        over_subs = over_ids.select(F.col("submission").alias("idstr"))
         fused_pages = render_thread_pages(
             submissions.join(F.broadcast(over_subs), "idstr", "left_anti"),
-            normed.join(F.broadcast(over), "submission", "left_anti"),
+            normed.join(F.broadcast(over_ids), "submission", "left_anti"),
             checkpoint_dir=checkpoint_dir,
             max_thread_rows=bound,
         )
         n = exports.write_thread_docs(fused_pages, out_dir)
         frags = _trees.thread_page_fragments(
             submissions.join(F.broadcast(over_subs), "idstr", "left_semi"),
-            normed.join(F.broadcast(over), "submission", "left_semi"),
+            normed.join(F.broadcast(over_ids), "submission", "left_semi"),
             checkpoint_dir=checkpoint_dir,
         )
         return n + exports.write_thread_docs_streamed(frags, out_dir)

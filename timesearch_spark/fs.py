@@ -670,6 +670,20 @@ def checkpointer(spark, checkpoint_dir: str | None):
     return lambda df: df.checkpoint(eager=True)
 
 
+def release_checkpoint(df) -> None:
+    """Free what :func:`checkpointer` materialized for ``df`` once
+    nothing reads it again: the executor blocks of a local checkpoint,
+    the files of a reliable one."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    # what RDD.unpersist does, without its warning that a local
+    # checkpoint cannot be recomputed once freed: nothing reads it again
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+    path = rdd.getCheckpointFile()
+    if path.isDefined():
+        # a Hadoop path (``file:/...`` locally), whatever the store is
+        HadoopFS(df.sparkSession).delete(path.get())
+
+
 def derive_checkpoint_dir(store_path: str | None) -> str | None:
     """Store-adjacent durable checkpoint root for iterative operators,
     or None when ``localCheckpoint`` is the right default.
