@@ -6,6 +6,8 @@ the ones extracted from the reference's code paths.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -580,9 +582,13 @@ def test_funnel_progression(spark):
         [(i, ts * 10**9, u, t, 0.0) for (i, ts, u, t) in rows],
         "event_id string, ts long, user_id string, event_type string, value double",
     )
-    out = {r["stage"]: r["n_users"] for r in
-           win.funnel_progression(events, ["view", "click", "buy"]).collect()}
-    assert out == {1: 3, 2: 2, 3: 1}
+    # the salted twin folds 10 s chunks (every step its own bucket) and
+    # must give the same literal ladders
+    salted = partial(win.funnel_progression_salted, bucket_sec=10)
+    for funnel in (win.funnel_progression, salted):
+        out = {r["stage"]: r["n_users"] for r in
+               funnel(events, ["view", "click", "buy"]).collect()}
+        assert out == {1: 3, 2: 2, 3: 1}
     # spine completeness: when every funnel user completes every stage,
     # intermediate stages still get their cumulative rows
     solo = spark.createDataFrame(
@@ -590,9 +596,10 @@ def test_funnel_progression(spark):
          ("e2", 20 * 10**9, "u1", "buy", 0.0)],
         "event_id string, ts long, user_id string, event_type string, value double",
     )
-    out2 = {r["stage"]: r["n_users"] for r in
-            win.funnel_progression(solo, ["view", "buy"]).collect()}
-    assert out2 == {1: 1, 2: 1}
+    for funnel in (win.funnel_progression, salted):
+        out2 = {r["stage"]: r["n_users"] for r in
+                funnel(solo, ["view", "buy"]).collect()}
+        assert out2 == {1: 1, 2: 1}
 
 
 def test_funnel_salted_matches_plain(spark):
@@ -632,13 +639,6 @@ def test_funnel_salted_matches_plain(spark):
               for r in win.funnel_progression_salted(
                   events, steps, bucket_sec=100).collect()}
     assert plain == salted
-    # auto with a probe tuned to fire on the bot routes to the salted
-    # plan and still matches
-    auto = {r["stage"]: r["n_users"]
-            for r in win.funnel_progression_auto(
-                events, steps, bucket_sec=100, share_threshold=0.05,
-                min_rows=10, sample_fraction=1.0).collect()}
-    assert plain == auto
 
 
 def test_sessionize_salted_matches_plain(spark):
@@ -719,13 +719,22 @@ def test_sessionize_salted_adversarial_boundaries(spark):
             win.sessionize_salted(events, gap_sec=35, bucket_sec=10).collect(),
         )
     )
+    # both forms share one session rule, so parity alone cannot catch a
+    # drift in it: pin the hand-derived sessions (user, session_id,
+    # session_start, session_end, n_events) — a delta == gap continues
+    # a session, gap+1 starts one, ids are 1-based in time order
+    assert plain == [
+        ("bound", 1, 0, 40, 5),
+        ("break", 1, 5, 5, 1),
+        ("break", 2, 41, 41, 1),
+        ("break", 3, 77, 77, 1),
+        ("dup", 1, 9, 11, 6),
+        ("empty_gap", 1, 5, 71, 3),
+        ("empty_gap", 2, 140, 140, 1),
+        ("exact", 1, 5, 110, 4),
+        ("solo", 1, 3, 3, 1),
+    ]
     assert plain == salted
-    # sanity: 'exact' chained into ONE session, 'break' into three
-    by_user = {}
-    for r in plain:
-        by_user.setdefault(r[0], []).append(r)
-    assert len(by_user["exact"]) == 1 and by_user["exact"][0][4] == 4
-    assert len(by_user["break"]) == 3
 
 
 def test_session_funnel_salted_matches_plain(spark):
@@ -849,9 +858,13 @@ def test_session_funnel_resets_at_session_boundaries(spark):
         [(i, ts * 10**9, u, t, 0.0) for (i, ts, u, t) in rows],
         "event_id string, ts long, user_id string, event_type string, value double",
     )
-    scoped = {r["stage"]: r["n_users"] for r in
-              win.session_funnel(events, ["view", "buy"], gap_sec=1800).collect()}
-    assert scoped == {1: 2, 2: 1}   # u2 stops at stage 1 in-session
+    # the salted twin at 150 s buckets: u1's session merges across a
+    # bucket seam, u2's pause breaks one
+    salted = partial(win.session_funnel_salted, bucket_sec=150)
+    for funnel in (win.session_funnel, salted):
+        scoped = {r["stage"]: r["n_users"] for r in
+                  funnel(events, ["view", "buy"], gap_sec=1800).collect()}
+        assert scoped == {1: 2, 2: 1}   # u2 stops at stage 1 in-session
     alltime = {r["stage"]: r["n_users"] for r in
                win.funnel_progression(events, ["view", "buy"]).collect()}
     assert alltime == {1: 2, 2: 2}  # the all-time funnel counts u2 too
@@ -897,77 +910,6 @@ def test_breakdown_null_key_group_stays_one_row(spark):
     assert rows["u1"] == (1, 2) and rows[None] == (2, 1)
 
 
-def test_detect_hot_keys_finds_the_planted_whale(spark):
-    from timesearch_spark.operators.skew import detect_hot_keys
-
-    rows = [("whale",)] * 5000 + [(f"u{i}",) for i in range(5000)]
-    df = spark.createDataFrame(rows, "author string")
-    # full sample: deterministic; whale holds 50% of rows
-    hot = detect_hot_keys(df, ["author"], share_threshold=0.05,
-                          min_rows=1000, sample_fraction=1.0).collect()
-    assert [r["author"] for r in hot] == ["whale"]
-    assert hot[0]["est_rows"] == 5000 and abs(hot[0]["share"] - 0.5) < 0.01
-    # min_rows gate: same share, table too small to matter
-    small = spark.createDataFrame(rows[:200], "author string")
-    assert detect_hot_keys(small, ["author"], share_threshold=0.05,
-                           min_rows=1000, sample_fraction=1.0).count() == 0
-    # empty input: stable empty schema
-    assert detect_hot_keys(small.limit(0), ["author"],
-                           sample_fraction=1.0).count() == 0
-
-
-def test_topk_auto_picks_path_by_skew(spark):
-    """topk_per_group_auto: the sampled probe routes a skewed input
-    through the salted two-phase plan and a uniform input through the
-    plain single window — with identical rows either way."""
-    from pyspark.sql import functions as F
-
-    from timesearch_spark.operators.skew import (
-        should_salt, topk_per_group, topk_per_group_auto,
-    )
-
-    skewed = spark.createDataFrame(
-        [("hot", i) for i in range(5000)]
-        + [(f"g{i % 50}", i) for i in range(5000)],
-        "g string, v long",
-    )
-    uniform = spark.createDataFrame(
-        [(f"g{i % 50}", i) for i in range(10000)], "g string, v long"
-    )
-    kw = dict(share_threshold=0.05, min_rows=1000, sample_fraction=1.0)
-    assert should_salt(skewed, ["g"], **kw)
-    assert not should_salt(uniform, ["g"], **kw)
-
-    order = [F.col("v").desc()]
-    for df in (skewed, uniform):
-        auto = topk_per_group_auto(df, ["g"], order, k=3, **kw)
-        salted = topk_per_group(df, ["g"], order, k=3)
-        assert {tuple(r) for r in auto.collect()} == {
-            tuple(r) for r in salted.collect()
-        }
-    # the choice is visible in the plan: only the skewed input salts
-    assert "__salt" in topk_per_group_auto(
-        skewed, ["g"], order, k=3, **kw
-    )._jdf.queryExecution().toString()
-    assert "__salt" not in topk_per_group_auto(
-        uniform, ["g"], order, k=3, **kw
-    )._jdf.queryExecution().toString()
-
-
-def test_trending_topk_auto_skew_matches_plain(spark):
-    from tests.conftest import SF_SMALL
-    from timesearch_spark.operators import windows as win
-    from timesearch_spark.tables import load
-
-    ev = win.with_event_time(load(spark, SF_SMALL, "events"))
-    plain = {tuple(r) for r in win.trending_topk(ev, "1 hour", k=2).collect()}
-    auto = {
-        tuple(r)
-        for r in win.trending_topk(ev, "1 hour", k=2, auto_skew=True).collect()
-    }
-    assert plain == auto and len(plain) > 0
-
-
 def test_sessionize_salted_keeps_null_user(spark):
     """Review r8 follow-up: a NULL user_id is one group to the plain
     window (nulls partition together); the chunk join must be
@@ -997,75 +939,6 @@ def test_sessionize_salted_keeps_null_user(spark):
     )
     assert plain == salted
     assert sum(1 for r in plain if r[0] is None) == 2
-
-
-def test_sessionize_and_session_funnel_auto_route_and_match(spark):
-    """The auto routers pick a plan from the sampled skew probe and the
-    output is identical on BOTH routes: a probe tuned to fire (tiny
-    min_rows, full sample) exercises the salted arm, the default probe
-    (min_rows 100k) the plain arm."""
-    import random
-
-    from timesearch_spark.operators import windows as win
-
-    rng = random.Random(77)
-    rows, eid = [], 0
-    for u in range(10):
-        t = rng.randrange(0, 50)
-        for _ in range(rng.randrange(2, 30)):
-            t += rng.choice([1, 5, 45, 120])
-            eid += 1
-            rows.append((f"e{eid}", t * 10**9, f"u{u}",
-                         rng.choice(["view", "click", "buy"]), 0.0))
-    for t in range(300, 700, 5):  # hot bot: dominates the row share
-        eid += 1
-        rows.append((f"e{eid}", t * 10**9, "bot", "view", 0.0))
-    events = spark.createDataFrame(
-        rows,
-        "event_id string, ts long, user_id string, "
-        "event_type string, value double",
-    )
-    hot = dict(share_threshold=0.05, min_rows=10, sample_fraction=1.0)
-
-    plain_s = sorted(map(tuple, win.sessionize(events, gap_sec=40).collect()))
-    assert plain_s == sorted(map(tuple, win.sessionize_auto(
-        events, gap_sec=40, bucket_sec=100, **hot).collect()))
-    assert plain_s == sorted(map(tuple, win.sessionize_auto(
-        events, gap_sec=40).collect()))  # default probe: plain arm
-
-    steps = ["view", "click", "buy"]
-    plain_f = {r["stage"]: r["n_users"]
-               for r in win.session_funnel(events, steps, gap_sec=40).collect()}
-    assert plain_f == {r["stage"]: r["n_users"]
-                       for r in win.session_funnel_auto(
-                           events, steps, gap_sec=40, bucket_sec=100,
-                           **hot).collect()}
-    assert plain_f == {r["stage"]: r["n_users"]
-                       for r in win.session_funnel_auto(
-                           events, steps, gap_sec=40).collect()}
-
-
-def test_should_salt_footer_shortcut(spark, tmp_path, monkeypatch):
-    """A parquet table whose footer row bound is under min_rows can't
-    contain a hot key, so should_salt answers False with ZERO Spark
-    jobs (the probe is never invoked); past the bound the sampled probe
-    still runs and fires on a genuinely hot key."""
-    from timesearch_spark.operators import skew
-
-    rows = [(f"e{i}", "hot" if i < 90 else f"u{i}") for i in range(100)]
-    p = str(tmp_path / "t.parquet")
-    spark.createDataFrame(rows, "event_id string, g string").write.parquet(p)
-    d = spark.read.parquet(p)
-
-    def boom(*a, **k):
-        raise AssertionError("probe ran despite a footer bound under min_rows")
-
-    monkeypatch.setattr(skew, "detect_hot_keys", boom)
-    assert skew.should_salt(d, ["g"], min_rows=1000) is False
-    monkeypatch.undo()
-    assert skew.should_salt(
-        d, ["g"], share_threshold=0.5, min_rows=50, sample_fraction=1.0
-    ) is True
 
 
 def test_unsorted_breakdown_streamed_byte_identity(spark, tmp_path):

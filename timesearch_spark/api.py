@@ -624,8 +624,9 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
                         over: tuple[DataFrame, int] | None = None) -> int:
     """The DEFAULT page-export plan (r13 auto-routing, extracted r14 so
     tools/bench_scaling.py can probe it end-to-end): one comment-count
-    agg finds threads past the fused assembler's one-task bound
-    (precedent: comment_forest_auto's skew probe).  The over-set is
+    agg finds threads past the fused assembler's one-task bound — an
+    exact count, not a sample — and routes just those through the
+    distributed walk (``trees.thread_page_fragments``).  The over-set is
     tiny by construction (each member has > bound comments), so the
     split joins broadcast it; when it is empty — the common case — the
     export is exactly the fused-only plan.  A caller that has already

@@ -129,14 +129,6 @@ def exact_dedup_groups(
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one row per distinct normalized text (min id wins)."""
-    w_keep = exact_dedup_groups(df, text_col, id_col).select("keeper_id")
-    return df.join(
-        w_keep, df[id_col] == w_keep.keeper_id, "left_semi"
-    )
-
-
 def _whitespace_fp(col) -> Column:
     """md5 of whitespace-normalized lowercase text — the same content
     fingerprint as textstats.fingerprint_md5 (kept expression-identical;
@@ -218,19 +210,6 @@ def incremental_dedup(
 
 
 # --- minhash + LSH ------------------------------------------------------------
-
-def minhash_signature(col, num_hashes: int = 64, shingle_k: int = 3) -> Column:
-    """num_hashes minhash values as an array column: h_i = min over
-    shingles of xxhash64(base_hash, i).  Each shingle's string is hashed
-    ONCE; the per-i variation re-hashes the resulting long (two fixed-width
-    words), which is ~the cost of a multiply-add, not of re-reading the
-    string num_hashes times."""
-    base = F.transform(F.array_distinct(shingles(col, shingle_k)), lambda s: F.xxhash64(s))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(base, lambda h: F.xxhash64(h, i))),
-    )
-
 
 def minhash_signature_table(
     df: DataFrame,

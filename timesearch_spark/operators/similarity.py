@@ -61,26 +61,6 @@ def hyperplanes(dim: int, bits: int, tables: int, seed: int = 42) -> list[list[l
     ]
 
 
-def signature_col(vec_col, planes: list[list[float]]):
-    """Bit signature of one table: sign(v·h) per hyperplane, packed long.
-    Pure-expression form — fine for a handful of planes; use
-    ``with_signatures`` (one BLAS matmul) when tables×bits is large."""
-    sig = F.lit(0).cast("long")
-    v = as_double(vec_col)
-    for i, h in enumerate(planes):
-        # F.lit(list): ONE py4j round-trip per plane literal — the
-        # element-wise F.array(*[F.lit(x) ...]) form cost dim calls per
-        # plane, which dominated wall-clock as driver-side plan
-        # construction (measured seconds per query at 16 tables).
-        d = F.aggregate(
-            F.zip_with(v, F.lit([float(x) for x in h]), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig + F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
-    return sig
-
-
 def pack_signatures(V, planes):
     """(n, dim) float64 matrix → (n, tables) packed-long signatures via one
     BLAS matmul: V @ H.T → signs → per-table bit-pack.  The ONE signature
@@ -398,15 +378,6 @@ def train_codebook(
         (cid, [float(x) for x in center])
         for cid, center in enumerate(model.clusterCenters())
     ]
-
-
-def _rounded_cos_lit(vec_col, centroid: list[float]):
-    """ROUND(cos(v, centroid), 6) with the centroid as a literal array —
-    the sequential-fold cosine, so the rounded value is bit-identical to
-    DuckDB's ``list_cosine_similarity`` (see functions.vectors).  One
-    F.lit(list) call, not dim element-wise lits (plan-construction cost,
-    see signature_col)."""
-    return F.round(cosine(vec_col, F.lit([float(x) for x in centroid])), 6)
 
 
 def _centroid_scores(vec_col, centroids: list[tuple[int, list[float]]]):

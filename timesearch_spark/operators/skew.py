@@ -7,6 +7,10 @@ window (rank / top-k): all rows of a group land in one task, so one hot
 key — a mega-thread in the reference's domain, a boilerplate-heavy
 source in a corpus — serializes the stage.  ``topk_per_group`` is the
 salted two-phase form: exact results, bounded per-task group size.
+The caller picks it over the plain window.  The event-time twins with
+the same contract (``sessionize_salted``, ``funnel_progression_salted``,
+``session_funnel_salted``) live in ``operators.windows``, and the
+distributed tree walk in ``trees.comment_forest_big``.
 
 Reference tie-in: E2 per-group child ranking (offline_reading.py:211);
 ``queries.window_rank_children`` is the unsalted single-window form this
@@ -73,110 +77,4 @@ def topk_per_group(
         .withColumn("rn", F.row_number().over(w2))
         .filter(F.col("rn") <= k)
         .drop("__salt", "__rn1")
-    )
-
-
-def should_salt(
-    df: DataFrame,
-    group_cols: list[str],
-    share_threshold: float = 0.01,
-    min_rows: int = 100_000,
-    sample_fraction: float | None = None,
-    seed: int = 42,
-) -> bool:
-    """True when :func:`detect_hot_keys` finds at least one key heavy
-    enough to hotspot a per-group ordered stage.  One sampled probe +
-    a LIMIT-1 existence check — two small driver jobs, no full scan.
-
-    Zero jobs on provably-small input: a hot key needs >= ``min_rows``
-    rows of its own, so when the parquet footers bound the WHOLE table
-    under ``min_rows`` (``tables.row_count_bound`` — no Spark job) the
-    answer is False without running the probe.  That makes the auto
-    routers free for the small tables that dominate interactive use."""
-    from timesearch_spark.tables import row_count_bound
-
-    bound = row_count_bound(df)
-    if bound is not None and bound < min_rows:
-        return False
-    hot = detect_hot_keys(
-        df, group_cols, share_threshold, min_rows, sample_fraction, seed
-    )
-    return hot.limit(1).count() > 0
-
-
-def topk_per_group_auto(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column],
-    k: int,
-    salt_parts: int = 16,
-    share_threshold: float = 0.01,
-    min_rows: int = 100_000,
-    sample_fraction: float | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Exact top-k per group with the physical plan chosen by a sampled
-    skew probe: the plain single window when no key can dominate a task,
-    the salted two-phase :func:`topk_per_group` when one can.  Both
-    paths produce identical rows and schema (group cols + payload +
-    ``rn``), so the choice is invisible to callers.
-
-    The probe (:func:`should_salt`) evaluates ``df`` once at plan-build
-    time — if ``df`` is an expensive sub-plan, cache/localCheckpoint it
-    first so the probe and the ranked query share the materialization.
-    """
-    if should_salt(
-        df, group_cols, share_threshold, min_rows, sample_fraction, seed
-    ):
-        return topk_per_group(df, group_cols, order_cols, k, salt_parts)
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-    )
-
-
-def detect_hot_keys(
-    df: DataFrame,
-    group_cols: list[str],
-    share_threshold: float = 0.01,
-    min_rows: int = 100_000,
-    sample_fraction: float | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Keys heavy enough to hotspot a per-group ordered stage: share of
-    all rows >= ``share_threshold`` (and, scaled up from the sample,
-    at least ``min_rows`` rows — a 1% share of a small table is not a
-    problem).  Output: (group_cols..., est_rows, share), descending.
-
-    One sampled aggregate decides whether the plain window or
-    ``topk_per_group`` is the right physical plan — the decision costs
-    a fraction of a scan, the wrong plan costs a serialized stage.
-    ``sample_fraction`` defaults to 1%; sampling only wobbles a
-    genuinely hot key's count by sqrt(n) noise, far below the 10×
-    margins these thresholds act on.  Deterministic for fixed
-    (data, seed).  The sample total is a driver-side scalar (one count
-    job), not a global window — a window over the per-key counts would
-    drag every key through one partition, the exact hotspot this module
-    exists to avoid."""
-    frac = sample_fraction if sample_fraction is not None else 0.01
-    s = df.select(*group_cols).sample(fraction=frac, seed=seed)
-    s = s.localCheckpoint(eager=True)  # count + agg see the same sample
-    total = s.count()
-    if total == 0:
-        return s.groupBy(*group_cols).count().select(
-            *group_cols,
-            F.lit(0).cast("long").alias("est_rows"),
-            F.lit(0.0).alias("share"),
-        )
-    counts = s.groupBy(*group_cols).agg(F.count("*").alias("__c"))
-    return (
-        counts.withColumn("share", F.col("__c") / F.lit(float(total)))
-        .withColumn("est_rows", (F.col("__c") / F.lit(frac)).cast("long"))
-        .filter(
-            (F.col("share") >= share_threshold)
-            & (F.col("est_rows") >= min_rows)
-        )
-        .select(*group_cols, "est_rows", F.round("share", 6).alias("share"))
-        .orderBy(F.desc("share"), *group_cols)
     )

@@ -83,14 +83,6 @@ def quality_score(col, lang: str = "en") -> Column:
 
 # --- language ID -----------------------------------------------------------------
 
-def lang_scores(col) -> Column:
-    """Map of lang → stopword hit count."""
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in STOPWORDS]),
-        F.array(*[stopword_hits(col, lang) for lang in STOPWORDS]),
-    )
-
-
 def lang_id(col) -> Column:
     """Argmax language by stopword hits; ties broken by language code
     order; all-zero scores → 'und' (undetermined)."""

@@ -187,7 +187,6 @@ def comment_forest_big(
     drop_orphan_subtrees: bool = False,
     emit_path: bool = False,
     payload: tuple[str, ...] = (),
-    spread_state: bool | None = None,
 ) -> DataFrame:
     """:func:`comment_forest` for threads too large for one task.
 
@@ -281,9 +280,8 @@ def comment_forest_big(
         # (score, idstr) tie-break can't compare None to str), just
         # with an unhelpful TypeError from inside the Arrow iterator.
         # The relational walk would otherwise silently drop the row at
-        # the anc join; raise the pointed error instead of picking
-        # either wrong answer, so comment_forest_auto is loud on this
-        # input whichever arm the skew probe routes it to.
+        # the anc join; raise the pointed error instead, so the two
+        # walks agree that this input is an error.
         return F.when(
             F.col(name).isNull(),
             F.raise_error(
@@ -432,14 +430,13 @@ def comment_forest_big(
     # (deterministic, retry-safe) with an EXPLICIT width so AQE cannot
     # coalesce the spread away; width follows the session's configured
     # parallelism (conf-driven on a cluster), not a local constant.
-    # ``spread_state=None`` resolves to the workloads that HAVE the hot
-    # family by construction — the page arm (only over-bound threads
-    # are routed here since r13) — while skew-free direct callers (the
-    # parity twins walk ~150k small families) skip the extra exchange;
-    # comment_forest_auto passes True explicitly because its probe
-    # just PROVED a dominant thread exists.
-    if spread_state is None:
-        spread_state = page_order or bool(payload)
+    # Only the workloads that HAVE the hot family by construction spread
+    # — the page arm (only over-bound threads are routed here since
+    # r13) — while skew-free callers (the parity twins walk ~150k small
+    # families) skip the extra exchange.
+    if page_order or pl:
+        width = _python_stage_width(comments)
+        state = state.repartition(width, "submission", "idstr")
     if pl:
         # Payload re-attach (see the `nodes` note): one left equi-join
         # on the unique (submission, idstr) row key — phantoms have no
@@ -450,16 +447,10 @@ def comment_forest_big(
         # narrow rank side is hinted as the hash-join BUILD side so the
         # payload side STREAMS — a sort-merge join would re-sort the
         # payload bytes, re-spending what skipping the window saved.
-        pay = base.select("submission", "idstr", *pl)
-        if spread_state:
-            width = _python_stage_width(comments)
-            state = state.repartition(width, "submission", "idstr")
-            pay = pay.repartition(width, "submission", "idstr")
+        pay = base.select("submission", "idstr", *pl).repartition(
+            width, "submission", "idstr")
         state = state.hint("shuffle_hash").join(
             pay, ["submission", "idstr"], "left")
-    elif spread_state:
-        state = state.repartition(
-            _python_stage_width(comments), "submission", "idstr")
     state = ckpt(state)
 
     # Only the advancing FRONTIER is ever re-materialized: done rows
@@ -602,62 +593,6 @@ def comment_forest_big(
         "phantom",
         *back,
     )
-
-
-def comment_forest_auto(
-    comments: DataFrame,
-    num_partitions: int | None = None,
-    share_threshold: float = 0.05,
-    min_rows: int = 500_000,
-    sample_fraction: float | None = None,
-    max_depth: int = 65536,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """:func:`comment_forest` with mega-thread protection: a sampled
-    skew probe (:func:`~timesearch_spark.operators.skew.detect_hot_keys`)
-    finds submissions heavy enough to serialize a task slot, routes just
-    those through the distributed :func:`comment_forest_big` walk, and
-    everything else through the per-partition Python walk.  Both paths
-    produce identical rows, so the union is plan shape only.
-
-    Defaults fire on a thread holding >= 5% of all comments AND >=
-    500k rows — the regime where one task visibly outlasts the stage.
-    The probe costs two small driver jobs; use plain
-    :func:`comment_forest` when the corpus provably has no such threads
-    (the registry queries do — the bench corpus caps thread size)."""
-    from timesearch_spark.operators.skew import detect_hot_keys
-
-    hot = [
-        r["submission"]
-        for r in detect_hot_keys(
-            comments,
-            ["submission"],
-            share_threshold=share_threshold,
-            min_rows=min_rows,
-            sample_fraction=sample_fraction,
-        ).collect()
-    ]
-    if not hot:
-        return comment_forest(comments, num_partitions)
-    # NULL submissions must not vanish in the split: isin(hot) is NULL
-    # (not false) for them under three-valued logic, so BOTH plain
-    # filters would drop such rows silently — route them with the small
-    # arm, where the walk surfaces them exactly like the unsplit path.
-    small = comment_forest(
-        comments.filter(
-            F.col("submission").isNull() | ~F.col("submission").isin(hot)
-        ),
-        num_partitions,
-    )
-    big = comment_forest_big(
-        comments.filter(F.col("submission").isin(hot)),
-        max_depth=max_depth,
-        checkpoint_dir=checkpoint_dir,
-        # the probe just proved a dominant thread exists — spread the
-        # walk state off its hot family's window partition (r15)
-        spread_state=True,
-    )
-    return small.unionByName(big)
 
 
 def thread_stats(forest: DataFrame) -> DataFrame:

@@ -13,8 +13,15 @@ testdata generation (tables.event_ts_sec branches); helpers convert once.
 At 100 TB the tumbling agg is a single map-side-combined hash aggregate
 on (window, key) — the same shape as breakdown — and sessionization is
 one shuffle on user_id followed by a per-user ordered scan (window
-functions), which AQE keeps balanced unless one user dominates; salt the
-user key if that ever happens.
+functions), which AQE keeps balanced unless one user dominates.
+
+Sessionize and both funnels come in two physical forms behind one
+rule: the plain form orders a user's whole history on one task, and
+its ``*_salted`` twin orders (user, time-bucket) chunks and stitches
+their summaries, so no task holds a hot user's events.  Both forms run
+the same session rule (:func:`_session_flags`) and funnel fold
+(:func:`_fold_from`) and give identical output on every input; the
+caller picks the form.
 """
 
 from __future__ import annotations
@@ -56,14 +63,15 @@ def tumbling_counts(
     )
 
 
-def _session_flags(events: DataFrame, gap_sec: int, user_col: str) -> DataFrame:
+def _session_flags(ev: DataFrame, gap_sec: int, keys: list[str]) -> DataFrame:
     """The one session-boundary rule: lag + running sum over the
-    (ts_sec, event_id)-ordered per-user window → ``session_seq``.
-    Shared by sessionize and session_funnel so the boundary semantics
-    (gap strictness, tie order, null handling) can never drift between
-    them."""
-    ev = with_event_time(events)
-    w = Window.partitionBy(user_col).orderBy("ts_sec", "event_id")
+    (ts_sec, event_id)-ordered window partitioned by ``keys`` →
+    ``session_seq``.  ``ev`` already carries ``ts_sec``
+    (:func:`with_event_time`).  The plain forms partition by the user,
+    the salted twins by (user, time-bucket) chunk; all four sessionizing
+    operators call this, so the boundary semantics (gap strictness, tie
+    order, null handling) can never drift between them."""
+    w = Window.partitionBy(*keys).orderBy("ts_sec", "event_id")
     return ev.withColumn(
         "new_session",
         F.when(
@@ -86,7 +94,7 @@ def sessionize(
     Classic lag + running-sum construction: one shuffle on the user, two
     ordered window passes.  Output: (user_id, session_id, session_start,
     session_end, n_events)."""
-    flagged = _session_flags(events, gap_sec, user_col)
+    flagged = _session_flags(with_event_time(events), gap_sec, [user_col])
     return (
         flagged.groupBy(F.col(user_col), F.col("session_seq").alias("session_id"))
         .agg(
@@ -134,16 +142,7 @@ def sessionize_salted(
     ev = with_event_time(events).withColumn(
         "__bucket", F.floor(F.col("ts_sec") / bucket_sec)
     )
-    w = Window.partitionBy(user_col, "__bucket").orderBy("ts_sec", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts_sec") - F.lag("ts_sec").over(w) > gap_sec, 1
-        ).otherwise(F.when(F.lag("ts_sec").over(w).isNull(), 1).otherwise(0)),
-    ).withColumn(
-        "session_seq",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    flagged = _session_flags(ev, gap_sec, [user_col, "__bucket"])
     per_sess = flagged.groupBy(user_col, "__bucket", "session_seq").agg(
         F.min("ts_sec").alias("s_start"),
         F.max("ts_sec").alias("s_end"),
@@ -226,31 +225,6 @@ def sessionize_salted(
     )
 
 
-def sessionize_auto(
-    events: DataFrame,
-    gap_sec: int = 1800,
-    user_col: str = "user_id",
-    bucket_sec: int = 3600,
-    share_threshold: float = 0.01,
-    min_rows: int = 100_000,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """:func:`sessionize` with the physical plan chosen by the sampled
-    skew probe (:func:`~timesearch_spark.operators.skew.should_salt`):
-    the one-window plain form when no user can dominate a task, the
-    calendar-chunked :func:`sessionize_salted` form when one can.
-    Identical output (ids included) either way; the probe costs two
-    small driver jobs — same contract as :func:`funnel_progression_auto`
-    and ``comment_forest_auto``."""
-    from timesearch_spark.operators.skew import should_salt
-
-    if should_salt(
-        events, [user_col], share_threshold, min_rows, sample_fraction
-    ):
-        return sessionize_salted(events, gap_sec, user_col, bucket_sec)
-    return sessionize(events, gap_sec, user_col)
-
-
 def retention_cohorts(
     events: DataFrame,
     period_sec: int = 86400,
@@ -294,14 +268,24 @@ def retention_cohorts(
     )
 
 
-def _fold_stage(steps: list[str]):
-    """Fold over a sorted ``seq`` of (ts_sec, t) structs: state = number
-    of steps completed in order; an event advances the state iff it
-    matches the NEXT wanted step.  Whole-stage-codegen'd JVM expression."""
+def _seq(type_col: str):
+    """Aggregate: the group's events as a time-sorted ``seq`` array of
+    (ts_sec, t) structs — the input every funnel fold walks."""
+    return F.array_sort(
+        F.collect_list(F.struct(F.col("ts_sec"), F.col(type_col).alias("t")))
+    ).alias("seq")
+
+
+def _fold_from(steps: list[str], k: int):
+    """The one funnel fold over a sorted ``seq``: state = number of
+    steps completed in order, starting at ``k``; an event advances the
+    state iff it matches the NEXT wanted step.  ``k=0`` is a whole
+    progression; the salted twins fold every ``k`` (:func:`_trans_vector`).
+    Whole-stage-codegen'd JVM expression."""
     steps_arr = F.lit(steps)
     return F.aggregate(
         F.col("seq"),
-        F.lit(0),
+        F.lit(k),
         lambda acc, e: F.when(
             (acc < F.size(steps_arr))
             & (e["t"] == F.element_at(steps_arr, acc + 1)),
@@ -351,15 +335,10 @@ def funnel_progression(
     rollup is a tiny second agg over one row per user.  Per-user state
     is bounded by that user's event count — the same bound sessionize
     carries; when one user CAN dominate a task, use
-    :func:`funnel_progression_salted` (exact chunk-transition form) or
-    :func:`funnel_progression_auto` (probe-chosen)."""
+    :func:`funnel_progression_salted` (exact chunk-transition form)."""
     ev = with_event_time(events)
-    per_user = ev.groupBy(user_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("ts_sec"), F.col(type_col).alias("t")))
-        ).alias("seq")
-    )
-    reached = per_user.select(_fold_stage(steps).alias("stage")).filter(
+    per_user = ev.groupBy(user_col).agg(_seq(type_col))
+    reached = per_user.select(_fold_from(steps, 0).alias("stage")).filter(
         F.col("stage") > 0
     )
     return _ladder(reached, len(steps))
@@ -370,20 +349,7 @@ def _trans_vector(steps: list[str]):
     ``trans[k+1]`` = funnel state after folding the chunk entering at
     state ``k`` (element_at is 1-based).  n+1 codegen'd folds — n is
     the step count, so a handful of array scans."""
-    steps_arr = F.lit(steps)
-
-    def fold_from(k: int):
-        return F.aggregate(
-            F.col("seq"),
-            F.lit(k),
-            lambda acc, e: F.when(
-                (acc < F.size(steps_arr))
-                & (e["t"] == F.element_at(steps_arr, acc + 1)),
-                acc + 1,
-            ).otherwise(acc),
-        )
-
-    return F.array(*[fold_from(k) for k in range(len(steps) + 1)])
+    return F.array(*[_fold_from(steps, k) for k in range(len(steps) + 1)])
 
 
 def _compose_trans(a, b):
@@ -427,11 +393,7 @@ def funnel_progression_salted(
     n = len(steps)
     ev = with_event_time(events)
     b = (F.floor(F.col("ts_sec") / bucket_sec)).alias("__bucket")
-    per_chunk = ev.groupBy(F.col(user_col), b).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("ts_sec"), F.col(type_col).alias("t")))
-        ).alias("seq")
-    )
+    per_chunk = ev.groupBy(F.col(user_col), b).agg(_seq(type_col))
     # trans[k+1] = exit state entering at k (element_at is 1-based)
     trans = per_chunk.select(
         F.col(user_col),
@@ -450,33 +412,6 @@ def funnel_progression_salted(
     )
     reached = composed.select(stage.alias("stage")).filter(F.col("stage") > 0)
     return _ladder(reached, n)
-
-
-def funnel_progression_auto(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    bucket_sec: int = 3600,
-    share_threshold: float = 0.01,
-    min_rows: int = 100_000,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """:func:`funnel_progression` with the physical plan chosen by the
-    sampled skew probe (:func:`~timesearch_spark.operators.skew.
-    should_salt`): the one-shuffle plain fold when no user can dominate
-    a task, the chunk-transition :func:`funnel_progression_salted` form
-    when one can.  Identical output either way; the probe costs two
-    small driver jobs."""
-    from timesearch_spark.operators.skew import should_salt
-
-    if should_salt(
-        events, [user_col], share_threshold, min_rows, sample_fraction
-    ):
-        return funnel_progression_salted(
-            events, steps, user_col, type_col, bucket_sec
-        )
-    return funnel_progression(events, steps, user_col, type_col)
 
 
 def session_funnel(
@@ -498,14 +433,10 @@ def session_funnel(
     Output: (stage, n_users).  When one user can dominate a task, use
     :func:`session_funnel_salted` — identical results, chunk-merged
     sessions."""
-    flagged = _session_flags(events, gap_sec, user_col)
-    per_session = flagged.groupBy(user_col, "session_seq").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("ts_sec"), F.col(type_col).alias("t")))
-        ).alias("seq")
-    )
+    flagged = _session_flags(with_event_time(events), gap_sec, [user_col])
+    per_session = flagged.groupBy(user_col, "session_seq").agg(_seq(type_col))
     per_user = (
-        per_session.select(F.col(user_col), _fold_stage(steps).alias("stage"))
+        per_session.select(F.col(user_col), _fold_from(steps, 0).alias("stage"))
         .groupBy(user_col)
         .agg(F.max("stage").alias("stage"))
     )
@@ -553,22 +484,11 @@ def session_funnel_salted(
     ev = with_event_time(events).withColumn(
         "__bucket", F.floor(F.col("ts_sec") / bucket_sec)
     )
-    # chunk-local session flags: same rule as _session_flags, window
-    # keyed by (user, bucket) so no task sees a whole hot user
-    w = Window.partitionBy(user_col, "__bucket").orderBy("ts_sec", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts_sec") - F.lag("ts_sec").over(w) > gap_sec, 1
-        ).otherwise(F.when(F.lag("ts_sec").over(w).isNull(), 1).otherwise(0)),
-    ).withColumn(
-        "session_seq",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    # chunk-local session flags: window keyed by (user, bucket) so no
+    # task sees a whole hot user
+    flagged = _session_flags(ev, gap_sec, [user_col, "__bucket"])
     per_sess = flagged.groupBy(user_col, "__bucket", "session_seq").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("ts_sec"), F.col(type_col).alias("t")))
-        ).alias("seq"),
+        _seq(type_col),
         F.min("ts_sec").alias("s_first"),
         F.max("ts_sec").alias("s_last"),
     )
@@ -661,63 +581,21 @@ def session_funnel_salted(
     return _ladder(reached, n)
 
 
-def session_funnel_auto(
-    events: DataFrame,
-    steps: list[str],
-    gap_sec: int = 1800,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    bucket_sec: int = 3600,
-    share_threshold: float = 0.01,
-    min_rows: int = 100_000,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """:func:`session_funnel` with the physical plan chosen by the
-    sampled skew probe: the one-shuffle plain form when no user can
-    dominate a task, the chunk-merged :func:`session_funnel_salted`
-    form when one can.  Identical output either way; same probe
-    contract as :func:`funnel_progression_auto` / :func:`sessionize_auto`."""
-    from timesearch_spark.operators.skew import should_salt
-
-    if should_salt(
-        events, [user_col], share_threshold, min_rows, sample_fraction
-    ):
-        return session_funnel_salted(
-            events, steps, gap_sec, user_col, type_col, bucket_sec
-        )
-    return session_funnel(events, steps, gap_sec, user_col, type_col)
-
-
 def trending_topk(
     events: DataFrame,
     duration: str = "1 hour",
     key: str = "event_type",
     k: int = 3,
-    auto_skew: bool = False,
 ) -> DataFrame:
     """Top-k keys per tumbling window by event count — the trending
     dashboard rollup.  One map-side-combined hash agg on (window, key),
     then a rank window over the (already tiny) per-window key counts;
     ties break by key for determinism.  Output: (window_start, key, n,
-    rn).
-
-    ``auto_skew=True`` routes the rank through
-    ``skew.topk_per_group_auto``: a sampled probe of the per-window key
-    counts decides between the plain window and the salted two-phase
-    form (one hot window — a high-cardinality key space landing in one
-    task — serializes the stage otherwise).  The counts sub-plan is
-    localCheckpointed first so the probe and the ranked query share one
-    materialization instead of computing the agg twice."""
+    rn)."""
     counts = tumbling_counts(events, duration, key).select(
         F.col("window_start"), F.col(key), F.col("n")
     )
-    order = [F.desc("n"), F.asc(key)]
-    if auto_skew:
-        from timesearch_spark.operators.skew import topk_per_group_auto
-
-        counts = counts.localCheckpoint(eager=True)
-        return topk_per_group_auto(counts, ["window_start"], order, k)
-    w = Window.partitionBy("window_start").orderBy(*order)
+    w = Window.partitionBy("window_start").orderBy(F.desc("n"), F.asc(key))
     return (
         counts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)

@@ -2100,7 +2100,7 @@ def sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tree_depth_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`tree_depth` through the distributed pointer-doubling walk
     (trees.comment_forest_big) instead of the per-partition Python
-    walk — the plan comment_forest_auto routes oversized threads to.
+    walk — the plan the page export routes over-bound threads to.
     Same rows (parity fuzz-pinned in tests/test_trees.py)."""
     forest = tr.comment_forest_big(_tree_comments(spark, sf_dir))
     return forest.select("submission", "idstr", "depth")
