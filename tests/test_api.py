@@ -932,49 +932,122 @@ def test_index_offline_links_resolve_to_rendered_threads(spark, tmp_path):
     assert set(links) <= rendered
 
 
-def test_sharded_index_concatenates_to_the_single_file_listing(spark, tmp_path):
-    """Range-partitioned shards, concatenated in filename order, must
-    equal the driver-written single file byte-for-byte (modulo the
-    single file's trailing newline handling)."""
-    from timesearch_spark.operators.exports import write_index_sharded
+#: index.py:9-15 line templates, verbatim (the reference's .format form).
+_REF_LINE_TXT = "{timestamp}: [{title}]({link}) - /u/{author} (+{score})"
+_REF_LINE_HTML = ('<div>{timestamp}: <a href="{link}">[{flairtext}] {title}</a>'
+                  ' - <a href="{authorlink}">{author}</a> (+{score})</div>')
 
+
+def _listing_twin(objs, orderby, html, offline):
+    """Test-local twin of index.py:100-167 over the dumped objects:
+    the default score threshold (0), the ordering's sort, one formatted
+    line each."""
+    import time
+
+    from timesearch_spark.operators.exports import HTML_FOOTER, HTML_HEADER
+
+    keys = {
+        "date": lambda o: o["created_utc"],
+        "title": lambda o: o["title"],
+        "score": lambda o: -o["score"],
+        "author": lambda o: o["author"],
+        "subreddit": lambda o: o["subreddit"],
+        "flair": lambda o: (o.get("link_flair_text") is None,
+                            o["created_utc"]),
+    }
+    lines = []
+    for o in sorted((o for o in objs if o["score"] >= 0),
+                    key=keys[orderby]):
+        link = (f"../offline_reading/{o['name']}.html" if offline
+                else f"https://redd.it/{o['name'][3:]}")
+        fields = dict(
+            timestamp=time.strftime("%Y %b %d", time.gmtime(o["created_utc"])),
+            title=o["title"].replace("\n", " "), link=link,
+            author=o["author"], score=o["score"],
+            flairtext=o.get("link_flair_text") or "",
+            authorlink=("#" if o["author"].lower() == "[deleted]"
+                        else "https://reddit.com/u/" + o["author"]),
+        )
+        lines.append((_REF_LINE_HTML if html else _REF_LINE_TXT).format(**fields))
+    body = "".join(line + "\n" for line in lines)
+    return HTML_HEADER + body + HTML_FOOTER if html else body
+
+
+def _listing_archive(spark, tmp_path):
+    """Twelve submissions, every ordering key distinct (so the order is
+    total), a multi-line title, a deleted author, flaired and unflaired
+    posts and a below-threshold score."""
+    objs = [
+        _sub(i, created_utc=1_500_000_000 + 86_400 * ((i * 5) % 12),
+             title=f"post {chr(97 + (i * 7) % 12)}" + ("\nmore" if i == 3 else ""),
+             author="[deleted]" if i == 4 else f"user{(i * 11) % 12:02d}",
+             subreddit=f"sub{(i * 5) % 12:02d}", score=(i * 7) % 12 - 1,
+             link_flair_text=f"flair {i}" if i % 3 == 0 else None)
+        for i in range(12)
+    ]
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "dump.jsonl"
-    p.write_text("\n".join(json.dumps(_sub(i, score=i)) for i in range(50)))
+    p.write_text("\n".join(json.dumps(o) for o in objs))
     api.ingest_jsonfile(ar, str(p))
+    return ar, objs
 
-    single = api.index(ar, str(tmp_path / "one"), orderby="score")
-    shard_dir = write_index_sharded(
-        ar.submissions.snapshot(), str(tmp_path / "many"), orderby="score"
-    )
-    parts = sorted(
-        f for f in os.listdir(shard_dir) if f.startswith("part-")
-    )
-    assert len(parts) >= 1
-    sharded = "".join(
-        open(os.path.join(shard_dir, f)).read() for f in parts
-    )
-    assert sharded == open(single).read()
 
-    # html contract: driver-written 00_header/zz_footer bracket the
-    # shards so filename-order concatenation of ALL content files is the
-    # byte-equal single html listing (not just the bare line divs)
-    from timesearch_spark.operators.exports import write_index
+def test_index_files_match_listing_twin_for_every_ordering(spark, tmp_path):
+    """Every ``INDEX_ORDERINGS`` entry, txt and html (html with offline
+    links), is byte-identical to the test-local twin of the reference's
+    listing writer."""
+    from timesearch_spark.operators.exports import INDEX_ORDERINGS
 
-    single_html = write_index(
-        ar.submissions.snapshot(), str(tmp_path / "oneh"), "idx",
-        orderby="score", html=True,
-    )
-    shard_html = write_index_sharded(
-        ar.submissions.snapshot(), str(tmp_path / "manyh"),
-        orderby="score", html=True,
-    )
-    content = sorted(
-        f for f in os.listdir(shard_html)
-        if f.startswith(("00_", "part-", "zz_"))
-    )
-    assert content[0] == "00_header.html" and content[-1] == "zz_footer.html"
-    cat = "".join(
-        open(os.path.join(shard_html, f)).read() for f in content
-    )
-    assert cat == open(single_html).read()
+    ar, objs = _listing_archive(spark, tmp_path)
+    out = str(tmp_path / "idx")
+    for orderby in INDEX_ORDERINGS:
+        for html in (False, True):
+            path = api.index(ar, out, orderby=orderby, html=html, offline=html)
+            with open(path, "rb") as f:
+                got = f.read().decode("utf-8")
+            assert got == _listing_twin(objs, orderby, html, offline=html), \
+                f"{orderby} html={html} diverges"
+    assert sorted(os.listdir(out)) == sorted(
+        f"ar{suffix}{ext}" for _, suffix in INDEX_ORDERINGS.values()
+        for ext in (".txt", ".html"))
+
+
+def test_listing_sink_job_budget_and_atomic_replace(spark, tmp_path,
+                                                    jobs_launched,
+                                                    monkeypatch):
+    """The sorted breakdown and a listing each stream from the driver
+    with no more Spark jobs than the collect-era writers launched on
+    this archive (4 and 3 at the parent commit).  A listing whose row
+    stream fails mid-file leaves the previous file byte-intact and no
+    ``.inprogress`` file behind."""
+    from timesearch_spark.operators import exports
+    from timesearch_spark.operators.breakdown import breakdown
+
+    ar, _ = _listing_archive(spark, tmp_path)
+    subs = ar.submissions.snapshot()
+    frame = type(subs)  # the session's concrete DataFrame class
+    bd = breakdown(subs, ar.comments.snapshot(), key="author")
+    out = str(tmp_path / "out")
+    paths = []
+    assert jobs_launched(lambda: paths.append(exports.write_breakdown(
+        bd, out, "t", sort="total_posts"))) <= 4
+    assert jobs_launched(lambda: paths.append(
+        exports.write_index(subs, out, "t"))) <= 3
+    with open(paths[1], "rb") as f:
+        before = f.read()
+    assert before.count(b"\n") == 11
+
+    real = frame.toLocalIterator
+
+    def torn(self, *args, **kwargs):
+        rows = real(self, *args, **kwargs)
+        yield next(rows)
+        raise RuntimeError("row stream lost mid-file")
+
+    monkeypatch.setattr(frame, "toLocalIterator", torn)
+    with pytest.raises(RuntimeError, match="mid-file"):
+        exports.write_index(subs, out, "t")
+    monkeypatch.undo()
+    with open(paths[1], "rb") as f:
+        assert f.read() == before
+    assert not [f for f in os.listdir(out) if f.endswith(".inprogress")]

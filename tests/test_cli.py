@@ -89,46 +89,45 @@ def test_breakdown_writes_json(spark, root):
     sdata = json.loads(open(sorted_out).read())
     counts = [v["comments"] for v in sdata.values()]
     assert counts == sorted(counts, reverse=True)
-    # --sharded: executor-parallel shard dir, concatenates to the same JSON
-    assert cli.main(["--archive-root", root, "breakdown", "-r", "t",
-                     "--sort", "comments", "--sharded"]) == 0
-    shard_dir = os.path.join(bdir, "t_breakdown_comments_shards")
-    content = sorted(f for f in os.listdir(shard_dir)
-                     if f.startswith(("00_", "part-", "zz_")))
-    cat = "".join(open(os.path.join(shard_dir, f)).read() for f in content)
-    assert cat == open(sorted_out).read()
 
 
 def test_breakdown_sharded_without_sort_is_a_usage_error(root, capsys):
-    """ADVICE r10: --sharded depends on --sort (the unsorted contract is
-    a single-line JSON dump that cannot shard); the CLI must surface
-    that as an argparse usage error, not a ValueError traceback from
-    deep inside the export layer."""
-    with pytest.raises(SystemExit) as exc:
-        cli.main(["--archive-root", root, "breakdown", "-r", "t",
-                  "--sharded"])
-    assert exc.value.code == 2  # argparse usage-error exit
-    assert "--sharded requires --sort" in capsys.readouterr().err
+    """The breakdown has one file writer, so there is no ``--sharded``
+    form: argparse rejects the flag, with or without ``--sort``, as a
+    usage error (exit 2) before any archive is opened."""
+    for extra in ([], ["--sort", "comments"]):
+        with pytest.raises(SystemExit) as exc:
+            cli.main(["--archive-root", root, "breakdown", "-r", "t",
+                      "--sharded", *extra])
+        assert exc.value.code == 2  # argparse usage-error exit
+        assert "unrecognized arguments: --sharded" in capsys.readouterr().err
 
 
 def test_breakdown_stream_writes_identical_unsorted_file(spark, root):
-    """breakdown --stream: the executor-streamed unsorted form must
-    write byte-identical single-line json.dumps output to the default
-    collect form (same file name, same bytes, no trailing newline)."""
-    bdir = os.path.join(_archive_dir(root), "breakdown")
+    """The CLI's unsorted breakdown streams through the one file writer
+    and must write the reference's single-line ``json.dumps`` of the
+    counts (breakdown.py:88): the same bytes as a test-local dump of the
+    archive's breakdown rows, no trailing newline."""
+    from timesearch_spark.api import Archive
+    from timesearch_spark.operators.breakdown import breakdown
+
     assert cli.main(["--archive-root", root, "breakdown", "-r", "t"]) == 0
-    ref = open(os.path.join(bdir, "t_breakdown.json"), "rb").read()
-    os.remove(os.path.join(bdir, "t_breakdown.json"))
-    assert cli.main(["--archive-root", root, "breakdown", "-r", "t",
-                     "--stream"]) == 0
-    got = open(os.path.join(bdir, "t_breakdown.json"), "rb").read()
-    assert got == ref and not got.endswith(b"\n")
+    got = open(os.path.join(_archive_dir(root), "breakdown",
+                            "t_breakdown.json"), "rb").read()
+    ar = Archive(spark, _archive_dir(root))
+    bd = breakdown(ar.submissions.snapshot(), ar.comments.snapshot(),
+                   key="author")
+    twin = json.dumps({r["author"]: {"submissions": r["submissions"],
+                                     "comments": r["comments"]}
+                       for r in bd.collect()})
+    assert got.decode("utf-8") == twin and not got.endswith(b"\n")
 
 
 def test_breakdown_stream_conflicts_are_usage_errors(root, capsys):
-    """--stream is the unsorted single-file form: combining it with
-    --sort or --sharded is an argparse usage error."""
-    for extra in (["--sort", "name"], ["--sort", "name", "--sharded"]):
+    """There is no separate ``--stream`` form either — every breakdown
+    file streams through the one writer — so the flag is a usage error
+    alone and with ``--sort``/``--sharded``."""
+    for extra in ([], ["--sort", "name"], ["--sort", "name", "--sharded"]):
         with pytest.raises(SystemExit) as exc:
             cli.main(["--archive-root", root, "breakdown", "-r", "t",
                       "--stream", *extra])
@@ -138,11 +137,11 @@ def test_breakdown_stream_conflicts_are_usage_errors(root, capsys):
 
 def test_relative_archive_root_exports(spark, tmp_path, monkeypatch):
     """The CLI default --archive-root is '.', so archive paths are often
-    relative — and the executor-side writers resolve them through
-    pyarrow, which rejects a relative path.  Page and streamed
-    breakdown exports must land under the archive.  The working
-    directory is pinned to the JVM's, as in a fresh CLI process: Spark
-    resolves the stores' relative paths against that one."""
+    relative — and the export writers resolve them through pyarrow,
+    which rejects a relative path.  Page and breakdown exports must
+    land under the archive.  The working directory is pinned to the
+    JVM's, as in a fresh CLI process: Spark resolves the stores'
+    relative paths against that one."""
     monkeypatch.chdir(spark._jvm.System.getProperty("user.dir"))
     rel = os.path.relpath(tmp_path / "archives")
     assert not os.path.isabs(rel)
@@ -157,8 +156,7 @@ def test_relative_archive_root_exports(spark, tmp_path, monkeypatch):
     assert cli.main(["--archive-root", rel, "offline_reading", "-r", "t"]) == 0
     assert sorted(os.listdir(archive / "offline_reading")) == [
         "t3_s0.html", "t3_s1.html"]
-    assert cli.main(["--archive-root", rel, "breakdown", "-r", "t",
-                     "--stream"]) == 0
+    assert cli.main(["--archive-root", rel, "breakdown", "-r", "t"]) == 0
     data = json.loads((archive / "breakdown" / "t_breakdown.json").read_text())
     assert sum(v["comments"] for v in data.values()) == 3
     assert sum(v["submissions"] for v in data.values()) == 2
@@ -166,7 +164,7 @@ def test_relative_archive_root_exports(spark, tmp_path, monkeypatch):
 
 def test_offline_reading_has_no_stream_flag(tmp_path, capsys):
     """Threads past --max-thread-rows already take the streamed arm, so
-    offline_reading has no flag to force it; breakdown --stream stays."""
+    offline_reading has no flag to force it."""
     with pytest.raises(SystemExit) as exc:
         cli.main(["--archive-root", str(tmp_path), "offline_reading",
                   "-r", "t", "--stream"])
@@ -174,12 +172,18 @@ def test_offline_reading_has_no_stream_flag(tmp_path, capsys):
     assert "--stream" in capsys.readouterr().err
 
 
-def test_index_listing_flags(spark, root):
+def test_index_listing_flags(spark, root, capsys):
     assert cli.main(["--archive-root", root, "index", "-r", "t",
                      "--score", "--html"]) == 0
     # listings land in the index/ sibling dir (reference tsdb.py:189)
     files = os.listdir(os.path.join(_archive_dir(root), "index"))
     assert any("score" in f for f in files)
+    # one listing writer: there is no --sharded form
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["--archive-root", root, "index", "-r", "t", "--score",
+                  "--sharded"])
+    assert exc.value.code == 2
+    assert "unrecognized arguments: --sharded" in capsys.readouterr().err
 
 
 def test_index_no_sorts_selected_is_an_error(root, capsys):
@@ -196,24 +200,6 @@ def test_index_no_sorts_selected_is_an_error(root, capsys):
     # listing: everything gates off -> same error, not a date listing
     with pytest.raises(SystemExit):
         cli.main(["--archive-root", root, "index", "-u", "me", "--author"])
-
-
-def test_index_sharded_concatenates_to_single_file(spark, root):
-    """index --sharded writes the executor-parallel shard form whose
-    content files concatenate to the single-file listing byte-for-byte
-    (same contract the breakdown --sharded flag carries)."""
-    assert cli.main(["--archive-root", root, "index", "-r", "t",
-                     "--score"]) == 0
-    assert cli.main(["--archive-root", root, "index", "-r", "t",
-                     "--score", "--sharded"]) == 0
-    adir = os.path.join(_archive_dir(root), "index")
-    single = [f for f in os.listdir(adir)
-              if f.endswith("_score.txt")][0]
-    shard_dir = os.path.join(adir, "listing_score_shards")
-    content = sorted(f for f in os.listdir(shard_dir)
-                     if f.startswith(("00_", "part-", "zz_")))
-    cat = "".join(open(os.path.join(shard_dir, f)).read() for f in content)
-    assert cat == open(os.path.join(adir, single)).read()
 
 
 def test_index_all_writes_subreddit_listing_for_user_archives_only(

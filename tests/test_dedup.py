@@ -476,6 +476,38 @@ def test_band_buckets_from_sigs_identical_to_banding_path(spark):
     assert via_banding == via_sigs and len(via_sigs) > 0
 
 
+def test_band_buckets_golden_literals(spark):
+    """Independent pin for both banding constructions: the (id, band,
+    bucket) rows of a three-document fixture at 8 hashes / 4 bands,
+    captured once and written out by hand.  Docs 1 and 2 (one-word
+    edits apart) share band 3's bucket; doc 3 shares none."""
+    from timesearch_spark.operators.dedup import (
+        band_buckets_from_sig_table,
+        minhash_band_buckets,
+        minhash_signature_table,
+    )
+
+    d = spark.createDataFrame([
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumped over a lazy dog"),
+        (3, "spark plans shuffle partitions across executors"),
+    ], "doc_id long, text string")
+    golden = {
+        (1, 0, 8001502754017316547), (1, 1, 4181896710947221577),
+        (1, 2, -974497275587914265), (1, 3, -3569909746259264670),
+        (2, 0, -738837040875645341), (2, 1, 5505414379807723317),
+        (2, 2, 3980331017940589087), (2, 3, -3569909746259264670),
+        (3, 0, -7264619063075330846), (3, 1, -5695163604641410347),
+        (3, 2, -5913916736012913976), (3, 3, 6211496540942869499),
+    }
+    via_banding = minhash_band_buckets(d, "text", "doc_id", 8, 4, 3, "xxhash64")
+    via_sigs = band_buckets_from_sig_table(
+        minhash_signature_table(d, "text", "doc_id", 8, 3), "doc_id", 8, 4)
+    for table in (via_banding, via_sigs):
+        rows = [tuple(r) for r in table.collect()]
+        assert len(rows) == len(golden) and set(rows) == golden
+
+
 def test_release_pins_unpersists_shared_passes(spark):
     """minhash_index / incremental_minhash_dedup persist a shared
     signature pass; release_pins must actually unpersist it (loop

@@ -39,15 +39,21 @@ def _run_update(spark, df, sink, tmp_path):
     # operator holding processing-time timers (scan_state's settled
     # timeout) spins empty "cleaning up state" batches forever waiting
     # for the 30-min timer, which used to burn the full 120 s wait AND
-    # leak a live query into the rest of the suite.  A completed batch
-    # that read ZERO rows means the source is drained (data batches are
-    # committed), so stop explicitly at that point.
+    # leak a live query into the rest of the suite.  An empty batch
+    # numbered past the last batch that read rows means the source is
+    # drained and the data batches are committed, so stop explicitly at
+    # that point — an empty tick before any data batch (start-up, or a
+    # progress report lagging the data) does not.
     deadline = time.time() + 120
     while q.isActive and time.time() < deadline:
         if q.awaitTermination(1):
             break
+        data_batches = [p["batchId"] for p in q.recentProgress
+                        if p.get("numInputRows", 0) > 0]
         lp = q.lastProgress
-        if lp is not None and lp.get("numInputRows", 0) == 0:
+        if (lp is not None and data_batches
+                and lp.get("numInputRows", 0) == 0
+                and lp["batchId"] > max(data_batches)):
             break
     if q.isActive:
         q.stop()

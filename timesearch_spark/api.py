@@ -10,7 +10,7 @@ replacing ``timesearch.py <cmd>`` with ``api.<cmd>(...)``:
 | get_comments      | ``get_comments``     | paginated source → MERGE store |
 | ingest_jsonfile   | ``ingest_jsonfile``  | NDJSON reader → MERGE store |
 | livestream        | ``livestream``       | streaming.livestream |
-| breakdown         | ``breakdown``        | operators.breakdown → JSON |
+| breakdown         | ``breakdown``        | operators.breakdown → exports.write_breakdown |
 | index             | ``index``            | operators.exports.write_index |
 | offline_reading   | ``offline_reading``  | trees.render_thread_pages → exports.write_thread_docs (threads past ``max_thread_rows``: trees.thread_page_fragments → exports.write_thread_docs_streamed) |
 | merge_db          | ``merge_db``         | operators.merge.anti_join_merge |
@@ -270,52 +270,27 @@ def livestream(archive: Archive, drop_dir: str, once: bool = False,
 # --- analytics (timesearch.py breakdown / index / offline_reading) -----------
 
 def breakdown(archive: Archive, sort: str | None = None,
-              out_dir: str | None = None, key: str = "author",
-              sharded: bool = False, streamed: bool = False) -> DataFrame | str:
-    """D1 flagship: zero-filled dual counts; writes JSON when out_dir
-    given.  ``key`` follows breakdown.py:29-34 — 'author' for a
-    subreddit archive, 'subreddit' for a user archive (which subreddits
-    the user posts to).  ``sharded=True`` (requires ``sort``) writes
-    the executor-parallel shard form instead of the single driver file
-    — the 100× path when distinct keys run to millions; the shard dir's
-    content files concatenate in filename order into the identical
-    JSON.  ``streamed=True`` (unsorted only) is the 100× path for the
-    single-line ``json.dumps`` contract: identical file bytes at any
-    key count, executor-streamed (write_breakdown_unsorted_streamed)."""
+              out_dir: str | None = None, key: str = "author") -> DataFrame | str:
+    """D1 flagship: zero-filled dual counts; writes the reference's
+    JSON file when out_dir given (exports.write_breakdown: one file
+    streamed from the driver at any key count).  ``key`` follows
+    breakdown.py:29-34 — 'author' for a subreddit archive, 'subreddit'
+    for a user archive (which subreddits the user posts to)."""
     bd = _breakdown(
         archive.submissions.snapshot(), archive.comments.snapshot(),
         key=key, key_name=key,
     )
     if out_dir is None:
         return bd
-    if streamed:
-        if sort is not None or sharded:
-            raise ValueError("streamed=True is the unsorted single-file "
-                             "form; it conflicts with sort/sharded")
-        return exports.write_breakdown_unsorted_streamed(
-            bd, out_dir, archive.basename, key_name=key
-        )
-    if sharded:
-        return exports.write_breakdown_sharded(
-            bd, out_dir, archive.basename, sort=sort, key_name=key
-        )
     return exports.write_breakdown(bd, out_dir, archive.basename, sort=sort,
                                    key_name=key)
 
 
 def index(archive: Archive, out_dir: str, orderby: str = "date",
           score_threshold: int = 0, html: bool = False,
-          offline: bool = False, sharded: bool = False) -> str:
-    """Sorted listing export (index.py:100-167).  ``sharded=True``
-    writes the executor-parallel shard form instead of the single
-    driver-written file (millions of submissions); content files
-    concatenate in filename order into the identical listing."""
-    if sharded:
-        return exports.write_index_sharded(
-            archive.submissions.snapshot(), out_dir,
-            orderby=orderby, score_threshold=score_threshold, html=html,
-            offline=offline,
-        )
+          offline: bool = False) -> str:
+    """Sorted listing export (index.py:100-167): one file per ordering,
+    streamed from the driver (exports.write_index)."""
     return exports.write_index(
         archive.submissions.snapshot(), out_dir, archive.basename,
         orderby=orderby, score_threshold=score_threshold, html=html,

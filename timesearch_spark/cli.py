@@ -195,15 +195,6 @@ def cmd_ingest_jsonfile(args):
 def cmd_breakdown(args):
     from timesearch_spark import api
 
-    if args.sharded and args.sort is None:
-        # surface the dependency as a usage error, not a ValueError
-        # traceback from deep inside the export layer
-        args.parser.error("--sharded requires --sort (the unsorted "
-                          "contract is a single-line JSON dump that "
-                          "cannot shard; --stream writes it at scale)")
-    if args.stream and (args.sort is not None or args.sharded):
-        args.parser.error("--stream is the unsorted single-file form; "
-                          "it conflicts with --sort/--sharded")
     archive = _archive(args)
     # breakdown.py:29-34: subreddit archive → per-author counts; user
     # archive → per-subreddit counts.  Files land in the breakdown/
@@ -211,8 +202,7 @@ def cmd_breakdown(args):
     key = "subreddit" if args.username is not None else "author"
     out = api.breakdown(archive, sort=args.sort,
                         out_dir=os.path.join(archive.path, "breakdown"),
-                        key=key, sharded=args.sharded,
-                        streamed=args.stream)
+                        key=key)
     print(out)
     return 0
 
@@ -253,7 +243,7 @@ def cmd_index(args):
         out = api.index(
             archive, os.path.join(archive.path, "index"), orderby=orderby,
             score_threshold=args.score_threshold, html=args.html,
-            offline=args.offline, sharded=args.sharded,
+            offline=args.offline,
         )
         print(out)
     return 0
@@ -491,17 +481,7 @@ def build_parser() -> argparse.ArgumentParser:
     # sorter lookup (breakdown.py:77), so '--sort NAME' is valid input
     p.add_argument("--sort", dest="sort", default=None, type=str.lower,
                    choices=["name", "submissions", "comments", "total_posts"])
-    p.add_argument("--sharded", action="store_true",
-                   help="executor-parallel shard form (requires --sort): "
-                        "content files concatenate in filename order into "
-                        "the identical JSON; use when distinct keys run to "
-                        "millions")
-    p.add_argument("--stream", action="store_true",
-                   help="executor-streamed UNSORTED form (conflicts with "
-                        "--sort/--sharded): identical single-line "
-                        "json.dumps file at any key count, no driver "
-                        "marshaling")
-    p.set_defaults(func=cmd_breakdown, parser=p)
+    p.set_defaults(func=cmd_breakdown)
 
     p = sub.add_parser("index", aliases=["redmash"],
                        help="sorted listing export")
@@ -515,10 +495,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--sub", dest="do_subreddit", action="store_true")
     p.add_argument("--title", dest="do_title", action="store_true")
     p.add_argument("--offline", dest="offline", action="store_true")
-    p.add_argument("--sharded", action="store_true",
-                   help="executor-parallel shard form: content files "
-                        "concatenate in filename order into the identical "
-                        "listing; use at millions of submissions")
     p.add_argument("--score_threshold", "--score-threshold",
                    dest="score_threshold", type=int, default=0)
     p.set_defaults(func=cmd_index, parser=p)

@@ -86,8 +86,8 @@ def breakdown_sorted(
     # exact-key final tiebreak: the reference's comparator ends at
     # lower(name) and leans on Python's stable sort for case-colliding
     # names; Spark's orderBy is nondeterministic on full ties, so the
-    # tie is refined deterministically — this also keeps the collect
-    # and sharded export forms byte-identical on such names
+    # tie is refined deterministically, so the exported file's bytes
+    # are reproducible on such names
     exact_key = F.col(key_name).cast("string")
     lower_key = F.lower(exact_key)
     if sort == "name":

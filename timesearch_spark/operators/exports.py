@@ -15,13 +15,14 @@ Reference output shapes:
 - **per-thread HTML** (offline_reading.py:369-390): one ``<id>.html``
   per submission.
 
-Spark shape: each export is a DataFrame of formatted strings built with
-JVM expressions (F.format_string/concat), fully distributed until the
-final single-file write — which is driver-side by design because the
-*output contract* is one ordered text file.  At 100 TB you export a
-filtered slice, not the corpus; the plan is sort → project-to-line →
-either ``collect`` (small) or partitioned ``write.text`` (large,
-one shard per range)."""
+Spark shape: listing lines and page fragments are formatted by JVM
+expressions (F.format_string/concat), fully distributed until the final
+write; breakdown rows are formatted on the driver with the reference's
+own templates as they stream by.  Every file reaches storage through
+one atomic put, :func:`_put`: listings and breakdowns stream their
+ordered rows to it from the driver (``toLocalIterator``: one partition
+in driver memory at a time, since the *output contract* is one ordered
+file), and the per-thread pages are put from executor tasks."""
 
 from __future__ import annotations
 
@@ -97,6 +98,26 @@ def index_lines(
     return df.select(line.alias("line"))
 
 
+def _write_listing(rows: DataFrame, out_dir: str, name: str, line,
+                   head: str = "", sep: str = "", tail: str = "") -> str:
+    """The one driver-side listing sink: ``head``, then ``line(row)`` for
+    every row of ``rows`` in order with ``sep`` between them, then
+    ``tail`` — streamed through ``toLocalIterator`` (driver memory is
+    one partition, at any row count) into the atomic :func:`_put`, so a
+    failed iteration leaves the previous file intact.  Returns
+    ``out_dir/name``."""
+    uri = f"{_out_root(out_dir).rstrip('/')}/{name}"
+
+    def chunks():
+        yield head
+        for i, row in enumerate(rows.toLocalIterator()):
+            yield sep + line(row) if i else line(row)
+        yield tail
+
+    _put(*_open_fs(uri), chunks())
+    return os.path.join(out_dir, name)
+
+
 def write_index(
     submissions: DataFrame,
     out_dir: str,
@@ -107,292 +128,46 @@ def write_index(
     offline: bool = False,
 ) -> str:
     """Write one ordered listing file; returns its path."""
-    from timesearch_spark.fs import get_fs
-
     _, suffix = INDEX_ORDERINGS[orderby]
-    ext = ".html" if html else ".txt"
-    fs = get_fs(submissions.sparkSession, out_dir)
-    fs.mkdirs(out_dir)
-    path = os.path.join(out_dir, basename + suffix + ext)
     lines = index_lines(submissions, orderby, score_threshold, html, offline)
-    with fs.open_write(path) as f:
-        if html:
-            f.write(HTML_HEADER)
-        for row in lines.toLocalIterator():  # ordered, constant driver memory
-            f.write(row["line"] + "\n")
-        if html:
-            f.write(HTML_FOOTER)
-    return path
-
-
-def write_index_sharded(
-    submissions: DataFrame,
-    out_dir: str,
-    orderby: str = "date",
-    score_threshold: int = 0,
-    html: bool = False,
-    offline: bool = False,
-) -> str:
-    """The 100× form of ``write_index``: the ordered listing written as
-    RANGE-PARTITIONED text shards straight from executors — a global
-    sort range-partitions the lines, so the directory's content files
-    concatenate in filename order into exactly the single-file
-    ``write_index`` output (for html, driver-written ``00_header.html``
-    / ``zz_footer.html`` bracket the ``part-*`` shards — they sort
-    first/last, and Spark's zero-byte ``_SUCCESS`` marker is
-    concatenation-neutral).  No driver iteration at any size;
-    ``write_index`` (one file, driver-written, constant memory) remains
-    the right tool when the output contract is literally one file.
-    Returns the shard directory."""
-    from timesearch_spark.fs import get_fs
-
-    lines = index_lines(submissions, orderby, score_threshold, html, offline)
-    path = os.path.join(out_dir, f"listing_{orderby}_shards")
-    lines.write.mode("overwrite").text(path)
-    if html:
-        fs = get_fs(submissions.sparkSession, out_dir)
-        with fs.open_write(os.path.join(path, "00_header.html")) as f:
-            f.write(HTML_HEADER)
-        with fs.open_write(os.path.join(path, "zz_footer.html")) as f:
-            f.write(HTML_FOOTER)
-    return path
-
-
-def breakdown_json(bd: DataFrame, sort: str | None = None,
-                   key_name: str = "author",
-                   max_unsorted_keys: int = 1_000_000) -> str:
-    """Serialize a breakdown DataFrame the reference's way
-    (breakdown.py:83-88): plain dict dump unsorted, or the pretty
-    one-line-per-key format when sorted.
-
-    The unsorted contract is a SINGLE-LINE ``json.dumps`` built on the
-    driver — a format no line-oriented shard concat can reproduce, so it
-    cannot scale past driver memory.  Rather than silently drain every
-    key through ``collect()`` at millions of authors, the fetch is
-    capped at ``max_unsorted_keys`` + 1 rows and fails loudly past the
-    bound, pointing at the sorted sharded form (which is executor-
-    parallel and byte-stable at any key count)."""
-    if sort is None:
-        rows = bd.limit(max_unsorted_keys + 1).collect()
-        if len(rows) > max_unsorted_keys:
-            raise ValueError(
-                f"unsorted breakdown exceeds {max_unsorted_keys} distinct "
-                "keys; this STRING-building form is driver-bound — use "
-                "write_breakdown_unsorted_streamed (same single-line "
-                "json.dumps bytes, executor-streamed, any key count), a "
-                "sorted form (write_breakdown_sharded), or raise "
-                "max_unsorted_keys explicitly"
-            )
-        return json.dumps(
-            {
-                r[key_name]: {"submissions": r["submissions"], "comments": r["comments"]}
-                for r in rows
-            }
-        )
-    from timesearch_spark.operators.breakdown import breakdown_sorted
-
-    rows = breakdown_sorted(bd, sort=sort, key_name=key_name).collect()
-    body = ",\n".join(
-        f'    "{r[key_name]}": {{"submissions": {r["submissions"]}, '
-        f'"comments": {r["comments"]}}}'
-        for r in rows
+    return _write_listing(
+        lines, out_dir, basename + suffix + (".html" if html else ".txt"),
+        lambda r: r["line"] + "\n",
+        head=HTML_HEADER if html else "", tail=HTML_FOOTER if html else "",
     )
-    return "{\n" + body + "\n}\n"
+
+
+#: One sorted-breakdown row, verbatim from breakdown.py:83-88.
+BREAKDOWN_LINE = '    "{name}": {{"submissions": {submissions}, "comments": {comments}}}'
 
 
 def write_breakdown(bd: DataFrame, out_dir: str, basename: str,
-                    sort: str | None = None, key_name: str = "author",
-                    max_unsorted_keys: int = 1_000_000) -> str:
-    from timesearch_spark.fs import get_fs
-
-    fs = get_fs(bd.sparkSession, out_dir)
-    fs.mkdirs(out_dir)
-    suffix = f"_breakdown_{sort}.json" if sort else "_breakdown.json"
-    path = os.path.join(out_dir, basename + suffix)
-    fs.write_text_atomic(path, breakdown_json(
-        bd, sort=sort, key_name=key_name,
-        max_unsorted_keys=max_unsorted_keys))
-    return path
-
-
-def write_breakdown_unsorted_streamed(bd: DataFrame, out_dir: str,
-                                      basename: str,
-                                      key_name: str = "author") -> str:
-    """The 100× form of the UNSORTED breakdown: byte-identical to
-    ``breakdown_json(sort=None)`` — the reference's single-line
-    ``json.dumps`` (breakdown.py:88), no trailing newline — at any key
-    count, with no driver key marshaling.
-
-    Two stages.  (1) executor-parallel: each Arrow batch of per-key
-    counts serializes to ONE pre-joined fragment string with
-    ``json.dumps`` itself (escaping/None-key/", " separator parity for
-    free), tagged (partition, batch) — so fragment size is bounded by
-    the Arrow batch size, not by key count.  (2) the fragments — a few
-    hundred bytes-per-key total, but only #batches ROWS — shuffle to a
-    single task that streams them in (pid, seq) order through the
-    atomic put (:func:`_put`).  Peak memory anywhere = one batch; a
-    single sequential writer is optimal here because the contract is
-    literally one file of one line.  Key ORDER is partition/row order,
-    the same order ``collect()`` feeds the string form — the reference
-    itself has no order contract (dict insertion = its query order)."""
-    import json as _json
-
-    path = os.path.join(out_dir, basename + "_breakdown.json")
-    uri = f"{_out_root(out_dir).rstrip('/')}/{basename}_breakdown.json"
-
-    def serialize(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for seq, pdf in enumerate(batches):
-            if not len(pdf):
-                continue
-
-            def norm(v):  # Arrow nullables arrive as NaN; json needs None
-                return None if v is None or v != v else int(v)
-
-            frags = [
-                _json.dumps({k: {"submissions": norm(s), "comments": norm(c)}})[1:-1]
-                for k, s, c in zip(pdf[key_name], pdf["submissions"],
-                                   pdf["comments"])
-            ]
-            yield pd.DataFrame({"pid": [pid], "seq": [seq],
-                                "frag": [", ".join(frags)]})
-
-    frags = bd.select(key_name, "submissions", "comments").mapInPandas(
-        serialize, "pid long, seq long, frag string")
-
-    def write_stream(batches):
-        import pandas as pd
-
-        n = 0
-
-        def body():
-            nonlocal n
-            yield "{"
-            for pdf in batches:
-                for frag in pdf["frag"]:
-                    if n:
-                        yield ", "
-                    yield frag
-                    n += 1
-            yield "}"
-
-        _put(*_open_fs(uri), body())
-        yield pd.DataFrame({"fragments": [n]})
-
-    # repartition(1) + sortWithinPartitions pins the exact write order
-    # without depending on how a global orderBy composes with the
-    # single-partition collapse
-    wrote = (frags.repartition(1)
-                  .sortWithinPartitions("pid", "seq")
-                  .mapInPandas(write_stream, "fragments long")
-                  .collect())
-    if not wrote:
-        # zero keys: Spark never invokes the pandas function for an
-        # empty partition, so the writer task did not run — the dump is
-        # the constant '{}' (json.dumps({})), put from the driver
-        _put(*_open_fs(uri), ["{}"])
-    return path
-
-
-def breakdown_lines(bd: DataFrame, sort: str, key_name: str = "author") -> DataFrame:
-    """The sorted breakdown's pretty format (breakdown.py:83-88) as a
-    one-column ('line') DataFrame in final order, comma-terminated on
-    every line but the last — so the rows, wrapped in ``{``/``}``
-    brackets, concatenate to exactly ``breakdown_json(sort=...)``.
-
-    The "which line is last" problem (a JSON body's separator is a
-    trailing comma) is solved without any global window: the breakdown
-    is one row per DISTINCT key, so the final row is identified by key
-    value alone, found with one tiny aggregate over the per-key counts
-    (already |distinct keys| rows, not corpus rows).  The exact key is
-    folded in as the ultimate sort tiebreak so the aggregate's answer
-    and the write's order can never disagree on case-colliding names.
-
-    The input is consumed TWICE (the last-key probe here, the write
-    later), so ``bd`` is persist()ed — without the pin the upstream
-    two-fact-table aggregation would execute once per consumer.  The
-    handle rides on the returned DataFrame as ``_pinned``
-    (:func:`~timesearch_spark.operators.dedup.release_pins` contract);
-    ``write_breakdown_sharded`` releases it after the write."""
+                    sort: str | None = None, key_name: str = "author") -> str:
+    """Write the reference's breakdown file (breakdown.py:83-101);
+    returns its path.  Sorted: the pretty one-``"name": {...}``-line-
+    per-key body in ``breakdown_sorted`` order (a NULL key prints as
+    ``None``, an empty breakdown as ``{\\n\\n}\\n``).  Unsorted: the
+    single-line ``json.dumps`` of the whole dict, no trailing newline,
+    keys in row order — each row dumps as a one-key dict with its braces
+    cut, so the ``", "``-joined rows are exactly the dict's dump."""
+    if sort is None:
+        return _write_listing(
+            bd, out_dir, basename + "_breakdown.json",
+            lambda r: json.dumps({r[key_name]: {
+                "submissions": r["submissions"],
+                "comments": r["comments"]}})[1:-1],
+            head="{", sep=", ", tail="}",
+        )
     from timesearch_spark.operators.breakdown import breakdown_sorted
 
-    if sort != "name":  # validate BEFORE pinning: a bad sort must not leak a cache entry
-        breakdown_sorted(bd.limit(0), sort=sort, key_name=key_name)
-    bd = bd.persist()
-
-    key = F.col(key_name).cast("string")
-    lower_key = F.lower(key)
-    if sort == "name":
-        sort_struct = F.struct(lower_key.alias("k1"), key.alias("k2"))
-        order = [lower_key.asc(), key.asc()]
-    else:
-        count_col = {"submissions": "submissions", "comments": "comments",
-                     "total_posts": "total_posts"}[sort]
-        sort_struct = F.struct(
-            (-F.col(count_col)).alias("k0"), lower_key.alias("k1"), key.alias("k2")
-        )
-        order = [F.col(count_col).desc(), lower_key.asc(), key.asc()]
-    last = bd.agg(F.max(sort_struct).alias("s")).first()["s"]
-    last_key = last["k2"] if last is not None else None
-
-    # str(None) parity with the collect form's f-string interpolation
-    name_str = F.coalesce(key, F.lit("None"))
-    line = F.concat(
-        F.format_string(
-            '    "%s": {"submissions": %d, "comments": %d}',
-            name_str, F.col("submissions"), F.col("comments"),
-        ),
-        F.when(key.eqNullSafe(F.lit(last_key)), F.lit("")).otherwise(F.lit(",")),
+    rows = breakdown_sorted(bd, sort=sort, key_name=key_name)
+    return _write_listing(
+        rows, out_dir, f"{basename}_breakdown_{sort}.json",
+        lambda r: BREAKDOWN_LINE.format(name=r[key_name],
+                                        submissions=r["submissions"],
+                                        comments=r["comments"]),
+        head="{\n", sep=",\n", tail="\n}\n",
     )
-    out = bd.orderBy(*order).select(line.alias("line"))
-    out._pinned = [bd]
-    # zero-key breakdowns write no part lines, but the collect form's
-    # "{\n" + "" + "\n}\n" still carries a blank line between the
-    # brackets — the sharded writer needs to know to reproduce it
-    out._empty = last is None
-    return out
-
-
-def write_breakdown_sharded(bd: DataFrame, out_dir: str, basename: str,
-                            sort: str, key_name: str = "author") -> str:
-    """The 100× form of ``write_breakdown``: the sorted pretty format
-    written as RANGE-PARTITIONED text shards straight from executors
-    (``write_index_sharded``'s trick applied to the last collect()-bound
-    sink).  The global sort range-partitions the lines; driver-written
-    ``00_open.json`` (``{``) and ``zz_close.json`` (``}``) bracket the
-    ``part-*`` shards, so the directory's content files concatenate in
-    filename order into byte-exactly the single-file output.  No group
-    key ever reaches the driver (r9 judge finding: millions of authors =
-    hundreds of MB of driver marshaling in the collect form); the only
-    driver work is one single-row aggregate (the last key) and two
-    bracket files.  ``write_breakdown`` remains the right tool when the
-    contract is literally one file at archive scale.  Returns the shard
-    directory."""
-    from timesearch_spark.fs import get_fs
-
-    if sort is None:
-        raise ValueError("sharded breakdown requires a sort (the unsorted "
-                         "contract is a one-line json.dumps — use write_breakdown)")
-    from timesearch_spark.operators.dedup import release_pins
-
-    path = os.path.join(out_dir, f"{basename}_breakdown_{sort}_shards")
-    lines = breakdown_lines(bd, sort=sort, key_name=key_name)
-    try:
-        lines.write.mode("overwrite").text(path)
-    finally:  # a failed write must not leak the pinned breakdown
-        release_pins(lines)
-    fs = get_fs(bd.sparkSession, out_dir)
-    with fs.open_write(os.path.join(path, "00_open.json")) as f:
-        # empty breakdown: the collect form emits a blank line between
-        # the brackets ("{\n" + "" body + "\n}\n"); fold it into the
-        # open bracket so the concatenation stays byte-identical
-        f.write("{\n\n" if getattr(lines, "_empty", False) else "{\n")
-    with fs.open_write(os.path.join(path, "zz_close.json")) as f:
-        f.write("}\n")
-    return path
 
 
 def _open_fs(uri: str):
@@ -435,11 +210,19 @@ def _put(fss, path: str, chunks) -> None:
     (strings) into ``<path>.inprogress``, delete the destination
     (missing is fine — ``move()`` won't overwrite on every store), then
     move — so a retried task never leaves a torn file, and a re-run
-    overwrites."""
+    overwrites.  When ``chunks`` raises, the partial ``.inprogress``
+    file is removed and the destination is left as it was."""
     tmp = path + ".inprogress"
-    with fss.open_output_stream(tmp) as f:
-        for chunk in chunks:
-            f.write(chunk.encode("utf-8"))
+    try:
+        with fss.open_output_stream(tmp) as f:
+            for chunk in chunks:
+                f.write(chunk.encode("utf-8"))
+    except BaseException:
+        try:
+            fss.delete_file(tmp)
+        except OSError:
+            pass  # the original failure is the one to report
+        raise
     try:
         fss.delete_file(path)
     except Exception:

@@ -295,23 +295,23 @@ def _fold_from(steps: list[str], k: int):
 
 
 def _ladder(reached: DataFrame, n_steps: int) -> DataFrame:
-    """(stage) rows → full-spine cumulative (stage, n_users) ladder."""
-    counts = reached.groupBy("stage").agg(F.count("*").alias("n_at_stage"))
+    """(stage >= 1) rows → full-spine cumulative (stage, n_users) ladder.
+
+    A user at stage k has reached every stage 1..k, so ``n_users(s)`` is
+    one count over each user's exploded stages, with a zero row per
+    spine stage so stages nobody reached still appear.  One aggregate,
+    no window."""
     spine = reached.sparkSession.range(1, n_steps + 1).select(
-        F.col("id").cast("int").alias("stage")
+        F.col("id").cast("int").alias("stage"), F.lit(0).alias("n")
     )
-    counts = spine.join(counts, "stage", "left").na.fill({"n_at_stage": 0})
-    # cumulative over <= n_steps rows: bounded by the step count (the
-    # constant partition key only quiets WindowExec's unpartitioned-
-    # window warning — the data is a handful of rows either way)
-    w = (
-        Window.partitionBy(F.lit(0))
-        .orderBy(F.desc("stage"))
-        .rowsBetween(Window.unboundedPreceding, 0)
+    hits = reached.select(
+        F.explode(F.sequence(F.lit(1), F.col("stage"))).alias("stage"),
+        F.lit(1).alias("n"),
     )
     return (
-        counts.withColumn("n_users", F.sum("n_at_stage").over(w))
-        .select("stage", "n_users")
+        spine.unionByName(hits)
+        .groupBy("stage")
+        .agg(F.sum("n").alias("n_users"))
         .orderBy("stage")
     )
 

@@ -31,20 +31,16 @@ from bench import HEADLINE  # noqa: E402
 from timesearch_spark.session import get_spark  # noqa: E402
 
 
-def _sink_breakdown_streamed(spark, sf_dir, out_dir):
-    """The r12 streamed single-file breakdown sink end-to-end: agg →
-    executor-side json.dumps fragments → one streaming single-task
-    write.  Contractually ends in ONE sequential writer task (the output
-    is one file of one line), so the scaling question this row answers
-    is whether the fragment shuffle, not the writer, dominates at 10×."""
-    from timesearch_spark.operators.exports import (
-        write_breakdown_unsorted_streamed,
-    )
+def _sink_breakdown(spark, sf_dir, out_dir):
+    """The breakdown file sink end-to-end: agg → rows streamed to the
+    driver in partition order → one atomic single-file put.  The output
+    is one file of one line, so the scaling question this row answers
+    is whether the aggregate, not the writer, dominates at 10×."""
+    from timesearch_spark.operators.exports import write_breakdown
     from timesearch_spark.queries import breakdown_counts
 
     bd = breakdown_counts(spark, sf_dir)
-    write_breakdown_unsorted_streamed(bd, out_dir, "probe",
-                                      key_name="custkey")
+    write_breakdown(bd, out_dir, "probe", key_name="custkey")
 
 
 def _sink_thread_docs_streamed(spark, sf_dir, out_dir):
@@ -88,10 +84,10 @@ def _sink_thread_docs_routed(spark, sf_dir, out_dir):
 
 #: sinks probed end-to-end (files written to a temp dir, timing includes
 #: the write, cleanup excluded) — the bench headliners reduce these
-#: pipelines to narrow aggregates, so without these rows neither
-#: streamed sink had scaling evidence (r12 verdict item 7)
+#: pipelines to narrow aggregates, so without these rows no file sink
+#: would have scaling evidence
 SINK_PROBES = {
-    "sink_breakdown_streamed": _sink_breakdown_streamed,
+    "sink_breakdown": _sink_breakdown,
     "sink_thread_docs_streamed": _sink_thread_docs_streamed,
     "sink_thread_docs_routed": _sink_thread_docs_routed,
 }
