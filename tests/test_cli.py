@@ -186,6 +186,34 @@ def test_index_listing_flags(spark, root, capsys):
     assert "unrecognized arguments: --sharded" in capsys.readouterr().err
 
 
+def test_index_sharded_concatenates_to_single_file(spark, root):
+    """``index`` streams the sort's ordered partitions, in partition
+    order, into one listing file: with coalescing off the rows span
+    several shards, and the file is byte-identical to the one written
+    from a single partition.  No shard directory is left beside it."""
+    adir = os.path.join(_archive_dir(root), "index")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = (spark.conf.get(key), spark.conf.get("spark.sql.shuffle.partitions"))
+    written = {}
+    try:
+        spark.conf.set(key, "false")
+        for parts in ("8", "1"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            assert cli.main(["--archive-root", root, "index", "-r", "t",
+                             "--score"]) == 0
+            listings = [f for f in os.listdir(adir) if "score" in f]
+            assert len(listings) == 1 and listings[0].endswith("_score.txt")
+            with open(os.path.join(adir, listings[0])) as f:
+                written[parts] = f.read()
+    finally:
+        spark.conf.set(key, prev[0])
+        spark.conf.set("spark.sql.shuffle.partitions", prev[1])
+    assert written["8"] == written["1"]
+    lines = written["8"].splitlines()
+    assert [int(ln.rsplit("(+", 1)[1].rstrip(")")) for ln in lines] \
+        == [3, 2, 1, 0]
+
+
 def test_index_no_sorts_selected_is_an_error(root, capsys):
     """Reference parity (index.py:94-95): no sort flags — or only sorts
     gated off for this archive kind — raises 'No sorts selected!'; the

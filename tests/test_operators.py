@@ -138,60 +138,116 @@ def _read_export(path):
         return f.read().decode("utf-8")
 
 
+_SORTS = ("name", "submissions", "comments", "total_posts")
+
+
+def _assert_reference_parity(spark, bd, out, case, sorts=_SORTS,
+                             coalesce=True):
+    """Write ``bd`` once per sort and assert each file is byte-identical
+    to the reference formatter over ``bd.collect()`` (the collect form).
+    ``coalesce=False`` turns post-shuffle coalescing off, so the sorted
+    rows stay in the sort's ordered range partitions and the file is
+    their concatenation, streamed one partition at a time."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    results = {r["author"]: {"submissions": r["submissions"],
+                             "comments": r["comments"]}
+               for r in bd.collect()}
+    prev = spark.conf.get(key)
+    if not coalesce:
+        spark.conf.set(key, "false")
+    try:
+        files = {}
+        for sort in sorts:
+            path = write_breakdown(bd, out, case, sort=sort,
+                                   key_name="author")
+            assert path == f"{out}/{case}_breakdown_{sort}.json"
+            ours = _read_export(path)
+            assert ours == _reference_breakdown_dump(results, sort), \
+                f"{case} sort={sort} diverges"
+            files[sort] = ours
+        return files
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_breakdown_pretty_byte_parity_with_reference_formatter(spark, tmp_path):
     """Byte parity of every sorted ``write_breakdown`` file with the
-    reference's own pretty format, for all four sorts, over: the
-    case-collision/tie fixture; a NULL key (printed ``None``); the empty
-    archive (``{\\n\\n}\\n``, a blank line between the braces); and a
-    seeded 200-name unicode / case-collision fixture from 4-partition
-    inputs, written to a ``file://`` root with post-shuffle coalescing
-    off, so the streamed rows cross 8 ordered partitions."""
+    reference's own pretty format (breakdown.py:55-88) for all four
+    sorts over the case-collision/tie fixture, including the
+    -count/lower(name) tiebreak order."""
+    _assert_reference_parity(spark, _breakdown_fixture(spark),
+                             str(tmp_path), "t")
+
+
+def test_sharded_breakdown_concatenates_to_collect_form(spark, tmp_path):
+    """The sorted rows are range-partitioned by the sort; the driver
+    writer streams those shards in partition order into one file.  With
+    coalescing off the fixture spans several shards, and their
+    concatenation must equal the collect form byte for byte — the
+    no-trailing-comma last line and case-colliding tiebreaks included —
+    for every sort."""
+    from timesearch_spark.operators.breakdown import breakdown_sorted
+
+    bd = _breakdown_fixture(spark)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        shards = breakdown_sorted(bd, "name", "author").rdd.glom().collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert sum(1 for s in shards if s) > 1
+    _assert_reference_parity(spark, bd, str(tmp_path), "t", coalesce=False)
+
+
+def test_sharded_breakdown_null_key_parity(spark, tmp_path):
+    """A NULL grouping key (deleted authors) is rendered as "None" (the
+    collect form's str(None) spelling), ordered nulls-first like
+    breakdown_sorted, and the last-line comma marking neither mistakes
+    it for nor misses the final row."""
+    bd = breakdown(
+        _subs(spark, [("t3_a", None, None, 1, 1), ("t3_b", None, None, 1, 2),
+                      ("t3_c", "amy", None, 1, 3)]),
+        _comments(spark, [("t1_a", "zed", "x", 1, 1)]),
+        key="author", key_name="author")
+    files = _assert_reference_parity(spark, bd, str(tmp_path), "n",
+                                     coalesce=False)
+    assert files["name"].startswith('{\n    "None": {"submissions": 2')
+    assert '"None"' in files["submissions"]
+
+
+def test_sharded_breakdown_empty_archive_parity(spark, tmp_path):
+    """A zero-key breakdown's file is ``{\\n`` + empty body + ``\\n}\\n``
+    (a blank line between the braces), even though no row carries the
+    blank line."""
+    bd = breakdown(
+        _subs(spark, [("t3_a", "amy", None, 1, 1)]).limit(0),
+        _comments(spark, [("t1_a", "amy", "x", 1, 1)]).limit(0),
+        key="author", key_name="author")
+    files = _assert_reference_parity(spark, bd, str(tmp_path), "e",
+                                     coalesce=False)
+    assert set(files.values()) == {"{\n\n}\n"}
+
+
+def test_sharded_breakdown_on_file_scheme_and_randomized_names(spark, tmp_path):
+    """The writer works on a scheme:// root and stays byte-identical to
+    the collect form on a seeded 200-name fixture (unicode, case
+    collisions, count ties) from 4-partition inputs, with the streamed
+    rows crossing the sort's 8 uncoalesced partitions."""
     import random
 
     rng = random.Random(10)
     pool = ["bob", "Bob", "BOB", "ümläut", "Ümläut", "名前", "mixedCase",
             "MIXEDcase", "space name", "tab\tname", "z" * 40]
     names = [rng.choice(pool) + str(rng.randrange(60)) for _ in range(200)]
-    cases = {
-        "ties": (_breakdown_fixture(spark), str(tmp_path / "ties")),
-        "null": (breakdown(
-            _subs(spark, [("t3_a", None, None, 1, 1), ("t3_b", None, None, 1, 2),
-                          ("t3_c", "amy", None, 1, 3)]),
-            _comments(spark, [("t1_a", "zed", "x", 1, 1)]),
-            key="author", key_name="author"), str(tmp_path / "null")),
-        "empty": (breakdown(
-            _subs(spark, [("t3_a", "amy", None, 1, 1)]).limit(0),
-            _comments(spark, [("t1_a", "amy", "x", 1, 1)]).limit(0),
-            key="author", key_name="author"), str(tmp_path / "empty")),
-        "fuzz": (breakdown(
-            _subs(spark, [(f"t3_{i}", n, None, 1, i)
-                          for i, n in enumerate(names)]).repartition(4),
-            _comments(spark, [(f"t1_{i}", n, "x", 1, i) for i, n in
-                              enumerate(rng.sample(names, 120))]).repartition(4),
-            key="author", key_name="author"), f"file://{tmp_path}/fuzz"),
-    }
-    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    for case, (bd, out) in cases.items():
-        results = {r["author"]: {"submissions": r["submissions"],
-                                 "comments": r["comments"]}
-                   for r in bd.collect()}
-        prev = spark.conf.get(coalesce)
-        if case == "fuzz":
-            spark.conf.set(coalesce, "false")
-        try:
-            for sort in ("name", "submissions", "comments", "total_posts"):
-                path = write_breakdown(bd, out, case, sort=sort,
-                                       key_name="author")
-                assert path == f"{out}/{case}_breakdown_{sort}.json"
-                ours = _read_export(path)
-                theirs = _reference_breakdown_dump(results, sort)
-                assert ours == theirs, f"{case} sort={sort} diverges"
-        finally:
-            spark.conf.set(coalesce, prev)
-    assert _read_export(str(tmp_path / "empty" / "empty_breakdown_name.json")) \
-        == "{\n\n}\n"
-    assert '"None": {"submissions": 2' in _read_export(
-        str(tmp_path / "null" / "null_breakdown_name.json"))
+    bd = breakdown(
+        _subs(spark, [(f"t3_{i}", n, None, 1, i)
+                      for i, n in enumerate(names)]).repartition(4),
+        _comments(spark, [(f"t1_{i}", n, "x", 1, i) for i, n in
+                          enumerate(rng.sample(names, 120))]).repartition(4),
+        key="author", key_name="author")
+    _assert_reference_parity(spark, bd, f"file://{tmp_path}/exports", "r",
+                             coalesce=False)
 
 
 # --- C1: anti-join merge (merge_db.py:7-12) ---------------------------------
