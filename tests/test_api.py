@@ -750,7 +750,9 @@ def test_offline_reading_incremental_job_budget(spark, tmp_path,
     """An incremental refresh after a small delta (nothing removed, no
     thread over the bound) is one classification pass, the render and
     the manifest write; a refresh with nothing to do is the pass alone.
-    The parent commit launched 28 jobs for such a refresh."""
+    Before the one-pass export such a refresh launched 28 jobs, and 9
+    while the submission head was still joined onto the rendered
+    pages."""
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "d0.jsonl"
     p.write_text("\n".join(json.dumps(o) for o in
@@ -767,7 +769,7 @@ def test_offline_reading_incremental_job_budget(spark, tmp_path,
     api.ingest_jsonfile(ar, str(p))
     got = []
     assert jobs_launched(lambda: got.append(
-        api.offline_reading(ar, out, incremental=True))) <= 14
+        api.offline_reading(ar, out, incremental=True))) <= 7
     assert got == [2]
     assert jobs_launched(lambda: got.append(
         api.offline_reading(ar, out, incremental=True))) <= 6
@@ -782,31 +784,39 @@ def test_offline_reading_auto_derives_durable_checkpoint(spark, tmp_path,
     (localCheckpoint is cluster-unsafe: executor loss mid-loop fails the
     query); a plain local archive keeps the cheap localCheckpoint.
     Output identity between the two checkpoint modes is pinned
-    separately (test_trees/test_dedup durable-checkpoint tests)."""
+    separately (test_trees/test_dedup durable-checkpoint tests).  The
+    walk runs in the streamed arm, so ``max_thread_rows=0`` routes every
+    thread there and the directory is captured where it is used."""
+    from timesearch_spark.operators import trees
+
     captured = {}
-    real = api.render_thread_pages
+    real = trees.thread_page_fragments
 
     def capture(submissions, comments, checkpoint_dir=None, **kw):
         captured["ck"] = checkpoint_dir
         return real(submissions, comments, checkpoint_dir=checkpoint_dir, **kw)
 
-    monkeypatch.setattr(api, "render_thread_pages", capture)
+    monkeypatch.setattr(trees, "thread_page_fragments", capture)
     p = tmp_path / "dump.jsonl"
     objs = [_sub(0)] + [_com(i) for i in range(2)]
     p.write_text("\n".join(json.dumps(o) for o in objs))
 
     schemed = api.Archive(spark, f"file://{tmp_path}/ar_s")
     api.ingest_jsonfile(schemed, str(p))
-    assert api.offline_reading(schemed, f"file://{tmp_path}/out_s") == 1
+    assert api.offline_reading(schemed, f"file://{tmp_path}/out_s",
+                               max_thread_rows=0) == 1
     assert captured["ck"] == f"file://{tmp_path}/ar_s/_checkpoints"
 
     local = api.Archive(spark, str(tmp_path / "ar_l"))
     api.ingest_jsonfile(local, str(p))
-    assert api.offline_reading(local, str(tmp_path / "out_l")) == 1
-    assert captured["ck"] is None
+    captured.clear()
+    assert api.offline_reading(local, str(tmp_path / "out_l"),
+                               max_thread_rows=0) == 1
+    assert captured == {"ck": None}
     # an explicit dir always wins over derivation
     api.offline_reading(schemed, f"file://{tmp_path}/out_s2",
-                        checkpoint_dir=str(tmp_path / "ck"))
+                        checkpoint_dir=str(tmp_path / "ck"),
+                        max_thread_rows=0)
     assert captured["ck"] == str(tmp_path / "ck")
 
 

@@ -403,6 +403,130 @@ def test_thread_pages_byte_parity_with_reference_semantics(spark, tmp_path):
             b"tail <b>no newline"
 
 
+#: Submission blocks captured once from the Column-built head renderer
+#: (header title, block) for test_thread_page_heads_golden's fixture.
+_GOLDEN_HEADS = {
+    # title, score, author, created and subreddit all null
+    't3_g1': ('None', (
+        '<div class="submission" id="t3_g1">\n'
+        '    <p class="userinfo">\n'
+        '        <a href="https://old.reddit.com/u/None">None</a>\n'
+        '        |\n'
+        '        <span class="score">None points</span>\n'
+        '        |\n'
+        '        <a class="timestamp"'
+        ' href="https://old.reddit.com/r/None/comments/g1">None</a>\n'
+        '    </p>\n'
+        '    <strong>None</strong>\n'
+        '    <p><p>plain self</p></p>\n'
+        '</div>\n'
+    )),
+    # url and selftext both set: the url wins
+    't3_g2': ('both set', (
+        '<div class="submission" id="t3_g2">\n'
+        '    <p class="userinfo">\n'
+        '        <a href="https://old.reddit.com/u/ann">ann</a>\n'
+        '        |\n'
+        '        <span class="score">3 points</span>\n'
+        '        |\n'
+        '        <a class="timestamp"'
+        ' href="https://old.reddit.com/r/pics/comments/g2">Nov 14 2023 22:13:20</a>\n'
+        '    </p>\n'
+        '    <strong>both set</strong>\n'
+        '    <p><a'
+        ' href="https://ex.example/a?b=1&c">https://ex.example/a?b=1&c</a></p>\n'
+        '</div>\n'
+    )),
+    # an empty url falls through to the escaped, rendered selftext
+    't3_g3': ('empty url', (
+        '<div class="submission" id="t3_g3">\n'
+        '    <p class="userinfo">\n'
+        '        <a href="https://old.reddit.com/u/bob">bob</a>\n'
+        '        |\n'
+        '        <span class="score">-2 points</span>\n'
+        '        |\n'
+        '        <a class="timestamp"'
+        ' href="https://old.reddit.com/r/t/comments/g3">Jan 01 1970 00:00:00</a>\n'
+        '    </p>\n'
+        '    <strong>empty url</strong>\n'
+        '    <p><p>hello <em>md</em> &lt;x&rt; {y}</p></p>\n'
+        '</div>\n'
+    )),
+    # a mixed-case [Deleted] author, empty selftext, no url
+    't3_g4': ('deleted mixed', (
+        '<div class="submission" id="t3_g4">\n'
+        '    <p class="userinfo">\n'
+        '        [deleted]\n'
+        '        |\n'
+        '        <span class="score">0 points</span>\n'
+        '        |\n'
+        '        <a class="timestamp"'
+        ' href="https://old.reddit.com/r/t/comments/g4">Jan 01 1970 23:59:59</a>\n'
+        '    </p>\n'
+        '    <strong>deleted mixed</strong>\n'
+        '    <p></p>\n'
+        '</div>\n'
+    )),
+    # a title holding format directives and markup, null selftext
+    't3_g5': ('100%s <b>bold</b> %d', (
+        '<div class="submission" id="t3_g5">\n'
+        '    <p class="userinfo">\n'
+        '        <a href="https://old.reddit.com/u/cat">cat</a>\n'
+        '        |\n'
+        '        <span class="score">12 points</span>\n'
+        '        |\n'
+        '        <a class="timestamp"'
+        ' href="https://old.reddit.com/r/AskReddit/comments/g5">Feb 13 2009 23:31:30</a>\n'
+        '    </p>\n'
+        '    <strong>100%s <b>bold</b> %d</strong>\n'
+        '    <p></p>\n'
+        '</div>\n'
+    )),
+}
+
+
+def test_thread_page_heads_golden(spark, tmp_path):
+    """Page heads (header title + submission block) on null fields,
+    url-vs-selftext precedence, an empty url, a mixed-case [Deleted]
+    author and a title holding ``%s``/``<b>`` match literals captured
+    from the earlier Column-built renderer, on the fused arm and the
+    streamed arm alike."""
+    from timesearch_spark.operators.exports import write_thread_docs_streamed
+    from timesearch_spark.operators.trees import (
+        PAGE_FOOTER,
+        PAGE_HEADER_FMT,
+        render_thread_pages,
+        thread_page_fragments,
+    )
+
+    submissions = spark.createDataFrame([
+        ("t3_g1", None, None, None, "plain self", None, None, None),
+        ("t3_g2", "ann", "both set", "https://ex.example/a?b=1&c",
+         "ignored *md*", 3, 1700000000, "pics"),
+        ("t3_g3", "bob", "empty url", "", "hello *md* <x> {y}", -2, 0, "t"),
+        ("t3_g4", "[Deleted]", "deleted mixed", None, "", 0, 86399, "t"),
+        ("t3_g5", "cat", "100%s <b>bold</b> %d", None, None, 12,
+         1234567890, "AskReddit"),
+    ], "idstr string, author string, title string, url string, "
+       "selftext string, score long, created long, subreddit string")
+    comments = spark.createDataFrame(
+        [], "idstr string, parent string, submission string, "
+            "created long, score long, author string, body string, "
+            "subreddit string")
+    want = {sid: (PAGE_HEADER_FMT % title) + block + PAGE_FOOTER
+            for sid, (title, block) in _GOLDEN_HEADS.items()}
+
+    fused = {r["submission"]: r["doc"] for r in
+             render_thread_pages(submissions, comments).collect()}
+    assert fused == want
+
+    out = tmp_path / "streamed"
+    assert write_thread_docs_streamed(
+        thread_page_fragments(submissions, comments), str(out)) == 5
+    for sid, page in want.items():
+        assert (out / f"{sid}.html").read_text(encoding="utf-8") == page
+
+
 @pytest.mark.slow
 def test_thread_pages_scheme_arm_byte_identical(spark, tmp_path):
     """A scheme:// root must get byte-identical pages to a plain root —
@@ -644,7 +768,7 @@ def test_thread_pages_size_guard_fails_loud(spark):
     same bound are untouched."""
     import pytest
 
-    from timesearch_spark.operators.trees import assemble_thread_pages
+    from timesearch_spark.operators.trees import render_thread_pages
 
     rows = [(f"t1_c{i:03d}", "t3_big" if i == 0 else f"t1_c{i-1:03d}",
              "t3_big", 100 + i, i, "a", "b", "t") for i in range(25)]
@@ -654,12 +778,17 @@ def test_thread_pages_size_guard_fails_loud(spark):
     df = spark.createDataFrame(
         [(s, i, p, c, sc, a, b, t) for i, p, s, c, sc, a, b, t in rows],
         schema)
+    submissions = spark.createDataFrame(
+        [("t3_big", "op", "big thread", None, "body", 1, 50, "t")],
+        "idstr string, author string, title string, url string, "
+        "selftext string, score long, created long, subreddit string",
+    )
 
     with pytest.raises(Exception, match="max_thread_rows=10"):
-        assemble_thread_pages(df, max_thread_rows=10).collect()
+        render_thread_pages(submissions, df, max_thread_rows=10).collect()
 
-    [ok] = assemble_thread_pages(df, max_thread_rows=25).collect()
-    [default] = assemble_thread_pages(df).collect()
+    [ok] = render_thread_pages(submissions, df, max_thread_rows=25).collect()
+    [default] = render_thread_pages(submissions, df).collect()
     assert ok["doc"] == default["doc"]  # bound never changes the bytes
 
 
@@ -714,7 +843,6 @@ def test_thread_pages_streamed_writes_past_fused_bound(spark, tmp_path):
 
     from timesearch_spark.operators.exports import write_thread_docs_streamed
     from timesearch_spark.operators.trees import (
-        assemble_thread_pages,
         render_thread_pages,
         thread_page_fragments,
     )
@@ -735,7 +863,8 @@ def test_thread_pages_streamed_writes_past_fused_bound(spark, tmp_path):
     )
 
     with pytest.raises(Exception, match="max_thread_rows=50"):
-        assemble_thread_pages(comments, max_thread_rows=50).collect()
+        render_thread_pages(submissions, comments,
+                            max_thread_rows=50).collect()
 
     out = tmp_path / "streamed"
     assert write_thread_docs_streamed(

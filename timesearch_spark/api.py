@@ -12,7 +12,7 @@ replacing ``timesearch.py <cmd>`` with ``api.<cmd>(...)``:
 | livestream        | ``livestream``       | streaming.livestream |
 | breakdown         | ``breakdown``        | operators.breakdown → exports.write_breakdown |
 | index             | ``index``            | operators.exports.write_index |
-| offline_reading   | ``offline_reading``  | trees.render_thread_pages → exports.write_thread_docs (threads past ``max_thread_rows``: trees.thread_page_fragments → exports.write_thread_docs_streamed) |
+| offline_reading   | ``offline_reading``  | trees.render_thread_pages (head and comments of a thread in one Python pass) → exports.write_thread_docs (threads past ``max_thread_rows``: trees.thread_page_fragments → exports.write_thread_docs_streamed) |
 | merge_db          | ``merge_db``         | operators.merge.anti_join_merge |
 | get_wiki / get_styles | ``get_wiki``/``get_styles`` | document dumps (driver-side; out of the analytic engine, kept for surface completeness) |
 
@@ -30,10 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from timesearch_spark import fs as _fs
 from timesearch_spark import schemas
+from timesearch_spark.functions import render_markdown
 from timesearch_spark.operators import exports
 from timesearch_spark.operators.breakdown import breakdown as _breakdown
 from timesearch_spark.operators.merge import anti_join_merge
-from timesearch_spark.operators.trees import render_thread_pages
+from timesearch_spark.operators.trees import THREAD_ID, render_thread_pages
 from timesearch_spark.sources import ndjson as _ndjson
 from timesearch_spark.sources.paginated import (
     RateLimiter,
@@ -317,12 +318,6 @@ FP_FORMAT_VERSION = 2
 #: pre-versioning manifest reads with a null ``fpv``.
 MANIFEST_SCHEMA = "idstr string, fp string, fpv int"
 
-#: A comment's thread id as its submission's fullname: raw and
-#: ``t3_``-prefixed spellings of one thread are one thread.
-_THREAD_ID = ("IF(startswith(submission, 't3_'), submission,"
-              " concat('t3_', submission))")
-
-
 def _thread_fingerprints(submissions: DataFrame, comments: DataFrame,
                          manifest: DataFrame | None = None) -> DataFrame:
     """(idstr, fp, __n, __ofp, __ofpv, __old): one render-relevant
@@ -364,7 +359,7 @@ def _thread_fingerprints(submissions: DataFrame, comments: DataFrame,
     if manifest is None:
         manifest = submissions.sparkSession.createDataFrame([], MANIFEST_SCHEMA)
     rows = comments.selectExpr(
-        f"{_THREAD_ID} AS idstr",
+        f"{THREAD_ID} AS idstr",
         "CAST(" + rowhash("idstr", "parent", "created", "score", "author",
                           "body", "subreddit") + " AS DECIMAL(38,0)) AS __h",
     ).unionByName(submissions.selectExpr(
@@ -392,33 +387,35 @@ def offline_reading(archive: Archive, out_dir: str,
                     checkpoint_dir: str | None = None,
                     incremental: bool = False,
                     max_thread_rows: int | None = None) -> int:
-    """Thread HTML export (§3.3): forest walk → render → one file per
-    submission; returns the file count.  ``specific_submission`` renders
-    one thread only (the reference's -s, offline_reading.py:393-416) —
-    the filter lands BEFORE the forest walk, so the shuffle carries one
-    thread, not the archive.  ``checkpoint_dir`` makes a mega-thread
-    walk's per-round state durable (:func:`timesearch_spark.fs.
-    checkpointer`); when left unset it is AUTO-derived for
-    ``scheme://`` archives (store-adjacent ``_checkpoints/``,
-    :func:`timesearch_spark.fs.derive_checkpoint_dir`) — on a real
-    cluster an executor loss mid-walk then recomputes instead of
-    failing the export, while plain local archives keep the cheap
-    ``localCheckpoint``.
+    """Thread HTML export (§3.3): one complete page file per submission
+    (header, submission block, nested comments, footer); returns the
+    file count.  ``specific_submission`` renders one thread only (the
+    reference's -s, offline_reading.py:393-416) — the filter lands
+    BEFORE the render, so the shuffle carries one thread, not the
+    archive.  ``checkpoint_dir`` makes the streamed arm's walk state
+    durable (:func:`timesearch_spark.fs.checkpointer`); when left
+    unset it is AUTO-derived for ``scheme://`` archives (store-adjacent
+    ``_checkpoints/``, :func:`timesearch_spark.fs.derive_checkpoint_dir`)
+    — on a real cluster an executor loss mid-walk then recomputes
+    instead of failing the export, while plain local archives keep the
+    cheap ``localCheckpoint``.
 
     Arm routing (r13): by DEFAULT the export is auto-routed PER THREAD —
     one cheap comment-count probe (map-side partial agg + a broadcast
     split) sends threads at or under ``max_thread_rows``
     (trees.DEFAULT_MAX_THREAD_ROWS unless overridden) through the fused
-    one-pass assembler and the over-bound ones through the streamed
-    no-ceiling arm, same run, same bytes — so one 10M-comment
-    mega-thread no longer fails the whole export (the fused arm's loud
-    ValueError) or forces every small thread onto the slower arm.  When
+    one-pass render (trees.render_thread_pages: head row and comments of
+    a thread rendered in one Python pass) and the over-bound ones
+    through the streamed no-ceiling arm, same run, same bytes — so one
+    10M-comment mega-thread no longer fails the whole export (the fused
+    arm's loud ValueError) or forces every small thread onto the slower
+    arm.  When
     no thread is over the bound (the probe's common answer) the plan is
     exactly the fused-only export.  The streamed arm — the distributed
     pointer-doubling walk orders page fragments and an O(tree depth)
     stack writer folds them into the SAME bytes
     (trees.thread_page_fragments → exports.write_thread_docs_streamed)
-    — pays walk rounds the fused one-pass assembler avoids, so only
+    — pays walk rounds the fused one-pass render avoids, so only
     threads that need it take it.  Both arms put every page through
     one executor-side atomic write (``<id>.html.inprogress``, then a
     move), so the output store must be one pyarrow or fsspec can open.
@@ -561,7 +558,7 @@ def _incremental_page_export(submissions: DataFrame, comments: DataFrame,
         changed = pin.filter("__tag = 'changed'").select("idstr")
         submissions = submissions.join(
             changed, submissions["idstr"] == changed["idstr"], "left_semi")
-        comments = comments.withColumn("submission", F.expr(_THREAD_ID))
+        comments = comments.withColumn("submission", F.expr(THREAD_ID))
         comments = comments.join(
             changed, comments["submission"] == changed["idstr"], "left_semi")
         over = pin.filter(over_bound).selectExpr("idstr AS submission")
@@ -599,7 +596,7 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
                         over: tuple[DataFrame, int] | None = None) -> int:
     """The DEFAULT page-export plan (r13 auto-routing, extracted r14 so
     tools/bench_scaling.py can probe it end-to-end): one comment-count
-    agg finds threads past the fused assembler's one-task bound — an
+    agg finds threads past the fused render's one-task bound — an
     exact count, not a sample — and routes just those through the
     distributed walk (``trees.thread_page_fragments``).  The over-set is
     tiny by construction (each member has > bound comments), so the
@@ -611,7 +608,7 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
 
     from timesearch_spark.operators import trees as _trees
 
-    normed = comments.withColumn("submission", F.expr(_THREAD_ID))
+    normed = comments.withColumn("submission", F.expr(THREAD_ID))
     probe = None
     try:
         if over is None:
@@ -624,16 +621,13 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
             over = (probe, probe.limit(1).count())
         over_ids, n_over = over
         if n_over == 0:
-            pages = render_thread_pages(
-                submissions, comments, checkpoint_dir=checkpoint_dir,
-                max_thread_rows=bound,
-            )
+            pages = render_thread_pages(submissions, comments,
+                                        max_thread_rows=bound)
             return exports.write_thread_docs(pages, out_dir)
         over_subs = over_ids.select(F.col("submission").alias("idstr"))
         fused_pages = render_thread_pages(
             submissions.join(F.broadcast(over_subs), "idstr", "left_anti"),
             normed.join(F.broadcast(over_ids), "submission", "left_anti"),
-            checkpoint_dir=checkpoint_dir,
             max_thread_rows=bound,
         )
         n = exports.write_thread_docs(fused_pages, out_dir)
@@ -670,29 +664,17 @@ def merge_db(to_archive: Archive, from_archive: Archive) -> dict:
 
 def get_wiki(archive: Archive, pages: dict[str, str], out_dir: str) -> int:
     """Wiki dump (get_wiki.py:8-26): raw markdown + rendered HTML per
-    page, the reference's exact composition — escape ``<``/``>`` first
-    (including its '&rt;' [sic] typo, get_wiki.py:24) then render with
-    the ``markdown`` package (``output_format='html5'``) or the
-    deterministic subset renderer when the package is absent (the same
-    arm choice the thread renderer makes).  The ``config/stylesheet``
-    pseudo-page is skipped (get_wiki.py:15-16 — it belongs to
+    page, the reference's exact composition through
+    :func:`timesearch_spark.functions.render_markdown` — escape
+    ``<``/``>`` first (including its '&rt;' [sic] typo, get_wiki.py:24),
+    then the one markdown arm the thread renderer also uses.  The
+    ``config/stylesheet`` pseudo-page is skipped (get_wiki.py:15-16 — it belongs to
     get_styles).  Driver-side file export — not an analytic path, but it
     routes through the fs shim like every other sink, so an archive
     rooted at a ``scheme://`` store gets its wiki dump ON the store
     instead of silently on the driver's local disk."""
     shim = _fs.get_fs(archive.spark if archive is not None else None, out_dir)
     shim.mkdirs(out_dir)
-
-    def render_page(md_text: str) -> str:
-        escaped = md_text.replace("<", "&lt;").replace(">", "&rt;")
-        try:
-            import markdown as _markdown
-
-            return _markdown.markdown(escaped, output_format="html5")
-        except ImportError:
-            from timesearch_spark.functions.markdown_lite import render
-
-            return render(escaped)
 
     n = 0
     for name, md_text in pages.items():
@@ -707,7 +689,7 @@ def get_wiki(archive: Archive, pages: dict[str, str], out_dir: str) -> int:
         with shim.open_write(base + ".md") as f:
             f.write(md_text)
         with shim.open_write(base + ".html") as f:
-            f.write(render_page(md_text))
+            f.write(render_markdown(md_text))
         n += 1
     return n
 

@@ -84,30 +84,38 @@ def html_unescape_full(s):  # pragma: no cover - exercised via Spark
 
 
 # --- H5: markdown → HTML (offline_reading.py:285-291) ----------------------
-# The `markdown` package is not in this container; gate behind import-try.
+# The `markdown` package is not in this container; the arm is chosen once,
+# here, behind an import-try.
 try:  # pragma: no cover
     import markdown as _markdown
 
-    @F.pandas_udf(T.StringType())
-    def markdown_render(s):
+    def _markdown_html(text: str) -> str:
         # output_format parity with render_markdown
         # (offline_reading.py:285-291) and get_wiki.py:20-26
-        return s.map(
-            lambda x: _markdown.markdown(x, output_format="html5")
-            if x is not None else None
-        )
+        return _markdown.markdown(text, output_format="html5")
 
     HAS_MARKDOWN = True
 except ImportError:  # pragma: no cover
     HAS_MARKDOWN = False
 
-    from timesearch_spark.functions.markdown_lite import render as _md_lite
+    # Deterministic subset renderer (paragraphs, headings, quotes,
+    # lists, strong/em/code/links) — see functions/markdown_lite.py.
+    from timesearch_spark.functions.markdown_lite import render as _markdown_html
 
-    @F.pandas_udf(T.StringType())
-    def markdown_render(s):
-        # Deterministic subset renderer (paragraphs, headings, quotes,
-        # lists, strong/em/code/links) — see functions/markdown_lite.py.
-        return s.map(_md_lite)
+
+def render_markdown(text: str) -> str:
+    """The reference's render_markdown (offline_reading.py:285-291,
+    get_wiki.py:20-26): escape ``<``/``>`` first — including its '&rt;'
+    [sic] typo — then render with the arm chosen at import.  Escaping
+    is idempotent, so already-escaped text renders the same."""
+    return _markdown_html(text.replace("<", "&lt;").replace(">", "&rt;"))
+
+
+@F.pandas_udf(T.StringType())
+def markdown_render(s):
+    """:func:`render_markdown` over a string column, Arrow-batched;
+    nulls pass through."""
+    return s.map(lambda x: None if x is None else render_markdown(x))
 
 
 # --- H6/H7: timestamp formats (common.py:94-97, index.py:17) ---------------

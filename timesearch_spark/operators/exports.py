@@ -235,10 +235,10 @@ def _put(fss, path: str, chunks) -> None:
 def write_thread_docs(docs: DataFrame, out_dir: str) -> int:
     """One ``<submission>.html`` per (submission, doc) row, ``doc``
     written VERBATIM through the atomic put from ``mapInPandas`` — the
-    sink behind the reference-parity page pipeline
-    (trees.render_thread_pages → api.offline_reading) for every URI a
-    store handle opens: plain path, ``file://``, ``s3``, fsspec-bridged.
-    Returns the number of pages written."""
+    sink of the fused page arm (api.offline_reading writes what
+    trees.render_thread_pages renders, every page complete) for every
+    URI a store handle opens: plain path, ``file://``, ``s3``,
+    fsspec-bridged.  Returns the number of pages written."""
     base_uri = _out_root(out_dir)
 
     def write_part(batches):
@@ -296,7 +296,7 @@ def write_thread_docs_streamed(frags: DataFrame, out_dir: str) -> int:
     sortWithinPartitions on the walk's root-path key ordering them
     (lexicographic path order IS the preorder; r13 — ranking the key
     into an integer position first cost one extra full Exchange+Sort
-    upstream) — and :func:`_fold_page` is the fused assembler's stack,
+    upstream) — and :func:`_fold_page` is the fused page pass's stack,
     streamed.  The thread's ``okey = ''`` head fragment sorts first and
     carries header+submission block in ``pre`` and the page FOOTER in
     ``post``.  A thread with no head fragment (comments whose

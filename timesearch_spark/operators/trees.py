@@ -40,6 +40,11 @@ TREE_SCHEMA = (
     "position int, phantom boolean"
 )
 
+#: A comment's thread id as its submission's fullname (SQL text): raw and
+#: ``t3_``-prefixed spellings of one thread are one thread.
+THREAD_ID = ("IF(startswith(submission, 't3_'), submission,"
+             " concat('t3_', submission))")
+
 
 def _walk_one_thread(
     submission: str, idstrs: list, parents: list, scores: list, out: list
@@ -606,25 +611,13 @@ def thread_stats(forest: DataFrame) -> DataFrame:
 
 # --- rendering (J1 UDF surface) ---------------------------------------------
 
-def html_escape(col):
-    """The reference's escape — including its '&rt;' typo, reproduced for
-    parity (offline_reading.py:285-290)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.regexp_replace(c, "<", "&lt;"), ">", "&rt;")
-
-
 def render_comment_html(df: DataFrame, body_col: str = "body") -> DataFrame:
     """Per-comment HTML div, nested by depth (offline_reading.py:178-199
-    template family).  Reference composition (render_markdown,
-    offline_reading.py:285-291): escape brackets FIRST — including the
-    '&rt;' [sic] typo — then run the body through markdown.
-    ``functions.markdown_render`` owns the package-vs-subset branch (the
-    ``markdown`` package behind an import-try, the deterministic subset
-    renderer in functions/markdown_lite.py otherwise) and is an
-    Arrow-batched pandas_udf in BOTH arms — never a row-at-a-time UDF."""
+    template family).  The body goes through ``functions.markdown_render``
+    — the reference's render_markdown (offline_reading.py:285-291):
+    escape brackets FIRST, including the '&rt;' [sic] typo, then
+    markdown — an Arrow-batched pandas_udf, never a row-at-a-time UDF."""
     from timesearch_spark.functions import markdown_render
-
-    rendered = markdown_render(html_escape(F.col(body_col)))
 
     return df.withColumn(
         "html",
@@ -632,7 +625,7 @@ def render_comment_html(df: DataFrame, body_col: str = "body") -> DataFrame:
             '<div class="comment" id="%s" style="margin-left:%dem">%s</div>',
             F.col("idstr"),
             F.col("depth").cast("int"),
-            rendered,
+            markdown_render(F.col(body_col)),
         ),
     )
 
@@ -644,7 +637,7 @@ def render_comment_html(df: DataFrame, body_col: str = "body") -> DataFrame:
 # export parity is the spec, so the template TEXT is shared data; the
 # machinery around it is original).  Each constant is the reference
 # triple-quoted template after its ``.strip()`` and ``str.format`` passes,
-# re-expressed printf-style for ``F.format_string``; the one structural
+# re-expressed printf-style; the one structural
 # difference is the children slot — the reference substitutes
 # ``{children}`` with ``str.format`` per node, which would misfire on a
 # comment whose BODY contains a literal ``{children}`` had we split on
@@ -703,65 +696,30 @@ SUBMISSION_FMT = (
 )
 
 
-def _userlink(author) -> F.Column:
-    """html_helper_userlink (offline_reading.py:273-284): an <a> tag for
-    the author, or the literal '[deleted]'."""
-    a = F.coalesce(author, F.lit("None"))  # str(None) parity on null
-    return F.when(F.lower(a) == "[deleted]", F.lit("[deleted]")).otherwise(
-        F.format_string('<a href="https://old.reddit.com/u/%s">%s</a>', a, a)
-    )
-
-
-def _permalink(subreddit, submission, idstr, kind: str) -> F.Column:
-    """html_helper_permalink (offline_reading.py:248-258)."""
-    base = F.concat(
-        F.lit("https://old.reddit.com/r/"),
-        F.coalesce(subreddit, F.lit("None")),
-        F.lit("/comments/"),
-    )
-    if kind == "submission":
-        return F.concat(base, F.substring(idstr, 4, 2_147_483_000))
-    return F.concat(
-        base,
-        F.substring(submission, 4, 2_147_483_000),
-        F.lit("/_/"),
-        F.substring(idstr, 4, 2_147_483_000),
-    )
-
-
-def _render_body(col) -> F.Column:
-    """render_markdown (offline_reading.py:285-291): escape-then-markdown,
-    Arrow-batched.  The reference's trailing sanitize_braces round-trips
-    through its str.format passes back to the raw text, so the net page
-    bytes carry the rendered markdown verbatim — no brace step here."""
-    from timesearch_spark.functions import markdown_render
-
-    return markdown_render(html_escape(col))
-
-
 def _page_block_renderer():
-    """The Python-side HTML_COMMENT block renderer, shared by the fused
-    page pass (:func:`assemble_thread_pages`) and the streamed fragment
-    arm (:func:`thread_page_fragments`) so the two arms cannot drift a
-    byte: ``block(root, idstr, fields) -> (pre, post)`` splits the
-    rendered block at the children slot.  Markdown arm selection matches
-    functions.markdown_render (offline_reading.py:285-291); NaN-vs-None
-    normalization matches Arrow's nullable hand-off."""
+    """The page renderer both page arms share, so they cannot drift a
+    byte.  ``head(fields)`` renders everything on a page ABOVE the
+    comment forest from one submissions row: the HTML header (title)
+    and the submission block, html_from_database's tree root
+    (offline_reading.py:201-222).  ``block(root, idstr, fields)``
+    renders one comment's HTML_COMMENT block, split at the children
+    slot into ``(pre, post)``.  A null field prints as ``None`` (the
+    reference's ``str(None)``); Arrow hands nullable numbers over as
+    NaN, which folds to None first."""
     import datetime
 
-    from timesearch_spark.functions import HAS_MARKDOWN
-
-    if HAS_MARKDOWN:  # the same arm choice markdown_render makes
-        import markdown as _md
-
-        def md(text):
-            return _md.markdown(text, output_format="html5")
-    else:
-        from timesearch_spark.functions.markdown_lite import render as md
+    from timesearch_spark.functions import render_markdown
 
     def norm(v):
-        # Arrow hands nullable columns over with NaN; fold to None
         return None if v is None or v != v else v
+
+    def text(v):
+        v = norm(v)
+        return "None" if v is None else v
+
+    def number(v):
+        v = norm(v)
+        return "None" if v is None else int(v)
 
     def human(ts):
         ts = norm(ts)
@@ -771,34 +729,47 @@ def _page_block_renderer():
             "%b %d %Y %H:%M:%S")
 
     def userlink(author):
-        a = "None" if norm(author) is None else str(author)
+        """html_helper_userlink (offline_reading.py:273-284)"""
+        a = str(text(author))
         if a.lower() == "[deleted]":
             return "[deleted]"
         return f'<a href="https://old.reddit.com/u/{a}">{a}</a>'
 
+    def head(f):
+        idstr = f["idstr"]
+        title = text(f["title"])
+        url, selftext = norm(f["url"]), norm(f["selftext"])
+        # html_helper_urlortext (offline_reading.py:259-271): url wins,
+        # else rendered selftext, else '' — Python truthiness, so empty
+        # strings fall through like nulls
+        if url:
+            url_or_text = f'<a href="{url}">{url}</a>'
+        elif selftext:
+            url_or_text = render_markdown(selftext)
+        else:
+            url_or_text = ""
+        link = (f"https://old.reddit.com/r/{text(f['subreddit'])}"
+                f"/comments/{idstr[3:]}")
+        return (PAGE_HEADER_FMT % title) + SUBMISSION_FMT % (
+            idstr, userlink(f["author"]), number(f["score"]), link,
+            human(f["created"]), title, url_or_text)
+
     def block(root, idstr, f):
-        sub_bare = root[3:]
-        subreddit = "None" if norm(f.get("subreddit")) is None else f["subreddit"]
-        link = (f"https://old.reddit.com/r/{subreddit}/comments/"
-                f"{sub_bare}/_/{idstr[3:]}")
-        score = norm(f.get("score"))
+        link = (f"https://old.reddit.com/r/{text(f.get('subreddit'))}"
+                f"/comments/{root[3:]}/_/{idstr[3:]}")
         body = norm(f.get("body"))
-        text = COMMENT_FMT % (
-            idstr,
-            userlink(f.get("author")),
-            "None" if score is None else int(score),
-            link,
+        html = COMMENT_FMT % (
+            idstr, userlink(f.get("author")), number(f.get("score")), link,
             human(f.get("created")),
-            "" if body is None else md(
-                body.replace("<", "&lt;").replace(">", "&rt;")),
+            "" if body is None else render_markdown(body),
         )
-        pre, _, post = text.partition(_CHILD_SLOT)
+        pre, _, post = html.partition(_CHILD_SLOT)
         return pre, post
 
-    return block
+    return head, block
 
 
-#: Per-thread row bound for the fused page assembler.  One page = one
+#: Per-thread row bound for the fused page pass.  One page = one
 #: task, so one thread's row dicts + rendered parts live in a single
 #: Python worker's memory (~1 KiB/row with rendered HTML): 2M rows is
 #: ~2 GiB — far past any real Reddit thread (the largest on record is
@@ -807,51 +778,70 @@ def _page_block_renderer():
 #: turns the silent executor OOM into an actionable error.
 DEFAULT_MAX_THREAD_ROWS = 2_000_000
 
+#: The fused page pass's input row: one head row per submission
+#: (``__k = 0``, its selftext in ``body``) and one row per comment
+#: (``__k = 1``, no ``title``/``url``), keyed by thread.
+_PAGE_ROW = ("submission", "__k", "idstr", "parent", "created", "score",
+             "author", "body", "subreddit", "title", "url")
 
-def assemble_thread_pages(comments: DataFrame,
-                          num_partitions: int | None = None,
-                          max_thread_rows: int = DEFAULT_MAX_THREAD_ROWS,
-                          ) -> DataFrame:
-    """(submission, doc): each thread's comment forest walked, rendered
-    and nested in ONE partition-then-walk pass (the same shape as
-    :func:`comment_forest`): repartition on the thread key, sort within
-    partitions, then per thread build the tree (created-asc insertion,
-    score-desc/id.lower()-asc children; orphan subtrees under missing
-    parents stay unreachable and are dropped from the page, exactly as
-    the reference's never-attached phantoms — offline_reading.py:358-366;
-    contrast the forest ANALYTICS path, which surfaces phantoms
-    deliberately), render each node's HTML_COMMENT block in-process
-    (same markdown arm as functions.markdown_render), and fold the
-    preorder into the nested document with an explicit stack (children
-    substituted into the parent's slot, siblings joined with a blank
-    line — html_from_tree, offline_reading.py:225-246).
 
-    Fused on purpose: the staged walk→join-bodies→render→assemble form
-    paid two extra shuffles (the idstr join + re-partitioning the
-    blocks), an Arrow UDF round trip, and a second Python pass — 11.8 s
-    vs ~5 s at sf0.1 on the synthetic 390k-comment corpus.  Nothing is
-    lost at scale: a page is one file, so assembly ALWAYS needs the
-    whole thread in one task — the distributed pointer-doubling walk
-    buys nothing here (it still serves the forest analytics queries).
-    The explicit stack keeps degenerate 500k-deep chains off the
-    recursion limit, and ``max_thread_rows`` bounds the one-task memory
-    footprint with a loud error instead of an executor OOM (see
-    DEFAULT_MAX_THREAD_ROWS).  Input columns: (submission, idstr,
-    parent, created, score, author, body, subreddit)."""
-    cols = ["submission", "idstr", "parent", "created", "score",
-            "author", "body", "subreddit"]
-    df = comments.select(*cols)
+def render_thread_pages(
+    submissions: DataFrame,
+    comments: DataFrame,
+    max_thread_rows: int = DEFAULT_MAX_THREAD_ROWS,
+) -> DataFrame:
+    """(submission, doc): one COMPLETE reference-parity page per
+    submission row — header (title), submission block, nested comment
+    forest, footer (html_from_database, offline_reading.py:201-222) —
+    rendered in ONE partition-then-walk pass (the shape of
+    :func:`comment_forest`).
+
+    Each submission contributes a head row and each comment a comment
+    row (:data:`_PAGE_ROW`); comment thread ids are normalized to the
+    t3_ fullname (:data:`THREAD_ID`), so raw and prefixed spellings of
+    one thread assemble as ONE tree.  The rows are repartitioned on the
+    thread key and sorted within partitions by (thread, head first,
+    created).  Per thread the pass renders the head, builds the tree
+    (created-asc insertion, score-desc/id.lower()-asc children; orphan
+    subtrees under missing parents stay unreachable and are dropped
+    from the page, exactly as the reference's never-attached phantoms —
+    offline_reading.py:358-366; contrast the forest ANALYTICS path,
+    which surfaces phantoms deliberately), renders each node's
+    HTML_COMMENT block, and folds the preorder into the nested document
+    with an explicit stack (children substituted into the parent's
+    slot, siblings joined with a blank line — html_from_tree,
+    offline_reading.py:225-246), then appends the footer.  EVERY
+    submission gets a page, zero-comment ones included
+    (trees_from_database iterates the submissions table,
+    offline_reading.py:310-312); a thread with no head row —
+    comment-only orphans — gets none, also per the reference.
+
+    A page is one file, so rendering it ALWAYS needs the whole thread in
+    one task; the explicit stack keeps degenerate 500k-deep chains off
+    the recursion limit, and ``max_thread_rows`` bounds the one-task
+    memory footprint with a loud error instead of an executor OOM (see
+    DEFAULT_MAX_THREAD_ROWS).  Submissions need (idstr, title, url,
+    selftext, score, author, subreddit, created); comments need
+    (submission, idstr, parent, created, score, author, body,
+    subreddit)."""
+    heads = submissions.selectExpr(
+        "idstr AS submission", "0 AS __k", "idstr",
+        "CAST(NULL AS STRING) AS parent", "created", "score", "author",
+        "selftext AS body", "subreddit", "title", "url")
+    rows = heads.unionByName(comments.selectExpr(
+        f"{THREAD_ID} AS submission", "1 AS __k", "idstr", "parent",
+        "created", "score", "author", "body", "subreddit",
+        "CAST(NULL AS STRING) AS title", "CAST(NULL AS STRING) AS url"))
     # explicit width (r15): see _python_stage_width — the unpinned form
     # AQE-coalesced this whole render's input to ONE partition at sf0.1
-    parted = df.repartition(
-        num_partitions or _python_stage_width(df), "submission"
-    ).sortWithinPartitions("submission", "created")
+    parted = rows.repartition(
+        _python_stage_width(rows), "submission"
+    ).sortWithinPartitions("submission", "__k", "created")
 
     def render_pages(batches):
-        block = _page_block_renderer()
+        head, block = _page_block_renderer()
 
-        def assemble(sub, rows):
-            root = sub if sub.startswith("t3_") else "t3_" + sub
+        def forest(root, rows):
             children: dict = {}
             fields: dict = {}
             score: dict = {}
@@ -865,9 +855,7 @@ def assemble_thread_pages(comments: DataFrame,
                 # so html_from_tree's root walk (:224-246) never reaches
                 # the orphan subtree and it is silently absent from the
                 # page.  children[missing_parent] is populated here but
-                # never pushed, so the subtree is unreachable too.  (The
-                # forest ANALYTICS path keeps phantom-under-root rows on
-                # purpose — that choice is separately oracled there.)
+                # never pushed, so the subtree is unreachable too.
                 children.setdefault(parent, []).append(r["idstr"])
                 fields[r["idstr"]] = r
                 sc = r["score"]
@@ -898,7 +886,7 @@ def assemble_thread_pages(comments: DataFrame,
                 if count_stack[-1] > 0:
                     parts.append("\n\n")  # sibling join (offline_reading.py:240)
                 count_stack[-1] += 1
-                pre, post = block(root, node, fields.get(node, {}))
+                pre, post = block(root, node, fields[node])
                 parts.append(pre)
                 post_stack.append(post)
                 count_stack.append(0)
@@ -908,6 +896,7 @@ def assemble_thread_pages(comments: DataFrame,
             return "".join(parts)
 
         cur = None
+        page_head = None
         rows: list = []
         out_subs: list = []
         out_docs: list = []
@@ -916,23 +905,29 @@ def assemble_thread_pages(comments: DataFrame,
             # one output ROW per thread, but batched into ~1k-row Arrow
             # frames: yielding a 1-row DataFrame per thread cost ~0.5 ms
             # each — 7 s of pure pandas constructor overhead on a 15k-
-            # thread corpus
-            if cur is not None:
+            # thread corpus.  A headless thread writes no page.
+            if page_head is not None:
                 out_subs.append(cur)
-                out_docs.append(assemble(cur, rows))
+                out_docs.append(page_head + forest(cur, rows) + PAGE_FOOTER)
 
         for pdf in batches:
-            it = zip(pdf["submission"], pdf["idstr"], pdf["parent"],
-                     pdf["created"], pdf["score"], pdf["author"],
-                     pdf["body"], pdf["subreddit"])
-            for sub, idstr, parent, created, sc, author, body, srd in it:
+            # column zips, not pdf.to_dict("records"): the records form
+            # builds one more dict per row than the render needs
+            for (sub, k, idstr, parent, created, sc, author, body, srd,
+                 title, url) in zip(*(pdf[c] for c in _PAGE_ROW)):
                 if sub != cur:
                     close_thread()
                     if len(out_subs) >= 1024:
                         yield pd.DataFrame(
                             {"submission": out_subs, "doc": out_docs})
                         out_subs, out_docs = [], []
-                    cur, rows = sub, []
+                    cur, page_head, rows = sub, None, []
+                if k == 0:
+                    page_head = head({
+                        "idstr": idstr, "title": title, "url": url,
+                        "selftext": body, "score": sc, "author": author,
+                        "subreddit": srd, "created": created})
+                    continue
                 rows.append({"idstr": idstr, "parent": parent,
                              "created": created, "score": sc,
                              "author": author, "body": body,
@@ -945,7 +940,7 @@ def assemble_thread_pages(comments: DataFrame,
                     raise ValueError(
                         f"thread {sub!r} exceeds max_thread_rows="
                         f"{max_thread_rows} comments; the fused "
-                        "assembler holds one whole thread per task by "
+                        "page pass holds one whole thread per task by "
                         "design.  If this thread is real, use the "
                         "streamed arm (thread_page_fragments + "
                         "exports.write_thread_docs_streamed, where "
@@ -960,98 +955,6 @@ def assemble_thread_pages(comments: DataFrame,
             yield pd.DataFrame({"submission": out_subs, "doc": out_docs})
 
     return parted.mapInPandas(render_pages, "submission string, doc string")
-
-
-def _page_head_col() -> F.Column:
-    """Everything on a page ABOVE the comment forest, as one native
-    expression over a submissions row: HTML header (title) + the
-    submission block (html_from_database's tree root, offline_reading.py
-    :201-222).  Shared by :func:`render_thread_pages` (which concats the
-    assembled forest and the footer after it) and
-    :func:`thread_page_fragments` (where it is the thread's first
-    fragment and the footer rides the fragment's ``post``)."""
-    sub_block = F.format_string(
-        SUBMISSION_FMT,
-        F.col("idstr"),
-        _userlink(F.col("author")),
-        F.coalesce(F.col("score").cast("string"), F.lit("None")),
-        _permalink(F.col("subreddit"), F.col("idstr"), F.col("idstr"),
-                   "submission"),
-        F.coalesce(
-            F.date_format(F.from_unixtime(F.col("created")),
-                          "MMM dd yyyy HH:mm:ss"),
-            F.lit("None"),
-        ),
-        F.coalesce(F.col("title"), F.lit("None")),
-        # html_helper_urlortext (offline_reading.py:259-271): url wins,
-        # else rendered selftext, else '' — Python truthiness, so empty
-        # strings fall through like nulls
-        F.when(
-            F.coalesce(F.col("url"), F.lit("")) != "",
-            F.format_string('<a href="%s">%s</a>', F.col("url"), F.col("url")),
-        ).when(
-            F.coalesce(F.col("selftext"), F.lit("")) != "",
-            _render_body(F.col("selftext")),
-        ).otherwise(F.lit("")),
-    )
-    return F.concat(
-        F.format_string(PAGE_HEADER_FMT,
-                        F.coalesce(F.col("title"), F.lit("None"))),
-        sub_block,
-    )
-
-
-def render_thread_pages(
-    submissions: DataFrame,
-    comments: DataFrame,
-    checkpoint_dir: str | None = None,
-    num_partitions: int | None = None,
-    max_thread_rows: int = DEFAULT_MAX_THREAD_ROWS,
-) -> DataFrame:
-    """(submission, doc): one COMPLETE reference-parity page per
-    submission row — header (title), submission block, nested comment
-    forest, footer (html_from_database, offline_reading.py:201-222).
-    EVERY submission gets a page, zero-comment ones included
-    (trees_from_database iterates the submissions table,
-    offline_reading.py:310-312); comment-only orphan threads get none,
-    also per the reference.  Submission ids are normalized to their
-    t3_ fullname before the walk, so raw and prefixed spellings of one
-    thread assemble as ONE tree instead of two concatenated fragments.
-
-    ``checkpoint_dir`` is accepted for interface stability (callers
-    derive it for scheme:// archives) but unused: the fused
-    walk+render+assemble pass (see :func:`assemble_thread_pages`) is a
-    single non-iterative stage with no growing lineage to truncate —
-    page assembly inherently holds one whole thread per task, so the
-    distributed pointer-doubling walk (which the forest ANALYTICS
-    queries still use) buys nothing on this path."""
-    norm = F.when(
-        F.col("submission").startswith("t3_"), F.col("submission")
-    ).otherwise(F.concat(F.lit("t3_"), F.col("submission")))
-    comments = comments.withColumn("submission", norm)
-    docs = assemble_thread_pages(comments, num_partitions=num_partitions,
-                                 max_thread_rows=max_thread_rows)
-
-    page = F.concat(
-        _page_head_col(),
-        F.coalesce(F.col("doc"), F.lit("")),  # zero-comment: children = ''
-        F.lit(PAGE_FOOTER),
-    )
-    # r15 (guide §3.1): MapInPandas output carries no usable size
-    # estimate, so the planner judged the RENDERED PAGES side tiny and
-    # broadcast it (88 MiB at sf0.1 — and unbounded with the corpus:
-    # at archive scale this collects every rendered page through the
-    # driver and dies on the 8 GB broadcast cap), leaving the join
-    # output with the submissions scan's partitioning (ONE partition
-    # locally) for all downstream work.  Force the sort-merge join:
-    # the fat side crosses the network exactly once, keyed, at any
-    # scale, and the join output is partition-parallel.
-    return (
-        submissions.join(docs.hint("merge"),
-                         submissions["idstr"] == docs["submission"],
-                         "left")
-        .select(F.col("idstr").alias("submission"), page.alias("doc"))
-    )
 
 
 def thread_page_fragments(
@@ -1075,30 +978,27 @@ def thread_page_fragments(
     walk's root-path key, whose lexicographic order IS the preorder —
     r13 dropped the integer-position window here, one full
     Exchange+Sort of every walked row the writer's own per-thread sort
-    made redundant); one equi-join brings the render fields back to the
-    walked rows; a stateless Arrow pass splits each rendered
-    HTML_COMMENT block at the children slot into (pre, post).  The
-    submissions table contributes ``okey = ''`` fragments — the empty
-    key sorts before every all-digit path, so the head is first in
-    writer order: ``pre`` = header + submission block (the exact
-    :func:`_page_head_col` expression the fused arm uses), ``post`` =
-    the page footer — which the writer's stack drain emits LAST, after
+    made redundant), carrying the render fields as payload; a
+    stateless Arrow pass splits each rendered HTML_COMMENT block at the
+    children slot into (pre, post).  The submissions table contributes
+    ``okey = ''`` fragments — the empty key sorts before every
+    all-digit path, so the head is first in writer order: ``pre`` =
+    header + submission block (the ``head`` of
+    :func:`_page_block_renderer`, as in the fused arm), ``post`` = the
+    page footer — which the writer's stack drain emits LAST, after
     every comment's close tags, exactly where the fused arm concats it.
     Comment depths shift +1 so they nest inside the submission
     fragment's open post.
 
-    This is the SCALE arm: it pays the walk's O(log depth) rounds plus
-    one fields join that the fused one-pass assembler
-    (:func:`assemble_thread_pages`) avoids — keep the fused arm for
-    bounded threads and route here when ``max_thread_rows`` trips.
+    This is the SCALE arm: it pays the walk's O(log depth) rounds that
+    the fused one-pass :func:`render_thread_pages` avoids — keep the
+    fused arm for bounded threads and route here when
+    ``max_thread_rows`` trips.
     Threads present in ``comments`` but absent from ``submissions``
     produce comment fragments with no ``okey = ''`` head; the writer
     skips headless threads, preserving the reference's scope (pages
     come from the submissions table, offline_reading.py:310-312)."""
-    norm = F.when(
-        F.col("submission").startswith("t3_"), F.col("submission")
-    ).otherwise(F.concat(F.lit("t3_"), F.col("submission")))
-    comments = comments.withColumn("submission", norm)
+    comments = comments.withColumn("submission", F.expr(THREAD_ID))
 
     # The render fields ride the walk as payload (r13): they are 1:1
     # with nodes, so the post-walk fields equi-join — two full
@@ -1118,9 +1018,7 @@ def thread_page_fragments(
              "created", "score", "author", "body", "subreddit")
 
     def render_fragments(batches):
-        import pandas as pd
-
-        block = _page_block_renderer()
+        _, block = _page_block_renderer()
         for pdf in batches:
             pres, posts = [], []
             for idstr, sub, created, score, author, body, srd in zip(
@@ -1163,11 +1061,21 @@ def thread_page_fragments(
         _python_stage_width(joined), "submission", "idstr"
     ).mapInPandas(render_fragments, frag_schema)
 
-    head_frags = submissions.select(
-        F.col("idstr").alias("submission"),
-        F.lit("").alias("okey"),  # '' < every all-digit path: head first
-        F.lit(0).cast("int").alias("depth"),
-        _page_head_col().alias("pre"),
-        F.lit(PAGE_FOOTER).alias("post"),
-    )
+    head_cols = ["idstr", "title", "url", "selftext", "score", "author",
+                 "subreddit", "created"]
+
+    def render_heads(batches):
+        head, _ = _page_block_renderer()
+        for pdf in batches:
+            yield pd.DataFrame({
+                "submission": pdf["idstr"],
+                "okey": "",  # '' < every all-digit path: head first
+                "depth": pd.Series(0, index=pdf.index, dtype="int32"),
+                "pre": [head(dict(zip(head_cols, vals)))
+                        for vals in zip(*(pdf[c] for c in head_cols))],
+                "post": PAGE_FOOTER,
+            })
+
+    head_frags = submissions.select(*head_cols).mapInPandas(
+        render_heads, frag_schema)
     return head_frags.unionByName(comment_frags)
