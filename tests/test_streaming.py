@@ -287,11 +287,13 @@ def test_legacy_flat_layout_migration(spark, tmp_path):
     assert store.snapshot().count() == 3
 
 
-def test_merge_and_ingest_job_budget(spark, tmp_path, jobs_launched):
+def test_merge_and_ingest_job_budget(spark, tmp_path, jobs_launched, monkeypatch):
     """A small MERGE into a built store is a fixed handful of jobs (the
     upsert join evaluated once, counters observed, not counted), and a
-    small ``ingest_jsonfile`` stays under its budget — the parent
-    commit launched 17 and 45."""
+    small ``ingest_jsonfile`` stays under its budget — the one-pass
+    MERGE's parent launched 17 and 45.  The budget is two-sided: the
+    comments merge runs on another thread, and its jobs must still land
+    in the caller's job group, under the caller's job description."""
     from timesearch_spark import api
 
     store = _store(spark, tmp_path, "hot")
@@ -299,36 +301,166 @@ def test_merge_and_ingest_job_budget(spark, tmp_path, jobs_launched):
         [_comment(f"t1_x{i}", f"body {i}") for i in range(64)], COMMENT_COLS))
     small = spark.createDataFrame(
         [_comment("t1_x0", "edited"), _comment("t1_new", "fresh")], COMMENT_COLS)
-    # the streaming adapter, with an edit row to write: the worst case
-    assert jobs_launched(lambda: store.foreach_batch(small, batch_id=0)) <= 6
+    # with an edit row to write: the worst case
+    assert jobs_launched(lambda: store.merge(small)) <= 6
     assert store.snapshot().count() == 65 and store.edits().count() == 1
 
-    def dump(name, objs):
-        p = tmp_path / name
-        p.write_text("\n".join(json.dumps(o) for o in objs) + "\n")
-        return str(p)
-
-    def sub(i, text):
-        return {"id": f"s{i}", "name": f"t3_s{i}", "created_utc": 100 + i,
-                "author": "alice", "subreddit": "t", "title": f"post {i}",
-                "selftext": text, "score": 1, "is_self": True, "over_18": False}
-
-    def com(i, text):
-        return {"id": f"c{i}", "name": f"t1_c{i}", "created_utc": 200 + i,
-                "author": "bob", "subreddit": "t", "body": text, "score": 2,
-                "parent_id": "t3_s0", "link_id": "t3_s0"}
-
+    sub, com = _sub_obj, _com_obj
     ar = api.Archive(spark, str(tmp_path / "ar"))
-    api.ingest_jsonfile(ar, dump("d0.jsonl", [sub(i, "v1") for i in range(8)]
-                                 + [com(i, "v1") for i in range(40)]))
+    api.ingest_jsonfile(ar, _dump(tmp_path / "d0.jsonl", [sub(i, "v1") for i in range(8)]
+                                  + [com(i, "v1") for i in range(40)]))
     delta = ([sub(0, "v2"), sub(8, "v1")]
              + [com(i, "v2") for i in range(5)] + [com(40 + i, "v1") for i in range(9)])
+
+    # tag the jobs launched inside the comments merge (tags are thread-local)
+    sc, tag = spark.sparkContext, "comments-merge"
+    merge = ParquetMergeStore.merge
+
+    def tagged(self, *a, **kw):
+        if self is not ar.comments:
+            return merge(self, *a, **kw)
+        sc.addJobTag(tag)
+        try:
+            return merge(self, *a, **kw)
+        finally:
+            sc.removeJobTag(tag)
+
+    monkeypatch.setattr(ParquetMergeStore, "merge", tagged)
     got = {}
-    n = jobs_launched(lambda: got.update(
-        api.ingest_jsonfile(ar, dump("d1.jsonl", delta))))
+
+    def ingest():
+        sc.setJobDescription("daily delta")
+        got.update(api.ingest_jsonfile(ar, _dump(tmp_path / "d1.jsonl", delta)))
+
+    n = jobs_launched(ingest)
     assert got == {"new_submissions": 1, "new_comments": 9,
                    "total_submissions": 9, "total_comments": 49}
-    assert n <= 20
+    # two merges of >= 5 jobs each plus the file check and the totals:
+    # a merge whose jobs escape the caller's group drops n below 14
+    assert 14 <= n <= 20
+    jobs = list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+    status = sc._jsc.sc().statusStore()
+    assert len(jobs) >= 5
+    assert {status.job(j).description().get() for j in jobs} == {"daily delta"}
+
+
+def _sub_obj(i, text, **kw):
+    return {"id": f"s{i}", "name": f"t3_s{i}", "created_utc": 100 + i,
+            "author": "alice", "subreddit": "t", "title": f"post {i}",
+            "selftext": text, "score": 1, "is_self": True, "over_18": False, **kw}
+
+
+def _com_obj(i, text, **kw):
+    return {"id": f"c{i}", "name": f"t1_c{i}", "created_utc": 200 + i,
+            "author": "bob", "subreddit": "t", "body": text, "score": 2,
+            "parent_id": "t3_s0", "link_id": "t3_s0", **kw}
+
+
+def _dump(path, objs):
+    path.write_text("\n".join(json.dumps(o) for o in objs) + "\n")
+    return str(path)
+
+
+def _both_in_flight(monkeypatch, method):
+    """Make every ``ParquetMergeStore.<method>`` call wait until a second
+    one is in flight.  A caller that writes its two stores one after the
+    other fails on the barrier's timeout instead of hanging."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=60)
+    orig = getattr(ParquetMergeStore, method)
+
+    def waiting(self, *a, **kw):
+        barrier.wait()
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(ParquetMergeStore, method, waiting)
+
+
+def test_ingest_merges_both_stores_at_once(spark, tmp_path, monkeypatch):
+    from timesearch_spark import api
+
+    ar = api.Archive(spark, str(tmp_path / "ar"))
+    _both_in_flight(monkeypatch, "merge")
+    got = api.ingest_jsonfile(ar, _dump(
+        tmp_path / "d.jsonl", [_sub_obj(0, "v1"), _com_obj(0, "v1"), _com_obj(1, "v1")]))
+    assert got == {"new_submissions": 1, "new_comments": 2,
+                   "total_submissions": 1, "total_comments": 2}
+
+
+def test_livestream_batch_merges_both_stores_at_once(spark, tmp_path, monkeypatch):
+    from timesearch_spark import api
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    _dump(drop / "b1.jsonl", [_sub_obj(0, "v1"), _com_obj(0, "v1")])
+    ar = api.Archive(spark, str(tmp_path / "ar"))
+    _both_in_flight(monkeypatch, "merge")
+    q = api.livestream(ar, str(drop), once=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    # both merges (4+ jobs each) ran in the batch's job group, the one
+    # query.stop() cancels
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))) >= 8
+    assert [r["idstr"] for r in ar.submissions.snapshot().collect()] == ["t3_s0"]
+    assert [r["idstr"] for r in ar.comments.snapshot().collect()] == ["t1_c0"]
+
+
+def test_merge_db_merges_both_stores_at_once(spark, tmp_path, monkeypatch):
+    from timesearch_spark import api
+
+    a = api.Archive(spark, str(tmp_path / "a"))
+    b = api.Archive(spark, str(tmp_path / "b"))
+    api.ingest_jsonfile(a, _dump(tmp_path / "a.jsonl", [_sub_obj(0, "a"), _com_obj(0, "a")]))
+    api.ingest_jsonfile(b, _dump(tmp_path / "b.jsonl", [
+        _sub_obj(0, "b"), _sub_obj(1, "b"), _com_obj(1, "b"), _com_obj(2, "b")]))
+    _both_in_flight(monkeypatch, "overwrite_snapshot")
+    assert api.merge_db(a, b) == {"submissions": 1, "comments": 2}
+    assert a.submissions.snapshot().where("idstr = 't3_s0'").first()["selftext"] == "a"
+
+
+def test_ingest_failed_merge_still_commits_the_other_store(spark, tmp_path, monkeypatch):
+    """The two stores commit separately: when the comments merge fails,
+    the submissions merge still commits, the comments error is raised
+    once both finished, no thread outlives the call, and re-ingesting
+    the file converges to the archive a clean single ingest builds."""
+    import threading
+
+    from timesearch_spark import api
+
+    base = _dump(tmp_path / "d0.jsonl", [_sub_obj(i, "v1") for i in range(3)]
+                 + [_com_obj(i, "v1") for i in range(6)])
+    # edits carry ``edited``, so replaced_at does not depend on the clock
+    delta = _dump(tmp_path / "d1.jsonl", [_sub_obj(0, "v2", edited="150"), _sub_obj(3, "v1")]
+                  + [_com_obj(i, "v2", edited="250") for i in range(3)] + [_com_obj(6, "v1")])
+    clean = api.Archive(spark, str(tmp_path / "clean"))
+    ar = api.Archive(spark, str(tmp_path / "ar"))
+    for archive in (clean, ar):
+        api.ingest_jsonfile(archive, base)
+    api.ingest_jsonfile(clean, delta)
+
+    merge = ParquetMergeStore.merge
+
+    def failing(self, *a, **kw):
+        if self is ar.comments:
+            raise RuntimeError("comments merge failed")
+        return merge(self, *a, **kw)
+
+    versions = (ar.submissions.version(), ar.comments.version())
+    baseline = threading.active_count()
+    monkeypatch.setattr(ParquetMergeStore, "merge", failing)
+    with pytest.raises(RuntimeError, match="comments merge failed"):
+        api.ingest_jsonfile(ar, delta)
+    assert threading.active_count() == baseline
+    assert (ar.submissions.version(), ar.comments.version()) == (versions[0] + 1, versions[1])
+
+    monkeypatch.undo()
+    api.ingest_jsonfile(ar, delta)
+    for name in ("submissions", "comments"):
+        got, want = getattr(ar, name), getattr(clean, name)
+        assert sorted(got.snapshot().collect()) == sorted(want.snapshot().collect())
+        assert sorted(got.edits().collect()) == sorted(want.edits().collect())
+        assert want.edits().count() > 0
 
 
 def test_store_merge_golden_sequence(spark, tmp_path, caplog):

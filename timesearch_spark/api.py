@@ -35,6 +35,7 @@ from timesearch_spark.operators import exports
 from timesearch_spark.operators.breakdown import breakdown as _breakdown
 from timesearch_spark.operators.merge import anti_join_merge
 from timesearch_spark.operators.trees import THREAD_ID, render_thread_pages
+from timesearch_spark.session import side_by_side
 from timesearch_spark.sources import ndjson as _ndjson
 from timesearch_spark.sources.paginated import (
     RateLimiter,
@@ -215,10 +216,13 @@ def ingest_jsonfile(archive: Archive, path: str) -> dict:
     object before it classifiable as neither submission nor comment
     fails the ingest with ValueError before either store is touched —
     both reproduced by ``read_raw_file``.
+    Both stores merge side by side and commit separately: one may commit
+    when the other fails (its error is raised); re-ingesting converges.
     """
     raw = _ndjson.read_raw_file(archive.spark, path)
-    sres = archive.submissions.merge(_ndjson.submissions_from_raw(raw))
-    cres = archive.comments.merge(_ndjson.comments_from_raw(raw))
+    sres, cres = side_by_side(
+        lambda: archive.submissions.merge(_ndjson.submissions_from_raw(raw)),
+        lambda: archive.comments.merge(_ndjson.comments_from_raw(raw)))
     totals = (
         archive.submissions.snapshot().selectExpr("true AS s")
         .unionByName(archive.comments.snapshot().selectExpr("false AS s"))
@@ -646,18 +650,20 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
 
 def merge_db(to_archive: Archive, from_archive: Archive) -> dict:
     """Insert-only merge (merge_db.py:7-34): copy rows absent from the
-    target; existing rows are never updated (timesearch.py:350-354)."""
-    out = {}
-    for name in ("submissions", "comments"):
-        to_store = getattr(to_archive, name)
-        from_store = getattr(from_archive, name)
+    target; existing rows are never updated (timesearch.py:350-354).
+    Both stores merge side by side and commit separately, as in ingest."""
+    def merge_one(to_store, from_store):
         before = to_store.snapshot().count()
         merged = anti_join_merge(
             to_store.snapshot(), from_store.snapshot(), key="idint"
         )
         to_store.overwrite_snapshot(merged)
-        out[name] = to_store.snapshot().count() - before
-    return out
+        return to_store.snapshot().count() - before
+
+    subs, coms = side_by_side(
+        lambda: merge_one(to_archive.submissions, from_archive.submissions),
+        lambda: merge_one(to_archive.comments, from_archive.comments))
+    return {"submissions": subs, "comments": coms}
 
 
 # --- document dumps (timesearch.py get_wiki / get_styles) --------------------

@@ -59,3 +59,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def side_by_side(*calls):
+    """Run zero-argument ``calls`` at once: the first on this thread, each
+    other on an ``InheritableThread``, which keeps the caller's job group and
+    description.  Once all are done, re-raise the first failure in call
+    order, else return the results in call order."""
+    from pyspark import InheritableThread
+
+    out, errors = [None] * len(calls), []
+
+    def run(i):
+        try:
+            out[i] = calls[i]()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append((i, e))
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(1, len(calls))]
+    for t in threads:
+        t.start()
+    if calls:
+        run(0)
+    for t in threads:
+        t.join()
+    if errors:
+        raise min(errors, key=lambda ie: ie[0])[1]
+    return out

@@ -12,7 +12,7 @@ Spark mapping:
 - poll cadence      → ``trigger(processingTime='30 seconds')``
 - ``--once``        → ``trigger(availableNow=True)``
 - round-robin of N entities → union of N streams in one query (G4)
-- upsert sink       → ``foreachBatch(ParquetMergeStore.merge)``
+- dual insert       → ``foreachBatch``: one merge per kind, side by side
 - never-die         → query restart from checkpoint + idempotent MERGE
 
 The source here is a file stream (NDJSON drop directory — the archive
@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from timesearch_spark.schemas import RAW_NDJSON
+from timesearch_spark.session import side_by_side
 from timesearch_spark.sources.ndjson import comments_from_raw, submissions_from_raw
 from timesearch_spark.streaming.store import ParquetMergeStore
 
@@ -70,7 +71,8 @@ def livestream(
     once: bool = False,
 ) -> StreamingQuery:
     """Run the poll loop: classify each micro-batch and MERGE each kind
-    into its store (livestream.py:185-194's dual insert).
+    into its store (livestream.py:185-194's dual insert), both merges side
+    by side; they commit separately, and a failed batch replays idempotently.
 
     ``once=True`` = the reference's ``--once`` flag (availableNow drains
     everything then stops); otherwise a 30 s processing-time trigger
@@ -83,10 +85,13 @@ def livestream(
         # from the stored snapshot (it's not in the store schema).  The
         # merge counters are observed during the merge's own
         # materializations, so the 30 s hot path pays no job for them.
+        # side_by_side keeps the batch's job group, which query.stop() cancels
+        merges = []
         if submissions_store is not None:
-            submissions_store.merge(submissions_from_raw(batch))
+            merges.append(lambda: submissions_store.merge(submissions_from_raw(batch)))
         if comments_store is not None:
-            comments_store.merge(comments_from_raw(batch))
+            merges.append(lambda: comments_store.merge(comments_from_raw(batch)))
+        side_by_side(*merges)
 
     writer = (
         raw_stream.writeStream.foreachBatch(handle_batch)

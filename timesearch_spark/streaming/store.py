@@ -35,7 +35,10 @@ MERGE with per-bucket versioning:
   job, and each commit logs them as one JSON record to the
   ``timesearch_spark`` logger;
 - reads declare the store's schema, so no read runs a parquet
-  footer-inference job.
+  footer-inference job;
+- a store commits alone (own pointer, CAS, lease, staging): an archive's
+  two stores are written at once, one may commit while the other fails,
+  and re-running the write converges (a replayed merge is idempotent).
 
 With Delta/Iceberg available this class collapses to ``MERGE INTO``;
 the interface (merge/snapshot/resume_lower_bound) is format-agnostic by
@@ -617,12 +620,6 @@ class ParquetMergeStore:
                     self._fs.delete(os.path.join(edir, d))
                     removed.append(d)
         return removed
-
-    def foreach_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """``writeStream.foreachBatch`` adapter (I1→A11): one ``merge``
-        per micro-batch.  Its counters are observed, not counted, so
-        the hot path pays no job for them."""
-        self.merge(batch)
 
 
 #: Stepwise migrations (database_upgrader.py:24-49 analog): version → fn.
