@@ -745,14 +745,10 @@ def test_offline_reading_noop_refresh_writes_nothing(spark, tmp_path):
     assert api.offline_reading(ar, str(out), incremental=True) == 7
 
 
-def test_offline_reading_incremental_job_budget(spark, tmp_path,
-                                                jobs_launched):
-    """An incremental refresh after a small delta (nothing removed, no
-    thread over the bound) is one classification pass, the render and
-    the manifest write; a refresh with nothing to do is the pass alone.
-    Before the one-pass export such a refresh launched 28 jobs, and 9
-    while the submission head was still joined onto the rendered
-    pages."""
+def _rendered_then_delta(spark, tmp_path):
+    """An 8-thread archive rendered once, then a small delta ingested:
+    one new thread and one reply to an old one.  Returns the archive and
+    its pages directory."""
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "d0.jsonl"
     p.write_text("\n".join(json.dumps(o) for o in
@@ -767,6 +763,18 @@ def test_offline_reading_incremental_job_budget(spark, tmp_path,
     p.write_text("\n".join(json.dumps(o) for o in [
         _sub(8), _com(40, parent_id="t1_c0", link_id="t3_s0")]))
     api.ingest_jsonfile(ar, str(p))
+    return ar, out
+
+
+def test_offline_reading_incremental_job_budget(spark, tmp_path,
+                                                jobs_launched):
+    """An incremental refresh after a small delta (nothing removed, no
+    thread over the bound) is one classification pass, the render and
+    the manifest write; a refresh with nothing to do is the pass alone.
+    Before the one-pass export such a refresh launched 28 jobs, and 9
+    while the submission head was still joined onto the rendered
+    pages."""
+    ar, out = _rendered_then_delta(spark, tmp_path)
     got = []
     assert jobs_launched(lambda: got.append(
         api.offline_reading(ar, out, incremental=True))) <= 7
@@ -774,6 +782,22 @@ def test_offline_reading_incremental_job_budget(spark, tmp_path,
     assert jobs_launched(lambda: got.append(
         api.offline_reading(ar, out, incremental=True))) <= 6
     assert got == [2, 0]
+
+
+def test_refresh_job_budget(spark, tmp_path, jobs_launched):
+    """A whole refresh after a small delta — the incremental page
+    export, the sorted breakdown and the date listing — runs at most 10
+    jobs.  Sorting each listing globally (a range-sampling job plus an
+    exchange) made it 14."""
+    ar, out = _rendered_then_delta(spark, tmp_path)
+    exports = str(tmp_path / "exports")
+
+    def refresh():
+        assert api.offline_reading(ar, out, incremental=True) == 2
+        api.breakdown(ar, sort="total_posts", out_dir=exports)
+        api.index(ar, exports)
+
+    assert jobs_launched(refresh) <= 10
 
 
 @pytest.mark.slow
@@ -950,8 +974,8 @@ _REF_LINE_HTML = ('<div>{timestamp}: <a href="{link}">[{flairtext}] {title}</a>'
 
 def _listing_twin(objs, orderby, html, offline):
     """Test-local twin of index.py:100-167 over the dumped objects:
-    the default score threshold (0), the ordering's sort, one formatted
-    line each."""
+    the default score threshold (0), the ordering's sort with rows tied
+    on its key in ``idstr`` order, one formatted line each."""
     import time
 
     from timesearch_spark.operators.exports import HTML_FOOTER, HTML_HEADER
@@ -967,7 +991,7 @@ def _listing_twin(objs, orderby, html, offline):
     }
     lines = []
     for o in sorted((o for o in objs if o["score"] >= 0),
-                    key=keys[orderby]):
+                    key=lambda o: (keys[orderby](o), o["name"])):
         link = (f"../offline_reading/{o['name']}.html" if offline
                 else f"https://redd.it/{o['name'][3:]}")
         fields = dict(
@@ -986,7 +1010,8 @@ def _listing_twin(objs, orderby, html, offline):
 def _listing_archive(spark, tmp_path):
     """Twelve submissions, every ordering key distinct (so the order is
     total), a multi-line title, a deleted author, flaired and unflaired
-    posts and a below-threshold score."""
+    posts and a below-threshold score; one comment each.  Returns the
+    archive and the submissions."""
     objs = [
         _sub(i, created_utc=1_500_000_000 + 86_400 * ((i * 5) % 12),
              title=f"post {chr(97 + (i * 7) % 12)}" + ("\nmore" if i == 3 else ""),
@@ -995,9 +1020,11 @@ def _listing_archive(spark, tmp_path):
              link_flair_text=f"flair {i}" if i % 3 == 0 else None)
         for i in range(12)
     ]
+    coms = [_com(i, parent_id=f"t3_s{i}", link_id=f"t3_s{i}")
+            for i in range(12)]
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "dump.jsonl"
-    p.write_text("\n".join(json.dumps(o) for o in objs))
+    p.write_text("\n".join(json.dumps(o) for o in objs + coms))
     api.ingest_jsonfile(ar, str(p))
     return ar, objs
 
@@ -1022,14 +1049,62 @@ def test_index_files_match_listing_twin_for_every_ordering(spark, tmp_path):
         for ext in (".txt", ".html"))
 
 
+def test_index_sort_arms_write_same_bytes(spark, tmp_path, monkeypatch):
+    """Both arms of the listing sort — one coalesced partition, and the
+    range-partitioned sort streamed over several partitions — write
+    every ``INDEX_ORDERINGS`` file, txt and html, byte-identical to the
+    twin, on a fixture where rows tie on every ordering key
+    (same-second ``created``, equal scores, titles, authors, subreddits
+    and flair groups): tied rows follow ``idstr``, never arrival
+    order."""
+    from timesearch_spark.operators import exports
+
+    objs = [
+        _sub(i, created_utc=1_500_000_000 + 86_400 * (i % 3),
+             title=f"post {i % 4}", author=f"user{i % 2}",
+             subreddit=f"sub{i % 3}", score=i % 3,
+             link_flair_text="flair" if i % 2 else None)
+        for i in ((j * 5) % 12 for j in range(12))
+    ]
+    ar = api.Archive(spark, str(tmp_path / "ar"))
+    p = tmp_path / "dump.jsonl"
+    p.write_text("\n".join(json.dumps(o) for o in objs))
+    api.ingest_jsonfile(ar, str(p))
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    files = {}
+    for one in (True, False):
+        monkeypatch.setattr(exports, "_fits_one_partition", lambda df: one)
+        # uncoalesced, the range sort streams several partitions
+        spark.conf.set(coalesce, str(one).lower())
+        try:
+            if not one:
+                parts = exports.index_lines(ar.submissions.snapshot()) \
+                    .rdd.glom().collect()
+                assert sum(1 for rows in parts if rows) > 1
+            for orderby in exports.INDEX_ORDERINGS:
+                for html in (False, True):
+                    path = api.index(ar, str(tmp_path / f"idx{one}"),
+                                     orderby=orderby, html=html, offline=html)
+                    with open(path, "rb") as f:
+                        got = f.read().decode("utf-8")
+                    assert got == _listing_twin(objs, orderby, html,
+                                                offline=html), \
+                        f"{orderby} html={html} one={one} diverges"
+                    files.setdefault((orderby, html), set()).add(got)
+        finally:
+            spark.conf.unset(coalesce)
+    assert all(len(v) == 1 for v in files.values())
+
+
 def test_listing_sink_job_budget_and_atomic_replace(spark, tmp_path,
                                                     jobs_launched,
                                                     monkeypatch):
-    """The sorted breakdown and a listing each stream from the driver
-    with no more Spark jobs than the collect-era writers launched on
-    this archive (4 and 3 at the parent commit).  A listing whose row
-    stream fails mid-file leaves the previous file byte-intact and no
-    ``.inprogress`` file behind."""
+    """Below the size gate, the sorted breakdown streams from one sorted
+    partition in 2 jobs (the aggregate's shuffle, then the rows) and a
+    listing in 1; with the gate shut, the range-partitioned sort takes
+    the collect-era writers' 4 and 3 (a range-sampling job and one more
+    exchange).  A listing whose row stream fails mid-file leaves the
+    previous file byte-intact and no ``.inprogress`` file behind."""
     from timesearch_spark.operators import exports
     from timesearch_spark.operators.breakdown import breakdown
 
@@ -1040,12 +1115,17 @@ def test_listing_sink_job_budget_and_atomic_replace(spark, tmp_path,
     out = str(tmp_path / "out")
     paths = []
     assert jobs_launched(lambda: paths.append(exports.write_breakdown(
-        bd, out, "t", sort="total_posts"))) <= 4
+        bd, out, "t", sort="total_posts"))) == 2
     assert jobs_launched(lambda: paths.append(
-        exports.write_index(subs, out, "t"))) <= 3
+        exports.write_index(subs, out, "t"))) == 1
     with open(paths[1], "rb") as f:
         before = f.read()
     assert before.count(b"\n") == 11
+    monkeypatch.setattr(exports, "_fits_one_partition", lambda df: False)
+    assert jobs_launched(lambda: exports.write_breakdown(
+        bd, out, "t", sort="total_posts")) == 4
+    assert jobs_launched(lambda: exports.write_index(subs, out, "t")) == 3
+    monkeypatch.undo()
 
     real = frame.toLocalIterator
 

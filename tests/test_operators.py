@@ -8,9 +8,12 @@ from __future__ import annotations
 
 from functools import partial
 
+import pytest
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from timesearch_spark.operators import exports
 from timesearch_spark.operators.breakdown import breakdown, breakdown_sorted
 from timesearch_spark.operators.exports import write_breakdown
 from timesearch_spark.operators.merge import anti_join_merge
@@ -142,12 +145,15 @@ _SORTS = ("name", "submissions", "comments", "total_posts")
 
 
 def _assert_reference_parity(spark, bd, out, case, sorts=_SORTS,
-                             coalesce=True):
+                             coalesce=True, one_partition=None):
     """Write ``bd`` once per sort and assert each file is byte-identical
     to the reference formatter over ``bd.collect()`` (the collect form).
     ``coalesce=False`` turns post-shuffle coalescing off, so the sorted
     rows stay in the sort's ordered range partitions and the file is
-    their concatenation, streamed one partition at a time."""
+    their concatenation, streamed one partition at a time.
+    ``one_partition`` forces the listing sort's size gate open (True:
+    one coalesced partition) or shut (False: the range sort); None
+    leaves it to the size estimate."""
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     results = {r["author"]: {"submissions": r["submissions"],
                              "comments": r["comments"]}
@@ -156,16 +162,20 @@ def _assert_reference_parity(spark, bd, out, case, sorts=_SORTS,
     if not coalesce:
         spark.conf.set(key, "false")
     try:
-        files = {}
-        for sort in sorts:
-            path = write_breakdown(bd, out, case, sort=sort,
-                                   key_name="author")
-            assert path == f"{out}/{case}_breakdown_{sort}.json"
-            ours = _read_export(path)
-            assert ours == _reference_breakdown_dump(results, sort), \
-                f"{case} sort={sort} diverges"
-            files[sort] = ours
-        return files
+        with pytest.MonkeyPatch.context() as mp:
+            if one_partition is not None:
+                mp.setattr(exports, "_fits_one_partition",
+                           lambda df: one_partition)
+            files = {}
+            for sort in sorts:
+                path = write_breakdown(bd, out, case, sort=sort,
+                                       key_name="author")
+                assert path == f"{out}/{case}_breakdown_{sort}.json"
+                ours = _read_export(path)
+                assert ours == _reference_breakdown_dump(results, sort), \
+                    f"{case} sort={sort} diverges"
+                files[sort] = ours
+            return files
     finally:
         spark.conf.set(key, prev)
 
@@ -180,12 +190,12 @@ def test_breakdown_pretty_byte_parity_with_reference_formatter(spark, tmp_path):
 
 
 def test_sharded_breakdown_concatenates_to_collect_form(spark, tmp_path):
-    """The sorted rows are range-partitioned by the sort; the driver
-    writer streams those shards in partition order into one file.  With
-    coalescing off the fixture spans several shards, and their
-    concatenation must equal the collect form byte for byte — the
-    no-trailing-comma last line and case-colliding tiebreaks included —
-    for every sort."""
+    """Above the size gate the sorted rows are range-partitioned by the
+    sort; the driver writer streams those shards in partition order
+    into one file.  With coalescing off the fixture spans several
+    shards, and their concatenation must equal the collect form byte
+    for byte — the no-trailing-comma last line and case-colliding
+    tiebreaks included — for every sort."""
     from timesearch_spark.operators.breakdown import breakdown_sorted
 
     bd = _breakdown_fixture(spark)
@@ -193,11 +203,46 @@ def test_sharded_breakdown_concatenates_to_collect_form(spark, tmp_path):
     prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        shards = breakdown_sorted(bd, "name", "author").rdd.glom().collect()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(exports, "_fits_one_partition", lambda df: False)
+            shards = breakdown_sorted(bd, "name", "author").rdd.glom().collect()
     finally:
         spark.conf.set(key, prev)
     assert sum(1 for s in shards if s) > 1
-    _assert_reference_parity(spark, bd, str(tmp_path), "t", coalesce=False)
+    _assert_reference_parity(spark, bd, str(tmp_path), "t", coalesce=False,
+                             one_partition=False)
+
+
+def _null_key_breakdown(spark):
+    return breakdown(
+        _subs(spark, [("t3_a", None, None, 1, 1), ("t3_b", None, None, 1, 2),
+                      ("t3_c", "amy", None, 1, 3)]),
+        _comments(spark, [("t1_a", "zed", "x", 1, 1)]),
+        key="author", key_name="author")
+
+
+def _empty_breakdown(spark):
+    return breakdown(
+        _subs(spark, [("t3_a", "amy", None, 1, 1)]).limit(0),
+        _comments(spark, [("t1_a", "amy", "x", 1, 1)]).limit(0),
+        key="author", key_name="author")
+
+
+def _unicode_breakdown(spark):
+    """A seeded 200-name breakdown (unicode, case collisions, count
+    ties) from 4-partition inputs."""
+    import random
+
+    rng = random.Random(10)
+    pool = ["bob", "Bob", "BOB", "ümläut", "Ümläut", "名前", "mixedCase",
+            "MIXEDcase", "space name", "tab\tname", "z" * 40]
+    names = [rng.choice(pool) + str(rng.randrange(60)) for _ in range(200)]
+    return breakdown(
+        _subs(spark, [(f"t3_{i}", n, None, 1, i)
+                      for i, n in enumerate(names)]).repartition(4),
+        _comments(spark, [(f"t1_{i}", n, "x", 1, i) for i, n in
+                          enumerate(rng.sample(names, 120))]).repartition(4),
+        key="author", key_name="author")
 
 
 def test_sharded_breakdown_null_key_parity(spark, tmp_path):
@@ -205,13 +250,9 @@ def test_sharded_breakdown_null_key_parity(spark, tmp_path):
     collect form's str(None) spelling), ordered nulls-first like
     breakdown_sorted, and the last-line comma marking neither mistakes
     it for nor misses the final row."""
-    bd = breakdown(
-        _subs(spark, [("t3_a", None, None, 1, 1), ("t3_b", None, None, 1, 2),
-                      ("t3_c", "amy", None, 1, 3)]),
-        _comments(spark, [("t1_a", "zed", "x", 1, 1)]),
-        key="author", key_name="author")
-    files = _assert_reference_parity(spark, bd, str(tmp_path), "n",
-                                     coalesce=False)
+    files = _assert_reference_parity(spark, _null_key_breakdown(spark),
+                                     str(tmp_path), "n", coalesce=False,
+                                     one_partition=False)
     assert files["name"].startswith('{\n    "None": {"submissions": 2')
     assert '"None"' in files["submissions"]
 
@@ -220,34 +261,36 @@ def test_sharded_breakdown_empty_archive_parity(spark, tmp_path):
     """A zero-key breakdown's file is ``{\\n`` + empty body + ``\\n}\\n``
     (a blank line between the braces), even though no row carries the
     blank line."""
-    bd = breakdown(
-        _subs(spark, [("t3_a", "amy", None, 1, 1)]).limit(0),
-        _comments(spark, [("t1_a", "amy", "x", 1, 1)]).limit(0),
-        key="author", key_name="author")
-    files = _assert_reference_parity(spark, bd, str(tmp_path), "e",
-                                     coalesce=False)
+    files = _assert_reference_parity(spark, _empty_breakdown(spark),
+                                     str(tmp_path), "e", coalesce=False,
+                                     one_partition=False)
     assert set(files.values()) == {"{\n\n}\n"}
 
 
 def test_sharded_breakdown_on_file_scheme_and_randomized_names(spark, tmp_path):
     """The writer works on a scheme:// root and stays byte-identical to
-    the collect form on a seeded 200-name fixture (unicode, case
-    collisions, count ties) from 4-partition inputs, with the streamed
-    rows crossing the sort's 8 uncoalesced partitions."""
-    import random
+    the collect form on the 200-name fixture, with the streamed rows
+    crossing the range sort's 8 uncoalesced partitions."""
+    _assert_reference_parity(spark, _unicode_breakdown(spark),
+                             f"file://{tmp_path}/exports", "r",
+                             coalesce=False, one_partition=False)
 
-    rng = random.Random(10)
-    pool = ["bob", "Bob", "BOB", "ümläut", "Ümläut", "名前", "mixedCase",
-            "MIXEDcase", "space name", "tab\tname", "z" * 40]
-    names = [rng.choice(pool) + str(rng.randrange(60)) for _ in range(200)]
-    bd = breakdown(
-        _subs(spark, [(f"t3_{i}", n, None, 1, i)
-                      for i, n in enumerate(names)]).repartition(4),
-        _comments(spark, [(f"t1_{i}", n, "x", 1, i) for i, n in
-                          enumerate(rng.sample(names, 120))]).repartition(4),
-        key="author", key_name="author")
-    _assert_reference_parity(spark, bd, f"file://{tmp_path}/exports", "r",
-                             coalesce=False)
+
+@pytest.mark.parametrize("fixture", [
+    _breakdown_fixture, _null_key_breakdown, _empty_breakdown,
+    _unicode_breakdown,
+])
+def test_breakdown_sort_arms_write_same_bytes(spark, tmp_path, fixture):
+    """Every sorted breakdown file is the same bytes, equal to the
+    collect form, whether the listing sort takes one coalesced
+    partition or the range-partitioned sort over several."""
+    bd = fixture(spark)
+    one = _assert_reference_parity(spark, bd, str(tmp_path / "one"), "b",
+                                   one_partition=True)
+    ranged = _assert_reference_parity(spark, bd, str(tmp_path / "range"),
+                                      "b", coalesce=False,
+                                      one_partition=False)
+    assert one == ranged
 
 
 # --- C1: anti-join merge (merge_db.py:7-12) ---------------------------------

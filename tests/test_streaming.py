@@ -71,6 +71,39 @@ def test_store_resume_lower_bound_overlap(spark, tmp_path):
     assert store.resume_lower_bound() == 899
 
 
+def test_snapshot_reused_until_commit(spark, tmp_path, monkeypatch):
+    """A store's full snapshot is built once per committed pointer: with
+    no commit between, the same DataFrame comes back and no reader is
+    built.  An empty store's snapshot is replaced after its first merge,
+    and a merge through another store object on the same path shows in
+    this one's next snapshot."""
+    from pyspark.sql import SparkSession
+
+    store = _store(spark, tmp_path)
+    empty = store.snapshot()
+    assert store.snapshot() is empty and empty.count() == 0
+    store.merge(spark.createDataFrame([_comment("t1_a", "v1")], COMMENT_COLS),
+                observed_at=1)
+    first = store.snapshot()
+    assert first is not empty and first.count() == 1
+
+    def no_reader(self):
+        raise AssertionError("snapshot() built a reader with no commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SparkSession, "read", property(no_reader))
+        assert store.snapshot() is first
+
+    other = _store(spark, tmp_path)
+    other.merge(spark.createDataFrame(
+        [_comment("t1_a", "v2"), _comment("t1_b", "new")], COMMENT_COLS),
+        observed_at=2)
+    again = store.snapshot()
+    assert again is not first
+    assert {(r["idstr"], r["body"]) for r in again.collect()} == \
+        {("t1_a", "v2"), ("t1_b", "new")}
+
+
 @pytest.mark.slow
 def test_livestream_end_to_end(spark, tmp_path):
     drop = tmp_path / "drop"

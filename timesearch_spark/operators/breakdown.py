@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from timesearch_spark.operators.exports import _sort_listing
+
 
 def breakdown(
     left: DataFrame,
@@ -82,20 +84,22 @@ def breakdown_sorted(
     right_name: str = "comments",
 ) -> DataFrame:
     """Reference's comparator sorts (breakdown.py:55-82): by name (lower),
-    or by -submissions / -comments / -total with lower(name) tiebreak."""
+    or by -submissions / -comments / -total with lower(name) tiebreak,
+    under the listing sort rule (exports._sort_listing)."""
     # exact-key final tiebreak: the reference's comparator ends at
     # lower(name) and leans on Python's stable sort for case-colliding
-    # names; Spark's orderBy is nondeterministic on full ties, so the
+    # names; Spark's sorts are nondeterministic on full ties, so the
     # tie is refined deterministically, so the exported file's bytes
-    # are reproducible on such names
+    # are reproducible on such names (and equal under either sort arm)
     exact_key = F.col(key_name).cast("string")
     lower_key = F.lower(exact_key)
     if sort == "name":
-        return bd.orderBy(lower_key.asc(), exact_key.asc())
+        return _sort_listing(bd, lower_key.asc(), exact_key.asc())
     cols = {"submissions": left_name, "comments": right_name,
             "total_posts": "total_posts"}
     if sort not in cols:
         raise ValueError(
             f"unknown sort {sort!r}: use name|{'|'.join(cols)}"
         )
-    return bd.orderBy(F.col(cols[sort]).desc(), lower_key.asc(), exact_key.asc())
+    return _sort_listing(bd, F.col(cols[sort]).desc(), lower_key.asc(),
+                         exact_key.asc())

@@ -22,7 +22,18 @@ own templates as they stream by.  Every file reaches storage through
 one atomic put, :func:`_put`: listings and breakdowns stream their
 ordered rows to it from the driver (``toLocalIterator``: one partition
 in driver memory at a time, since the *output contract* is one ordered
-file), and the per-thread pages are put from executor tasks."""
+file), and the per-thread pages are put from executor tasks.
+
+Listing sort rule (:func:`_sort_listing`, shared by index listings and
+sorted breakdowns): a frame whose optimizer size estimate (no job) is at
+most ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — the size AQE
+itself targets for one partition, 64 MB by default — is sorted in ONE
+coalesced partition, which skips the global sort's range-sampling job
+and exchange and leaves ``toLocalIterator`` one job; a larger frame
+keeps the range-partitioned ``orderBy``, so the driver never holds more
+than one bounded sort partition.  Every ordering is total (index rows
+end on ``idstr``, breakdown rows on the exact key), so both arms write
+the same bytes."""
 
 from __future__ import annotations
 
@@ -45,7 +56,8 @@ HTML_HEADER = (  # byte-exact index.py:22-36 incl. the triple-quote's leading \n
 HTML_FOOTER = "\n</body>\n</html>\n"  # index.py:38-40
 
 #: The five orderings of index.py:68-92 (F1/F3); each is (column factory,
-#: suffix) — factories because Columns need a live session.
+#: suffix) — factories because Columns need a live session.  Each ends
+#: on ``idstr`` (see :func:`index_lines`), so no two rows tie.
 INDEX_ORDERINGS = {
     "date": (lambda: [F.asc("created")], "_date"),
     "title": (lambda: [F.asc("title")], "_title"),
@@ -59,6 +71,26 @@ INDEX_ORDERINGS = {
         "_flair",
     ),
 }
+
+
+def _fits_one_partition(df: DataFrame) -> bool:
+    """Whether the optimizer's size estimate of ``df`` (plan statistics:
+    no job) is at most the session's advisory partition size."""
+    spark = df.sparkSession
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    return int(str(est)) <= limit  # est: a Scala BigInt or its int
+
+
+def _sort_listing(df: DataFrame, *cols) -> DataFrame:
+    """``df`` in ``cols`` order for a driver-streamed listing: one
+    coalesced partition when it fits one, else a range-partitioned
+    ``orderBy``.  ``cols`` must order totally, or the arms may disagree
+    on ties."""
+    if _fits_one_partition(df):
+        return df.coalesce(1).sortWithinPartitions(*cols)
+    return df.orderBy(*cols)
 
 
 def _link_col(offline: bool):
@@ -76,9 +108,11 @@ def index_lines(
     html: bool = False,
     offline: bool = False,
 ) -> DataFrame:
-    """The listing as a one-column ('line') DataFrame in final order."""
+    """The listing as a one-column ('line') DataFrame in final order;
+    rows tied on the ordering's key follow ``idstr``."""
     order_cols, _ = INDEX_ORDERINGS[orderby]
-    df = submissions.filter(F.col("score") >= score_threshold).orderBy(*order_cols())
+    df = _sort_listing(submissions.filter(F.col("score") >= score_threshold),
+                      *order_cols(), F.asc("idstr"))
 
     link = _link_col(offline)
     author = F.col("author")

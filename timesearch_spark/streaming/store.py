@@ -138,6 +138,8 @@ class ParquetMergeStore:
         # were written with.
         self.n_buckets = int(self._pointer().get("n_buckets", n_buckets))
         self._fs.mkdirs(path)
+        # (pointer, DataFrame) of the last full snapshot() — see there
+        self._snap = None
 
     def _lease(self):
         """Writer lease (or a no-op guard when leasing is off)."""
@@ -275,8 +277,25 @@ class ParquetMergeStore:
 
     def snapshot(self, buckets: list[int] | None = None) -> DataFrame:
         """Current table state; pass ``buckets`` to read a pruned subset
-        (the merge path does — that's the partition-pruning win)."""
-        paths = self._live_paths(buckets)
+        (the merge path does — that's the partition-pruning win).
+
+        The full snapshot is built once per committed pointer: while
+        ``LATEST`` reads the same as when this store last built it, the
+        same DataFrame comes back (no reader, no directory listing).
+        Any commit, by this or another store object on the path,
+        rewrites the pointer (``committed_at`` at least), so the next
+        call reads the new state.  Reuse is safe because version
+        directories are write-once and ``vacuum`` removes only those
+        the pointer no longer references.  Two calls with no commit
+        between share attribute ids, like one DataFrame used twice."""
+        if buckets is None:
+            ptr = self._pointer()
+            if self._snap is None or self._snap[0] != ptr:
+                self._snap = (ptr, self._read(self._live_paths()))
+            return self._snap[1]
+        return self._read(self._live_paths(buckets))
+
+    def _read(self, paths: list[str]) -> DataFrame:
         if not paths:
             return self._empty()
         # declared schema: no footer-inference job per read
