@@ -202,11 +202,13 @@ def test_markdown_code_spans_stay_literal():
 def test_sqlexpr_round_trips_adversarial_names_and_literals(spark):
     """Names and values spliced into SQL text through ``sqlexpr`` parse
     back as themselves: backticks, quotes, backslashes, dots, comment
-    openers and the vandalism markers the upsert splices as literals."""
+    openers, the vandalism markers the upsert splices as literals and the
+    stopwords the text profile splices."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from timesearch_spark.functions.sqlexpr import ident, lit
+    from timesearch_spark.operators.textstats import STOPWORDS
     from timesearch_spark.operators.upsert import GREASY
 
     tricky = st.sampled_from([
@@ -228,3 +230,9 @@ def test_sqlexpr_round_trips_adversarial_names_and_literals(spark):
         assert list(df.first()) == [v for _, v in pairs]
 
     check()
+
+    # every stopword text_profile_table splices into its IN lists
+    words = sorted({w for ws in STOPWORDS.values() for w in ws})
+    row = spark.range(1).selectExpr(
+        f"array({', '.join(map(lit, words))}) AS w").first()
+    assert row["w"] == words

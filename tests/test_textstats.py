@@ -105,6 +105,19 @@ def test_profile_table_total_on_empty_docs(spark):
     assert rows[4]["top_bigram_frac"] is None
 
 
+def test_profile_table_quotes_column_names(spark):
+    """The profile splices its column names into SQL text through
+    ``sqlexpr.ident``: a text column whose name holds a backtick profiles
+    exactly like the same column under a plain name."""
+    rows = [(1, "the cat sat on the mat"), (2, "a `quoted` line\nagain"),
+            (3, "")]
+    plain = spark.createDataFrame(rows, "doc_id long, text string")
+    odd = plain.withColumnRenamed("text", "my `text`")
+    want = sorted(tx.text_profile_table(plain).collect())
+    got = sorted(tx.text_profile_table(odd, text_col="my `text`").collect())
+    assert got == want
+
+
 # --- unigram-LM perplexity filter (CCNet-style) --------------------------------
 
 def test_unigram_lm_matches_pure_python_twin(spark):
@@ -678,3 +691,12 @@ def test_html_to_text_adversarial_real_world_fragments(spark):
            df.select("i", html_to_text("html").alias("t")).collect()}
     for i, (h, want) in enumerate(fixtures):
         assert got[i] == want, (h, got[i], want)
+
+
+def test_qclf_hash_family_has_one_spelling(spark):
+    """The feature hash families are spelled as in dedup and corpus:
+    "xxhash64" and "md5"; any other name raises."""
+    for family in ("xxhash64", "md5"):
+        tx._qclf_feature_idx("t", 16, hash_family=family)
+    with pytest.raises(ValueError, match="unknown hash_family"):
+        tx._qclf_feature_idx("t", 16, hash_family="xx64")

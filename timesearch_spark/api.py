@@ -37,11 +37,7 @@ from timesearch_spark.operators.merge import anti_join_merge
 from timesearch_spark.operators.trees import THREAD_ID, render_thread_pages
 from timesearch_spark.session import side_by_side
 from timesearch_spark.sources import ndjson as _ndjson
-from timesearch_spark.sources.paginated import (
-    RateLimiter,
-    enrichment_interleave,
-    paginate,
-)
+from timesearch_spark.sources.paginated import enrichment_interleave, paginate
 from timesearch_spark.streaming import livestream as _ls
 from timesearch_spark.streaming.store import ParquetMergeStore
 
@@ -69,12 +65,11 @@ class Archive:
 # --- historical ingest (timesearch.py get_submissions/get_comments) ----------
 
 def _ingest_paginated(archive, fetch_page, canonicalize, store, lower,
-                      page_size, limiter, lookup, augmented_from=None,
-                      upper=None):
+                      page_size, lookup, augmented_from=None, upper=None):
     if lower == "update":  # get_submissions.py:52-59
         lower = store.resume_lower_bound(augmented_submissions=augmented_from)
     pages = paginate(fetch_page, lower=lower or 0, upper=upper,
-                     page_size=page_size, limiter=limiter)
+                     page_size=page_size)
     raw_schema = schemas.RAW_NDJSON
     extra_cols: tuple = ()
     if lookup is not None:
@@ -106,21 +101,19 @@ def _ingest_paginated(archive, fetch_page, canonicalize, store, lower,
 
 def get_submissions(archive: Archive, fetch_page, lower="update",
                     upper: int | None = None,
-                    page_size: int = 1000, limiter: RateLimiter | None = None,
-                    lookup=None) -> int:
+                    page_size: int = 1000, lookup=None) -> int:
     """Historical submission backfill (§3.1): keyset pages → enrichment →
     MERGE.  ``fetch_page(after, before, limit)`` abstracts the remote API;
     ``upper`` is the reference's -up exclusive bound (timesearch.py:563-570)."""
     return _ingest_paginated(
         archive, fetch_page, _ndjson.submissions_from_raw,
-        archive.submissions, lower, page_size, limiter, lookup,
+        archive.submissions, lower, page_size, lookup,
         upper=upper,
     )
 
 
 def get_comments(archive: Archive, fetch_page, lower="update",
                  upper: int | None = None,
-                 page_size: int = 1000, limiter: RateLimiter | None = None,
                  lookup=None, specific_submission: str | None = None,
                  observed_at: int | None = None) -> int:
     """Comment backfill (get_comments.py:7-102).
@@ -155,7 +148,7 @@ def get_comments(archive: Archive, fetch_page, lower="update",
         archive, fetch_page, canonicalize,
         archive.comments,
         0 if specific_submission is not None else lower,
-        page_size, limiter, lookup,
+        1000, lookup,
         augmented_from=archive.submissions.snapshot(),
         upper=upper,
     )

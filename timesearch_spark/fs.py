@@ -430,16 +430,14 @@ class WriterLease:
         self,
         fs,
         dir_path: str,
-        owner: str | None = None,
         timeout_sec: float = 120.0,
-        ttl_sec: float = 600.0,
         poll_sec: float = 0.25,
     ):
         self._fs = fs
         self.path = dir_path.rstrip("/") + "/_writer.lease"
-        self.owner = owner or uuid.uuid4().hex
+        self.owner = uuid.uuid4().hex
         self.timeout_sec = timeout_sec
-        self.ttl_sec = ttl_sec
+        self.ttl_sec = 600.0
         self.poll_sec = poll_sec
 
     @classmethod

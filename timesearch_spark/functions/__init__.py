@@ -155,6 +155,6 @@ def sanitize_braces(col) -> Column:
 
 # --- H16: [DELETED]/null author display (index.py:142-146) ------------------
 
-def author_display(col, sentinel: str = "[DELETED]") -> Column:
+def author_display(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(sentinel))
+    return F.coalesce(c, F.lit("[DELETED]"))

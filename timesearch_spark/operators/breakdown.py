@@ -80,8 +80,6 @@ def breakdown_sorted(
     bd: DataFrame,
     sort: str,
     key_name: str,
-    left_name: str = "submissions",
-    right_name: str = "comments",
 ) -> DataFrame:
     """Reference's comparator sorts (breakdown.py:55-82): by name (lower),
     or by -submissions / -comments / -total with lower(name) tiebreak,
@@ -95,11 +93,10 @@ def breakdown_sorted(
     lower_key = F.lower(exact_key)
     if sort == "name":
         return _sort_listing(bd, lower_key.asc(), exact_key.asc())
-    cols = {"submissions": left_name, "comments": right_name,
-            "total_posts": "total_posts"}
+    cols = ("submissions", "comments", "total_posts")
     if sort not in cols:
         raise ValueError(
             f"unknown sort {sort!r}: use name|{'|'.join(cols)}"
         )
-    return _sort_listing(bd, F.col(cols[sort]).desc(), lower_key.asc(),
+    return _sort_listing(bd, F.col(sort).desc(), lower_key.asc(),
                          exact_key.asc())

@@ -41,7 +41,7 @@ def tokens(col) -> Column:
     return F.filter(F.split(F.lower(F.trim(_c(col))), r"\s+"), lambda x: x != "")
 
 
-def shingles(col, k: int = 3) -> Column:
+def shingles(col) -> Column:
     """k-word shingles as strings; documents shorter than k words yield
     their whole token join as the single shingle.
 
@@ -56,10 +56,10 @@ def shingles(col, k: int = 3) -> Column:
     t = tokens(col)
     n = F.size(t)
     grams = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.array_join(F.slice(t, i, k), " "),
+        F.sequence(F.lit(1), n - 2),
+        lambda i: F.array_join(F.slice(t, i, 3), " "),
     )
-    return F.when(n >= k, grams).otherwise(F.array(F.array_join(t, " ")))
+    return F.when(n >= 3, grams).otherwise(F.array(F.array_join(t, " ")))
 
 
 def shingles_from(tok_col, k: int = 3) -> Column:
@@ -111,14 +111,13 @@ def jaccard(a, b) -> Column:
 
 def exact_dedup_groups(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    normalize: bool = True,
 ) -> DataFrame:
     """Duplicate groups by content hash: (content_hash, keeper_id, dup_count).
     The shuffle key is the 32-char md5, not the document text."""
     # coalesce: null text = empty text (engine-wide policy) — md5(NULL)
     # is NULL and a null hash never groups/joins, silently losing docs
     txt = F.coalesce(_c(text_col), F.lit(""))
-    t = F.lower(F.trim(txt)) if normalize else txt
+    t = F.lower(F.trim(txt))
     return (
         df.select(F.md5(t).alias("content_hash"), _c(id_col).alias(id_col))
         .groupBy("content_hash")
@@ -162,8 +161,6 @@ def incremental_dedup(
     batch: DataFrame,
     corpus: DataFrame | None = None,
     index: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Cross-run exact dedup: tag each batch document against an
     already-ingested corpus without re-processing the corpus — the
@@ -189,21 +186,21 @@ def incremental_dedup(
     if (corpus is None) == (index is None):
         raise ValueError("pass exactly one of corpus= or index=")
     if index is None:
-        index = fingerprint_index(corpus, text_col, id_col)
-    b = batch.select(_c(id_col).alias(id_col), _whitespace_fp(text_col).alias("fp"))
-    first = b.groupBy("fp").agg(F.min(id_col).alias("__first"))
+        index = fingerprint_index(corpus, "text", "doc_id")
+    b = batch.select(_c("doc_id").alias("doc_id"), _whitespace_fp("text").alias("fp"))
+    first = b.groupBy("fp").agg(F.min("doc_id").alias("__first"))
     return (
         b.join(index, on="fp", how="left")
         .join(first, on="fp")
         .select(
-            id_col,
+            "doc_id",
             "fp",
-            (F.col("keeper").isNull() & (F.col(id_col) == F.col("__first"))).alias(
+            (F.col("keeper").isNull() & (F.col("doc_id") == F.col("__first"))).alias(
                 "is_new"
             ),
             F.coalesce(
                 "keeper",
-                F.when(F.col(id_col) != F.col("__first"), F.col("__first")),
+                F.when(F.col("doc_id") != F.col("__first"), F.col("__first")),
             ).alias("dup_of"),
         )
     )
@@ -362,7 +359,6 @@ def minhash_near_dups(
     threshold: float = 0.7,
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_k: int = 3,
     hash_family: str = "xxhash64",
     tok_col: str | None = None,
 ) -> DataFrame:
@@ -379,7 +375,7 @@ def minhash_near_dups(
     feed both the banding and the verify without re-tokenizing; output
     is identical by construction."""
     buckets = minhash_band_buckets(
-        df, text_col, id_col, num_hashes, bands, shingle_k, hash_family,
+        df, text_col, id_col, num_hashes, bands, 3, hash_family,
         tok_col=tok_col,
     )
 
@@ -419,8 +415,8 @@ def minhash_near_dups(
                 toka.alias("__toka"),
                 tokb.alias("__tokb"))
         .select("a", "b",
-                shingles_from("__toka", shingle_k).alias("sha"),
-                shingles_from("__tokb", shingle_k).alias("shb"))
+                shingles_from("__toka", 3).alias("sha"),
+                shingles_from("__tokb", 3).alias("shb"))
     )
     # The threshold filter must NOT push through these projections into
     # the join condition: predicate pushdown substitutes the aliases, so
@@ -766,8 +762,6 @@ def _simhash_chunks(sh_col, max_hamming: int):
 
 def simhash_near_dups(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
@@ -778,15 +772,15 @@ def simhash_near_dups(
     same-chunk-value pairs (a shuffle on 16-bit chunk keys), then verified
     with bit_count.  No cross product.  ``hash_family`` as in
     :func:`simhash_table`."""
-    h = simhash_table(df, text_col, id_col, hash_family)
+    h = simhash_table(df, "text", "doc_id", hash_family)
     exploded = h.select(
-        id_col,
+        "doc_id",
         "sh",
         F.explode(_simhash_chunks("sh", max_hamming)).alias("cv"),
-    ).select(id_col, "sh", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
+    ).select("doc_id", "sh", F.col("cv.chunk").alias("chunk"), F.col("cv.val").alias("val"))
 
-    a = exploded.select("chunk", "val", F.col(id_col).alias("a"), F.col("sh").alias("sha"))
-    b = exploded.select("chunk", "val", F.col(id_col).alias("b"), F.col("sh").alias("shb"))
+    a = exploded.select("chunk", "val", F.col("doc_id").alias("a"), F.col("sh").alias("sha"))
+    b = exploded.select("chunk", "val", F.col("doc_id").alias("b"), F.col("sh").alias("shb"))
     return (
         a.join(b, on=["chunk", "val"])
         .filter(F.col("a") < F.col("b"))
@@ -934,9 +928,6 @@ def connected_components(
     nodes: DataFrame | None,
     edges: DataFrame,
     id_col: str = "doc_id",
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iter: int = 25,
     small_graph_max_edges: int = 1_000_000,
     small_graph_max_bytes: int = 64 << 20,
     checkpoint_dir: str | None = None,
@@ -976,7 +967,7 @@ def connected_components(
       round every node takes the min of its own label and its
       neighbors' (one shuffle join + one partial-agg'd min per round);
       rounds needed = graph diameter.  Near-dup graphs are clique-like,
-      so the loop converges in a handful of rounds; ``max_iter`` guards
+      so the loop converges in a handful of rounds; a 25-round cap guards
       pathological chains.  Labels are checkpointed per round to
       truncate the growing join lineage — ``localCheckpoint`` by
       default, or a RELIABLE checkpoint into ``checkpoint_dir`` (any
@@ -1007,8 +998,8 @@ def connected_components(
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(_c(a_col).alias("src"), _c(b_col).alias("dst")),
-                    F.struct(_c(b_col).alias("src"), _c(a_col).alias("dst")),
+                    F.struct(_c("a").alias("src"), _c("b").alias("dst")),
+                    F.struct(_c("b").alias("src"), _c("a").alias("dst")),
                 )
             ).alias("__e")
         )
@@ -1098,7 +1089,7 @@ def connected_components(
                 F.coalesce("__cc", "id").alias("component"),
             )
     lbl = ckpt(node_ids.withColumn("label", F.col("id")))
-    for _ in range(max_iter):
+    for _ in range(25):
         nb = (
             sym.join(lbl.withColumnRenamed("id", "dst"), "dst")
             .groupBy("src")
@@ -1128,11 +1119,8 @@ def connected_components(
 def dedup_cluster_assignments(
     df: DataFrame,
     block_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.5,
     n: int = 1,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, cluster_id, is_keeper): end-to-end near-dup clustering — the
     top rung of the dedup ladder.  Pairs from blocked exact n-gram
@@ -1142,7 +1130,7 @@ def dedup_cluster_assignments(
     cluster, transitively closed (a~b, b~c keeps one of {a,b,c} even when
     a!~c directly — pair-wise dedup alone cannot decide that case)."""
     raw_pairs = ngram_jaccard_pairs(
-        df, block_col=block_col, text_col=text_col, id_col=id_col,
+        df, block_col=block_col, text_col="text", id_col="doc_id",
         threshold=threshold, n=n,
     )
     pairs = raw_pairs.select("a", "b")
@@ -1151,14 +1139,14 @@ def dedup_cluster_assignments(
     # labels over the (at scale, vastly larger) untouched corpus buys
     # nothing — join the subgraph's labels back and default the rest
     comp = connected_components(
-        None, pairs, id_col=id_col, checkpoint_dir=checkpoint_dir
+        None, pairs
     )
-    labeled = df.select(_c(id_col).alias(id_col)).join(comp, id_col, "left")
-    cluster = F.coalesce(F.col("component"), F.col(id_col))
+    labeled = df.select(_c("doc_id").alias("doc_id")).join(comp, "doc_id", "left")
+    cluster = F.coalesce(F.col("component"), F.col("doc_id"))
     out = labeled.select(
-        id_col,
+        "doc_id",
         cluster.alias("cluster_id"),
-        (cluster == F.col(id_col)).alias("is_keeper"),
+        (cluster == F.col("doc_id")).alias("is_keeper"),
     )
     out._pinned = list(getattr(raw_pairs, "_pinned", []))
     return out
@@ -1356,12 +1344,11 @@ def remove_repeated_spans(
     id_col: str = "doc_id",
     n: int = 50,
     stride: int | None = None,
-    min_occurrences: int = 2,
 ) -> DataFrame:
     """Repeated-span removal at token-window granularity — the
     practical Spark approximation of exact-substring dedup ("one in
     every epoch" duplication, Lee et al. 2021): any ``n``-token window
-    whose normalized fingerprint occurs ``min_occurrences``+ times in
+    whose normalized fingerprint occurs 2+ times in
     the corpus is removed from every occurrence EXCEPT one winner (the
     lowest (doc, position) — content survives exactly once), and each
     document's remaining tokens are reassembled in order.
@@ -1450,7 +1437,7 @@ def remove_repeated_spans(
             F.count("*").alias("__n_occ"),
             F.min(F.struct(id_col, "__start")).alias("__win"),
         )
-        .filter(F.col("__n_occ") >= min_occurrences)
+        .filter(F.col("__n_occ") >= 2)
         .select("__fp", "__win")
     )
     # One pass splits each repeated occurrence into dropped spans and
@@ -1647,18 +1634,15 @@ def band_buckets_from_sig_table(
 
 def minhash_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """The persisted artifacts of incremental NEAR-dup dedup, the minhash
     analog of ``fingerprint_index``: ``(buckets, sigs)`` where buckets =
     (band, bucket, keeper) — store partitioned/bucketed by (band, bucket)
     so probes are co-located — and sigs = (keeper, sig array<long>).
-    Together ~ (bands + num_hashes) longs per corpus doc: the corpus text
-    is never re-read by later batches.
+    Together 80 longs (16 bands + 64 hashes, 3-word shingles) per corpus
+    doc: the corpus text is never re-read by later batches.  The batch
+    side (:func:`incremental_minhash_dedup`) uses the same fixed
+    constants, so an index always matches its probes.
 
     Both artifacts derive from ONE materialized signature pass (the
     wide min-aggregate) — the banding fold reuses the pinned mins
@@ -1670,14 +1654,14 @@ def minhash_index(
     must ``release_pins`` after consuming them or the per-batch caches
     accumulate for the session lifetime."""
     sig_tbl = minhash_signature_table(
-        df, text_col, id_col, num_hashes, shingle_k
+        df, "text", "doc_id", 64, 3
     ).persist()
     buckets = band_buckets_from_sig_table(
-        sig_tbl, id_col, num_hashes, bands
-    ).select("band", "bucket", F.col(id_col).alias("keeper"))
+        sig_tbl, "doc_id", 64, 16
+    ).select("band", "bucket", F.col("doc_id").alias("keeper"))
     sigs = sig_tbl.selectExpr(
-        f"`{id_col}` AS keeper",
-        "array(" + ", ".join(f"mh{i}" for i in range(num_hashes))
+        "`doc_id` AS keeper",
+        "array(" + ", ".join(f"mh{i}" for i in range(64))
         + ") AS sig",
     )
     buckets._pinned = [sig_tbl]
@@ -1689,12 +1673,7 @@ def incremental_minhash_dedup(
     batch: DataFrame,
     index_buckets: DataFrame,
     index_sigs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.7,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Tag each batch document against an already-ingested corpus's
     minhash index WITHOUT re-reading the corpus — cross-run near-dup
@@ -1718,18 +1697,18 @@ def incremental_minhash_dedup(
     # one signature pass over the batch feeds both probe artifacts: the
     # banding fold derives from the persisted wide mins
     # (band_buckets_from_sig_table — bucket values identical to the
-    # minhash_band_buckets xx64 family), instead of re-exploding the
+    # minhash_band_buckets xxhash64 family), instead of re-exploding the
     # batch text a second time.  The result carries the handle in
     # ``_pinned``: loop callers release_pins after consuming
     sig_tbl = minhash_signature_table(
-        batch, text_col, id_col, num_hashes, shingle_k
+        batch, "text", "doc_id", 64, 3
     ).persist()
     b_buckets = band_buckets_from_sig_table(
-        sig_tbl, id_col, num_hashes, bands
-    ).select("band", "bucket", F.col(id_col).alias("__bid"))
+        sig_tbl, "doc_id", 64, 16
+    ).select("band", "bucket", F.col("doc_id").alias("__bid"))
     b_sigs = sig_tbl.selectExpr(
-        f"`{id_col}` AS __bid",
-        "array(" + ", ".join(f"mh{i}" for i in range(num_hashes))
+        "`doc_id` AS __bid",
+        "array(" + ", ".join(f"mh{i}" for i in range(64))
         + ") AS __bsig",
     )
     cand = (
@@ -1740,7 +1719,7 @@ def incremental_minhash_dedup(
     est = F.expr(
         "CAST(aggregate(zip_with(__bsig, sig, "
         "(a, b) -> CASE WHEN a = b THEN 1 ELSE 0 END), 0, "
-        f"(acc, x) -> acc + x) AS DOUBLE) / {num_hashes}"
+        "(acc, x) -> acc + x) AS DOUBLE) / 64"
     )
     verified = (
         cand.join(b_sigs, on="__bid")
@@ -1752,10 +1731,10 @@ def incremental_minhash_dedup(
         F.min_by(F.struct("keeper", "__est"), F.col("keeper")).alias("__w")
     )
     out = (
-        batch.select(_c(id_col).alias(id_col))
-        .join(best.withColumnRenamed("__bid", id_col), id_col, "left")
+        batch.select(_c("doc_id").alias("doc_id"))
+        .join(best.withColumnRenamed("__bid", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("__w").isNull().alias("is_new"),
             F.col("__w.keeper").alias("dup_of"),
             F.round(F.col("__w.__est"), 6).alias("est_jaccard"),
@@ -1767,8 +1746,6 @@ def incremental_minhash_dedup(
 
 def simhash_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
 ) -> DataFrame:
     """The persisted SimHash artifact for incremental near-dup tagging:
@@ -1776,9 +1753,9 @@ def simhash_index(
     doc (max_hamming+1 rows/doc), stored partitioned by (chunk, val) so
     batch probes prune.  Carries the full 64-bit signature so Hamming
     verification needs no second relation."""
-    h = simhash_table(df, text_col, id_col, "xxhash64")
+    h = simhash_table(df, "text", "doc_id", "xxhash64")
     return h.select(
-        F.col(id_col).alias("keeper"),
+        F.col("doc_id").alias("keeper"),
         F.col("sh"),
         F.explode(_simhash_chunks("sh", max_hamming)).alias("cv"),
     ).select(
@@ -1790,8 +1767,6 @@ def simhash_index(
 def incremental_simhash_dedup(
     batch: DataFrame,
     index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
 ) -> DataFrame:
     """Tag a batch against a persisted ``simhash_index`` without
@@ -1807,9 +1782,9 @@ def incremental_simhash_dedup(
     candidate.  ``max_hamming`` is part of the INDEX LAYOUT: the probe's
     chunking must equal the value the index was built with, or chunk
     keys don't line up and nothing matches."""
-    bh = simhash_table(batch, text_col, id_col, "xxhash64")
+    bh = simhash_table(batch, "text", "doc_id", "xxhash64")
     probes = bh.select(
-        F.col(id_col).alias("__bid"),
+        F.col("doc_id").alias("__bid"),
         F.col("sh").alias("__bsh"),
         F.explode(_simhash_chunks("sh", max_hamming)).alias("cv"),
     ).select("__bid", "__bsh", F.col("cv.chunk").alias("chunk"),
@@ -1825,10 +1800,10 @@ def incremental_simhash_dedup(
         F.min_by(F.struct("keeper", "hamming"), F.col("keeper")).alias("__w")
     )
     return (
-        batch.select(_c(id_col).alias(id_col))
-        .join(best.withColumnRenamed("__bid", id_col), id_col, "left")
+        batch.select(_c("doc_id").alias("doc_id"))
+        .join(best.withColumnRenamed("__bid", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("__w").isNull().alias("is_new"),
             F.col("__w.keeper").alias("dup_of"),
             F.col("__w.hamming").alias("hamming"),

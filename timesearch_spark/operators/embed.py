@@ -122,8 +122,6 @@ def semantic_dedup(
     docs: DataFrame,
     threshold: float = 0.9,
     dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     method: str = "lsh",
     model: Callable[[list], "object"] | None = None,
 ) -> DataFrame:
@@ -136,10 +134,10 @@ def semantic_dedup(
     shingle set misses."""
     from timesearch_spark.operators.similarity import embedding_dedup_clusters
 
-    emb = embed_documents(docs, dim, text_col, id_col, model=model)
+    emb = embed_documents(docs, dim, "text", "doc_id", model=model)
     out = embedding_dedup_clusters(emb, threshold=threshold, method=method)
     return out.select(
-        F.col("vec_id").alias(id_col), "cluster_id", "is_keeper"
+        F.col("vec_id").alias("doc_id"), "cluster_id", "is_keeper"
     )
 
 
@@ -148,8 +146,6 @@ def semantic_decontaminate(
     benchmark: DataFrame,
     threshold: float = 0.9,
     dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     model: Callable[[list], "object"] | None = None,
     max_benchmark_rows: int = 200_000,
 ) -> DataFrame:
@@ -173,7 +169,7 @@ def semantic_decontaminate(
     past the limit — a caller who swaps the corpus and benchmark
     arguments gets that message, not a driver OOM.
 
-    Returns (``id_col``, bench_id, cos) hit pairs; anti-join the ids to
+    Returns (doc_id, bench_id, cos) hit pairs; anti-join the ids to
     drop contaminated documents."""
     import numpy as np
 
@@ -184,9 +180,9 @@ def semantic_decontaminate(
         query_matrix_state,
     )
 
-    id_t = _id_dtype(docs, id_col)
-    bench_id_t = _id_dtype(benchmark, id_col)
-    out_schema = f"{id_col} {id_t}, bench_id {bench_id_t}, cos double"
+    id_t = _id_dtype(docs, "doc_id")
+    bench_id_t = _id_dtype(benchmark, "doc_id")
+    out_schema = f"doc_id {id_t}, bench_id {bench_id_t}, cos double"
 
     # the benchmark embeds DRIVER-side: it is being collected into the
     # broadcast matrix anyway, so a Spark embed job just to collect its
@@ -194,7 +190,7 @@ def semantic_decontaminate(
     # from cosine_topk_lsh).  limit(max+1) bounds the transfer BEFORE
     # materialization — the check itself can never OOM.
     brows = (
-        benchmark.select(F.col(id_col), F.col(text_col))
+        benchmark.select(F.col("doc_id"), F.col("text"))
         .limit(max_benchmark_rows + 1)
         .collect()
     )
@@ -208,11 +204,11 @@ def semantic_decontaminate(
         )
     if not brows:
         return docs.sparkSession.createDataFrame([], out_schema)
-    Bm = _embed_matrix([r[text_col] for r in brows], dim, model)
+    Bm = _embed_matrix([r["text"] for r in brows], dim, model)
     Qm, qids, qnorm = query_matrix_state(
-        [(r[id_col], list(Bm[i])) for i, r in enumerate(brows)]
+        [(r["doc_id"], list(Bm[i])) for i, r in enumerate(brows)]
     )
-    corpus_emb = embed_documents(docs, dim, text_col, id_col, model=model)
+    corpus_emb = embed_documents(docs, dim, "text", "doc_id", model=model)
 
     def score(batches):
         import pandas as pd
@@ -232,7 +228,7 @@ def semantic_decontaminate(
                     out_bench.extend([qids[m]] * int(hit.sum()))
                     out_cos.extend(_round6(float(c)) for c in cos[hit])
             yield pd.DataFrame(
-                {id_col: out_ids, "bench_id": out_bench, "cos": out_cos}
+                {"doc_id": out_ids, "bench_id": out_bench, "cos": out_cos}
             )
 
     return corpus_emb.mapInPandas(score, out_schema)

@@ -45,7 +45,6 @@ def cluster_write(
     path: str,
     cluster_cols: list[str],
     num_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` to ``path`` as parquet, range-clustered on
     ``cluster_cols``: one range-exchange (sampled bounds → balanced
@@ -57,7 +56,7 @@ def cluster_write(
         if num_files
         else df.repartitionByRange(*cluster_cols)
     )
-    parts.sortWithinPartitions(*cluster_cols).write.mode(mode).parquet(path)
+    parts.sortWithinPartitions(*cluster_cols).write.mode("overwrite").parquet(path)
 
 
 def layout_stats(path: str, column: str, spark=None) -> list[tuple]:
@@ -88,10 +87,9 @@ def layout_stats(path: str, column: str, spark=None) -> list[tuple]:
     return out
 
 
-def clustering_quality(path: str, column: str, probes: int = 64,
-                       spark=None) -> float:
+def clustering_quality(path: str, column: str, spark=None) -> float:
     """Average fraction of row groups a point predicate on ``column``
-    must read, estimated over ``probes`` evenly-spaced values across the
+    must read, estimated over 64 evenly-spaced values across the
     observed domain.  Lower is better: 1/n_groups is perfect clustering,
     ~1.0 means every row group spans the domain (no pruning possible)."""
     stats = layout_stats(path, column, spark=spark)
@@ -102,10 +100,10 @@ def clustering_quality(path: str, column: str, probes: int = 64,
     if hi == lo:
         return 1.0
     hits = 0
-    for i in range(probes):
-        v = lo + (hi - lo) * i / (probes - 1)
+    for i in range(64):
+        v = lo + (hi - lo) * i / 63
         hits += sum(1 for mn, mx, _ in stats if mn <= v <= mx)
-    return hits / (probes * len(stats))
+    return hits / (64 * len(stats))
 
 
 def _quantile_bucket(col: str, bounds: list[float]):
@@ -138,8 +136,6 @@ def zorder_write(
     path: str,
     cols: list[str],
     num_files: int = 16,
-    bits: int = 8,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` Z-ORDER clustered on two columns: each file covers a
     small square of the 2-D key space instead of a slab of one
@@ -158,19 +154,19 @@ def zorder_write(
     reuse boundaries from a previous run instead of resampling."""
     if len(cols) != 2:
         raise ValueError("zorder_write interleaves exactly 2 columns")
-    n_buckets = 1 << bits
+    n_buckets = 1 << 8
     probs = [i / n_buckets for i in range(1, n_buckets)]
     qa, qb = df.approxQuantile(
         [cols[0], cols[1]], probs, 0.001
     )
     b1 = _quantile_bucket(cols[0], qa)
     b2 = _quantile_bucket(cols[1], qb)
-    with_z = df.withColumn("__z", _interleave_bits(b1, b2, bits))
+    with_z = df.withColumn("__z", _interleave_bits(b1, b2, 8))
     (
         with_z.repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

@@ -125,12 +125,11 @@ def media_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def filter_media(media: DataFrame, kinds=("image",), min_bytes: int = 1,
-                 max_bytes: int = 64 * 1024 * 1024) -> DataFrame:
+def filter_media(media: DataFrame, kinds=("image",)) -> DataFrame:
     """Metadata gate before any decode: kind/mime allowlist + size band."""
     return media.filter(
         F.col("kind").isin(*kinds)
-        & F.octet_length("payload").between(min_bytes, max_bytes)
+        & F.octet_length("payload").between(1, 64 * 1024 * 1024)
     )
 
 

@@ -88,29 +88,26 @@ def train_val_test_split(
 
 def pack_sequences(
     df: DataFrame,
-    block_col: str = "source",
-    order_col: str = "doc_id",
-    text_col: str = "text",
     budget: int = 2048,
 ) -> DataFrame:
     """Assign documents to fixed-token-budget training chunks.
 
-    Contiguous greedy packing: within a block documents are laid out in
-    ``order_col`` order and a chunk boundary falls wherever the running
+    Contiguous greedy packing: within a block (a ``source``) documents
+    are laid out in ``doc_id`` order and a chunk boundary falls wherever the running
     token total crosses ``budget`` — i.e. ``chunk_id = floor(tokens
     before this doc / budget)``.  A document that straddles a boundary
     belongs to the chunk it starts in (its chunk overflows rather than
     splitting the document).  Deterministic: depends only on the data,
     never on partitioning.
 
-    Returns (block, order_col, n_tokens, chunk_id, chunk_pos).
+    Returns (block, doc_id, n_tokens, chunk_id, chunk_pos).
     """
-    w = Window.partitionBy("block").orderBy(order_col)
-    n_tok = F.size(tokens(text_col)).cast("long")
+    w = Window.partitionBy("block").orderBy("doc_id")
+    n_tok = F.size(tokens("text")).cast("long")
     out = (
         df.select(
-            _c(block_col).alias("block"),
-            _c(order_col).alias(order_col),
+            _c("source").alias("block"),
+            _c("doc_id").alias("doc_id"),
             n_tok.alias("n_tokens"),
         )
         .withColumn(
@@ -138,13 +135,12 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    min_shared: int = 1,
     min_frac: float | None = None,
     max_broadcast_grams: int | None = 5_000_000,
 ) -> DataFrame:
     """Flag corpus documents whose word-``n``-grams overlap a
     benchmark/eval set (the standard contamination check run before
-    training): absolute count (``min_shared``) and, when ``min_frac`` is
+    training): any shared gram and, when ``min_frac`` is
     given, the overlap FRACTION of the document's own distinct grams —
     the form real decontamination uses, since one incidental shared gram
     in a long document is noise while 30% overlap is a leaked example.
@@ -213,7 +209,7 @@ def decontaminate(
             F.count_distinct("gram").alias("n_shared"),
             F.first("__n_total").alias("n_total"),
         )
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 1)
     )
     if min_frac is not None:
         frac_micros = round(min_frac * 1_000_000)
@@ -249,8 +245,6 @@ def cluster_balanced_sample(
     emb: DataFrame,
     per_cluster: int,
     n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Topic-balanced sampling: assign every row to its nearest-centroid
@@ -273,10 +267,10 @@ def cluster_balanced_sample(
     )
 
     if centroids is None:
-        centroids = centroid_seeds(emb, n_clusters, id_col, vec_col)
-    assigned = assign_cells(emb, centroids, vec_col)
+        centroids = centroid_seeds(emb, n_clusters, "vec_id", "embedding")
+    assigned = assign_cells(emb, centroids, "embedding")
     return quota_sample(
-        assigned, strata_col="cell", id_col=id_col, k=per_cluster
+        assigned, strata_col="cell", id_col="vec_id", k=per_cluster
     )
 
 
@@ -305,7 +299,6 @@ def redact_pii(col) -> Column:
 
 def ngram_top(
     df: DataFrame,
-    text_col: str = "text",
     n: int = 3,
     k: int = 20,
 ) -> DataFrame:
@@ -317,7 +310,7 @@ def ngram_top(
     driver-light."""
     g = F.explode(F.array_distinct(shingles_from("__tok", n))).alias("gram")
     return (
-        df.select(tokens(text_col).alias("__tok"))
+        df.select(tokens("text").alias("__tok"))
         .select(g)
         .groupBy("gram")
         .agg(F.count("*").alias("df"))
@@ -330,8 +323,6 @@ def ngram_top(
 
 def chunk_documents(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_tokens: int = 64,
     overlap: int = 16,
 ) -> DataFrame:
@@ -357,8 +348,8 @@ def chunk_documents(
     from timesearch_spark.tables import spread
 
     tok = spread(df).select(
-        _c(id_col).alias(id_col),
-        F.posexplode(tokens(text_col)).alias("__pos", "__t"),
+        _c("doc_id").alias("doc_id"),
+        F.posexplode(tokens("text")).alias("__pos", "__t"),
     )
     first_chunk = F.greatest(
         F.lit(0),
@@ -366,11 +357,11 @@ def chunk_documents(
     )
     last_chunk = F.floor(F.col("__pos") / stride).cast("int")
     exploded = tok.select(
-        id_col, "__pos", "__t",
+        "doc_id", "__pos", "__t",
         F.explode(F.sequence(first_chunk, last_chunk)).alias("chunk_id"),
     )
     return (
-        exploded.groupBy(id_col, "chunk_id")
+        exploded.groupBy("doc_id", "chunk_id")
         .agg(
             F.array_join(
                 F.transform(
@@ -390,10 +381,6 @@ def chunk_documents(
 def bm25_scores(
     df: DataFrame,
     query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """(id, score): Okapi BM25 relevance of every document to a bag of
     query terms — the canonical corpus-curation ranker (pull the
@@ -401,7 +388,8 @@ def bm25_scores(
     what a contamination query would retrieve).
 
     idf(t) = ln(1 + (N - df_t + 0.5)/(df_t + 0.5));
-    score  = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)).
+    score  = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)),
+    with k1 = 1.2 and b = 0.75.
 
     Scale shape: ONE explode of the corpus feeds both the per-doc
     length and the per-(doc, term) counts for the query terms only
@@ -413,12 +401,12 @@ def bm25_scores(
     filter or rank downstream.
     """
     terms = [t.lower() for t in query_terms]
-    tok = df.select(_c(id_col).alias(id_col), F.explode(tokens(text_col)).alias("__t"))
-    dl = tok.groupBy(id_col).agg(F.count("*").alias("__dl"))
+    tok = df.select(_c("doc_id").alias("doc_id"), F.explode(tokens("text")).alias("__t"))
+    dl = tok.groupBy("doc_id").agg(F.count("*").alias("__dl"))
     hits = tok.filter(F.col("__t").isin(*terms))
-    tf = hits.groupBy(id_col, "__t").agg(F.count("*").alias("__tf"))
+    tf = hits.groupBy("doc_id", "__t").agg(F.count("*").alias("__tf"))
     dfreq = (
-        hits.select(id_col, "__t").distinct()
+        hits.select("doc_id", "__t").distinct()
         .groupBy("__t").agg(F.count("*").alias("__df"))
     )
     globals_ = dl.agg(
@@ -431,24 +419,24 @@ def bm25_scores(
     contrib = (
         tf.join(F.broadcast(dfreq), on="__t")
         .join(F.broadcast(globals_))
-        .join(dl, on=id_col)
+        .join(dl, on="doc_id")
         .select(
-            id_col,
+            "doc_id",
             (
                 idf
-                * (F.col("__tf") * (k1 + 1))
+                * (F.col("__tf") * 2.2)
                 / (
                     F.col("__tf")
-                    + k1 * (1 - b + b * F.col("__dl") / F.col("__avgdl"))
+                    + 1.2 * (0.25 + 0.75 * F.col("__dl") / F.col("__avgdl"))
                 )
             ).alias("__c"),
         )
     )
-    scored = contrib.groupBy(id_col).agg(F.sum("__c").alias("score"))
+    scored = contrib.groupBy("doc_id").agg(F.sum("__c").alias("score"))
     return (
-        df.select(_c(id_col).alias(id_col))
-        .join(scored, on=id_col, how="left")
-        .select(id_col, F.coalesce("score", F.lit(0.0)).alias("score"))
+        df.select(_c("doc_id").alias("doc_id"))
+        .join(scored, on="doc_id", how="left")
+        .select("doc_id", F.coalesce("score", F.lit(0.0)).alias("score"))
     )
 
 
@@ -456,7 +444,6 @@ def bm25_scores(
 
 def deterministic_shuffle(
     df: DataFrame,
-    id_col: str = "doc_id",
     seed: str = "0",
     num_shards: int = 16,
 ) -> DataFrame:
@@ -489,8 +476,8 @@ def deterministic_shuffle(
             f"of the nibble space skews shards 2x): {num_shards}"
         )
     width = 1 if num_shards <= 16 else 2
-    key = F.md5(F.concat(F.lit(f"{seed}:"), _c(id_col).cast("string")))
-    keyed = df.select(_c(id_col).alias(id_col), key.alias("key"))
+    key = F.md5(F.concat(F.lit(f"{seed}:"), _c("doc_id").cast("string")))
+    keyed = df.select(_c("doc_id").alias("doc_id"), key.alias("key"))
     # nibble(s) → int without a hex→int builtin (portable to the oracle):
     # position of each hex char in the alphabet, big-endian
     nib = "(locate(substring(key, {i}, 1), '0123456789abcdef') - 1)"
@@ -498,11 +485,11 @@ def deterministic_shuffle(
     if width == 2:
         expr = f"{expr} * 16 + {nib.format(i=2)}"
     shard = F.pmod(F.expr(expr), F.lit(num_shards)).cast("int")
-    w = Window.partitionBy("shard").orderBy("key", id_col)
+    w = Window.partitionBy("shard").orderBy("key", "doc_id")
     return (
         keyed.withColumn("shard", shard)
         .withColumn("pos", F.row_number().over(w).cast("long"))
-        .select(id_col, "shard", "pos")
+        .select("doc_id", "shard", "pos")
     )
 
 
@@ -1129,32 +1116,29 @@ def _executor(docs, store_dir, metrics, resume=True, lease_timeout_sec=None,
 def weighted_resample(
     df: DataFrame,
     rates: dict[str, float],
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-    default_rate: float = 1.0,
-    seed: str = "mix",
 ) -> DataFrame:
     """Deterministic per-stratum resampling at arbitrary rates — the
     data-mixing step that turns raw source proportions into a training
     mix (temperature sampling, up/down-weighting).  ``rates[s] = 0.25``
-    keeps ~25% of stratum s; ``rates[s] = 2.3`` emits every doc 2 times
-    plus a third copy for ~30% of them.
+    keeps ~25% of stratum s (a ``source`` value); ``rates[s] = 2.3``
+    emits every doc 2 times plus a third copy for ~30% of them; a
+    stratum not in ``rates`` keeps every doc.
 
-    Membership and copy count are pure functions of (seed, id): stable
+    Membership and copy count are pure functions of ``doc_id``: stable
     under reruns, repartitioning, and appends — never `rand()`.  Output
     adds ``copy`` (0-based) so downstream shuffles can treat copies as
     distinct rows.  Plan: one generate (posexplode over a per-row copy
     count), no shuffle, no driver state beyond the broadcast rate map.
     """
-    if not all(r >= 0 for r in rates.values()) or default_rate < 0:
+    if not all(r >= 0 for r in rates.values()):
         raise ValueError("rates must be >= 0")
-    rate = F.lit(default_rate)
+    rate = F.lit(1.0)
     for s, r in sorted(rates.items()):
-        rate = F.when(_c(stratum_col) == s, F.lit(float(r))).otherwise(rate)
+        rate = F.when(_c("source") == s, F.lit(float(r))).otherwise(rate)
     # hash-fraction in [0, 1): first 13 hex chars (52 bits — exact in the
     # double mantissa) of md5(seed:id)
     frac = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), _c(id_col).cast("string"))), 1, 13),
+        F.substring(F.md5(F.concat(F.lit("mix:"), _c("doc_id").cast("string"))), 1, 13),
         16, 10,
     ).cast("double") / float(16 ** 13)
     n_copies = (F.floor(rate) + F.when(frac < rate - F.floor(rate), 1).otherwise(0)).cast("int")
@@ -1174,7 +1158,7 @@ def dsir_weights(
     dim: int = 1 << 14,
     alpha: float = 1.0,
     seed: str = "dsir",
-    hash_family: str = "xx64",
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(id, n_feat, logw): per-document log importance weight
     ln p_target(x) − ln p_raw(x) under hashed n-gram bag models — the
@@ -1202,7 +1186,7 @@ def dsir_weights(
 
     ``hash_family="md5"`` swaps the feature hash for the DuckDB-
     replayable md5 family (textstats._qclf_feature_idx — the
-    dedup_minhash_lsh oracle-replay pattern); xx64 stays the
+    dedup_minhash_lsh oracle-replay pattern); xxhash64 stays the
     production default."""
     import math
 
@@ -1279,9 +1263,8 @@ def dsir_resample(
     text_col: str = "text",
     id_col: str = "doc_id",
     dim: int = 1 << 14,
-    alpha: float = 1.0,
     seed: str = "dsir",
-    hash_family: str = "xx64",
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Top-``k`` Gumbel importance resample of ``docs`` toward the
     ``target`` distribution (DSIR's selection step, Xie et al. 2023):
@@ -1299,7 +1282,7 @@ def dsir_resample(
     (id, n_feat, logw, key), key desc = selection order."""
     if k < 1:
         raise ValueError("dsir_resample: k must be >= 1")
-    w = dsir_weights(docs, target, text_col, id_col, dim, alpha, seed,
+    w = dsir_weights(docs, target, text_col, id_col, dim, 1.0, seed,
                      hash_family)
     u = (
         F.conv(
@@ -1321,10 +1304,6 @@ def dsir_resample(
 def budget_sample(
     df: DataFrame,
     token_budget: int,
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: str = "budget",
 ) -> DataFrame:
     """Select documents per stratum, in deterministic hash order, until
     each stratum's cumulative whitespace-token count reaches
@@ -1337,17 +1316,17 @@ def budget_sample(
     stratum; the running sum is an ordered window over (hash, id) so
     membership is a pure function of the data and the seed.  Output:
     (id, stratum, n_tokens, cum_tokens)."""
-    key = F.md5(F.concat(F.lit(f"{seed}:"), _c(id_col).cast("string")))
+    key = F.md5(F.concat(F.lit("budget:"), _c("doc_id").cast("string")))
     d = df.select(
-        _c(id_col).alias(id_col),
-        _c(stratum_col).alias(stratum_col),
-        F.size(tokens(text_col)).cast("long").alias("n_tokens"),
+        _c("doc_id").alias("doc_id"),
+        _c("source").alias("source"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
         key.alias("__k"),
     )
-    w = Window.partitionBy(stratum_col).orderBy("__k", id_col)
+    w = Window.partitionBy("source").orderBy("__k", "doc_id")
     cum = F.sum("n_tokens").over(w.rowsBetween(Window.unboundedPreceding, 0))
     return (
         d.withColumn("cum_tokens", cum)
         .filter(F.col("cum_tokens") - F.col("n_tokens") < token_budget)
-        .select(id_col, stratum_col, "n_tokens", "cum_tokens")
+        .select("doc_id", "source", "n_tokens", "cum_tokens")
     )

@@ -26,13 +26,13 @@ _ORDERED_PREFIXES = (
 )
 
 
-def table_profile(df: DataFrame, approx_rsd: float = 0.05) -> DataFrame:
+def table_profile(df: DataFrame) -> DataFrame:
     """Per-column profile: (column, dtype, n_rows, n_null, approx_distinct,
     min_value, max_value) — min/max as strings (NULL for unordered types
     like arrays/maps/structs/binary).
 
-    ``approx_rsd`` is the HLL++ relative standard deviation (5% default:
-    ~a few KB of sketch per column)."""
+    approx_distinct is HLL++ at 5% relative standard deviation (~a few
+    KB of sketch per column)."""
     cols = df.dtypes
     n = F.count(F.lit(1)).alias("__n")
     aggs = [n]
@@ -43,7 +43,7 @@ def table_profile(df: DataFrame, approx_rsd: float = 0.05) -> DataFrame:
             F.sum(F.when(c.isNull(), 1).otherwise(0)).alias(f"__null_{name}")
         )
         aggs.append(
-            F.approx_count_distinct(c, approx_rsd).alias(f"__dist_{name}")
+            F.approx_count_distinct(c, 0.05).alias(f"__dist_{name}")
         )
         aggs.append(
             (F.min(c).cast("string") if ordered else F.lit(None).cast("string"))
@@ -72,14 +72,12 @@ def table_profile(df: DataFrame, approx_rsd: float = 0.05) -> DataFrame:
 def drift_report(
     current: DataFrame,
     baseline: DataFrame,
-    max_null_frac_increase: float = 0.05,
-    max_distinct_ratio_drift: float = 0.5,
 ) -> DataFrame:
     """Compare two ``table_profile`` outputs (current vs an accepted
     baseline): flags schema drift (column added/removed/retyped), null
-    floods (null fraction up by more than ``max_null_frac_increase``
-    absolute), and cardinality collapse/explosion (approx-distinct ratio
-    outside [1-d, 1/(1-d)]).  Output: (column, issue, detail) — empty
+    floods (null fraction up by more than 0.05 absolute), and
+    cardinality collapse/explosion (approx-distinct ratio outside
+    [0.5, 2]).  Output: (column, issue, detail) — empty
     means the drop looks like the baseline.  Both inputs are tiny
     (one row per column), so this is a driver-friendly full-outer join.
     """
@@ -94,13 +92,7 @@ def drift_report(
         F.col("approx_distinct").alias("b_dist"),
     )
     j = cur.join(base, "column", "full_outer")
-    if not 0.0 < max_distinct_ratio_drift < 1.0:
-        raise ValueError(
-            "max_distinct_ratio_drift must be in (0, 1): "
-            f"{max_distinct_ratio_drift}"  # 1.0 would divide by zero below
-        )
-    lo = 1.0 - max_distinct_ratio_drift
-    hi = 1.0 / lo
+    lo, hi = 0.5, 2.0
     ratio = F.col("c_dist") / F.nullif(F.col("b_dist"), F.lit(0))
     issues = F.array_compact(F.array(
         F.when(F.col("b_dtype").isNull(), F.struct(
@@ -114,7 +106,7 @@ def drift_report(
                      F.concat_ws("->", "b_dtype", "c_dtype").alias("detail")),
         ),
         F.when(
-            F.col("c_null_frac") - F.col("b_null_frac") > max_null_frac_increase,
+            F.col("c_null_frac") - F.col("b_null_frac") > 0.05,
             F.struct(F.lit("null_flood").alias("issue"),
                      F.concat_ws("->", F.round("b_null_frac", 4).cast("string"),
                                  F.round("c_null_frac", 4).cast("string")).alias("detail")),

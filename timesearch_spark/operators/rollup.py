@@ -22,7 +22,6 @@ identical bytes.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,11 +37,10 @@ class MaterializedRollup:
     partitioned by ``w`` (window-start epoch seconds)."""
 
     def __init__(self, spark: SparkSession, path: str,
-                 duration_sec: int = 3600, key: str = "event_type"):
+                 duration_sec: int = 3600):
         self.spark = spark
         self.path = path
         self.duration_sec = duration_sec
-        self.key = key
         # metadata listings route through the fs shim (object-store
         # capable); data IO is Spark parquet either way
         self._fs = get_fs(spark, path)
@@ -62,7 +60,7 @@ class MaterializedRollup:
         ws = self._materialized_windows()
         if not ws:
             return self.spark.createDataFrame(
-                [], f"{self.key} string, n bigint, value_sum_micros bigint, w bigint"
+                [], "event_type string, n bigint, value_sum_micros bigint, w bigint"
             )
         # partition-dir inference types w as INT for epoch values < 2^31:
         # cast back to the long the empty-store branch declares
@@ -70,16 +68,14 @@ class MaterializedRollup:
             "w", F.col("w").cast("long")
         )
 
-    def refresh(self, events: DataFrame, allowed_lateness: int = 1) -> dict:
+    def refresh(self, events: DataFrame) -> dict:
         """Recompute every window that can still change; returns
-        {'from_window': sec|None, 'windows': n_recomputed}.
-
-        ``allowed_lateness`` is in WINDOWS: 1 means events may arrive up
-        to one full window late and still be counted."""
+        {'from_window': sec|None, 'windows': n_recomputed}.  Events may
+        arrive up to one full window late and still be counted."""
         ws = self._materialized_windows()
         lower = None
         if ws:
-            lower = max(ws) - allowed_lateness * self.duration_sec
+            lower = max(ws) - self.duration_sec
             dt = ts_dtype(events)
             events = events.filter(
                 F.col("ts") >= event_ts_bound(lower, dt)  # foldable: pushed scan bound
@@ -91,10 +87,10 @@ class MaterializedRollup:
                     "value", F.floor(F.col("value") * 1000000).cast("long")
                 ),
                 dur,
-                self.key,
+                "event_type",
             )
             .select(
-                F.col(self.key),
+                F.col("event_type"),
                 F.col("n"),
                 F.col("value_sum").cast("long").alias("value_sum_micros"),
                 F.col("window_start").cast("long").alias("w"),

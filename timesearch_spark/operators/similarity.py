@@ -120,17 +120,15 @@ def cosine_topk(
     emb: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact brute-force top-k by cosine against a 1-row ``query`` DataFrame
     (column ``q``).  Ties broken by id for determinism."""
     joined = emb.join(F.broadcast(query))
     scored = joined.select(
-        F.col(id_col),
-        cosine(vec_col, "q").alias("cos"),
+        F.col("vec_id"),
+        cosine("embedding", "q").alias("cos"),
     )
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cos").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def _round6(x: float) -> float:
@@ -193,10 +191,6 @@ def cosine_topk_batch(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "q",
 ) -> DataFrame:
     """Exact top-k neighbors for a BATCH of query vectors in one corpus
     pass — the retrieve-neighbors-for-every-probe shape a training
@@ -220,7 +214,7 @@ def cosine_topk_batch(
     qrows = [
         (r["qid"], r["q"])
         for r in queries.select(
-            F.col(qid_col).alias("qid"), as_double(qvec_col).alias("q")
+            F.col("qid").alias("qid"), as_double("q").alias("q")
         ).collect()
     ]
     if not qrows:
@@ -237,8 +231,8 @@ def cosine_topk_batch(
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
+            V = np.array(list(pdf["embedding"]), dtype=np.float64)
+            ids = pdf["vec_id"].to_numpy()
             vnorm = np.sqrt(_fold_dot(V * V, np.ones(V.shape[1])))
             o_qid, o_id, o_cos = [], [], []
             for m, qid in enumerate(qids):
@@ -257,7 +251,7 @@ def cosine_topk_batch(
 
     local = (
         spread(emb)
-        .select(F.col(id_col), as_double(vec_col).alias(vec_col))
+        .select(F.col("vec_id"), as_double("embedding").alias("embedding"))
         .mapInPandas(score, out_schema)
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -271,13 +265,9 @@ def cosine_topk_lsh(
     emb: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     bits: int = 6,
     tables: int = 16,
-    seed: int = 42,
-    probe_hamming: int = 1,
 ) -> DataFrame:
     """ANN top-k: candidates = vectors sharing the query's signature in any
     of ``tables`` hyperplane tables; exact-cosine verify + top-k on the
@@ -287,7 +277,7 @@ def cosine_topk_lsh(
     - per-table collision prob for exact bucket match is (1-θ/π)^bits;
       overall 1-(1-p_table)^tables — fewer bits / more tables = higher
       recall and bigger candidate sets;
-    - ``probe_hamming`` = multiprobe radius (Lv et al. 2007's idea in
+    - multiprobe radius 1 (Lv et al. 2007's idea in
       filter form): accepting buckets within Hamming 1 of the query's
       adds bits·c^(bits-1)·(1-c) to p_table, pushing 6x16 past 0.99
       recall at θ≈60° while verification keeps precision exact.  At
@@ -305,29 +295,29 @@ def cosine_topk_lsh(
     bench."""
     import numpy as np
 
-    planes = hyperplanes(dim, bits, tables, seed)
+    planes = hyperplanes(dim, bits, tables, 42)
 
     qrow = query.select(as_double("q").alias("q")).first()
     if qrow is None:  # empty query: empty result, stable schema
         return emb.select(
-            F.col(id_col), F.lit(0.0).alias("cos")
+            F.col("vec_id"), F.lit(0.0).alias("cos")
         ).limit(0)
     qvec = [float(x) for x in qrow["q"]]
     qsig = pack_signatures(np.array([qvec], dtype=np.float64), planes)[0]
 
-    sigs = with_signatures(emb, planes, id_col, vec_col)
+    sigs = with_signatures(emb, planes, "vec_id", "embedding")
     match = F.lit(False)
     for t in range(tables):
         match = match | (
             F.bit_count(F.col(f"sig{t}").bitwiseXOR(F.lit(int(qsig[t]))))
-            <= probe_hamming
+            <= 1
         )
     cand = sigs.filter(match)
 
     scored = cand.select(
-        F.col(id_col), cosine(vec_col, F.lit(qvec)).alias("cos")
+        F.col("vec_id"), cosine("embedding", F.lit(qvec)).alias("cos")
     )
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cos").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def centroid_seeds(
@@ -350,10 +340,7 @@ def centroid_seeds(
 def train_codebook(
     emb: DataFrame,
     n_cells: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
-    max_iter: int = 20,
 ) -> list[tuple[int, list[float]]]:
     """Production IVF codebook: k-means|| (pyspark.ml.clustering.KMeans)
     over the embedding column, returned in the same
@@ -368,12 +355,12 @@ def train_codebook(
     toy ``centroid_seeds`` (lowest-id vectors) stays the oracle-checkable
     default; this is the quality upgrade when cell balance matters."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     feats = emb.select(
-        array_to_vector(as_double(vec_col)).alias("features")
+        array_to_vector(as_double("embedding")).alias("features")
     )
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(feats)
+    model = KMeans(k=n_cells, seed=seed, maxIter=20).fit(feats)
     return [
         (cid, [float(x) for x in center])
         for cid, center in enumerate(model.clusterCenters())
@@ -443,8 +430,6 @@ def cosine_topk_ivf(
     emb: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 16,
     n_probe: int = 4,
     centroids: list[tuple[int, list[float]]] | None = None,
@@ -467,14 +452,14 @@ def cosine_topk_ivf(
     candidate scan is embarrassingly parallel and the only cross-partition
     traffic is TakeOrderedAndProject's k rows per partition."""
     if centroids is None:
-        centroids = centroid_seeds(emb, n_cells, id_col, vec_col)
+        centroids = centroid_seeds(emb, n_cells, "vec_id", "embedding")
     # a pre-assigned cell column (the production case: the table is
     # written cell-partitioned at ingest, so the probe filter is pure
     # partition pruning) wins over re-deriving the assignment per query
     cells = (
         emb
         if "cell" in emb.columns
-        else _cell_join_barrier(assign_cells(emb, centroids, vec_col))
+        else _cell_join_barrier(assign_cells(emb, centroids, "embedding"))
     )
 
     qcells = (
@@ -492,18 +477,14 @@ def cosine_topk_ivf(
     )
 
     cand = cells.join(F.broadcast(qcells), on="cell")
-    scored = cand.select(F.col(id_col), cosine(vec_col, "q").alias("cos"))
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col).asc()).limit(k)
+    scored = cand.select(F.col("vec_id"), cosine("embedding", "q").alias("cos"))
+    return scored.orderBy(F.col("cos").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def cosine_topk_ivf_batch(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "q",
     n_cells: int = 16,
     n_probe: int = 4,
     centroids: list[tuple[int, list[float]]] | None = None,
@@ -530,7 +511,7 @@ def cosine_topk_ivf_batch(
     from pyspark.sql import Window
 
     if centroids is None:
-        centroids = centroid_seeds(emb, n_cells, id_col, vec_col)
+        centroids = centroid_seeds(emb, n_cells, "vec_id", "embedding")
     # honor a pre-assigned cell column (see cosine_topk_ivf): at scale
     # the probe filter is then partition pruning on the stored layout;
     # it must have been assigned from the SAME codebook (pass centroids
@@ -538,11 +519,11 @@ def cosine_topk_ivf_batch(
     cells = (
         emb
         if "cell" in emb.columns
-        else _cell_join_barrier(assign_cells(emb, centroids, vec_col))
+        else _cell_join_barrier(assign_cells(emb, centroids, "embedding"))
     )
 
     qrows = queries.select(
-        F.col(qid_col).alias("qid"), as_double(qvec_col).alias("q")
+        F.col("qid").alias("qid"), as_double("q").alias("q")
     ).collect()
     if not qrows:
         return emb.sparkSession.createDataFrame(
@@ -573,7 +554,7 @@ def cosine_topk_ivf_batch(
     probed_union = sorted({int(c) for p in probe for c in p})
 
     pruned = cells.filter(F.col("cell").isin(probed_union)).select(
-        F.col(id_col), as_double(vec_col).alias(vec_col), "cell"
+        F.col("vec_id"), as_double("embedding").alias("embedding"), "cell"
     )
     out_schema = "qid long, vec_id long, cos double"
 
@@ -583,8 +564,8 @@ def cosine_topk_ivf_batch(
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
+            V = np.array(list(pdf["embedding"]), dtype=np.float64)
+            ids = pdf["vec_id"].to_numpy()
             cell = pdf["cell"].to_numpy()
             vnorm = np.sqrt(_fold_dot(V * V, np.ones(V.shape[1])))
             o_qid, o_id, o_cos = [], [], []
@@ -613,8 +594,6 @@ def cosine_topk_ivf_batch(
 def embedding_near_dups(
     emb: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact all-pairs near-duplicates: (a, b, cos) with cos ≥ threshold,
     a < b.  Quadratic — the correctness baseline; use the LSH variant at
@@ -622,8 +601,8 @@ def embedding_near_dups(
     full parallelism even off a single-row-group scan."""
     from timesearch_spark.tables import spread
 
-    a = spread(emb).select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
+    a = spread(emb).select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
     pairs = a.join(b, F.col("a") < F.col("b"))
     return (
         pairs.select("a", "b", cosine("va", "vb").alias("cos"))
@@ -634,8 +613,6 @@ def embedding_near_dups(
 def embedding_near_dups_blas(
     emb: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_broadcast_rows: int = 200_000,
 ) -> DataFrame:
     """All-pairs cosine near-dups via broadcast matrix + numpy matmul.
@@ -658,7 +635,7 @@ def embedding_near_dups_blas(
     import numpy as np
 
     spark = emb.sparkSession
-    narrow = emb.select(_col_pair(id_col), _col_pair(vec_col))
+    narrow = emb.select(_col_pair("vec_id"), _col_pair("embedding"))
     # Footer pre-check (no job): when the plan is row-PRESERVING the
     # parquet footers give the EXACT row count, so a provably-too-big
     # input skips the bounded Arrow probe entirely — at the default
@@ -671,12 +648,10 @@ def embedding_near_dups_blas(
 
     exact = row_count_exact(narrow)
     if exact is not None and exact > max_broadcast_rows:
-        peek = narrow.select(F.size(F.col(vec_col)).alias("d")).first()
+        peek = narrow.select(F.size(F.col("embedding")).alias("d")).first()
         return embedding_near_dups_lsh(
             emb,
             threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
             dim=int(peek["d"]),
         )
     # limit(max+1).toPandas(): a bounded Arrow transfer that doubles as
@@ -691,12 +666,10 @@ def embedding_near_dups_blas(
         return embedding_near_dups_lsh(
             emb,
             threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=len(pdf[vec_col].iloc[0]),
+            dim=len(pdf["embedding"].iloc[0]),
         )
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    mat = np.array(list(pdf[vec_col]), dtype=np.float64)
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    mat = np.array(list(pdf["embedding"]), dtype=np.float64)
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0] = 1.0
     matn = mat / norms[:, None]
@@ -709,8 +682,8 @@ def embedding_near_dups_blas(
         for pdf in batches:
             if pdf.empty:
                 continue
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a = np.array(list(pdf[vec_col]), dtype=np.float64)
+            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            a = np.array(list(pdf["embedding"]), dtype=np.float64)
             an = np.linalg.norm(a, axis=1)
             an[an == 0] = 1.0
             sims = (a / an[:, None]) @ b_mat.T
@@ -725,7 +698,7 @@ def embedding_near_dups_blas(
 
     from timesearch_spark.tables import spread
 
-    return spread(emb).select(_col_pair(id_col), _col_pair(vec_col)).mapInPandas(
+    return spread(emb).select(_col_pair("vec_id"), _col_pair("embedding")).mapInPandas(
         score, "a long, b long, cos double"
     )
 
@@ -734,31 +707,25 @@ def _col_pair(name):
     return F.col(name) if isinstance(name, str) else name
 
 
-def neardup_lsh_params(
-    n: int,
-    threshold: float,
-    occupancy: float = 4.0,
-    target_recall: float = 0.9,
-    min_bits: int = 12,
-) -> tuple[int, int]:
+def neardup_lsh_params(n: int, threshold: float) -> tuple[int, int]:
     """(bits, tables) for :func:`embedding_near_dups_lsh` at corpus
     size ``n`` — the hyperplane-LSH density rule: per-bucket occupancy
     n/2^bits must stay CONSTANT or the bucket self-join's candidate
     fanout grows quadratically with corpus (the r14 scaling probe
     measured 84× candidates at 10× rows with fixed 12-bit signatures),
-    so bits = log2(n/occupancy); recall is then restored by scaling
+    so bits = log2(n/4), at least 12; recall is then restored by scaling
     tables — per-table collision for a true pair at cos=threshold is
-    p = (1-θ/π)^bits, and tables = ln(1-target_recall)/ln(1-p) keeps
-    overall recall ≥ target.  Shared by the operator's ``bits="auto"``
+    p = (1-θ/π)^bits, and tables = ln(1-0.9)/ln(1-p) keeps
+    overall recall ≥ 0.9.  Shared by the operator's ``bits="auto"``
     mode and the scaling probe's candidate counter so both always
     agree."""
     import math
 
-    bits = max(min_bits, math.ceil(math.log2(max(n, 2) / occupancy)))
+    bits = max(12, math.ceil(math.log2(max(n, 2) / 4.0)))
     p_bit = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     p_table = min(max(p_bit ** bits, 1e-12), 1.0 - 1e-12)
     tables = min(64, max(2, math.ceil(
-        math.log(1.0 - target_recall) / math.log1p(-p_table))))
+        math.log(1.0 - 0.9) / math.log1p(-p_table))))
     return bits, tables
 
 
@@ -776,12 +743,9 @@ def expected_lsh_candidates(n: int, bits: int, tables: int) -> float:
 def embedding_near_dups_lsh(
     emb: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     bits: int | str = 12,
     tables: int | None = None,
-    seed: int = 42,
     n: int | None = None,
     max_candidates: int | None = 100_000_000,
 ) -> DataFrame:
@@ -836,20 +800,20 @@ def embedding_near_dups_lsh(
                 "family (cosine_topk_ivf / embedding_dedup_clusters), "
                 "or raise max_candidates explicitly to accept the cost"
             )
-    planes = hyperplanes(dim, bits, tables, seed)
-    sigs = with_signatures(emb, planes, id_col, vec_col).select(
-        F.col(id_col),
-        F.col(vec_col),
+    planes = hyperplanes(dim, bits, tables, 42)
+    sigs = with_signatures(emb, planes, "vec_id", "embedding").select(
+        F.col("vec_id"),
+        F.col("embedding"),
         F.explode(
             F.array(*[
                 F.struct(F.lit(t).alias("t"), F.col(f"sig{t}").alias("sig"))
                 for t in range(tables)
             ])
         ).alias("ts"),
-    ).select(id_col, vec_col, F.col("ts.t").alias("t"), F.col("ts.sig").alias("sig"))
+    ).select("vec_id", "embedding", F.col("ts.t").alias("t"), F.col("ts.sig").alias("sig"))
 
-    a = sigs.select(F.col("t"), F.col("sig"), F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    b = sigs.select(F.col("t"), F.col("sig"), F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
+    a = sigs.select(F.col("t"), F.col("sig"), F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    b = sigs.select(F.col("t"), F.col("sig"), F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
     cand = (
         a.join(b, on=["t", "sig"])
         .filter(F.col("a") < F.col("b"))
@@ -895,15 +859,13 @@ def cosine_topk_quantized(
     emb: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k by cosine over int8-quantized vectors: scores
     from integer dot products (cosine is scale-invariant, so the
     per-vector scales cancel out of the ranking except through rounding
     noise).  Same TakeOrderedAndProject plan as the exact path; pytest
     bounds the recall loss against exact brute force."""
-    qz = quantize_embeddings(emb, id_col, vec_col)
+    qz = quantize_embeddings(emb, "vec_id", "embedding")
     qq = quantize_embeddings(query.select(F.lit(-1).alias("__qid"), F.col("q")), "__qid", "q").select(
         F.col("q").alias("qq")
     )
@@ -920,19 +882,16 @@ def cosine_topk_quantized(
     na = F.sqrt(idot(F.col("q"), F.col("q")).cast("double"))
     nb = F.sqrt(idot(F.col("qq"), F.col("qq")).cast("double"))
     scored = joined.select(
-        _col_pair(id_col),
+        _col_pair("vec_id"),
         F.when(na * nb > 0, d / (na * nb)).alias("cos_q8"),
     )
-    return scored.orderBy(F.col("cos_q8").desc(), _col_pair(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cos_q8").desc(), _col_pair("vec_id").asc()).limit(k)
 
 
 def embedding_dedup_clusters(
     emb: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "lsh",
-    **kwargs,
 ) -> DataFrame:
     """(id, cluster_id, is_keeper): embedding-space near-dup clustering —
     cosine near-dup pairs (LSH-bucketed by default; "blas" / "exact" for
@@ -948,16 +907,16 @@ def embedding_dedup_clusters(
         "blas": embedding_near_dups_blas,
         "exact": embedding_near_dups,
     }[method]
-    pairs = fn(emb, threshold=threshold, id_col=id_col, vec_col=vec_col, **kwargs)
+    pairs = fn(emb, threshold=threshold)
     pairs = pairs.select("a", "b")
     # label only the edge-touching subgraph (nodes=None — see
     # connected_components): isolated vectors are their own keepers via
     # the left-join coalesce below, without label propagation
-    comp = connected_components(None, pairs, id_col=id_col)
-    labeled = emb.select(_col_pair(id_col)).join(comp, id_col, "left")
-    cluster = F.coalesce(F.col("component"), F.col(id_col))
+    comp = connected_components(None, pairs, id_col="vec_id")
+    labeled = emb.select(_col_pair("vec_id")).join(comp, "vec_id", "left")
+    cluster = F.coalesce(F.col("component"), F.col("vec_id"))
     return labeled.select(
-        id_col,
+        "vec_id",
         cluster.alias("cluster_id"),
-        (cluster == F.col(id_col)).alias("is_keeper"),
+        (cluster == F.col("vec_id")).alias("is_keeper"),
     )

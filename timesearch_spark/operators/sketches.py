@@ -35,7 +35,6 @@ distinct state is unshardable.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -50,12 +49,10 @@ from timesearch_spark.tables import event_ts_bound, ts_dtype
 def distinct_sketches(
     events: DataFrame,
     period_sec: int = 86400,
-    key: str = "event_type",
-    id_col: str = "user_id",
     lg_k: int = 12,
 ) -> DataFrame:
-    """(period, key, sketch, n_events): one HLL sketch of ``id_col`` per
-    epoch-aligned period and key.  Output: period = epoch seconds long.
+    """(period, event_type, sketch, n_events): one HLL sketch of
+    ``user_id`` per epoch-aligned period and event type.  Output: period = epoch seconds long.
     """
     ev = with_event_time(events)
     # F.floor, not cast('long'): the cast truncates toward zero and
@@ -63,17 +60,14 @@ def distinct_sketches(
     period = (F.floor(F.col("ts_sec") / period_sec) * period_sec).alias(
         "period"
     )
-    return ev.groupBy(period, F.col(key)).agg(
-        F.hll_sketch_agg(F.col(id_col), F.lit(lg_k)).alias("sketch"),
+    return ev.groupBy(period, F.col("event_type")).agg(
+        F.hll_sketch_agg(F.col("user_id"), F.lit(lg_k)).alias("sketch"),
         F.count("*").alias("n_events"),
     )
 
 
 def distinct_rollup(
     events: DataFrame,
-    period_sec: int = 86400,
-    key: str = "event_type",
-    id_col: str = "user_id",
     lg_k: int = 12,
 ) -> DataFrame:
     """Per-period distinct estimates per key AND overall in ONE raw-event
@@ -87,40 +81,40 @@ def distinct_rollup(
     also emits is dropped to match rollup_estimates.  Equality with the
     two-step composition is test-pinned."""
     ev = with_event_time(events)
-    period = (F.floor(F.col("ts_sec") / period_sec) * period_sec).alias(
+    period = (F.floor(F.col("ts_sec") / 86400) * 86400).alias(
         "period"
     )
     return (
-        ev.select(period, F.col(key), F.col(id_col))
-        .rollup("period", key)
+        ev.select(period, F.col("event_type"), F.col("user_id"))
+        .rollup("period", "event_type")
         .agg(
             F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col(id_col), F.lit(lg_k))
+                F.hll_sketch_agg(F.col("user_id"), F.lit(lg_k))
             ).alias("n_unique"),
             # grouping() distinguishes the rollup rows from genuinely
             # null data values — coalesce alone would conflate them
             F.grouping("period").alias("__gp"),
-            F.grouping(key).alias("__gk"),
+            F.grouping("event_type").alias("__gk"),
         )
         .filter(F.col("__gp") == 0)  # drop the grand-total row
         .select(
             "period",
             F.when(F.col("__gk") == 1, F.lit("__all__"))
-            .otherwise(F.col(key))
-            .alias(key),
+            .otherwise(F.col("event_type"))
+            .alias("event_type"),
             "n_unique",
         )
     )
 
 
-def rollup_estimates(sketches: DataFrame, key: str = "event_type") -> DataFrame:
+def rollup_estimates(sketches: DataFrame) -> DataFrame:
     """Per-period estimates from a sketch table: one row per (period,
     key) plus an ``__all__`` row per period (the union across keys —
     which plain per-key distinct COUNTS could never produce).  Output:
     (period, key, n_unique)."""
     per_key = sketches.select(
         "period",
-        F.col(key),
+        F.col("event_type"),
         F.hll_sketch_estimate("sketch").alias("n_unique"),
     )
     overall = (
@@ -130,14 +124,12 @@ def rollup_estimates(sketches: DataFrame, key: str = "event_type") -> DataFrame:
                 F.hll_union_agg("sketch", allowDifferentLgConfigK=True)
             ).alias("n_unique")
         )
-        .select("period", F.lit("__all__").alias(key), "n_unique")
+        .select("period", F.lit("__all__").alias("event_type"), "n_unique")
     )
     return per_key.unionByName(overall)
 
 
-def cumulative_estimates(
-    sketches: DataFrame, key: str = "event_type"
-) -> DataFrame:
+def cumulative_estimates(sketches: DataFrame) -> DataFrame:
     """Running since-launch distinct estimate per key: for each period,
     the union of that key's sketches over all periods <= it.
 
@@ -146,7 +138,7 @@ def cumulative_estimates(
     JVM-side reduce fold — rows here are periods × keys, never events.
     Output: (period, key, n_unique_cum)."""
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("event_type")
         .orderBy("period")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -160,15 +152,15 @@ def cumulative_estimates(
     )
     return prefix.select(
         "period",
-        F.col(key),
+        F.col("event_type"),
         F.hll_sketch_estimate(merged).alias("n_unique_cum"),
     )
 
 
 class SketchStore:
     """Persisted (period, key, sketch) parquet partitioned by
-    ``p=<epoch>``, refreshed by recomputing only periods newer than
-    ``max stored period − allowed_lateness`` (immutable-history /
+    ``p=<epoch>``, refreshed by recomputing only periods from the newest
+    stored one on (immutable-history /
     recompute-recent, the MaterializedRollup contract).  Reads answer
     distinct questions from sketches alone — no raw-event access."""
 
@@ -177,16 +169,10 @@ class SketchStore:
         spark: SparkSession,
         path: str,
         period_sec: int = 86400,
-        key: str = "event_type",
-        id_col: str = "user_id",
-        lg_k: int = 12,
     ):
         self.spark = spark
         self.path = path
         self.period_sec = period_sec
-        self.key = key
-        self.id_col = id_col
-        self.lg_k = lg_k
         # metadata listings route through the fs shim (object-store
         # capable); data IO is Spark parquet either way
         self._fs = get_fs(spark, path)
@@ -206,10 +192,7 @@ class SketchStore:
         ps = self._stored_periods()
         if not ps:
             return self.spark.createDataFrame(
-                [],
-                f"period long, {self.key} string, sketch binary, "
-                f"n_events long",
-            )
+                [], "period long, event_type string, sketch binary, n_events long")
         return (
             self.spark.read.parquet(self.path)
             # partition-dir inference types p as INT for epoch values
@@ -217,12 +200,12 @@ class SketchStore:
             # carries (and survive 2038)
             .select(
                 F.col("p").cast("long").alias("period"),
-                self.key, "sketch", "n_events",
+                "event_type", "sketch", "n_events",
             )
         )
 
-    def refresh(self, events: DataFrame, allowed_lateness_sec: int = 0) -> int:
-        """Re-aggregate every period from ``max stored − lateness``
+    def refresh(self, events: DataFrame) -> int:
+        """Re-aggregate every period from the newest stored one
         forward off a bound-pruned scan; dynamic partition overwrite
         replaces exactly those ``p=`` directories.  Returns the number
         of periods (re)written."""
@@ -232,20 +215,15 @@ class SketchStore:
             # floor to a PERIOD BOUNDARY: a mid-period horizon would
             # rebuild that period's sketch from a partial scan and
             # silently overwrite the full-period sketch with it
-            horizon = (
-                (max(ps) - allowed_lateness_sec)
-                // self.period_sec
-                * self.period_sec
-            )
+            horizon = max(ps) // self.period_sec * self.period_sec
             src = events.filter(
                 F.col("ts") >= event_ts_bound(horizon, ts_dtype(events))
             )
         # materialize once: the count and the write otherwise each
         # re-run the raw-event aggregation (sketch rows are periods ×
         # keys — tiny — so pinning them is free)
-        fresh = distinct_sketches(
-            src, self.period_sec, self.key, self.id_col, self.lg_k
-        ).withColumnRenamed("period", "p").localCheckpoint(eager=True)
+        fresh = distinct_sketches(src, self.period_sec).withColumnRenamed(
+            "period", "p").localCheckpoint(eager=True)
         n = fresh.select("p").distinct().count()
         if n:
             (
@@ -267,7 +245,7 @@ class SketchStore:
             df = df.filter(F.col("period") >= since)
         if until is not None:
             df = df.filter(F.col("period") < until)
-        return df.groupBy(self.key).agg(
+        return df.groupBy("event_type").agg(
             F.hll_sketch_estimate(
                 F.hll_union_agg("sketch", allowDifferentLgConfigK=True)
             ).alias("n_unique")

@@ -28,15 +28,14 @@ def topk_per_group(
     group_cols: list[str],
     order_cols: list[Column],
     k: int,
-    salt_parts: int = 16,
 ) -> DataFrame:
     """Exact top-k rows per group (dense ``row_number <= k`` semantics,
     ties resolved by ``order_cols`` — make them total for deterministic
     output) without a per-group single-task hotspot.
 
     Phase 1 ranks within (group, salt) — a hot group's rows split across
-    ``salt_parts`` tasks, each keeping its local top-k.  Phase 2 ranks
-    the <= salt_parts*k survivors per group.  Any row in the true global
+    16 salt shards, each keeping its local top-k.  Phase 2 ranks the
+    <= 16*k survivors per group.  Any row in the true global
     top-k is in the top-k of whichever salt shard it landed in, so the
     result is EXACT for every salt assignment; the salt is a
     deterministic hash of the WHOLE row (order_cols may carry SortOrder
@@ -44,7 +43,7 @@ def topk_per_group(
     replays identically but adding an unrelated column can move shard
     assignment — only intermediate plan shapes change, never the result.
 
-    Cost: one extra narrow shuffle of the survivor set (<= salt_parts*k
+    Cost: one extra narrow shuffle of the survivor set (<= 16*k
     rows per group — thousands of rows, not a thread's millions).  Use
     the plain window (window_rank_children) when no group can dominate a
     task; use this when one can.
@@ -67,7 +66,7 @@ def topk_per_group(
 
     cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
     salt_src = [F.col(c) for c in cols] or [F.lit(0)]
-    salt = F.pmod(F.xxhash64(*salt_src), F.lit(salt_parts))
+    salt = F.pmod(F.xxhash64(*salt_src), F.lit(16))
     w1 = Window.partitionBy(*group_cols, "__salt").orderBy(*order_cols)
     w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (

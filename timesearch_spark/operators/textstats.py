@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from timesearch_spark.functions.sqlexpr import ident, lit
 from timesearch_spark.operators.dedup import tokens
 
 
@@ -66,7 +67,7 @@ def punct_ratio(col) -> Column:
     return F.when(total > 0, (total - clean).cast("double") / total.cast("double"))
 
 
-def quality_score(col, lang: str = "en") -> Column:
+def quality_score(col) -> Column:
     """Composite [0,1] quality heuristic: length band + low punctuation +
     stopword presence + mean-word-length band.  Deterministic, documented
     weights — a filterable signal, not a model."""
@@ -74,7 +75,7 @@ def quality_score(col, lang: str = "en") -> Column:
     n_tok = token_count_ws(c)
     len_ok = F.when((n_tok >= 10) & (n_tok <= 10000), 1.0).otherwise(0.3)
     punct_ok = F.when(punct_ratio(c) <= 0.2, 1.0).otherwise(0.4)
-    sw_ratio = F.when(n_tok > 0, stopword_hits(c, lang).cast("double") / n_tok.cast("double")).otherwise(F.lit(0.0))
+    sw_ratio = F.when(n_tok > 0, stopword_hits(c, "en").cast("double") / n_tok.cast("double")).otherwise(F.lit(0.0))
     sw_ok = F.when(sw_ratio >= 0.02, 1.0).otherwise(0.5)
     mean_wl = F.when(n_tok > 0, F.length(F.regexp_replace(c, r"\s+", "")).cast("double") / n_tok.cast("double")).otherwise(F.lit(0.0))
     wl_ok = F.when((mean_wl >= 2.0) & (mean_wl <= 12.0), 1.0).otherwise(0.5)
@@ -190,8 +191,8 @@ def text_profile_table(df, text_col: str = "text", id_col: str = "doc_id"):
     # previous Column tree function-for-function (same tokenizer regex,
     # same CASE/NULL semantics, same round/try_divide), so the resolved
     # plan — and the hash-oracled output — is unchanged.
-    T = f"`{text_col}`"
-    I = f"`{id_col}`"
+    T = ident(text_col)
+    I = ident(id_col)
     tok = rf"filter(split(lower(trim({T})), '\\s+'), x -> x != '')"
 
     # ONE explode feeds both the token stats and the bigram stats:
@@ -223,14 +224,12 @@ def text_profile_table(df, text_col: str = "text", id_col: str = "doc_id"):
     ).selectExpr(f"{I}", "e.k AS __k", "e.g AS __g")
     counts = tagged.groupBy(id_col, "__k", "__g").agg(F.count("*").alias("__c"))
 
-    def _sql_in(words):
-        return ", ".join("'" + w.replace("'", "''") + "'" for w in words)
-
     tstats = counts.groupBy(id_col).agg(
         F.expr("sum(CASE WHEN __k = 't' THEN __c END)").alias("n_ws"),
         *[
             F.expr(
-                f"sum(CASE WHEN __k = 't' AND __g IN ({_sql_in(STOPWORDS[lang])}) "
+                "sum(CASE WHEN __k = 't' AND __g IN "
+                f"({', '.join(map(lit, STOPWORDS[lang]))}) "
                 "THEN __c ELSE 0 END)"
             ).alias(f"__h_{lang}")
             for lang in langs
@@ -436,15 +435,14 @@ def lm_thresholds(scored: "DataFrame",
     return float(lo), float(hi)
 
 
-def bigram_lm(ref: "DataFrame", text_col: str = "text",
-              vocab_size: int = 50_000, bigram_size: int = 200_000,
-              alpha: float = 1.0):
+def bigram_lm(ref: "DataFrame", vocab_size: int = 50_000,
+              bigram_size: int = 200_000):
     """Bigram model with stupid backoff (Brants et al. 2007 — the
     standard web-scale recipe: no normalized discounting, a fixed
     backoff penalty): returns ``(uni, bi, oov_logp)`` where ``uni`` is
     the :func:`unigram_lm` vocabulary, ``bi`` a (w1, w2, logp)
     DataFrame of the ``bigram_size`` most frequent bigrams with
-    add-α-smoothed CONDITIONAL log-probs ln((c₁₂+α)/(c₁+α·(V+1))), and
+    add-one-smoothed CONDITIONAL log-probs ln((c₁₂+1)/(c₁+V+1)), and
     ``oov_logp`` the unigram OOV floor.  Both tables are bounded
     broadcast state; ties break (count desc, w1 asc, w2 asc) so the
     model is deterministic.
@@ -454,7 +452,7 @@ def bigram_lm(ref: "DataFrame", text_col: str = "text",
     probabilities — only transitions expose it.  Scoring backs off to
     λ·p_uni(w₂) (λ = 0.4) when a bigram is unseen, so the unigram
     model's behavior is the floor, never the whole story."""
-    toks = ref.select(tokens(text_col).alias("__t"))
+    toks = ref.select(tokens("text").alias("__t"))
     # unigram counts feed both the top-V vocabulary and the c1 context
     # denominators, so derive everything from ONE tokenized relation.
     # r15 (guide §1.2/§5): persist the aggregated (token, count) rows —
@@ -473,7 +471,7 @@ def bigram_lm(ref: "DataFrame", text_col: str = "text",
         v = min(int(tot["distinct"] or 0), vocab_size)
         import math
 
-        denom = n_total + alpha * (v + 1)
+        denom = n_total + v + 1.0
         # Both logp tables are computed DRIVER-side with libm log (the
         # unigram_lm determinism recipe — JVM Math.log can differ from C
         # libm by 1 ulp, which after round-to-9 flips boundary values and
@@ -486,14 +484,14 @@ def bigram_lm(ref: "DataFrame", text_col: str = "text",
         spark = ref.sparkSession
         top = counts.orderBy(F.desc("count"), F.asc("token")) \
             .limit(vocab_size).collect()
-        logp_of = {c: math.log((c + alpha) / denom)
+        logp_of = {c: math.log((c + 1.0) / denom)
                    for c in {int(r["count"]) for r in top}}
         uni = spark.createDataFrame(pd.DataFrame({
             "token": pd.Series([r["token"] for r in top], dtype="object"),
             "logp": pd.Series([logp_of[int(r["count"])] for r in top],
                               dtype="float64"),
         }), "token string, logp double")
-        oov_logp = math.log(alpha / denom)
+        oov_logp = math.log(1.0 / denom)
 
         pairs = toks.select(
             F.explode(
@@ -522,12 +520,12 @@ def bigram_lm(ref: "DataFrame", text_col: str = "text",
         # consumer (top-V collect or the bigram toPandas) would
         # otherwise leak the cache entry for the session lifetime
         counts.unpersist()
-    denom2 = alpha * (v + 1)
+    denom2 = v + 1.0
     bi = spark.createDataFrame(pd.DataFrame({
         "w1": bi_pdf["w1"].astype("object"),
         "w2": bi_pdf["w2"].astype("object"),
         "logp2": pd.Series(
-            [math.log((c + alpha) / (cc + denom2))
+            [math.log((c + 1.0) / (cc + denom2))
              for c, cc in zip(bi_pdf["count"].astype("int64"),
                               bi_pdf["c1"].astype("int64"))],
             dtype="float64"),
@@ -540,8 +538,7 @@ BACKOFF_LAMBDA = 0.4
 
 
 def lm_score_bigram(docs: "DataFrame", uni: "DataFrame", bi: "DataFrame",
-                    oov_logp: float, text_col: str = "text",
-                    id_col: str = "doc_id") -> "DataFrame":
+                    oov_logp: float) -> "DataFrame":
     """(id, n_tok, avg_logp, ppl) under the :func:`bigram_lm` model:
     the first token scores by unigram, token i>0 by the conditional
     bigram when (wᵢ₋₁, wᵢ) is in the table, else λ·p_uni(wᵢ).  Same
@@ -557,14 +554,14 @@ def lm_score_bigram(docs: "DataFrame", uni: "DataFrame", bi: "DataFrame",
     # trailing (null token, t[n-1]) row that the aggregate's
     # count(token)/sum-if-token filters already ignore.  Empty and null
     # docs keep exactly one all-null row → n_tok = 0.
-    t = tokens(text_col)
+    t = tokens("text")
     tok = docs.select(
-        _c(id_col).alias(id_col),
+        _c("doc_id").alias("doc_id"),
         F.explode_outer(
             F.arrays_zip(t, F.concat(F.array(F.lit(None).cast("string")), t))
         ).alias("__p"),
     ).select(
-        id_col,
+        "doc_id",
         F.col("__p.0").alias("token"),
         F.col("__p.1").alias("prev"),
     )
@@ -585,10 +582,10 @@ def lm_score_bigram(docs: "DataFrame", uni: "DataFrame", bi: "DataFrame",
                F.lit(math.log(BACKOFF_LAMBDA)) + p_uni).otherwise(p_uni)
     )
     scored = j.select(
-        id_col, "token",
+        "doc_id", "token",
         F.round(lp, 9).cast("decimal(28,9)").alias("__lp"),
     )
-    agg = scored.groupBy(id_col).agg(
+    agg = scored.groupBy("doc_id").agg(
         F.count("token").alias("n_tok"),
         F.sum(F.when(F.col("token").isNotNull(), F.col("__lp"))).alias("__sum"),
     )
@@ -599,7 +596,7 @@ def lm_score_bigram(docs: "DataFrame", uni: "DataFrame", bi: "DataFrame",
     avg = F.col("__sum").cast("double") / F.col("n_tok")
     avg9 = F.round(avg, 9)
     return agg.select(
-        id_col,
+        "doc_id",
         F.col("n_tok").cast("long").alias("n_tok"),
         F.when(F.col("n_tok") > 0, avg9).alias("avg_logp"),
         F.when(F.col("n_tok") > 0, F.round(F.exp(-avg9), 6)).alias("ppl"),
@@ -634,7 +631,7 @@ _QCLF_VERSION_IDX = -2
 
 
 def _qclf_feature_idx(tok_col, dim: int, seed: str = _QCLF_SEED,
-                      hash_family: str = "xx64"):
+                      hash_family: str = "xxhash64"):
     """array<int> of hashed feature indices for one document's
     (already materialized) token array: one per token (unigram) plus
     one per ADJACENT TOKEN PAIR (word bigram, r13 — the fastText
@@ -652,7 +649,7 @@ def _qclf_feature_idx(tok_col, dim: int, seed: str = _QCLF_SEED,
     md5('{seed}:{token}') mod dim, pairs joined with a single space —
     injective for these tokens (the tokenizer splits on whitespace, so
     no token contains one).  DuckDB replays it exactly
-    (('0x' || substr(md5(s),1,15))::BIGINT % dim); xx64 stays the
+    (('0x' || substr(md5(s),1,15))::BIGINT % dim); xxhash64 stays the
     production default (one 8-byte hash vs a 128-bit string hash).
 
     ``tok_col`` must be a materialized array column, NOT a fresh
@@ -670,7 +667,7 @@ def _qclf_feature_idx(tok_col, dim: int, seed: str = _QCLF_SEED,
                 F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
                 F.lit(dim),
             ).cast("int")
-    elif hash_family == "xx64":
+    elif hash_family == "xxhash64":
         def h(*cols):
             return F.pmod(F.xxhash64(F.lit(seed), *cols),
                           F.lit(dim)).cast("int")
@@ -927,7 +924,7 @@ def _qclf_weights_df(spark, w):
 def quality_clf_score(docs: "DataFrame", weights: "DataFrame", bias: float,
                       text_col: str = "text", id_col: str = "doc_id",
                       dim: int = 1 << 16,
-                      hash_family: str = "xx64") -> "DataFrame":
+                      hash_family: str = "xxhash64") -> "DataFrame":
     """(id, n_tok, z, score): P(quality) under the trained model —
     sigmoid(bias + Σ tf(f)·w[hash(f) % dim]) over the
     :func:`_qclf_feature_idx` feature set (unigrams + word bigrams,
@@ -950,7 +947,7 @@ def quality_clf_score(docs: "DataFrame", weights: "DataFrame", bias: float,
     sigmoid(round(bias, 9)).
 
     ``hash_family`` picks the feature hash (see
-    :func:`_qclf_feature_idx`): "xx64" is the production default;
+    :func:`_qclf_feature_idx`): "xxhash64" is the production default;
     "md5" is the ORACLE-REPLAY variant a DuckDB twin can reproduce
     digit-for-digit (the dedup_minhash_lsh pattern).
 

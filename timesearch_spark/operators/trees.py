@@ -123,7 +123,7 @@ def _python_stage_width(df: DataFrame) -> int:
     return max(sess.sparkContext.defaultParallelism, parts)
 
 
-def comment_forest(comments: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def comment_forest(comments: DataFrame) -> DataFrame:
     """Preorder walk of every submission's comment tree.
 
     Input needs columns (idstr, parent, submission, created, score).
@@ -140,7 +140,7 @@ def comment_forest(comments: DataFrame, num_partitions: int | None = None) -> Da
     cols = ["idstr", "parent", "submission", "created", "score"]
     df = comments.select(*cols)
     parted = df.repartition(
-        num_partitions or _python_stage_width(df), "submission"
+        _python_stage_width(df), "submission"
     ).sortWithinPartitions("submission", "created")
 
     out_cols = ["submission", "idstr", "parent", "depth", "position", "phantom"]
@@ -221,6 +221,12 @@ def comment_forest_big(
        parent's path is a proper prefix of its descendants' paths and
        siblings order by their rank segment, so lexicographic path order
        IS the preorder walk.
+
+    Input contract: ``(submission, idstr)`` is unique — one row per
+    comment per thread, as a store snapshot holds them.  The walk keys
+    its state and the ``payload`` re-attach join on that pair, so a
+    duplicated comment row would fan out into duplicate output rows.
+    Nulls in ``idstr``, ``parent`` or ``submission`` raise.
 
     Semantics parity with the sequential walk, including: phantom
     parents for unknown ids materialized under the root with score 0
@@ -611,7 +617,7 @@ def thread_stats(forest: DataFrame) -> DataFrame:
 
 # --- rendering (J1 UDF surface) ---------------------------------------------
 
-def render_comment_html(df: DataFrame, body_col: str = "body") -> DataFrame:
+def render_comment_html(df: DataFrame) -> DataFrame:
     """Per-comment HTML div, nested by depth (offline_reading.py:178-199
     template family).  The body goes through ``functions.markdown_render``
     — the reference's render_markdown (offline_reading.py:285-291):
@@ -625,7 +631,7 @@ def render_comment_html(df: DataFrame, body_col: str = "body") -> DataFrame:
             '<div class="comment" id="%s" style="margin-left:%dem">%s</div>',
             F.col("idstr"),
             F.col("depth").cast("int"),
-            markdown_render(F.col(body_col)),
+            markdown_render(F.col("body")),
         ),
     )
 

@@ -149,7 +149,6 @@ def upsert_snapshot(
     author_col: str = "author",
     edited_ts_col: str | None = "edited",
     observed_at: int | None = None,
-    store_edits: bool = True,
     batch_order_col: str | None = None,
 ) -> UpsertResult:
     """Full-outer MERGE of ``batch`` into ``snapshot``.
@@ -209,7 +208,7 @@ def upsert_snapshot(
         *out,
         "o.__in_old IS NULL AS __new",
         "n.__in_batch IS NOT NULL AS __in_batch",
-        f"coalesce({text_changed}, false) AS __edit" if store_edits else "false AS __edit",
+        f"coalesce({text_changed}, false) AS __edit",
         f"{o(text_col)} AS {ident(f'previous_{text_col}')}",
         f"{replaced_at} AS replaced_at",
     )

@@ -86,7 +86,6 @@ def _session_flags(ev: DataFrame, gap_sec: int, keys: list[str]) -> DataFrame:
 def sessionize(
     events: DataFrame,
     gap_sec: int = 1800,
-    user_col: str = "user_id",
 ) -> DataFrame:
     """Gap-based sessions per user: a new session starts when the time
     since the previous event exceeds ``gap_sec``.
@@ -94,9 +93,9 @@ def sessionize(
     Classic lag + running-sum construction: one shuffle on the user, two
     ordered window passes.  Output: (user_id, session_id, session_start,
     session_end, n_events)."""
-    flagged = _session_flags(with_event_time(events), gap_sec, [user_col])
+    flagged = _session_flags(with_event_time(events), gap_sec, ["user_id"])
     return (
-        flagged.groupBy(F.col(user_col), F.col("session_seq").alias("session_id"))
+        flagged.groupBy(F.col("user_id"), F.col("session_seq").alias("session_id"))
         .agg(
             F.min("ts_sec").alias("session_start"),
             F.max("ts_sec").alias("session_end"),
@@ -108,7 +107,6 @@ def sessionize(
 def sessionize_salted(
     events: DataFrame,
     gap_sec: int = 1800,
-    user_col: str = "user_id",
     bucket_sec: int = 3600,
 ) -> DataFrame:
     """:func:`sessionize` without the hot-user ceiling — identical
@@ -142,18 +140,18 @@ def sessionize_salted(
     ev = with_event_time(events).withColumn(
         "__bucket", F.floor(F.col("ts_sec") / bucket_sec)
     )
-    flagged = _session_flags(ev, gap_sec, [user_col, "__bucket"])
-    per_sess = flagged.groupBy(user_col, "__bucket", "session_seq").agg(
+    flagged = _session_flags(ev, gap_sec, ["user_id", "__bucket"])
+    per_sess = flagged.groupBy("user_id", "__bucket", "session_seq").agg(
         F.min("ts_sec").alias("s_start"),
         F.max("ts_sec").alias("s_end"),
         F.count("*").alias("s_n"),
     )
-    chunks = per_sess.groupBy(user_col, "__bucket").agg(
+    chunks = per_sess.groupBy("user_id", "__bucket").agg(
         F.min("s_start").alias("first_ts"),
         F.max("s_end").alias("last_ts"),
         F.max("session_seq").alias("m"),
     )
-    cw = Window.partitionBy(user_col).orderBy("__bucket")
+    cw = Window.partitionBy("user_id").orderBy("__bucket")
     prev = cw.rowsBetween(Window.unboundedPreceding, -1)
     chunks = (
         chunks.withColumn(
@@ -187,13 +185,13 @@ def sessionize_salted(
     # window (nulls partition together), so the chunk join must not
     # drop it under null != null equi-join semantics
     cs = chunks.select(
-        F.col(user_col).alias("__cu"),
+        F.col("user_id").alias("__cu"),
         F.col("__bucket").alias("__cb"),
         "m", "mrg", "starts", "offset", "anchor",
     )
     s = per_sess.join(
         cs,
-        F.col(user_col).eqNullSafe(F.col("__cu"))
+        F.col("user_id").eqNullSafe(F.col("__cu"))
         & F.col("__bucket").eqNullSafe(F.col("__cb")),
     ).drop("__cu", "__cb")
     chained = (F.col("session_seq") == 1) & F.col("mrg")
@@ -212,7 +210,7 @@ def sessionize_salted(
     )
     s = s.withColumn("cand_id", cand)
     return (
-        s.groupBy(F.col(user_col), lb.alias("__lb"), ls.alias("__ls"))
+        s.groupBy(F.col("user_id"), lb.alias("__lb"), ls.alias("__ls"))
         .agg(
             F.min("cand_id").alias("session_id"),
             F.min("s_start").alias("session_start"),
@@ -220,15 +218,13 @@ def sessionize_salted(
             F.sum("s_n").alias("n_events"),
         )
         .select(
-            user_col, "session_id", "session_start", "session_end", "n_events"
+            "user_id", "session_id", "session_start", "session_end", "n_events"
         )
     )
 
 
 def retention_cohorts(
     events: DataFrame,
-    period_sec: int = 86400,
-    user_col: str = "user_id",
 ) -> DataFrame:
     """Cohort retention table: users grouped by their FIRST activity
     period, counted in every later period they return.
@@ -247,32 +243,32 @@ def retention_cohorts(
     ev = with_event_time(events)
     # F.floor, not cast('long'): the cast truncates toward zero, which
     # puts pre-epoch (negative) timestamps in the wrong period
-    period = (F.floor(F.col("ts_sec") / period_sec) * period_sec).alias(
+    period = (F.floor(F.col("ts_sec") / 86400) * 86400).alias(
         "period"
     )
     user_periods = (
-        ev.select(F.col(user_col), period).distinct()
+        ev.select(F.col("user_id"), period).distinct()
     )
-    w = Window.partitionBy(user_col)
+    w = Window.partitionBy("user_id")
     cohorted = user_periods.withColumn("cohort_period", F.min("period").over(w))
     return (
         cohorted.select(
             "cohort_period",
-            ((F.col("period") - F.col("cohort_period")) / period_sec)
+            ((F.col("period") - F.col("cohort_period")) / 86400)
             .cast("long")
             .alias("period_offset"),
-            F.col(user_col),
+            F.col("user_id"),
         )
         .groupBy("cohort_period", "period_offset")
-        .agg(F.count_distinct(F.col(user_col)).alias("n_users"))
+        .agg(F.count_distinct(F.col("user_id")).alias("n_users"))
     )
 
 
-def _seq(type_col: str):
+def _seq():
     """Aggregate: the group's events as a time-sorted ``seq`` array of
     (ts_sec, t) structs — the input every funnel fold walks."""
     return F.array_sort(
-        F.collect_list(F.struct(F.col("ts_sec"), F.col(type_col).alias("t")))
+        F.collect_list(F.struct(F.col("ts_sec"), F.col("event_type").alias("t")))
     ).alias("seq")
 
 
@@ -319,8 +315,6 @@ def _ladder(reached: DataFrame, n_steps: int) -> DataFrame:
 def funnel_progression(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered funnel: how far each user progresses through ``steps``
     IN ORDER (a later step only counts after an earlier one happened),
@@ -337,7 +331,7 @@ def funnel_progression(
     carries; when one user CAN dominate a task, use
     :func:`funnel_progression_salted` (exact chunk-transition form)."""
     ev = with_event_time(events)
-    per_user = ev.groupBy(user_col).agg(_seq(type_col))
+    per_user = ev.groupBy("user_id").agg(_seq())
     reached = per_user.select(_fold_from(steps, 0).alias("stage")).filter(
         F.col("stage") > 0
     )
@@ -360,8 +354,6 @@ def _compose_trans(a, b):
 def funnel_progression_salted(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
     bucket_sec: int = 3600,
 ) -> DataFrame:
     """:func:`funnel_progression` without the hot-user ceiling.
@@ -393,14 +385,14 @@ def funnel_progression_salted(
     n = len(steps)
     ev = with_event_time(events)
     b = (F.floor(F.col("ts_sec") / bucket_sec)).alias("__bucket")
-    per_chunk = ev.groupBy(F.col(user_col), b).agg(_seq(type_col))
+    per_chunk = ev.groupBy(F.col("user_id"), b).agg(_seq())
     # trans[k+1] = exit state entering at k (element_at is 1-based)
     trans = per_chunk.select(
-        F.col(user_col),
+        F.col("user_id"),
         F.col("__bucket"),
         _trans_vector(steps).alias("trans"),
     )
-    composed = trans.groupBy(user_col).agg(
+    composed = trans.groupBy("user_id").agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("__bucket").alias("b"), F.col("trans")))
         ).alias("chunks")
@@ -418,8 +410,6 @@ def session_funnel(
     events: DataFrame,
     steps: list[str],
     gap_sec: int = 1800,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Funnel scoped to SESSIONS: the ordered progression resets at every
     session boundary (sessionize's gap rule), and a user counts at the
@@ -433,11 +423,11 @@ def session_funnel(
     Output: (stage, n_users).  When one user can dominate a task, use
     :func:`session_funnel_salted` — identical results, chunk-merged
     sessions."""
-    flagged = _session_flags(with_event_time(events), gap_sec, [user_col])
-    per_session = flagged.groupBy(user_col, "session_seq").agg(_seq(type_col))
+    flagged = _session_flags(with_event_time(events), gap_sec, ["user_id"])
+    per_session = flagged.groupBy("user_id", "session_seq").agg(_seq())
     per_user = (
-        per_session.select(F.col(user_col), _fold_from(steps, 0).alias("stage"))
-        .groupBy(user_col)
+        per_session.select(F.col("user_id"), _fold_from(steps, 0).alias("stage"))
+        .groupBy("user_id")
         .agg(F.max("stage").alias("stage"))
     )
     reached = per_user.select("stage").filter(F.col("stage") > 0)
@@ -448,8 +438,6 @@ def session_funnel_salted(
     events: DataFrame,
     steps: list[str],
     gap_sec: int = 1800,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
     bucket_sec: int = 3600,
 ) -> DataFrame:
     """:func:`session_funnel` without the hot-user ceiling.
@@ -486,14 +474,14 @@ def session_funnel_salted(
     )
     # chunk-local session flags: window keyed by (user, bucket) so no
     # task sees a whole hot user
-    flagged = _session_flags(ev, gap_sec, [user_col, "__bucket"])
-    per_sess = flagged.groupBy(user_col, "__bucket", "session_seq").agg(
-        _seq(type_col),
+    flagged = _session_flags(ev, gap_sec, ["user_id", "__bucket"])
+    per_sess = flagged.groupBy("user_id", "__bucket", "session_seq").agg(
+        _seq(),
         F.min("ts_sec").alias("s_first"),
         F.max("ts_sec").alias("s_last"),
     )
     per_sess = per_sess.select(
-        user_col,
+        "user_id",
         "__bucket",
         "session_seq",
         "s_first",
@@ -504,14 +492,14 @@ def session_funnel_salted(
         F.collect_list(F.struct(F.col("session_seq"), F.col("trans")))
     )
     per_chunk = (
-        per_sess.groupBy(user_col, "__bucket")
+        per_sess.groupBy("user_id", "__bucket")
         .agg(
             F.min("s_first").alias("first_ts"),
             F.max("s_last").alias("last_ts"),
             sess_sorted.alias("ss"),
         )
         .select(
-            user_col,
+            "user_id",
             "__bucket",
             "first_ts",
             "last_ts",
@@ -542,7 +530,7 @@ def session_funnel_salted(
             )
         )
     )
-    per_user = per_chunk.groupBy(user_col).agg(chunks_sorted.alias("chunks"))
+    per_user = per_chunk.groupBy("user_id").agg(chunks_sorted.alias("chunks"))
 
     # Fold state: (last = last event ts so far, cur = open session's
     # transition vector, best = best closed stage).  The identity
@@ -584,7 +572,6 @@ def session_funnel_salted(
 def trending_topk(
     events: DataFrame,
     duration: str = "1 hour",
-    key: str = "event_type",
     k: int = 3,
 ) -> DataFrame:
     """Top-k keys per tumbling window by event count — the trending
@@ -592,10 +579,10 @@ def trending_topk(
     then a rank window over the (already tiny) per-window key counts;
     ties break by key for determinism.  Output: (window_start, key, n,
     rn)."""
-    counts = tumbling_counts(events, duration, key).select(
-        F.col("window_start"), F.col(key), F.col("n")
+    counts = tumbling_counts(events, duration, "event_type").select(
+        F.col("window_start"), F.col("event_type"), F.col("n")
     )
-    w = Window.partitionBy("window_start").orderBy(F.desc("n"), F.asc(key))
+    w = Window.partitionBy("window_start").orderBy(F.desc("n"), F.asc("event_type"))
     return (
         counts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
@@ -605,15 +592,13 @@ def trending_topk(
 def rate_anomalies(
     events: DataFrame,
     duration: str = "1 hour",
-    key: str = "event_type",
     trailing: int = 24,
     z: float = 3.0,
-    min_history: int = 6,
 ) -> DataFrame:
     """Per-key event-rate anomaly flags: a window whose count deviates
     from the TRAILING ``trailing``-window mean by more than ``z`` sample
     standard deviations (two-sided — spikes and outages both flag).
-    Windows with fewer than ``min_history`` preceding observations are
+    Windows with fewer than 6 preceding observations are
     never flagged (cold-start noise).
 
     Shape: the per-(window, key) counts come from the same
@@ -621,16 +606,16 @@ def rate_anomalies(
     ONE ordered window pass per key over the tiny count series (rows =
     windows × keys, not events).  Output: (window_start, key, n, mean,
     stddev, zscore)."""
-    counts = tumbling_counts(events, duration, key).select(
-        F.col("window_start"), F.col(key), F.col("n")
+    counts = tumbling_counts(events, duration, "event_type").select(
+        F.col("window_start"), F.col("event_type"), F.col("n")
     )
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("event_type")
         .orderBy("window_start")
         .rowsBetween(-trailing, -1)
     )
     stats = counts.select(
-        "window_start", key, "n",
+        "window_start", "event_type", "n",
         F.avg("n").over(w).alias("mean"),
         F.stddev_samp("n").over(w).alias("stddev"),
         F.count("n").over(w).alias("history"),
@@ -644,11 +629,11 @@ def rate_anomalies(
     flat_break = (F.col("stddev") == 0) & (F.col("n") != F.col("mean"))
     return (
         stats.filter(
-            (F.col("history") >= min_history)
+            (F.col("history") >= 6)
             & (((F.col("stddev") > 0) & (F.abs(zscore) >= z)) | flat_break)
         )
         .select(
-            "window_start", key, "n",
+            "window_start", "event_type", "n",
             F.round("mean", 4).alias("mean"),
             F.round("stddev", 4).alias("stddev"),
             F.when(F.col("stddev") > 0, F.round(zscore, 4)).alias("zscore"),
@@ -656,39 +641,24 @@ def rate_anomalies(
     )
 
 
-def _pname(p: float) -> str:
-    """p50 / p05 / p99_5: the percent with its fractional part kept —
-    rounding to an int collapsed distinct percentiles (0.995 and 1.0
-    both became p100, a silent mislabel + duplicate-column trap)."""
-    return "p" + f"{p * 100:.4f}".rstrip("0").rstrip(".").replace(".", "_").zfill(2)
-
-
 def window_percentiles(
     events: DataFrame,
     duration: str = "1 hour",
-    key: str = "event_type",
-    percentiles: tuple[float, ...] = (0.5, 0.95, 0.99),
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Per-window value percentiles (p50/p95/p99-style latency rollup)
     via ``percentile_approx`` — a bounded-size quantile sketch per
     (window, key) group that map-side partial-merges like any aggregate,
-    so the shuffle carries sketches, not values.  ``accuracy`` trades
-    sketch size for error (1/accuracy relative rank error).  Output:
-    (window_start, key, n, p50, p95, p99...) with pNN columns named
-    from the requested percentiles: percent with any fractional part
-    kept (0.5 → p50, 0.05 → p05, 0.995 → p99_5) — distinct requested
-    percentiles always yield distinct column names."""
+    so the shuffle carries sketches, not values, at accuracy 10000
+    (1/10000 relative rank error).  Output:
+    (window_start, event_type, n, p50, p95, p99)."""
     ev = with_event_time(events)
-    pcols = [
-        F.percentile_approx("value", p, accuracy).alias(
-            _pname(p)
-        )
-        for p in percentiles
-    ]
+    pcts = {"p50": 0.5, "p95": 0.95, "p99": 0.99}
+    pcols = [F.percentile_approx("value", p, 10000).alias(name)
+             for name, p in pcts.items()]
     return (
-        ev.groupBy(F.window("event_time", duration).alias("w"), F.col(key))
+        ev.groupBy(F.window("event_time", duration).alias("w"),
+                   F.col("event_type"))
         .agg(F.count("*").alias("n"), *pcols)
-        .select(F.col("w.start").alias("window_start"), key, "n",
-                *[_pname(p) for p in percentiles])
+        .select(F.col("w.start").alias("window_start"), "event_type", "n",
+                *pcts)
     )

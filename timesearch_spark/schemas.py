@@ -56,29 +56,6 @@ COMMENTS = T.StructType(
     ]
 )
 
-SUBMISSION_EDITS = T.StructType(
-    [
-        T.StructField("idstr", T.StringType()),
-        T.StructField("previous_selftext", T.StringType()),
-        T.StructField("replaced_at", T.LongType()),
-    ]
-)
-
-COMMENT_EDITS = T.StructType(
-    [
-        T.StructField("idstr", T.StringType()),
-        T.StructField("previous_body", T.StringType()),
-        T.StructField("replaced_at", T.LongType()),
-    ]
-)
-
-CONFIG = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("value", T.StringType()),
-    ]
-)
-
 # Raw NDJSON ingest shape (pushshift/archive JSON before canonicalization;
 # FIXTURES.md §2, pushshift.py:33-98).  Any field may be absent.
 RAW_NDJSON = T.StructType(
@@ -109,9 +86,6 @@ RAW_NDJSON = T.StructType(
         T.StructField("edited", T.StringType()),  # false | unix ts; parsed downstream
     ]
 )
-
-# Default config (tsdb.py:103-105).
-DEFAULT_CONFIG = {"store_edits": "1"}
 
 # Multimodal document schema: opaque binary payload + typed metadata
 # (engine extension; no reference equivalent).

@@ -72,12 +72,11 @@ def ndjson_fetch_page(path: str) -> Callable[[int, int | None, int], list[dict]]
 def http_fetch_page(
     url_template: str,
     opener: Callable[[str], bytes] | None = None,
-    data_key: str = "data",
 ) -> Callable[[int, int | None, int], list[dict]]:
     """A ``fetch_page`` over a remote JSON API (pushshift.py:148-164's
     shape): ``url_template`` is formatted with ``after``/``before``/
     ``limit`` (e.g. ``https://host/search?after={after}&before={before}
-    &limit={limit}``), the response body is JSON whose ``data_key`` holds
+    &limit={limit}``), the response body is JSON whose ``data`` key holds
     the item list.
 
     ``opener(url) -> bytes`` is injectable for tests / custom auth; the
@@ -97,7 +96,7 @@ def http_fetch_page(
             after=after, before="" if before is None else before, limit=limit
         )
         body = json.loads(opener(url).decode("utf-8"))
-        data = body.get(data_key, []) if isinstance(body, dict) else body
+        data = body.get("data", []) if isinstance(body, dict) else body
         # drop malformed items (null/absent created_utc or id) — the same
         # contract ndjson_fetch_page applies.  A KeyError here would be
         # DETERMINISTIC, and the caller's retry_forever would re-fetch the

@@ -91,12 +91,12 @@ def read_raw_file(spark: SparkSession, path: str) -> DataFrame:
     return lines.select("__o.*")
 
 
-def is_submission_raw(df_or_cols=None) -> Column:
+def is_submission_raw() -> Column:
     """A3a discriminator (ingest_jsonfile.py:12-17)."""
     return F.col("name").startswith("t3_") | F.col("over_18").isNotNull()
 
 
-def is_comment_raw(df_or_cols=None) -> Column:
+def is_comment_raw() -> Column:
     """A3a discriminator — byte-exact ingest_jsonfile.py:19-23: the
     parent/link ids must carry the ``t3_`` prefix, not merely exist (a
     non-null ``parent_id`` of the wrong kind is an object the reference

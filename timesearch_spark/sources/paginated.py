@@ -13,8 +13,10 @@ Reference semantics (_pagination_core, pushshift.py:113-146 in
   makes the next page a subset and stops the scan — ts-keyset pagination
   cannot advance inside one timestamp; size pages above the max expected
   burst.  Property-tested in tests/test_properties.py);
-- requests are rate-limited (120/60 s, pushshift.py:54) and retried
-  forever with backoff (common.py:115-133).
+- requests are retried forever with backoff (common.py:115-133).  The
+  reference also rate-limits them (120/60 s, pushshift.py:54);
+  :class:`RateLimiter` is that token bucket, for a ``fetch_page`` that
+  needs it.
 
 Spark shape: the network fetch is inherently driver-side (same as the
 reference); each page becomes a small DataFrame appended through the
@@ -57,20 +59,14 @@ class RateLimiter:
         self._tokens -= 1.0
 
 
-def retry_forever(fn: Callable, backoff: float = 2.0, sleep=time.sleep,
-                  max_tries: int | None = None):
-    """Retry-forever wrapper (common.py:115-133).  ``max_tries`` exists for
-    tests; production callers leave it None, matching the reference's
-    never-kill-the-stream behavior."""
-    tries = 0
+def retry_forever(fn: Callable, sleep=time.sleep):
+    """Retry-forever wrapper (common.py:115-133): a failed call is retried
+    every 2 s, matching the reference's never-kill-the-stream behavior."""
     while True:
         try:
             return fn()
         except Exception:
-            tries += 1
-            if max_tries is not None and tries >= max_tries:
-                raise
-            sleep(backoff)
+            sleep(2.0)
 
 
 def paginate(
@@ -78,9 +74,6 @@ def paginate(
     lower: int = 0,
     upper: int | None = None,
     page_size: int = 1000,
-    limiter: RateLimiter | None = None,
-    backoff: float = 2.0,
-    sleep=time.sleep,
 ) -> Iterator[list[dict]]:
     """Yield pages of dicts with the reference's keyset/overlap/dedup
     semantics.  ``fetch_page(after, before, limit)`` returns items sorted
@@ -89,11 +82,7 @@ def paginate(
     prev_ids: set = set()
     after = lower
     while True:
-        if limiter is not None:
-            limiter.acquire()
-        batch = retry_forever(
-            lambda: fetch_page(after, upper, page_size), backoff=backoff, sleep=sleep
-        )
+        batch = retry_forever(lambda: fetch_page(after, upper, page_size))
         if not batch:
             break
         ids = {item["id"] for item in batch}
@@ -110,23 +99,21 @@ def paginate(
 def enrichment_interleave(
     pages: Iterator[list[dict]],
     lookup: Callable[[list[str]], dict[str, dict]],
-    chunk_size: int = 100,
-    priority_col: str = "source_priority",
 ) -> Iterator[list[dict]]:
     """A5/C4: batched remote enrichment, later-wins ordering.
 
-    For every ``chunk_size`` ids, fetch live copies and emit dummy rows at
+    For every 100 ids, fetch live copies and emit dummy rows at
     priority 1 followed by live rows at priority 2 — the ordering contract
     of supplement_reddit_data (pushshift.py:224-243) made explicit for the
     upsert's later-wins pick (operators.upsert._latest_per_key).
     """
     for page in pages:
         out = []
-        for i in range(0, len(page), chunk_size):
-            chunk = page[i : i + chunk_size]
+        for i in range(0, len(page), 100):
+            chunk = page[i : i + 100]
             live = lookup([item["id"] for item in chunk])
             for item in chunk:
-                out.append({**item, priority_col: 1})
+                out.append({**item, "source_priority": 1})
                 if item["id"] in live:
-                    out.append({**live[item["id"]], priority_col: 2})
+                    out.append({**live[item["id"]], "source_priority": 2})
         yield out

@@ -36,42 +36,40 @@ def attribution_join_stream(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "created",
-    right_ts: str = "created",
     horizon_sec: int = 3600,
-    watermark_sec: int = 600,
     left_cols: list[str] | None = None,
     right_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Join two epoch-seconds streams on ``on`` where the right event
-    lands in ``[left_ts - horizon_sec, left_ts]`` — purchase←click
-    attribution, error←deploy blame, reply←mention linking.
+    """Join two epoch-seconds streams on ``on`` where the right event's
+    ``created`` lands in ``[left created - horizon_sec, left created]``
+    — purchase←click attribution, error←deploy blame, reply←mention linking.
 
-    Both sides get event-time watermarks (``watermark_sec`` of allowed
-    lateness); the interval condition uses the watermarked timestamp
-    columns so the state store evicts everything older than
-    watermark − horizon.  Output: key, left/right timestamps (epoch
-    seconds) and the requested payload columns, append-mode capable.
+    Both sides get event-time watermarks (600 s of allowed lateness);
+    the interval condition uses the watermarked timestamp columns so the
+    state store evicts everything older than watermark − horizon.
+    Output: key, left/right timestamps (epoch seconds, as
+    ``left_created`` and ``right_created``) and the requested payload
+    columns, append-mode capable.
     """
     lcols = left_cols if left_cols is not None else [
-        c for c in left.columns if c not in (on, left_ts)
+        c for c in left.columns if c not in (on, "created")
     ]
     rcols = right_cols if right_cols is not None else [
-        c for c in right.columns if c not in (on, right_ts)
+        c for c in right.columns if c not in (on, "created")
     ]
     clash = set(lcols) & set(rcols)
     if clash:
         raise ValueError(f"payload columns collide: {sorted(clash)}")
     l = left.select(
         F.col(on).alias("__k"),
-        F.timestamp_seconds(F.col(left_ts)).alias("__lt"),
+        F.timestamp_seconds(F.col("created")).alias("__lt"),
         *[F.col(c) for c in lcols],
-    ).withWatermark("__lt", f"{watermark_sec} seconds")
+    ).withWatermark("__lt", "600 seconds")
     r = right.select(
         F.col(on).alias("__rk"),
-        F.timestamp_seconds(F.col(right_ts)).alias("__rt"),
+        F.timestamp_seconds(F.col("created")).alias("__rt"),
         *[F.col(c) for c in rcols],
-    ).withWatermark("__rt", f"{watermark_sec} seconds")
+    ).withWatermark("__rt", "600 seconds")
     cond = (
         (l["__k"] == r["__rk"])
         & (r["__rt"] <= l["__lt"])
@@ -79,10 +77,8 @@ def attribution_join_stream(
     )
     return l.join(r, cond, "inner").select(
         F.col("__k").alias(on),
-        F.unix_timestamp("__lt").alias(left_ts if left_ts != right_ts
-                                       else f"left_{left_ts}"),
-        F.unix_timestamp("__rt").alias(right_ts if left_ts != right_ts
-                                       else f"right_{right_ts}"),
+        F.unix_timestamp("__lt").alias("left_created"),
+        F.unix_timestamp("__rt").alias("right_created"),
         *[F.col(c) for c in lcols],
         *[F.col(c) for c in rcols],
     )

@@ -76,7 +76,7 @@ def running_author_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def scan_state(comments: DataFrame, idle_timeout_ms: int = 30 * 60 * 1000) -> DataFrame:
+def scan_state(comments: DataFrame) -> DataFrame:
     """Per-submission comment-scan state — the streaming analog of
     ``augmented_at``/``augmented_count`` (I7): how many comments each
     submission has accumulated and when it last changed.  A processing-time
@@ -108,7 +108,7 @@ def scan_state(comments: DataFrame, idle_timeout_ms: int = 30 * 60 * 1000) -> Da
             if created_max == created_max and created_max is not None:
                 last = max(last, int(created_max))
         state.update((n, last))
-        state.setTimeoutDuration(idle_timeout_ms)
+        state.setTimeoutDuration(30 * 60 * 1000)
         yield pd.DataFrame(
             [{"submission": key[0], "n_comments": n, "last_created": last,
               "settled": False}]

@@ -109,7 +109,6 @@ class ParquetMergeStore:
         schema,
         key: str = "idstr",
         text_col: str = "body",
-        store_edits: bool = True,
         n_buckets: int = N_BUCKETS_DEFAULT,
         lease_timeout_sec: float | None = None,
     ):
@@ -127,7 +126,6 @@ class ParquetMergeStore:
         self.schema = schema
         self.key = key
         self.text_col = text_col
-        self.store_edits = store_edits
         self.lease_timeout_sec = lease_timeout_sec
         # metadata IO routes through the fs shim, so the store works on
         # any Hadoop-compatible filesystem (s3a/hdfs/file), not just the
@@ -453,7 +451,6 @@ class ParquetMergeStore:
             mutable=mutable,
             text_col=self.text_col,
             observed_at=observed_at,
-            store_edits=self.store_edits,
             batch_order_col=batch_order_col,
         )
         # ONE evaluation of the upsert join: both writes below read this

@@ -31,11 +31,9 @@ def tumbling_counts_stream(
     stream: DataFrame,
     duration: str = "1 hour",
     key: str = "event_type",
-    ts_col: str = "created",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Watermarked tumbling-window counts per key."""
-    ev = with_event_time(stream, ts_col).withWatermark("event_time", watermark)
+    ev = with_event_time(stream).withWatermark("event_time", "2 hours")
     return (
         ev.groupBy(F.window("event_time", duration).alias("w"), F.col(key))
         .agg(F.count("*").alias("n"))
@@ -48,11 +46,9 @@ def sliding_counts_stream(
     duration: str = "1 hour",
     slide: str = "15 minutes",
     key: str = "event_type",
-    ts_col: str = "created",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Watermarked sliding-window counts per key."""
-    ev = with_event_time(stream, ts_col).withWatermark("event_time", watermark)
+    ev = with_event_time(stream).withWatermark("event_time", "2 hours")
     return (
         ev.groupBy(F.window("event_time", duration, slide).alias("w"), F.col(key))
         .agg(F.count("*").alias("n"))
@@ -64,12 +60,10 @@ def session_counts_stream(
     stream: DataFrame,
     gap: str = "30 minutes",
     key: str = "author",
-    ts_col: str = "created",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Native gap-based session windows per key (streaming form of
     operators.windows.sessionize)."""
-    ev = with_event_time(stream, ts_col).withWatermark("event_time", watermark)
+    ev = with_event_time(stream).withWatermark("event_time", "2 hours")
     return (
         ev.groupBy(F.session_window("event_time", gap).alias("w"), F.col(key))
         .agg(F.count("*").alias("n_events"))
@@ -86,7 +80,6 @@ def dedup_stream(
     stream: DataFrame,
     key: str = "idstr",
     ts_col: str = "created",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Watermarked exactly-once-per-key dedup (I2's overlap + id-set,
     with bounded state instead of an unbounded driver set).
@@ -100,5 +93,5 @@ def dedup_stream(
     inside the watermark window (the reference's 1-second pagination
     overlap, plus late replays) still dedup."""
     return with_event_time(stream, ts_col).withWatermark(
-        "event_time", watermark
+        "event_time", "1 hour"
     ).dropDuplicatesWithinWatermark([key])

@@ -328,11 +328,11 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 NANOS_PER_SEC = 1_000_000_000
 
 
-def ts_dtype(df: DataFrame, col: str = "ts") -> str:
+def ts_dtype(df: DataFrame) -> str:
     """The Spark dtype string of an event-time column ('bigint' when the
     parquet was TIMESTAMP(NANOS) read under nanosAsLong, 'timestamp_ntz'
     or 'timestamp' when it was timestamp[us])."""
-    return dict(df.dtypes).get(col, "bigint")
+    return dict(df.dtypes).get("ts", "bigint")
 
 
 def event_ts_sec(col="ts", dtype: str = "bigint"):
